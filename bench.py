@@ -12,9 +12,7 @@ Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
 Phases: synthetic corpus gen + doc_id minting, full inverted-index build
 (resumable pipeline), compressed BM25 queries (AND/OR, warm index), dedup
 (MinHash-LSH + SimHash banded), ANN cosine, generic SQL ops at the sf dir.
-The scaling harness (scripts/run_scaling.py) runs this file at two
-parallelism levels and derives throughput scaling efficiency from
-extras.index_docs_per_sec.
+Executor scaling is measured apart, by scripts/run_isolated_scaling.py.
 """
 
 from __future__ import annotations

@@ -20,7 +20,6 @@ Prints one JSON line; results discussed in BENCH/BASELINE.md §Decomposition.
 
 from __future__ import annotations
 
-import glob  # noqa: F401  (kept for older log layouts)
 import json
 import os
 import sys

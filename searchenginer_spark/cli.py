@@ -193,8 +193,8 @@ def main(argv: list[str] | None = None) -> None:
             ]))
         else:
             docs = spark.read.parquet(args.docs) if args.docs else None
-            rows = idx.search_query(args.q, k=args.k, mode=args.mode, docs=docs).collect()
-            print(json.dumps([{"doc_id": r["doc_id"], "score": r["score"]} for r in rows]))
+            rows = idx.search_query_rows(args.q, k=args.k, mode=args.mode, docs=docs)
+            print(json.dumps([{"doc_id": d, "score": s} for d, s in rows]))
 
     elif args.cmd == "suggest":
         from .operators.suggest import suggest

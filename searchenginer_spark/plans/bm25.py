@@ -564,6 +564,19 @@ def _score_part_bool(
     return _topk(cand, score, k)
 
 
+def _score_compiled(comp: dict, rows: list, k: int, round_to=None, allow=None):
+    """Score one part's posting rows for a compiled query (_compile_spec):
+    the excluded terms' rows are split off as ``neg`` for
+    _score_part_bool. Shared by the distributed per-part UDFs and the
+    driver path of search_query_rows."""
+    pos_rows = [g for g in rows if g["term_id"] not in comp["exc"]]
+    neg = [g for g in rows if g["term_id"] in comp["exc"]]
+    return _score_part_bool(
+        pos_rows, comp["must"], comp["should"], comp["qtf"], k, comp["slots"],
+        round_to, neg, allow, comp["nears"],
+    )
+
+
 def _score_part_near(
     groups: list, terms: list[int], window: int, qtf: dict, k: int,
     round_to=None, ordered: bool = False,
@@ -964,10 +977,22 @@ class Bm25CompressedIndex:
     #: exceed it and fall back to per-query filtered probes.
     #: Driver memory at the cap: 2M entries x (~100 B str key + 28 B int +
     #: dict slot) plus the sorted-term list (8 B pointer/entry, strings
-    #: shared with the dict) and two int64 numpy arrays (16 B/entry)
+    #: shared with the dict) and five int64 numpy arrays (40 B/entry: the
+    #: term-ordered ids/dfs/lengths and the id-ordered ids/dfs)
     #: ~= 400-500 MB — sized for the 8 GB driver this engine configures
     #: (session.py); lower it for smaller drivers.
     DRIVER_DICT_CACHE_MAX = 2_000_000
+
+    #: search_query_rows scores a query on the driver when the summed df of
+    #: its compiled term ids (positive + excluded) is at most this many
+    #: postings. Driver memory at the cap: the Arrow copy of the scanned
+    #: rows (8 B score + ~2 B doc/tf varbyte per posting, plus positions),
+    #: its pandas bytes copy, and the decoded int64 ids / float64 scores
+    #: with their candidate intermediates — under ~100 B/posting, so
+    #: ~100 MB at the cap: a small share of the dict cache's budget above.
+    #: Larger queries keep the distributed plan, whose per-part scoring
+    #: runs in parallel on the executors.
+    DRIVER_SCORE_MAX_POSTINGS = 1_000_000
 
     def __init__(
         self,
@@ -976,6 +1001,7 @@ class Bm25CompressedIndex:
         term_dict: DataFrame,
         docs_per_part: int | None = None,
         root: str | None = None,
+        postings_scan: DataFrame | None = None,
     ):
         from ..deploy import ship_package
 
@@ -993,6 +1019,11 @@ class Bm25CompressedIndex:
         #: Handles built from bare DataFrames (root=None) skip the check —
         #: they are documented handle-per-build.
         self._root = root
+        #: the postings as stored, before any repartition: the driver
+        #: scoring path (search_query_rows) runs one narrow filtered scan
+        #: of it. None scans ``self.postings`` itself (bare-DataFrame
+        #: handles, and the persisted copy after serving_mode()).
+        self._postings_scan = postings_scan
         self._seen_version = read_dict_version(spark, root) if root else None
         self._dict_cache: dict[str, int] | None = None
         self._dict_cache_checked = False
@@ -1000,6 +1031,9 @@ class Bm25CompressedIndex:
         self._sorted_ids: np.ndarray | None = None
         self._sorted_dfs: np.ndarray | None = None
         self._sorted_lens: np.ndarray | None = None
+        #: the cached ids/dfs re-sorted by term_id: df lookup by id
+        self._ids_by_id: np.ndarray | None = None
+        self._dfs_by_id: np.ndarray | None = None
         #: prepared-PLAN cache for repeated point queries (r7): building a
         #: query DataFrame costs a flat ~45-50 ms of driver py4j round
         #: trips (PLANS.md §6) that repeats identically for an identical
@@ -1032,14 +1066,15 @@ class Bm25CompressedIndex:
                 df.unpersist()
             except Exception:
                 pass
-        from .build_index import open_postings
+        from .build_index import open_postings, read_postings
 
-        self.postings = open_postings(self.spark, self._root)
+        self._postings_scan = read_postings(self.spark, self._root)
+        self.postings = open_postings(self.spark, self._root, self._postings_scan)
         self.term_dict = self.spark.read.parquet(f"{self._root}/term_dict")
         self._dict_cache = None
         self._dict_cache_checked = False
         self._sorted_terms = self._sorted_ids = self._sorted_dfs = None
-        self._sorted_lens = None
+        self._sorted_lens = self._ids_by_id = self._dfs_by_id = None
         self._plan_cache.clear()  # stale-keyed plans reference dropped tables
 
     def _maybe_cache_dict(self) -> dict[str, int] | None:
@@ -1071,7 +1106,18 @@ class Bm25CompressedIndex:
                     dtype=np.int64,
                     count=len(rows),
                 )
+                by_id = np.argsort(self._sorted_ids, kind="stable")
+                self._ids_by_id = self._sorted_ids[by_id]
+                self._dfs_by_id = self._sorted_dfs[by_id]
         return self._dict_cache
+
+    def _summed_df(self, tids: list[int]) -> int | None:
+        """Total df of ``tids`` from the driver dict cache (the number of
+        postings a filtered scan of them returns), or None without one."""
+        if self._maybe_cache_dict() is None:
+            return None
+        at = np.searchsorted(self._ids_by_id, tids)
+        return int(self._dfs_by_id[at].sum())
 
     def serving_mode(self, n_partitions: int = 8) -> "Bm25CompressedIndex":
         """Tune THIS SESSION + handle for low-latency point queries
@@ -1113,6 +1159,7 @@ class Bm25CompressedIndex:
         # the cached layout then satisfies every scorer's groupBy('part')
         # distribution and point queries run shuffle-free
         self.postings = self.postings.repartition(n_partitions, "part").persist()
+        self._postings_scan = None  # driver scoring reads the persisted copy
         self.term_dict = self.term_dict.persist()
         self.postings.count()
         self._plan_cache.clear()  # plans built on the pre-snapshot tables
@@ -1581,15 +1628,21 @@ class Bm25CompressedIndex:
         positive atoms present, qtf = each atom's occurrence count across
         the whole query string.
         """
+        spec, comp = self._compile_query(query, mode, pattern, max_expansions)
+        return self._query_frame(spec, comp, k, docs, round_to, docs_per_part)
+
+    def _compile_query(self, query: str, mode: str, pattern: str, max_expansions: int):
+        """The prologue search_query and search_query_rows share: parse,
+        tokenize, one dictionary probe, expand and compile. Returns
+        (spec, comp); comp is None when nothing can match (no positive
+        atom, a missing required atom, or nothing scorable)."""
         from ..functions.queryparse import parse_query
 
         spec = parse_query(query)
         if spec.phrases or spec.nears:
             self._require_positions("search_query with phrase/proximity clauses")
-        empty = lambda: self.spark.createDataFrame([], "doc_id long, score double")  # noqa: E731
         if not spec.has_positive:
-            return empty()
-
+            return spec, None
         tk = _spec_tokens(spec, mode, pattern)
         tid = self.lookup_terms(sorted(tk["all"]))
         comp = _compile_spec(
@@ -1602,20 +1655,15 @@ class Bm25CompressedIndex:
             spec.regexps,
             lambda p: self._expand_regexp(p, max_expansions),
         )
-        if comp is None:  # missing required atom or nothing scorable
-            return empty()
-        qtf, exc_ids = comp["qtf"], comp["exc"]
+        return spec, comp
 
-        cand = self.postings.filter(F.col("term_id").isin(list(qtf) + list(exc_ids)))
-
-        def score_rows(rows: list[dict], allow_ids=None) -> pd.DataFrame:
-            pos_rows = [g for g in rows if g["term_id"] not in exc_ids]
-            neg = [g for g in rows if g["term_id"] in exc_ids]
-            d, s = _score_part_bool(
-                pos_rows, comp["must"], comp["should"], qtf, k, comp["slots"],
-                round_to, neg, allow_ids, comp["nears"],
-            )
-            return pd.DataFrame({"doc_id": d, "score": s})
+    def _query_frame(self, spec, comp, k, docs, round_to, docs_per_part) -> DataFrame:
+        """search_query's lazy distributed plan for a compiled query."""
+        if comp is None:
+            return self.spark.createDataFrame([], "doc_id long, score double")
+        cand = self.postings.filter(
+            F.col("term_id").isin(list(comp["qtf"]) + list(comp["exc"]))
+        )
 
         if spec.facets:
             if docs is None:
@@ -1638,7 +1686,8 @@ class Bm25CompressedIndex:
                 if len(left) == 0 or len(right) == 0:
                     return pd.DataFrame({"doc_id": [], "score": []})
                 allow_ids = np.sort(right["doc_id"].to_numpy().astype(np.int64))
-                return score_rows(left.to_dict("records"), allow_ids)
+                d, s = _score_compiled(comp, left.to_dict("records"), k, round_to, allow_ids)
+                return pd.DataFrame({"doc_id": d, "score": s})
 
             scored = (
                 cand.groupby("part")
@@ -1648,12 +1697,51 @@ class Bm25CompressedIndex:
         else:
 
             def score_part(pdf: pd.DataFrame) -> pd.DataFrame:
-                return score_rows(pdf.to_dict("records"))
+                d, s = _score_compiled(comp, pdf.to_dict("records"), k, round_to)
+                return pd.DataFrame({"doc_id": d, "score": s})
 
             scored = cand.groupBy("part").applyInPandas(
                 score_part, schema="doc_id long, score double"
             )
         return self._rank_scored(scored, k, round_to)
+
+    def search_query_rows(
+        self,
+        query: str,
+        k: int = 10,
+        mode: str = "or",
+        docs: DataFrame | None = None,
+        pattern: str = IDENT_RE,
+        max_expansions: int = 1024,
+        docs_per_part: int | None = None,
+    ) -> list[tuple[int, float]]:
+        """Run one query now: exactly ``[(r.doc_id, r.score) for r in
+        search_query(...).collect()]``, the point-query shape of the
+        gateway and the CLI.
+
+        A small query — at most DRIVER_SCORE_MAX_POSTINGS summed df over
+        its compiled term ids, known from the driver dict cache — is one
+        narrow filtered scan of the stored postings collected as Arrow
+        (one job: no exchange, no Python-worker stage), scored per part on
+        the driver by the same kernel the workers run, and merged by
+        (score desc, doc_id asc). Every other query (over the cap, no dict
+        cache, facet clauses) collects search_query's distributed plan."""
+        spec, comp = self._compile_query(query, mode, pattern, max_expansions)
+        if comp is None:
+            return []
+        tids = sorted(set(comp["qtf"]) | comp["exc"])
+        n = None if spec.facets else self._summed_df(tids)
+        if n is None or n > self.DRIVER_SCORE_MAX_POSTINGS:
+            frame = self._query_frame(spec, comp, k, docs, None, docs_per_part)
+            return [(r["doc_id"], r["score"]) for r in frame.collect()]
+        scan = self.postings if self._postings_scan is None else self._postings_scan
+        pdf = scan.filter(F.col("term_id").isin(tids)).toArrow().to_pandas()
+        hits: list[tuple[int, float]] = []
+        for _part, rows in pdf.groupby("part", sort=False):
+            d, s = _score_compiled(comp, rows.to_dict("records"), k)
+            hits += zip(d, s)
+        hits.sort(key=lambda h: (-h[1], h[0]))
+        return hits[:k]
 
     def search_query_batch(
         self,
@@ -1758,13 +1846,7 @@ class Bm25CompressedIndex:
                     allow = allow_by_q.get(qid, np.empty(0, dtype=np.int64))
                 else:
                     allow = None
-                groups = sub.to_dict("records")
-                pos_rows = [g for g in groups if g["term_id"] not in c["exc"]]
-                neg = [g for g in groups if g["term_id"] in c["exc"]]
-                d, s = _score_part_bool(
-                    pos_rows, c["must"], c["should"], c["qtf"], k, c["slots"],
-                    round_to, neg, allow, c["nears"],
-                )
+                d, s = _score_compiled(c, sub.to_dict("records"), k, round_to, allow)
                 out_q += [qid] * len(d)
                 out_d += d
                 out_s += s

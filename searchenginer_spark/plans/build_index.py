@@ -675,8 +675,18 @@ def compact_indexes(
     )
 
 
-def open_postings(spark: SparkSession, root: str) -> DataFrame:
-    """The postings table of ``root``, hash-partitioned on ``part``.
+def read_postings(spark: SparkSession, root: str) -> DataFrame:
+    """The postings table of ``root`` as stored: a plain parquet read, so
+    a term_id filter over it is one narrow scan (the driver scoring path
+    of ``Bm25CompressedIndex.search_query_rows``)."""
+    return spark.read.parquet(IndexPaths(root).postings)
+
+
+def open_postings(
+    spark: SparkSession, root: str, scan: DataFrame | None = None
+) -> DataFrame:
+    """The postings table of ``root`` (or its read ``scan``),
+    hash-partitioned on ``part``.
 
     The explicit ``repartition(n, 'part')`` is the query engine's
     exchange-elision contract (guide §2.4): every scorer is a
@@ -691,7 +701,9 @@ def open_postings(spark: SparkSession, root: str) -> DataFrame:
     session's shuffle-partition setting (cores-/cluster-scaled, never a
     constant)."""
     n = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    return spark.read.parquet(IndexPaths(root).postings).repartition(n, "part")
+    if scan is None:
+        scan = read_postings(spark, root)
+    return scan.repartition(n, "part")
 
 
 def open_index(spark: SparkSession, root: str) -> Bm25CompressedIndex:
@@ -699,12 +711,14 @@ def open_index(spark: SparkSession, root: str) -> Bm25CompressedIndex:
     dpp = None
     if _table_ready(spark, paths.meta):
         dpp = int(spark.read.parquet(paths.meta).first()["docs_per_part"])
+    scan = read_postings(spark, root)
     return Bm25CompressedIndex(
         spark,
-        open_postings(spark, root),
+        open_postings(spark, root, scan),
         spark.read.parquet(paths.term_dict),
         docs_per_part=dpp,
         # handles opened by root watch dict_version: an incremental fold
         # bumping it invalidates the driver dict cache + table snapshots
         root=root,
+        postings_scan=scan,
     )

@@ -7,11 +7,26 @@ The reference fronts native engines with an HTTP worker pool that
 fans out RPCs. Here the driver IS the gateway: a stdlib
 ThreadingHTTPServer whose handlers submit Spark jobs against an
 ``open_index()`` handle. Spark job submission is thread-safe, so the
-handler threads share one SparkSession. This layer exists for parity
-with the reference's query surface and for interactive use; bulk
-callers should use ``search_query_batch`` / the CLI — one HTTP request
-costs one-or-two Spark jobs (~0.3-0.5 s scheduling floor on local
-mode, see PLANS.md §6), so pair it with ``serving_mode()``.
+handler threads share one SparkSession.
+
+Per-request cost: ``/api/search`` runs
+``Bm25CompressedIndex.search_query_rows``. A query whose terms hold at
+most ``DRIVER_SCORE_MAX_POSTINGS`` postings (df summed, from the driver
+dict cache) is ONE narrow filtered scan job, scored on the driver — no
+shuffle, no Python-worker stage; a request measured 103 ms against
+654 ms on the distributed plan (perfbench's traced serve run: 1000
+docs with positions, local[4] on a 4-vCPU host). Larger or faceted
+queries pay the distributed plan's
+one-or-two jobs (~0.3-0.5 s scheduling floor on local mode, see
+PLANS.md §6). Bulk callers should still use ``/api/search_batch``: one
+job per query SET.
+
+Concurrent single requests are not coalesced into batches: a 4-query
+``search_query_batch`` measured 0.96 s against 0.58 s for one point
+query on the distributed plan (same host), so 4 closed-loop clients
+fell into two alternating groups and throughput moved only 1.61 ->
+1.87 q/s. Taking the Python-worker stage off the point path was the
+larger lever.
 
 Request shapes (both routes take GET query strings or POST bodies in
 ``application/x-www-form-urlencoded`` or JSON):
@@ -77,10 +92,11 @@ class SearchServer:
         self.default_k = default_k
         # one request at a time against the shared index handle: its lazy
         # driver-dict cache and dict_version re-snapshot are check-then-act
-        # mutations, unsafe under concurrent handler threads. Throughput
-        # comes from /api/search_batch (one job per query SET), not from
-        # handler parallelism — same trade the reference's worker pool
-        # makes per engine connection.
+        # mutations, unsafe under concurrent handler threads. A small
+        # point query holds it for one scan job plus driver scoring (see
+        # the module docstring); bulk throughput comes from
+        # /api/search_batch (one job per query SET) — same trade the
+        # reference's worker pool makes per engine connection.
         self._lock = threading.Lock()
         server = self
 
@@ -155,29 +171,37 @@ class SearchServer:
             raise _BadRequest(f"'k' must be >= 1, got {k}")
         return k
 
+    @staticmethod
+    def _mode(params: dict) -> str:
+        mode = params.get("mode") or "and"
+        if mode not in ("and", "or"):
+            raise _BadRequest(f"'mode' must be 'and' or 'or', got {mode!r}")
+        return mode
+
     def api_search(self, params: dict[str, str]) -> dict:
         query = params.get("query") or params.get("q")
         if not query:
             raise _BadRequest("missing 'query'")
         k = self._k(params)
-        mode = params.get("mode") or "and"
-        rows = self.idx.search_query(query, k=k, mode=mode).collect()
+        mode = self._mode(params)
+        rows = self.idx.search_query_rows(query, k=k, mode=mode)
         return {
             "query": query,
             "k": k,
-            "results": [
-                {"doc_id": r["doc_id"], "score": r["score"]} for r in rows
-            ],
+            "results": [{"doc_id": d, "score": s} for d, s in rows],
         }
 
     def api_search_batch(self, params: dict) -> dict:
         queries = params.get("queries")
         if isinstance(queries, str):  # form-encoded: JSON-valued field
-            queries = json.loads(queries)
+            try:
+                queries = json.loads(queries)
+            except ValueError as e:
+                raise _BadRequest(f"malformed JSON in 'queries': {e}") from None
         if not isinstance(queries, dict) or not queries:
             raise _BadRequest("missing 'queries' (object of id -> query)")
         k = self._k(params)
-        mode = params.get("mode") or "and"
+        mode = self._mode(params)
         qs = {str(i): str(q) for i, q in queries.items()}
         rows = self.idx.search_query_batch(qs, k=k, mode=mode).collect()
         results: dict[str, list] = {i: [] for i in qs}

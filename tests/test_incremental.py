@@ -388,3 +388,44 @@ def test_empty_or_missing_input_dir_is_noop(spark, tmp_path_factory):
                       docs_per_part=DPP)
     os.makedirs(f"{base}/empty", exist_ok=True)
     incremental_index(spark, f"{base}/empty", root, ckpt, docs_per_part=DPP)
+
+
+def test_search_query_rows_sees_folded_postings(spark, tmp_path_factory):
+    """The driver-scored point path reads the current postings snapshot:
+    after a fold bumps dict_version, and after serving_mode() (the
+    persisted copy), on the same handle."""
+    from searchenginer_spark.plans.build_index import build_index, open_index
+
+    base = str(tmp_path_factory.mktemp("incrows"))
+    input_dir, root, ckpt = f"{base}/in", f"{base}/idx", f"{base}/ckpt"
+    build_index(
+        build_docs(spark, 100, seed=42, num_partitions=4), root,
+        docs_per_part=DPP, text_col="content",
+    )
+    idx = open_index(spark, root)
+    assert idx.search_query_rows("zzzfreshterm int", k=200)  # cache warm
+
+    new = spark.createDataFrame(
+        [(1000, "zzzfreshterm appears here zzzfreshterm int")],
+        "doc_id long, content string",
+    )
+    new.write.mode("append").parquet(input_dir)
+    incremental_index(spark, input_dir, root, ckpt, docs_per_part=DPP)
+
+    got = idx.search_query_rows("zzzfreshterm int", k=200)
+    assert got[0][0] == 1000
+    assert got == [
+        (r["doc_id"], r["score"])
+        for r in idx.search_query("zzzfreshterm int", k=200).collect()
+    ]
+
+    aqe0 = spark.conf.get("spark.sql.adaptive.enabled")
+    sp0 = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        idx.serving_mode(n_partitions=4)
+        assert idx.search_query_rows("zzzfreshterm int", k=200) == got
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", aqe0)
+        spark.conf.set("spark.sql.shuffle.partitions", sp0)
+        idx.postings.unpersist()
+        idx.term_dict.unpersist()

@@ -614,3 +614,78 @@ def test_search_regexp_uppercase_pattern_lowercases(qindex):
     hi = _rows(qindex.search_regexp("Dat.*", k=10))
     assert lo, "fixture corpus must match dat.*"
     assert hi == lo
+
+
+# ------------------------------------------------ driver-scored point queries
+
+_ROWS_QUERIES = [
+    ("spark query", "and"),
+    ("spark query", "or"),
+    ("+spark +query -merge", "or"),
+    ("spark merge window -data", "or"),
+    ("quer* data", "or"),
+    ("quer~1 data", "or"),
+    ("/quer[a-z]*/ window", "or"),
+    ("spark^2 query", "or"),
+    ('"merge part"', "or"),
+    ('"merge part" data', "and"),
+    ('"spark query"~4 data', "or"),
+    ("zzz_not_here", "or"),
+    ("+zzz_not_here data", "or"),
+    ("-data -merge", "or"),
+]
+
+
+def _frame_calls(monkeypatch, idx) -> list:
+    """Spy on the distributed plan builder of search_query_rows."""
+    calls = []
+    real = idx._query_frame
+
+    def spy(*a, **kw):
+        calls.append(a)
+        return real(*a, **kw)
+
+    monkeypatch.setattr(idx, "_query_frame", spy)
+    return calls
+
+
+@pytest.mark.parametrize("cap", ["default", 0])
+def test_search_query_rows_equals_collect(qindex, monkeypatch, cap):
+    """search_query_rows == search_query(...).collect() exactly (doc_id
+    order and float score) over the grammar, on the driver side of the
+    postings cap and, with the cap at 0, on the distributed side."""
+    if cap == 0:
+        monkeypatch.setattr(Bm25CompressedIndex, "DRIVER_SCORE_MAX_POSTINGS", 0)
+    calls = _frame_calls(monkeypatch, qindex)
+    for query, mode in _ROWS_QUERIES:
+        want = _rows(qindex.search_query(query, k=10, mode=mode))
+        calls.clear()
+        got = qindex.search_query_rows(query, k=10, mode=mode)
+        assert got == want, (query, mode)
+        if cap == "default":
+            assert not calls, (query, mode)
+        elif want:
+            assert calls, (query, mode)
+
+
+def test_search_query_rows_facets_take_distributed_plan(qindex, docs_sf0001, monkeypatch):
+    calls = _frame_calls(monkeypatch, qindex)
+    query = "data value lang:de"
+    want = _rows(qindex.search_query(query, k=10, mode="or", docs=docs_sf0001))
+    calls.clear()
+    got = qindex.search_query_rows(query, k=10, mode="or", docs=docs_sf0001)
+    assert got == want and want
+    assert len(calls) == 1
+    with pytest.raises(ValueError):
+        qindex.search_query_rows(query, k=10)  # no docs table
+
+
+def test_search_query_rows_small_query_is_one_job(qindex, spark):
+    sc = spark.sparkContext
+    qindex.search_query_rows("spark query", k=10)  # fills the dict cache
+    sc.setJobGroup("search_query_rows_jobs", "one point query")
+    try:
+        assert qindex.search_query_rows('spark -merge "merge part"', k=10)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("search_query_rows_jobs")) == 1

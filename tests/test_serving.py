@@ -107,6 +107,25 @@ def test_gateway_k_validation(server):
     with pytest.raises(urllib.error.HTTPError) as e:
         _post(server, "/api/search", "not json", "application/json")
     assert e.value.code == 400
+    # mode is 'and' or 'or', never silently read as 'or'
+    for bad in ("AND", "xor"):
+        with pytest.raises(urllib.error.HTTPError) as e:
+            _get(server, f"/api/search?query=int&mode={bad}")
+        assert e.value.code == 400, bad
+        with pytest.raises(urllib.error.HTTPError) as e:
+            _post(
+                server, "/api/search_batch",
+                json.dumps({"queries": {"a": "int"}, "mode": bad}),
+                "application/json",
+            )
+        assert e.value.code == 400, bad
+    # malformed JSON in a form-encoded queries field is the client's error
+    with pytest.raises(urllib.error.HTTPError) as e:
+        _post(
+            server, "/api/search_batch", "queries=%7Bnot+json&k=3",
+            "application/x-www-form-urlencoded",
+        )
+    assert e.value.code == 400
 
 
 def test_gateway_errors(server):
