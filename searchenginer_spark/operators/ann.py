@@ -273,6 +273,7 @@ def ivf_pq_topk(
     nprobe: int = 4,
     id_col: str = "vec_id",
     round_to: int | None = None,
+    *,
     residual: bool = True,
 ) -> DataFrame:
     """FAISS IVF-PQ search shape: probe the nprobe nearest coarse lists,
@@ -283,7 +284,8 @@ def ivf_pq_topk(
     companion ``ivf_pq_build`` (codes quantize v - centroid[list]):
     score = <q, centroid[list]> + ADC(residual codes), where the
     per-list base term is one more element_at into an n_lists-double
-    literal — still pure codegen. Pass ``residual=False`` ONLY for a
+    literal — still pure codegen. ``residual`` is keyword-only, so a
+    positional argument can never flip it. Pass ``residual=False`` ONLY for a
     hand-rolled composition of ``ivf_build`` + ``pq_encode`` over RAW
     vectors; scoring one code space with the other's flag returns
     garbage rankings, so the default follows the build function whose

@@ -985,11 +985,15 @@ class Bm25CompressedIndex:
 
     #: search_query_rows scores a query on the driver when the summed df of
     #: its compiled term ids (positive + excluded) is at most this many
-    #: postings. Driver memory at the cap: the Arrow copy of the scanned
-    #: rows (8 B score + ~2 B doc/tf varbyte per posting, plus positions),
-    #: its pandas bytes copy, and the decoded int64 ids / float64 scores
-    #: with their candidate intermediates — under ~100 B/posting, so
-    #: ~100 MB at the cap: a small share of the dict cache's budget above.
+    #: postings. Per-query driver memory at the cap: the Arrow copy of the
+    #: query's rows (8 B score + ~2 B doc/tf varbyte per posting, plus
+    #: positions), its pandas bytes copy, and the decoded int64 ids /
+    #: float64 scores with their candidate intermediates — under
+    #: ~100 B/posting, so ~100 MB at the cap. An index whose WHOLE summed
+    #: df is under the cap also keeps its postings resident on the driver
+    #: as one Arrow table (measured ~43 B/posting with positions: 9.96 MB
+    #: for 232,908 postings, so ~43 MB at the cap) plus an 8 B/row
+    #: term_id order — both a small share of the dict cache's budget above.
     #: Larger queries keep the distributed plan, whose per-part scoring
     #: runs in parallel on the executors.
     DRIVER_SCORE_MAX_POSTINGS = 1_000_000
@@ -1024,6 +1028,10 @@ class Bm25CompressedIndex:
         #: of it. None scans ``self.postings`` itself (bare-DataFrame
         #: handles, and the persisted copy after serving_mode()).
         self._postings_scan = postings_scan
+        #: the stored postings held on the driver for an index under
+        #: DRIVER_SCORE_MAX_POSTINGS (_resident_postings): (Arrow table,
+        #: its term_ids sorted, the stable argsort that sorts them)
+        self._resident = None
         self._seen_version = read_dict_version(spark, root) if root else None
         self._dict_cache: dict[str, int] | None = None
         self._dict_cache_checked = False
@@ -1049,7 +1057,10 @@ class Bm25CompressedIndex:
 
     def _check_version(self) -> None:
         """Drop caches + re-snapshot the tables when a writer bumped the
-        index's dict_version since this handle last looked."""
+        index's dict_version since this handle last looked. One read is a
+        few py4j round trips (6-11 ms), so each public entry point calls
+        this once and the helpers under it (_lookup, _maybe_cache_dict,
+        the expansions) never do."""
         if self._root is None:
             return
         v = read_dict_version(self.spark, self._root)
@@ -1075,36 +1086,34 @@ class Bm25CompressedIndex:
         self._dict_cache_checked = False
         self._sorted_terms = self._sorted_ids = self._sorted_dfs = None
         self._sorted_lens = self._ids_by_id = self._dfs_by_id = None
+        self._resident = None
         self._plan_cache.clear()  # stale-keyed plans reference dropped tables
 
     def _maybe_cache_dict(self) -> dict[str, int] | None:
-        self._check_version()
         if not self._dict_cache_checked:
             self._dict_cache_checked = True
             n = self.term_dict.count()
             if n <= self.DRIVER_DICT_CACHE_MAX:
-                rows = (
-                    self.term_dict.select("term", "term_id", "df")
-                    .orderBy("term")
-                    .collect()
-                )
-                self._dict_cache = {r["term"]: r["term_id"] for r in rows}
+                import pyarrow.compute as pc
+
+                # sorted on the driver: Arrow compares strings by bytes,
+                # which is Spark's UTF8String order and, for UTF-8, Python's
+                # code-point order (what the bisects below assume)
+                tbl = self.term_dict.select("term", "term_id", "df").toArrow()
+                tbl = tbl.take(pc.sort_indices(tbl, [("term", "ascending")]))
                 # term-sorted parallel arrays: prefix expansion bisects the
                 # [prefix, succ(prefix)) range in O(log V) instead of
                 # scanning the whole vocabulary per prefix query
-                self._sorted_terms = [r["term"] for r in rows]
-                self._sorted_ids = np.fromiter(
-                    (r["term_id"] for r in rows), dtype=np.int64, count=len(rows)
+                self._sorted_terms = tbl.column("term").to_pylist()
+                self._sorted_ids = tbl.column("term_id").to_numpy().astype(np.int64)
+                self._sorted_dfs = tbl.column("df").to_numpy().astype(np.int64)
+                self._dict_cache = dict(
+                    zip(self._sorted_terms, self._sorted_ids.tolist())
                 )
-                self._sorted_dfs = np.fromiter(
-                    (r["df"] for r in rows), dtype=np.int64, count=len(rows)
-                )
-                # per-term lengths: fuzzy expansion's length band
+                # per-term code-point lengths: fuzzy expansion's length band
                 # (|len(term) - len(word)| <= dist) is a vectorized mask
-                self._sorted_lens = np.fromiter(
-                    (len(t) for t in self._sorted_terms),
-                    dtype=np.int64,
-                    count=len(rows),
+                self._sorted_lens = (
+                    pc.utf8_length(tbl.column("term")).to_numpy().astype(np.int64)
                 )
                 by_id = np.argsort(self._sorted_ids, kind="stable")
                 self._ids_by_id = self._sorted_ids[by_id]
@@ -1118,6 +1127,26 @@ class Bm25CompressedIndex:
             return None
         at = np.searchsorted(self._ids_by_id, tids)
         return int(self._dfs_by_id[at].sum())
+
+    def _resident_postings(self):
+        """The stored postings as one driver-side Arrow table with a
+        term_id index (its term_ids stably sorted, and the argsort that
+        sorts them), loaded once per snapshot — or None when the index's
+        whole summed df (from the dict cache, which must be filled) is over
+        DRIVER_SCORE_MAX_POSTINGS. The in-memory twin of the reference's
+        startup index load (srpc/PageSearch/ReadPage.cpp)."""
+        if int(self._sorted_dfs.sum()) > self.DRIVER_SCORE_MAX_POSTINGS:
+            return None
+        if self._resident is None:
+            table = self._scan().toArrow()
+            tids = table.column("term_id").to_numpy()
+            order = np.argsort(tids, kind="stable")
+            self._resident = (table, tids[order], order)
+        return self._resident
+
+    def _scan(self) -> DataFrame:
+        """The postings as stored (the persisted copy after serving_mode)."""
+        return self.postings if self._postings_scan is None else self._postings_scan
 
     def serving_mode(self, n_partitions: int = 8) -> "Bm25CompressedIndex":
         """Tune THIS SESSION + handle for low-latency point queries
@@ -1143,9 +1172,12 @@ class Bm25CompressedIndex:
         batch/analytic jobs on the same session should restore them.
         A dict_version refresh (_check_version) re-snapshots the tables
         and drops the coalesced cache — re-call after incremental folds.
+        The driver-resident postings are dropped too: the next point query
+        reloads them from the persisted copy.
         The canonical measured gain is bench.py's serving_loop_qps vs
         warm_loop_qps in the current BENCH json (r4: 2.73 vs 1.68 q/s
         at 20k docs / local[32]; see PLANS.md §6)."""
+        self._check_version()
         self.spark.conf.set("spark.sql.adaptive.enabled", "false")
         self.spark.conf.set("spark.sql.shuffle.partitions", str(n_partitions))
         # repeated serving_mode() calls must not stack persisted copies
@@ -1160,6 +1192,7 @@ class Bm25CompressedIndex:
         # distribution and point queries run shuffle-free
         self.postings = self.postings.repartition(n_partitions, "part").persist()
         self._postings_scan = None  # driver scoring reads the persisted copy
+        self._resident = None
         self.term_dict = self.term_dict.persist()
         self.postings.count()
         self._plan_cache.clear()  # plans built on the pre-snapshot tables
@@ -1167,6 +1200,10 @@ class Bm25CompressedIndex:
         return self
 
     def lookup_terms(self, terms: list[str]) -> dict[str, int]:
+        self._check_version()
+        return self._lookup(terms)
+
+    def _lookup(self, terms: list[str]) -> dict[str, int]:
         cache = self._maybe_cache_dict()
         if cache is not None:
             return {t: cache[t] for t in terms if t in cache}
@@ -1233,20 +1270,21 @@ class Bm25CompressedIndex:
         BEFORE the sum would be lossy. Same one-exchange plan as search();
         per-part lists are simply not cut (MaxScore tau stays disabled —
         every match must be scored)."""
+        self._check_version()
         return self._scored(query, 1 << 30, mode, pattern, None, exclude)
 
     def _scored(self, query, k, mode, pattern, round_to, exclude):
         """Shared scored-DataFrame construction of search()/score_all():
         un-ordered (doc_id, score) rows, per-part lists cut at ``k``."""
         q = tokenize_query(query, pattern)
-        tid = self.lookup_terms([t for t, _ in q])
+        tid = self._lookup([t for t, _ in q])
         if not q or (mode == "and" and len(tid) < len(q)) or not tid:
             return self.spark.createDataFrame([], "doc_id long, score double")
         qtf = {tid[t]: float(c) for t, c in q if t in tid}
         n_terms = len(qtf)
         ids = list(qtf.keys())
         exc_terms = sorted({t.lower() for t in (exclude or [])} - {t for t, _ in q})
-        exc_ids = set(self.lookup_terms(exc_terms).values()) - set(ids)
+        exc_ids = set(self._lookup(exc_terms).values()) - set(ids)
 
         cand = self.postings.filter(F.col("term_id").isin(ids + list(exc_ids)))
 
@@ -1504,6 +1542,7 @@ class Bm25CompressedIndex:
         search_prefix and the grammar's /re/ clause already lowercase,
         so a direct-API uppercase literal must not silently match
         nothing."""
+        self._check_version()
         ids = self._expand_regexp(pattern.lower(), max_expansions)
         if not ids:
             return self.spark.createDataFrame([], "doc_id long, score double")
@@ -1533,6 +1572,7 @@ class Bm25CompressedIndex:
         term. ``max_expansions`` caps runaway one-letter prefixes by df
         rank (highest-df expansions kept; deterministic df-desc/term tie).
         """
+        self._check_version()
         ids = self._expand_prefix(prefix.lower(), max_expansions)
         if not ids:
             return self.spark.createDataFrame([], "doc_id long, score double")
@@ -1628,6 +1668,7 @@ class Bm25CompressedIndex:
         positive atoms present, qtf = each atom's occurrence count across
         the whole query string.
         """
+        self._check_version()
         spec, comp = self._compile_query(query, mode, pattern, max_expansions)
         return self._query_frame(spec, comp, k, docs, round_to, docs_per_part)
 
@@ -1644,7 +1685,7 @@ class Bm25CompressedIndex:
         if not spec.has_positive:
             return spec, None
         tk = _spec_tokens(spec, mode, pattern)
-        tid = self.lookup_terms(sorted(tk["all"]))
+        tid = self._lookup(sorted(tk["all"]))
         comp = _compile_spec(
             tk,
             spec.prefixes,
@@ -1720,12 +1761,16 @@ class Bm25CompressedIndex:
         gateway and the CLI.
 
         A small query — at most DRIVER_SCORE_MAX_POSTINGS summed df over
-        its compiled term ids, known from the driver dict cache — is one
-        narrow filtered scan of the stored postings collected as Arrow
-        (one job: no exchange, no Python-worker stage), scored per part on
-        the driver by the same kernel the workers run, and merged by
-        (score desc, doc_id asc). Every other query (over the cap, no dict
-        cache, facet clauses) collects search_query's distributed plan."""
+        its compiled term ids, known from the driver dict cache — is scored
+        per part on the driver by the same kernel the workers run, and
+        merged by (score desc, doc_id asc). Its posting rows come from the
+        driver-resident postings when the whole index is under the cap
+        (no Spark job at all), else from one narrow filtered scan of the
+        stored postings collected as Arrow (one job: no exchange, no
+        Python-worker stage). Either way the rows arrive in stored order.
+        Every other query (over the cap, no dict cache, facet clauses)
+        collects search_query's distributed plan."""
+        self._check_version()
         spec, comp = self._compile_query(query, mode, pattern, max_expansions)
         if comp is None:
             return []
@@ -1734,14 +1779,48 @@ class Bm25CompressedIndex:
         if n is None or n > self.DRIVER_SCORE_MAX_POSTINGS:
             frame = self._query_frame(spec, comp, k, docs, None, docs_per_part)
             return [(r["doc_id"], r["score"]) for r in frame.collect()]
-        scan = self.postings if self._postings_scan is None else self._postings_scan
-        pdf = scan.filter(F.col("term_id").isin(tids)).toArrow().to_pandas()
+        resident = self._resident_postings()
+        if resident is None:
+            table = self._scan().filter(F.col("term_id").isin(tids)).toArrow()
+        else:
+            table, sorted_tids, order = resident
+            lo = np.searchsorted(sorted_tids, tids, "left")
+            hi = np.searchsorted(sorted_tids, tids, "right")
+            at = np.sort(np.concatenate([order[a:b] for a, b in zip(lo, hi)]))
+            table = table.take(at)
+        by_part: dict[int, list] = {}
+        for row in table.to_pylist():
+            by_part.setdefault(row["part"], []).append(row)
         hits: list[tuple[int, float]] = []
-        for _part, rows in pdf.groupby("part", sort=False):
-            d, s = _score_compiled(comp, rows.to_dict("records"), k)
+        for rows in by_part.values():
+            d, s = _score_compiled(comp, rows, k)
             hits += zip(d, s)
         hits.sort(key=lambda h: (-h[1], h[0]))
         return hits[:k]
+
+    def suggest_rows(self, word: str, k: int = 10) -> list[tuple[str, float]]:
+        """Keyword suggestions now: exactly ``[(r.term, r.sim) for r in
+        operators.suggest.suggest(term_dict, word, k).collect()]``, the
+        gateway's /api/suggest shape.
+
+        With a driver dict cache this runs no Spark job: the operator's
+        first-character prune is one bisected range of the term-sorted
+        cache per distinct character of the word, and
+        :func:`~searchenginer_spark.operators.suggest.suggest_sorted`
+        scores and ranks the candidates in numpy. Without a cache (or for
+        an empty word) it collects the operator."""
+        from ..operators.suggest import suggest, suggest_sorted
+
+        self._check_version()
+        low = word.lower()
+        if not low or self._maybe_cache_dict() is None:
+            rows = suggest(self.term_dict, word, k=k).collect()
+            return [(r["term"], r["sim"]) for r in rows]
+        at = np.concatenate(
+            [np.arange(*self._sorted_range(c)) for c in sorted(set(low))]
+        )
+        terms = [self._sorted_terms[i] for i in at]
+        return suggest_sorted(low, terms, self._sorted_lens[at], k)
 
     def search_query_batch(
         self,
@@ -1993,7 +2072,7 @@ class Bm25CompressedIndex:
         toks = re.findall(pattern, phrase.lower())
         if not toks:
             return self.spark.createDataFrame([], "doc_id long, score double")
-        tid = self.lookup_terms(sorted(set(toks)))
+        tid = self._lookup(sorted(set(toks)))
         if len(tid) < len(set(toks)):
             return self.spark.createDataFrame([], "doc_id long, score double")
         slots = [tid[t] for t in toks]

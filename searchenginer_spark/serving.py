@@ -4,29 +4,33 @@ routes ``/api/search`` and ``/api/suggest``; ``src/main.cpp:6-7`` port
 wiring) and of its form-input percent-decoding (``src/Utils.cpp:5-28``).
 
 The reference fronts native engines with an HTTP worker pool that
-fans out RPCs. Here the driver IS the gateway: a stdlib
-ThreadingHTTPServer whose handlers submit Spark jobs against an
-``open_index()`` handle. Spark job submission is thread-safe, so the
-handler threads share one SparkSession.
+fans out RPCs to services which load their indexes into memory at
+startup (srpc/PageSearch/ReadPage.cpp, srpc/WordSearch/ReadIndist.cpp).
+Here the driver IS the gateway: a stdlib ThreadingHTTPServer whose
+handlers run against an ``open_index()`` handle, and for a small index
+that handle plays the in-memory services' part.
 
-Per-request cost: ``/api/search`` runs
-``Bm25CompressedIndex.search_query_rows``. A query whose terms hold at
-most ``DRIVER_SCORE_MAX_POSTINGS`` postings (df summed, from the driver
-dict cache) is ONE narrow filtered scan job, scored on the driver — no
-shuffle, no Python-worker stage; a request measured 103 ms against
-654 ms on the distributed plan (perfbench's traced serve run: 1000
-docs with positions, local[4] on a 4-vCPU host). Larger or faceted
-queries pay the distributed plan's
-one-or-two jobs (~0.3-0.5 s scheduling floor on local mode, see
-PLANS.md §6). Bulk callers should still use ``/api/search_batch``: one
-job per query SET.
+Per-request cost, on an index whose summed df is at most
+``Bm25CompressedIndex.DRIVER_SCORE_MAX_POSTINGS`` postings: after the
+first request has filled the handle's driver dict cache and loaded its
+postings as one Arrow table, ``/api/search``
+(``search_query_rows``) and ``/api/suggest`` (``suggest_rows``) run NO
+Spark job — a term lookup, a slice of the resident postings scored on
+the driver, or a numpy edit-distance rank over the first-letter
+candidates; what is left per request is one ``dict_version`` read
+(a few py4j round trips, ~6 ms). Measured one request at a time on a
+4-vCPU host (1000 docs with positions, local[4]): search 14 ms mean and
+suggest 18-22 ms median, against 110 ms and 92 ms when each ran one
+Spark job. On a larger index a query whose own terms hold at most that
+many postings is one narrow filtered scan job, scored on the driver;
+larger or faceted queries pay the distributed plan's one-or-two jobs (~0.3-0.5 s
+scheduling floor on local mode, see PLANS.md §6), and suggest without
+a dict cache runs the Spark operator. Bulk callers should still use
+``/api/search_batch``: one job per query SET.
 
-Concurrent single requests are not coalesced into batches: a 4-query
-``search_query_batch`` measured 0.96 s against 0.58 s for one point
-query on the distributed plan (same host), so 4 closed-loop clients
-fell into two alternating groups and throughput moved only 1.61 ->
-1.87 q/s. Taking the Python-worker stage off the point path was the
-larger lever.
+Concurrent single requests are not coalesced into batches: on the
+in-memory path there is no per-request job left whose cost a batch
+could share.
 
 Request shapes (both routes take GET query strings or POST bodies in
 ``application/x-www-form-urlencoded`` or JSON):
@@ -91,12 +95,13 @@ class SearchServer:
         self.idx = open_index(spark, root)
         self.default_k = default_k
         # one request at a time against the shared index handle: its lazy
-        # driver-dict cache and dict_version re-snapshot are check-then-act
-        # mutations, unsafe under concurrent handler threads. A small
-        # point query holds it for one scan job plus driver scoring (see
-        # the module docstring); bulk throughput comes from
-        # /api/search_batch (one job per query SET) — same trade the
-        # reference's worker pool makes per engine connection.
+        # driver dict cache, resident postings and dict_version
+        # re-snapshot are check-then-act mutations, unsafe under
+        # concurrent handler threads. On a small index a search or suggest
+        # holds it for driver-side work only, no Spark job (see the module
+        # docstring); bulk throughput comes from /api/search_batch (one
+        # job per query SET) — same trade the reference's worker pool
+        # makes per engine connection.
         self._lock = threading.Lock()
         server = self
 
@@ -216,16 +221,13 @@ class SearchServer:
         if not word:
             raise _BadRequest("missing 'word'")
         k = self._k(params)
-        from .operators.suggest import suggest
-
-        # suggest from the handle's version-watched term_dict snapshot —
-        # a privately-held parquet read would serve a stale dictionary
-        # forever after incremental folds bump dict_version
-        self.idx._check_version()
-        rows = suggest(self.idx.term_dict, word, k=k).collect()
+        # the handle's version-watched dictionary — a privately-held
+        # parquet read would serve a stale one forever after incremental
+        # folds bump dict_version
+        rows = self.idx.suggest_rows(word, k=k)
         return {
             "word": word,
-            "suggestions": [{"term": r["term"], "sim": r["sim"]} for r in rows],
+            "suggestions": [{"term": t, "sim": s} for t, s in rows],
         }
 
     # --- lifecycle

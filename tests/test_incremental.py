@@ -391,9 +391,12 @@ def test_empty_or_missing_input_dir_is_noop(spark, tmp_path_factory):
 
 
 def test_search_query_rows_sees_folded_postings(spark, tmp_path_factory):
-    """The driver-scored point path reads the current postings snapshot:
-    after a fold bumps dict_version, and after serving_mode() (the
-    persisted copy), on the same handle."""
+    """The driver point paths read the current snapshot: after a fold
+    bumps dict_version, and after serving_mode() (the persisted copy), the
+    next search_query_rows scores the new postings from a reloaded
+    resident table and the next suggest_rows ranks the new terms, on the
+    same handle — whichever of the two runs first after the fold."""
+    from searchenginer_spark.operators.suggest import suggest
     from searchenginer_spark.plans.build_index import build_index, open_index
 
     base = str(tmp_path_factory.mktemp("incrows"))
@@ -403,7 +406,12 @@ def test_search_query_rows_sees_folded_postings(spark, tmp_path_factory):
         docs_per_part=DPP, text_col="content",
     )
     idx = open_index(spark, root)
-    assert idx.search_query_rows("zzzfreshterm int", k=200)  # cache warm
+    assert idx.search_query_rows("zzzfreshterm int", k=200)  # caches warm
+    resident = idx._resident
+    assert resident is not None
+    assert "zzzfreshterm" not in dict(idx.suggest_rows("zzzfreshterm", k=50))
+    idx2 = open_index(spark, root)  # suggests first after the fold
+    assert "zzzfreshterm" not in dict(idx2.suggest_rows("zzzfreshterm", k=50))
 
     new = spark.createDataFrame(
         [(1000, "zzzfreshterm appears here zzzfreshterm int")],
@@ -412,18 +420,30 @@ def test_search_query_rows_sees_folded_postings(spark, tmp_path_factory):
     new.write.mode("append").parquet(input_dir)
     incremental_index(spark, input_dir, root, ckpt, docs_per_part=DPP)
 
+    def want_suggest():
+        rows = suggest(idx.term_dict, "zzzfreshterm", k=5).collect()
+        return [(r["term"], r["sim"]) for r in rows]
+
     got = idx.search_query_rows("zzzfreshterm int", k=200)
     assert got[0][0] == 1000
+    assert idx._resident is not None and idx._resident is not resident
     assert got == [
         (r["doc_id"], r["score"])
         for r in idx.search_query("zzzfreshterm int", k=200).collect()
     ]
+    sugg = idx.suggest_rows("zzzfreshterm", k=5)
+    assert sugg[0] == ("zzzfreshterm", 1.0)
+    assert sugg == want_suggest()
+    assert idx2.suggest_rows("zzzfreshterm", k=5) == sugg
 
     aqe0 = spark.conf.get("spark.sql.adaptive.enabled")
     sp0 = spark.conf.get("spark.sql.shuffle.partitions")
     try:
         idx.serving_mode(n_partitions=4)
+        assert idx._resident is None
         assert idx.search_query_rows("zzzfreshterm int", k=200) == got
+        assert idx._resident is not None
+        assert idx.suggest_rows("zzzfreshterm", k=5) == sugg
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", aqe0)
         spark.conf.set("spark.sql.shuffle.partitions", sp0)

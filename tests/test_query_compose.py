@@ -19,6 +19,7 @@ from searchenginer_spark.operators.dict import build_term_dict
 from searchenginer_spark.operators.postings import build_postings
 from searchenginer_spark.plans.bm25 import Bm25CompressedIndex
 from searchenginer_spark.plans.bm25_dataframe import IDENT_RE
+from tests.conftest import count_jobs
 
 
 # ------------------------------------------------------------------ parser
@@ -649,23 +650,34 @@ def _frame_calls(monkeypatch, idx) -> list:
     return calls
 
 
-@pytest.mark.parametrize("cap", ["default", 0])
+def _index_df(idx) -> int:
+    """Summed df of the whole index, from its driver dict cache."""
+    idx._maybe_cache_dict()
+    return int(idx._sorted_dfs.sum())
+
+
+@pytest.mark.parametrize("cap", ["default", "narrow", 0])
 def test_search_query_rows_equals_collect(qindex, monkeypatch, cap):
     """search_query_rows == search_query(...).collect() exactly (doc_id
-    order and float score) over the grammar, on the driver side of the
-    postings cap and, with the cap at 0, on the distributed side."""
-    if cap == 0:
-        monkeypatch.setattr(Bm25CompressedIndex, "DRIVER_SCORE_MAX_POSTINGS", 0)
+    order and float score) over the grammar, on all three paths: the
+    driver-resident postings (default cap), one narrow scan per query
+    (cap between the query's df and the whole index's) and, with the cap
+    at 0, the distributed plan."""
+    if cap == "narrow":
+        cap = _index_df(qindex) - 1  # every query here holds fewer postings
+    if cap != "default":
+        monkeypatch.setattr(Bm25CompressedIndex, "DRIVER_SCORE_MAX_POSTINGS", cap)
     calls = _frame_calls(monkeypatch, qindex)
     for query, mode in _ROWS_QUERIES:
         want = _rows(qindex.search_query(query, k=10, mode=mode))
         calls.clear()
         got = qindex.search_query_rows(query, k=10, mode=mode)
         assert got == want, (query, mode)
-        if cap == "default":
+        if cap != 0:
             assert not calls, (query, mode)
         elif want:
             assert calls, (query, mode)
+    assert (qindex._resident_postings() is not None) == (cap == "default")
 
 
 def test_search_query_rows_facets_take_distributed_plan(qindex, docs_sf0001, monkeypatch):
@@ -680,12 +692,21 @@ def test_search_query_rows_facets_take_distributed_plan(qindex, docs_sf0001, mon
         qindex.search_query_rows(query, k=10)  # no docs table
 
 
-def test_search_query_rows_small_query_is_one_job(qindex, spark):
-    sc = spark.sparkContext
-    qindex.search_query_rows("spark query", k=10)  # fills the dict cache
-    sc.setJobGroup("search_query_rows_jobs", "one point query")
-    try:
-        assert qindex.search_query_rows('spark -merge "merge part"', k=10)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    assert len(sc.statusTracker().getJobIdsForGroup("search_query_rows_jobs")) == 1
+def test_search_query_rows_small_query_is_one_job(qindex, spark, monkeypatch):
+    """Once the dict cache is filled, a small index serves point searches
+    and suggestions with NO Spark job (resident postings, driver suggest);
+    an index over the cap serves a small query with exactly one job, the
+    narrow postings scan."""
+    query = 'spark -merge "merge part"'
+    want = qindex.search_query_rows(query, k=10)  # fills both caches
+    assert want
+    got, jobs = count_jobs(spark, lambda: qindex.search_query_rows(query, k=10))
+    assert (got, jobs) == (want, 0)
+    sugg, jobs = count_jobs(spark, lambda: qindex.suggest_rows("quey", k=5))
+    assert sugg and jobs == 0
+
+    monkeypatch.setattr(
+        Bm25CompressedIndex, "DRIVER_SCORE_MAX_POSTINGS", _index_df(qindex) - 1
+    )
+    got, jobs = count_jobs(spark, lambda: qindex.search_query_rows(query, k=10))
+    assert (got, jobs) == (want, 1)

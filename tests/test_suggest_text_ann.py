@@ -13,6 +13,7 @@ from searchenginer_spark.functions.textstats import (
 )
 from searchenginer_spark.operators.ann import ann_lsh_topk, cosine_topk, srp_buckets
 from searchenginer_spark.operators.suggest import suggest
+from tests.conftest import count_jobs
 
 
 @pytest.fixture(scope="module")
@@ -141,3 +142,87 @@ def test_suggest_lowercases_query(spark, term_dict):
     lo = [(r["term"], r["sim"]) for r in suggest(term_dict, "retrun", k=5).collect()]
     hi = [(r["term"], r["sim"]) for r in suggest(term_dict, "Retrun", k=5).collect()]
     assert lo and hi == lo
+
+
+# ------------------------------------------------ driver-side suggest_rows
+
+_SUGGEST_TERMS = [
+    "return", "retain", "retry", "rerun", "result", "red", "random", "zeta",
+    "über", "übel", "ubel",
+    "搜索", "搜索引擎", "索引", "引擎",
+    "𝒳ab", "𝒳abc", "𝒳", "😀x", "😀😀",
+    "a", "ab", "ba",
+]
+
+
+@pytest.fixture(scope="module")
+def suggest_index(spark):
+    from searchenginer_spark.plans.bm25 import Bm25CompressedIndex
+
+    rows = [(t, i, len(t), len(t)) for i, t in enumerate(sorted(_SUGGEST_TERMS))]
+    td = spark.createDataFrame(rows, "term string, term_id long, df long, cf long")
+    td = td.withColumn("prefix", F.substring("term", 1, 1))
+    return Bm25CompressedIndex(spark, td.limit(0), td)
+
+
+@pytest.mark.parametrize(
+    "word,k",
+    [
+        ("retrun", 4),  # sim ties: retain/retry/return at distance 2
+        ("Retrun", 5),  # capitalised: folds before prune and distance
+        ("RETRUN", 50),  # k larger than the candidate count
+        ("Über", 3),
+        ("搜索引", 10),  # CJK
+        ("引索", 10),
+        ("𝒳a", 10),  # astral plane: one code point each
+        ("😀", 10),
+        ("qqq", 10),  # no term starts with any of its letters
+        ("ab", 10),  # ties at sim 0.5 and at sim 0
+        ("zeta", 1),
+    ],
+)
+def test_suggest_rows_equals_operator(spark, suggest_index, word, k):
+    """suggest_rows runs on the driver dict cache and returns exactly the
+    operator's rows: same terms, same order, same float sims."""
+    want = [
+        (r["term"], r["sim"])
+        for r in suggest(suggest_index.term_dict, word, k=k).collect()
+    ]
+    suggest_index.suggest_rows("warm", k=1)  # fills the dict cache
+    got, jobs = count_jobs(spark, lambda: suggest_index.suggest_rows(word, k=k))
+    assert got == want
+    assert jobs == 0
+    if word == "qqq":
+        assert got == []
+
+
+def test_suggest_rows_without_dict_cache_runs_operator(spark, suggest_index):
+    from searchenginer_spark.plans.bm25 import Bm25CompressedIndex
+
+    idx = Bm25CompressedIndex(spark, suggest_index.postings, suggest_index.term_dict)
+    idx._dict_cache_checked = True  # simulate a dict over the cache cap
+    want = [(r["term"], r["sim"]) for r in suggest(idx.term_dict, "retrun", k=5).collect()]
+    assert idx.suggest_rows("retrun", k=5) == want
+
+
+def test_edit_distances_match_python_levenshtein():
+    from searchenginer_spark.operators.suggest import edit_distances
+
+    def lev(a: str, b: str) -> int:
+        prev = list(range(len(b) + 1))
+        for i, ca in enumerate(a, 1):
+            cur = [i]
+            for j, cb in enumerate(b, 1):
+                cur.append(min(prev[j] + 1, cur[j - 1] + 1, prev[j - 1] + (ca != cb)))
+            prev = cur
+        return prev[-1]
+
+    rng = np.random.default_rng(7)
+    alphabet = list("abc") + ["搜", "𝒳"]
+    terms = [
+        "".join(rng.choice(alphabet, size=rng.integers(0, 9))) for _ in range(300)
+    ]
+    lens = np.array([len(t) for t in terms], dtype=np.int64)
+    for word in ("a", "abca", "搜𝒳b", "ccccccccc"):
+        got = edit_distances(word, terms, lens)
+        assert got.tolist() == [lev(word, t) for t in terms], word
