@@ -63,8 +63,9 @@ def main(argv: list[str] | None = None) -> None:
     c.add_argument("--q",
                    help='composed grammar: data +must -not pre* "phrase" "a b"~3 field:value')
     c.add_argument("--batch-file",
-                   help="file with one grammar query per line; ONE Spark job "
-                        "for the whole set (search_query_batch)")
+                   help="file with one grammar query per line, scored as one "
+                        "set (search_query_batch): no Spark job on an index of "
+                        "at most 1M postings without facets, else one job")
     c.add_argument("--k", type=int, default=10)
     c.add_argument("--mode", choices=["and", "or"], default="or")
     c.add_argument("--docs", help="docs parquet path, required for field:value facets")

@@ -346,9 +346,14 @@ def dedup_by_pairs(docs: DataFrame, pairs: DataFrame, id_col: str = "doc_id") ->
     No broadcast hint on the loser set: dup-heavy corpora make it a large
     corpus fraction, and a hint overrides the size threshold; AQE picks a
     runtime broadcast whenever it is actually small, so the common case
-    still probes the docs table without shuffling it."""
+    still probes the docs table without shuffling it.
+
+    The pairs' persisted intermediates (simhash_near_pairs' band table)
+    ride on to the result, so :func:`release_intermediates` on it frees
+    them."""
     losers = pairs.select(F.col(f"{id_col}_2").alias(id_col)).distinct()
-    return docs.join(losers, id_col, "left_anti")
+    out = docs.join(losers, id_col, "left_anti")
+    return _attach_intermediates(out, list(getattr(pairs, "_sg_intermediates", ())))
 
 
 def minhash_lsh_pairs(

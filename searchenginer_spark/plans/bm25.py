@@ -863,7 +863,15 @@ def _compile_spec(
     }
 
 
-def read_dict_version(spark: SparkSession, root: str):
+def _dict_version_marker(spark: SparkSession, root: str):
+    """(FileSystem, Path) of the index's ``dict_version`` marker: resolved
+    once per handle, since the class lookups and ``getFileSystem`` are
+    most of a version read's py4j round trips."""
+    p = spark._jvm.org.apache.hadoop.fs.Path(f"{root}/dict_version")
+    return p.getFileSystem(spark._jsc.hadoopConfiguration()), p
+
+
+def read_dict_version(spark: SparkSession, root: str, marker=None):
     """Content of the index's ``dict_version`` marker file (the uuid the
     writer stamped), or None when it does not exist (pre-versioning
     roots). The CONTENT is the version: bump_dict_version always writes a
@@ -871,20 +879,23 @@ def read_dict_version(spark: SparkSession, root: str):
     inside the filesystem's mtime granularity (1 s on some local/NFS
     mounts) and serve a stale dict cache. One small read — microseconds
     on a local/HDFS namenode, a GET on an object store (where a handle
-    held across folds should batch queries anyway)."""
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(f"{root}/dict_version")
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(p):
-        return None
-    reader = jvm.java.io.BufferedReader(
-        jvm.java.io.InputStreamReader(fs.open(p), "UTF-8")
-    )
+    held across folds should batch queries anyway). With ``marker``
+    (:func:`_dict_version_marker`) it is three py4j calls: open,
+    readAllBytes, close (~0.6 ms)."""
+    from py4j.protocol import Py4JJavaError
+
+    fs, p = marker or _dict_version_marker(spark, root)
     try:
-        line = reader.readLine()
+        stream = fs.open(p)
+    except Py4JJavaError as e:
+        if e.java_exception.getClass().getName() == "java.io.FileNotFoundException":
+            return None
+        raise
+    try:
+        data = bytes(stream.readAllBytes())
     finally:
-        reader.close()
-    return line or ""
+        stream.close()
+    return next(iter(data.decode("utf-8").splitlines()), "")
 
 
 def bump_dict_version(spark: SparkSession, root: str) -> None:
@@ -895,9 +906,7 @@ def bump_dict_version(spark: SparkSession, root: str) -> None:
     stale lookups."""
     import uuid as _uuid
 
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(f"{root}/dict_version")
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
+    fs, p = _dict_version_marker(spark, root)
     out = fs.create(p, True)
     out.write(bytearray(_uuid.uuid4().hex, "ascii"))
     out.close()
@@ -954,6 +963,10 @@ def _rank_scored_df(scored: DataFrame, k: int, round_to: int | None) -> DataFram
     )
 
 
+#: the (query_id, doc_id, score) rows every batch entry point returns
+_BATCH_SCHEMA = "query_id string, doc_id long, score double"
+
+
 def _rank_scored_batch_df(scored: DataFrame, k: int, round_to: int | None) -> DataFrame:
     """The batch twin of :func:`_rank_scored_df`: per-query_id top-k via
     a row_number window over the same (score DESC, doc_id ASC) contract."""
@@ -994,6 +1007,10 @@ class Bm25CompressedIndex:
     #: as one Arrow table (measured ~43 B/posting with positions: 9.96 MB
     #: for 232,908 postings, so ~43 MB at the cap) plus an 8 B/row
     #: term_id order — both a small share of the dict cache's budget above.
+    #: search_query_batch scores a whole unfaceted batch from that resident
+    #: table too: its transient rows are one slice for the union of the
+    #: batch's term ids, so they are bounded by the index's rows however
+    #: many queries the batch holds.
     #: Larger queries keep the distributed plan, whose per-part scoring
     #: runs in parallel on the executors.
     DRIVER_SCORE_MAX_POSTINGS = 1_000_000
@@ -1032,7 +1049,11 @@ class Bm25CompressedIndex:
         #: DRIVER_SCORE_MAX_POSTINGS (_resident_postings): (Arrow table,
         #: its term_ids sorted, the stable argsort that sorts them)
         self._resident = None
-        self._seen_version = read_dict_version(spark, root) if root else None
+        #: the dict_version marker's (FileSystem, Path), resolved once
+        self._version_marker = _dict_version_marker(spark, root) if root else None
+        self._seen_version = (
+            read_dict_version(spark, root, self._version_marker) if root else None
+        )
         self._dict_cache: dict[str, int] | None = None
         self._dict_cache_checked = False
         self._sorted_terms: list[str] | None = None
@@ -1057,13 +1078,13 @@ class Bm25CompressedIndex:
 
     def _check_version(self) -> None:
         """Drop caches + re-snapshot the tables when a writer bumped the
-        index's dict_version since this handle last looked. One read is a
-        few py4j round trips (6-11 ms), so each public entry point calls
-        this once and the helpers under it (_lookup, _maybe_cache_dict,
-        the expansions) never do."""
+        index's dict_version since this handle last looked. One read is
+        three py4j calls (~0.6 ms), so each public entry point calls this
+        once and the helpers under it (_lookup, _maybe_cache_dict, the
+        expansions) never do."""
         if self._root is None:
             return
-        v = read_dict_version(self.spark, self._root)
+        v = read_dict_version(self.spark, self._root, self._version_marker)
         if v == self._seen_version:
             return
         self._seen_version = v
@@ -1131,10 +1152,12 @@ class Bm25CompressedIndex:
     def _resident_postings(self):
         """The stored postings as one driver-side Arrow table with a
         term_id index (its term_ids stably sorted, and the argsort that
-        sorts them), loaded once per snapshot — or None when the index's
-        whole summed df (from the dict cache, which must be filled) is over
-        DRIVER_SCORE_MAX_POSTINGS. The in-memory twin of the reference's
-        startup index load (srpc/PageSearch/ReadPage.cpp)."""
+        sorts them), loaded once per snapshot — or None without a driver
+        dict cache, or when the index's whole summed df (from that cache)
+        is over DRIVER_SCORE_MAX_POSTINGS. The in-memory twin of the
+        reference's startup index load (srpc/PageSearch/ReadPage.cpp)."""
+        if self._maybe_cache_dict() is None:
+            return None
         if int(self._sorted_dfs.sum()) > self.DRIVER_SCORE_MAX_POSTINGS:
             return None
         if self._resident is None:
@@ -1779,24 +1802,45 @@ class Bm25CompressedIndex:
         if n is None or n > self.DRIVER_SCORE_MAX_POSTINGS:
             frame = self._query_frame(spec, comp, k, docs, None, docs_per_part)
             return [(r["doc_id"], r["score"]) for r in frame.collect()]
-        resident = self._resident_postings()
-        if resident is None:
+        table = None
+        if self._resident_postings() is None:
             table = self._scan().filter(F.col("term_id").isin(tids)).toArrow()
-        else:
-            table, sorted_tids, order = resident
+        return self._score_on_driver({None: comp}, k, table=table)[None]
+
+    def _score_on_driver(self, comps: dict, k: int, round_to=None, table=None) -> dict:
+        """THE driver scorer of search_query_rows and search_query_batch:
+        {key: compiled query} -> {key: top-k [(doc_id, score)]}, exactly
+        what the distributed plan ranks for each query.
+
+        ``table`` holds the posting rows of every compiled term id (a
+        narrow scan); None slices them out of the resident postings — one
+        searchsorted + take for the union of the queries' term ids, in
+        stored row order. The rows are grouped part -> term_id, each query
+        is scored per part by the workers' kernel (_score_compiled, with
+        ``round_to`` as the UDFs pass it), and its hits are merged by
+        (score desc, doc_id asc)."""
+        if table is None:
+            tids = sorted(set().union(*(set(c["qtf"]) | c["exc"] for c in comps.values())))
+            table, sorted_tids, order = self._resident
             lo = np.searchsorted(sorted_tids, tids, "left")
             hi = np.searchsorted(sorted_tids, tids, "right")
             at = np.sort(np.concatenate([order[a:b] for a, b in zip(lo, hi)]))
             table = table.take(at)
-        by_part: dict[int, list] = {}
+        by_part: dict[int, dict[int, list]] = {}
         for row in table.to_pylist():
-            by_part.setdefault(row["part"], []).append(row)
-        hits: list[tuple[int, float]] = []
-        for rows in by_part.values():
-            d, s = _score_compiled(comp, rows, k)
-            hits += zip(d, s)
-        hits.sort(key=lambda h: (-h[1], h[0]))
-        return hits[:k]
+            by_part.setdefault(row["part"], {}).setdefault(row["term_id"], []).append(row)
+        out = {}
+        for key, comp in comps.items():
+            qtids = sorted(set(comp["qtf"]) | comp["exc"])
+            hits: list[tuple[int, float]] = []
+            for by_tid in by_part.values():
+                rows = [r for t in qtids for r in by_tid.get(t, ())]
+                if rows:
+                    d, s = _score_compiled(comp, rows, k, round_to)
+                    hits += zip(d, s)
+            hits.sort(key=lambda h: (-h[1], h[0]))
+            out[key] = hits[:k]
+        return out
 
     def suggest_rows(self, word: str, k: int = 10) -> list[tuple[str, float]]:
         """Keyword suggestions now: exactly ``[(r.term, r.sim) for r in
@@ -1833,10 +1877,21 @@ class Bm25CompressedIndex:
         docs: DataFrame | None = None,
         docs_per_part: int | None = None,
     ) -> DataFrame:
-        """Composed-grammar batch: MANY query strings in ONE Spark job ->
-        (query_id, doc_id, score) — the serving shape for search_query,
-        same grammar and semantics per query (see search_batch for why
-        batching is the Spark-idiomatic high-throughput form).
+        """Composed-grammar batch: MANY query strings -> (query_id, doc_id,
+        score) — the serving shape for search_query, same grammar and
+        semantics per query, with one dictionary probe for the whole batch.
+
+        When the handle's postings are resident on the driver (a dict
+        cache, and the whole index at most DRIVER_SCORE_MAX_POSTINGS; see
+        _resident_postings) and no query has a facet clause, the whole batch
+        is scored NOW on the driver by the kernel the workers run
+        (_score_on_driver, as search_query_rows) and returned as a local
+        DataFrame: no Spark job, and the same rows, floats included, as the
+        distributed plan. That frame holds the answers as of this call —
+        collecting it again does not re-score, so collect it at once and do
+        not keep it across index updates. Every other batch runs ONE
+        distributed job (see search_batch for why batching is the
+        Spark-idiomatic high-throughput form there).
 
         Facet clauses work per query (r4): pass ``docs`` (+
         ``docs_per_part`` unless the handle carries geometry); each
@@ -1902,9 +1957,20 @@ class Bm25CompressedIndex:
             for t in set(c["qtf"]) | c["exc"]:
                 rows.append((qid, t))
         if not rows:
-            return self.spark.createDataFrame(
-                [], "query_id string, doc_id long, score double"
-            )
+            return self.spark.createDataFrame([], _BATCH_SCHEMA)
+        if not faceted and self._resident_postings() is not None:
+            import pyarrow as pa
+
+            hits = self._score_on_driver(comp, k, round_to)
+            qids = [q for q, h in hits.items() for _ in h]
+            pairs = [p for h in hits.values() for p in h]
+            # from Arrow: a local relation, no job (a list of tuples would
+            # run a Python-worker job)
+            return self.spark.createDataFrame(pa.table({
+                "query_id": pa.array(qids, pa.string()),
+                "doc_id": pa.array([d for d, _ in pairs], pa.int64()),
+                "score": pa.array([s for _, s in pairs], pa.float64()),
+            }))
         qdf = self.spark.createDataFrame(rows, "query_id string, term_id long")
         bmeta = self.spark.sparkContext.broadcast(comp)
         all_tids = sorted({t for _, t in rows})
@@ -1961,19 +2027,14 @@ class Bm25CompressedIndex:
             scored = (
                 cand.groupby("part")
                 .cogroup(allow_df.groupby("part"))
-                .applyInPandas(
-                    score_cogroup,
-                    schema="query_id string, doc_id long, score double",
-                )
+                .applyInPandas(score_cogroup, schema=_BATCH_SCHEMA)
             )
         else:
 
             def score_part(pdf: pd.DataFrame) -> pd.DataFrame:
                 return score_rows_batch(pdf, {})
 
-            scored = cand.groupBy("part").applyInPandas(
-                score_part, schema="query_id string, doc_id long, score double"
-            )
+            scored = cand.groupBy("part").applyInPandas(score_part, schema=_BATCH_SCHEMA)
         return _rank_scored_batch_df(scored, k, round_to)
 
     def search_batch(
@@ -2011,9 +2072,7 @@ class Bm25CompressedIndex:
             for t, c in qtf.items():
                 rows.append((qid, t))
         if not rows:
-            return self.spark.createDataFrame(
-                [], "query_id string, doc_id long, score double"
-            )
+            return self.spark.createDataFrame([], _BATCH_SCHEMA)
         qdf = self.spark.createDataFrame(rows, "query_id string, term_id long")
         bmeta = self.spark.sparkContext.broadcast(qmeta)
         n_by_q = {qid: len(qtf) for qid, qtf in qmeta.items()}
@@ -2037,9 +2096,7 @@ class Bm25CompressedIndex:
                 out_s += scores
             return pd.DataFrame({"query_id": out_q, "doc_id": out_d, "score": out_s})
 
-        scored = cand.groupBy("part").applyInPandas(
-            score_part, schema="query_id string, doc_id long, score double"
-        )
+        scored = cand.groupBy("part").applyInPandas(score_part, schema=_BATCH_SCHEMA)
         return _rank_scored_batch_df(scored, k, round_to)
 
     def fetch_docs(self, topk: DataFrame, docs: DataFrame, cols: list[str] | None = None) -> DataFrame:

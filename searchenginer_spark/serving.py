@@ -18,7 +18,7 @@ postings as one Arrow table, ``/api/search``
 Spark job — a term lookup, a slice of the resident postings scored on
 the driver, or a numpy edit-distance rank over the first-letter
 candidates; what is left per request is one ``dict_version`` read
-(a few py4j round trips, ~6 ms). Measured one request at a time on a
+(three py4j calls, ~0.6 ms). Measured one request at a time on a
 4-vCPU host (1000 docs with positions, local[4]): search 14 ms mean and
 suggest 18-22 ms median, against 110 ms and 92 ms when each ran one
 Spark job. On a larger index a query whose own terms hold at most that
@@ -26,7 +26,9 @@ many postings is one narrow filtered scan job, scored on the driver;
 larger or faceted queries pay the distributed plan's one-or-two jobs (~0.3-0.5 s
 scheduling floor on local mode, see PLANS.md §6), and suggest without
 a dict cache runs the Spark operator. Bulk callers should still use
-``/api/search_batch``: one job per query SET.
+``/api/search_batch``: one dictionary probe and one scoring pass per
+query SET — on the small index above a driver pass with no Spark job,
+on a larger one (or with facets) one distributed job.
 
 Concurrent single requests are not coalesced into batches: on the
 in-memory path there is no per-request job left whose cost a batch
@@ -41,10 +43,11 @@ Request shapes (both routes take GET query strings or POST bodies in
 * ``/api/suggest``: ``word``, optional ``k`` — returns
   ``{"word", "suggestions": [{"term", "sim"}...]}``.
 * ``/api/search_batch`` (POST JSON): ``{"queries": {id: query, ...},
-  "k", "mode"}`` — ONE Spark job for the whole set via
-  ``search_query_batch`` (the measured ~10x-throughput serving shape,
-  PLANS.md §6); returns ``{"k", "results": {id: [{"doc_id",
-  "score"}...]}}`` with an entry for every id, hitless ids included.
+  "k", "mode"}`` — the whole set in one ``search_query_batch`` call: no
+  Spark job on a small index with no facet clause, else ONE job (the
+  measured ~10x-throughput serving shape, PLANS.md §6); returns
+  ``{"k", "results": {id: [{"doc_id", "score"}...]}}`` with an entry
+  for every id, hitless ids included.
 """
 
 from __future__ import annotations
@@ -100,8 +103,8 @@ class SearchServer:
         # concurrent handler threads. On a small index a search or suggest
         # holds it for driver-side work only, no Spark job (see the module
         # docstring); bulk throughput comes from /api/search_batch (one
-        # job per query SET) — same trade the reference's worker pool
-        # makes per engine connection.
+        # scoring pass per query SET) — same trade the reference's worker
+        # pool makes per engine connection.
         self._lock = threading.Lock()
         server = self
 

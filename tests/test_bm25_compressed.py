@@ -456,6 +456,25 @@ def test_dict_version_two_rapid_bumps_distinct(spark, tmp_path):
     assert v1 and v2 and v1 != v2
     assert len(v1) == 32  # uuid4 hex
 
+    # a handle resolves the marker once and reads it through that path:
+    # a missing marker reads as None, two back-to-back bumps as two versions
+    from searchenginer_spark.plans.bm25 import Bm25CompressedIndex
+
+    td = spark.createDataFrame([("a", 0, 1)], "term string, term_id long, df long")
+    idx = Bm25CompressedIndex(spark, td, td, root=str(tmp_path / "hroot"))
+
+    def read():
+        return read_dict_version(spark, idx._root, idx._version_marker)
+
+    assert idx._version_marker is not None
+    assert idx._seen_version is None and read() is None
+    bump_dict_version(spark, idx._root)
+    h1 = read()
+    bump_dict_version(spark, idx._root)
+    h2 = read()
+    assert h1 and h2 and h1 != h2 and len(h2) == 32
+    assert h2 == read_dict_version(spark, idx._root)
+
 
 def test_serving_mode_repeat_does_not_stack_persisted_rdds(spark, docs_sf0001):
     """serving_mode() called twice (and _check_version refreshes) must

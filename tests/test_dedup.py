@@ -126,6 +126,33 @@ def _n_persistent(spark) -> int:
     return spark.sparkContext._jsc.getPersistentRDDs().size()
 
 
+def test_dedup_by_pairs_releases_band_table(spark, docs, fingerprints):
+    """dedup_by_pairs keeps the pairs' intermediates: releasing its result
+    frees simhash_near_pairs' persisted band table. Compared as sets of
+    persisted-RDD ids: other tests' asynchronous unpersists may still be
+    landing, so a count could hide a leak."""
+    import time
+
+    from searchenginer_spark.operators.dedup import release_intermediates
+
+    def persisted() -> set[int]:
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+    docs.count()  # materialize the fixtures' own caches first
+    fingerprints.count()
+    fp = fingerprints.filter(F.col("doc_id") < 250)  # unique plan: no CacheManager
+    before = persisted()  # plan-dedup against other tests' band tables
+    out = dedup_by_pairs(docs, simhash_near_pairs(fp))
+    assert persisted() - before, "the band table should be live"
+    assert out.count() < docs.count()
+    release_intermediates(out)
+    for _ in range(20):  # unpersist is async
+        if persisted() <= before:
+            break
+        time.sleep(0.25)
+    assert persisted() <= before, sorted(persisted() - before)
+
+
 def test_minhash_release_intermediates_no_leak(spark, docs):
     from searchenginer_spark.operators.dedup import release_intermediates
 

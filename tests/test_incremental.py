@@ -449,3 +449,58 @@ def test_search_query_rows_sees_folded_postings(spark, tmp_path_factory):
         spark.conf.set("spark.sql.shuffle.partitions", sp0)
         idx.postings.unpersist()
         idx.term_dict.unpersist()
+
+
+def test_search_query_batch_sees_folded_postings(spark, tmp_path_factory):
+    """A batch scored from the resident postings reads the current snapshot:
+    after a fold bumps dict_version, and after serving_mode(), the next
+    search_query_batch on the same handle scores the folded postings."""
+    from searchenginer_spark.plans.build_index import build_index, open_index
+
+    base = str(tmp_path_factory.mktemp("incbatch"))
+    input_dir, root, ckpt = f"{base}/in", f"{base}/idx", f"{base}/ckpt"
+    build_index(
+        build_docs(spark, 100, seed=42, num_partitions=4), root,
+        docs_per_part=DPP, text_col="content",
+    )
+    idx = open_index(spark, root)
+    queries = {"fresh": "zzzfreshterm int", "plain": "int return"}
+
+    def batch() -> dict:
+        out: dict[str, list] = {}
+        for r in idx.search_query_batch(queries, k=200).collect():
+            out.setdefault(r["query_id"], []).append((r["doc_id"], r["score"]))
+        return {q: sorted(h, key=lambda t: (-t[1], t[0])) for q, h in out.items()}
+
+    def want() -> dict:
+        return {
+            q: [(r["doc_id"], r["score"]) for r in idx.search_query(text, k=200).collect()]
+            for q, text in queries.items()
+        }
+
+    before = batch()
+    assert idx._resident is not None and before == want()
+    assert 1000 not in dict(before["fresh"])
+
+    new = spark.createDataFrame(
+        [(1000, "zzzfreshterm appears here zzzfreshterm int")],
+        "doc_id long, content string",
+    )
+    new.write.mode("append").parquet(input_dir)
+    incremental_index(spark, input_dir, root, ckpt, docs_per_part=DPP)
+
+    got = batch()
+    assert got["fresh"][0][0] == 1000
+    assert got == want() and got != before
+    aqe0 = spark.conf.get("spark.sql.adaptive.enabled")
+    sp0 = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        idx.serving_mode(n_partitions=4)
+        assert idx._resident is None
+        assert batch() == got
+        assert idx._resident is not None
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", aqe0)
+        spark.conf.set("spark.sql.shuffle.partitions", sp0)
+        idx.postings.unpersist()
+        idx.term_dict.unpersist()

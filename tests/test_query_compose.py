@@ -710,3 +710,68 @@ def test_search_query_rows_small_query_is_one_job(qindex, spark, monkeypatch):
     )
     got, jobs = count_jobs(spark, lambda: qindex.search_query_rows(query, k=10))
     assert (got, jobs) == (want, 1)
+
+
+# ------------------------------------------------ driver-scored batches
+
+
+def _batch_rows(df) -> list:
+    """(query_id, doc_id, score) rows in rank order per query."""
+    rows = [(r["query_id"], r["doc_id"], r["score"]) for r in df.collect()]
+    return sorted(rows, key=lambda t: (t[0], -t[2], t[1]))
+
+
+@pytest.mark.parametrize("round_to", [None, 6])
+@pytest.mark.parametrize("mode", ["and", "or"])
+def test_search_query_batch_resident_equals_distributed(
+    qindex, spark, monkeypatch, mode, round_to
+):
+    """A batch scored on the driver from the resident postings returns the
+    distributed plan's rows exactly (doc ids and float scores), runs no
+    Spark job once the caches are filled, and takes the list form too."""
+    queries = [q for q, _mode in _ROWS_QUERIES]
+    batch = {str(i): q for i, q in enumerate(queries)}
+    qindex.search_query_rows("spark", k=1)  # fills the dict cache + resident table
+    frame, jobs = count_jobs(
+        spark, lambda: qindex.search_query_batch(batch, k=10, mode=mode, round_to=round_to)
+    )
+    got, collect_jobs = count_jobs(spark, lambda: _batch_rows(frame))
+    assert (jobs, collect_jobs) == (0, 0)
+    assert got == _batch_rows(
+        qindex.search_query_batch(queries, k=10, mode=mode, round_to=round_to)
+    )
+    monkeypatch.setattr(Bm25CompressedIndex, "DRIVER_SCORE_MAX_POSTINGS", 0)
+    dist = qindex.search_query_batch(batch, k=10, mode=mode, round_to=round_to)
+    want = _batch_rows(dist)
+    assert want and got == want
+    assert frame.schema == dist.schema
+
+
+def test_search_query_batch_resident_unmatchable(qindex, monkeypatch):
+    """An all-unmatchable batch is an empty frame with the distributed
+    frame's schema."""
+    queries = ["zzz_not_here", "+zzz_not_here data", "-data -merge"]
+    qindex.search_query_rows("spark", k=1)
+    frame = qindex.search_query_batch(queries, k=10)
+    assert frame.collect() == []
+    monkeypatch.setattr(Bm25CompressedIndex, "DRIVER_SCORE_MAX_POSTINGS", 0)
+    assert frame.schema == qindex.search_query_batch(["spark query"], k=10).schema
+
+
+def test_search_query_batch_faceted_takes_distributed_plan(qindex, spark, docs_sf0001):
+    """One faceted query sends the whole batch through the distributed plan;
+    its unfaceted queries still equal the resident answers."""
+    qindex.search_query_rows("spark", k=1)
+    plain = _batch_rows(qindex.search_query_batch({"plain": "data value"}, k=10))
+    mixed, jobs = count_jobs(
+        spark,
+        lambda: _batch_rows(
+            qindex.search_query_batch(
+                {"plain": "data value", "de": "data value lang:de"},
+                k=10, docs=docs_sf0001,
+            )
+        ),
+    )
+    assert jobs > 0
+    assert plain and [r for r in mixed if r[0] == "plain"] == plain
+    assert any(r[0] == "de" for r in mixed)
