@@ -5,15 +5,17 @@ Builds the bench corpus + index at bench scale, then measures BOTH layers:
 
   1. end-to-end Spark latency (median of R warm runs) for the bench's
      and_hot / or_hot queries — the number BENCH reports;
-  2. the pure-Python part scorers (_score_part_and / _score_part_or) run
-     in-process over the SAME posting rows Spark ships to the workers —
-     isolating worker-side scoring from scheduling/shuffle;
+  2. the pure-Python per-part kernel (_score_part_bool's conjunctive
+     branch, and its disjunctive branch _score_part_or) run in-process
+     over the SAME posting rows Spark ships to the workers — isolating
+     worker-side scoring from scheduling/shuffle;
   3. OR pruning effectiveness: candidates scored and essential-term
      postings decoded, with the tau seed as shipped (top term's own
      top-k) vs a hypothetical stronger seed (kth best of top-term scores
      + second term probed at those docs).
 
 Usage: python scripts/or_query_probe.py [n_docs] [reps]
+(the index is written under $TMPDIR, default /tmp)
 Prints one JSON line; findings recorded in PLANS.md §7.
 """
 
@@ -22,6 +24,7 @@ from __future__ import annotations
 import json
 import os
 import sys
+import tempfile
 import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -116,7 +119,7 @@ def main():
     spark = get_spark()
     docs = build_docs(spark, n_docs=n_docs, seed=7).persist()
     docs.count()
-    root = os.path.join("/tmp", f"or_probe_idx_{n_docs}")
+    root = os.path.join(tempfile.gettempdir(), f"or_probe_idx_{n_docs}")
     build_index(docs, root, docs_per_part=max(256, n_docs // 64))
     idx = open_index(spark, root)
     idx.postings = idx.postings.persist()
@@ -139,7 +142,8 @@ def main():
     out["and_postings"] = sum(g["n"] for v in and_parts.values() for g in v)
     out["or_postings"] = sum(g["n"] for v in or_parts.values() for g in v)
     out["and_scorer_ms"] = time_scorer(
-        lambda g, q: B._score_part_and(g, q, len(and_qtf), 10, 4), and_parts, and_qtf, reps
+        lambda g, q: B._score_part_bool(g, list(q), [], q, 10, round_to=4),
+        and_parts, and_qtf, reps,
     )
     out["or_scorer_ms"] = time_scorer(
         lambda g, q: B._score_part_or(g, q, 10, 4), or_parts, or_qtf, reps

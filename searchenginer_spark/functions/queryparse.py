@@ -89,8 +89,10 @@ class QuerySpec:
 
 def parse_query(query: str) -> QuerySpec:
     """Parse a query string into a QuerySpec. Raises ValueError on clauses
-    the engine cannot execute exactly (negated phrases/prefixes/facets) —
-    failing loudly beats silently returning wrong results."""
+    the engine cannot execute exactly (negated phrases/prefixes/facets)
+    and on malformed ones (a bad range facet, a fuzzy distance over 2, a
+    /regexp/ that does not compile) — failing loudly beats silently
+    returning wrong results."""
     spec = QuerySpec()
     for m in _CLAUSE_RE.finditer(query):
         sign, raw, quoted, slop = m.group(1), m.group(2), m.group(3), m.group(4)
@@ -109,7 +111,12 @@ def parse_query(query: str) -> QuerySpec:
                 raise ValueError(f"negated regexp not supported: -{raw}")
             # whole-term regexp (Lucene RegexpQuery analog): SHOULD
             # expansion against the dictionary, qtf=1, like prefixes
-            spec.regexps.append(raw[1:-1].lower())
+            pat = raw[1:-1].lower()
+            try:
+                re.compile(pat)
+            except re.error as e:
+                raise ValueError(f"invalid regexp {raw}: {e}") from None
+            spec.regexps.append(pat)
             continue
         boost = None
         bm = _BOOST_RE.match(raw)

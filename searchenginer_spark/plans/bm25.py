@@ -9,9 +9,15 @@ srpc/PageSearch/server.pb_skeleton.cc:154-250 pipeline):
      min/max row-group pruning does the index seek (rows are written
      sorted by term_id within part files)
   4. per-part scoring in ONE Arrow call per part (groupBy('part')
-     .applyInPandas): conjunctive galloping intersection with block
-     skip-decode, or disjunctive MaxScore with block-max pruning
-  5. per-part top-k -> global TakeOrderedAndProject(k)
+     .applyInPandas, Bm25CompressedIndex._scored): every entry point
+     compiles to one query form (_compile_spec), and that one call
+     scores EVERY query of the call (_score_part_queries -> the one
+     kernel, _score_part_bool): conjunctive galloping intersection with
+     block skip-decode, positional matching, or disjunctive MaxScore
+     with block-max pruning. Each posting row crosses the Arrow boundary
+     once per part, however many queries of a batch use it
+  5. per-part top-k -> global TakeOrderedAndProject(k) (per query_id
+     window for batches)
 
 Parts are doc-disjoint ranges, so per-part top-k then global merge is
 exact — this is what lets the scoring stage scale out with zero shared
@@ -52,7 +58,6 @@ from ..operators.postings import (
     decode_scores,
     decode_tfs,
 )
-from .bm25_dataframe import tokenize_query
 
 
 def _decode_candidate_blocks(g: dict, cand: np.ndarray):
@@ -84,51 +89,6 @@ def _drop_excluded(cand: np.ndarray, scores: np.ndarray, neg: list):
         keep = ~_member_sorted(cand, ids)
         cand, scores = cand[keep], scores[keep]
     return cand, scores
-
-
-def _score_part_and(
-    groups: list, qtf: dict, n_terms: int, k: int, round_to=None, neg=(), allow=None
-):
-    """Conjunctive scoring for one part. groups: list of posting rows.
-
-    When ``round_to`` is set, per-part top-k truncation happens on the
-    ROUNDED score (doc_id tie-break) — the same key the global merge sorts
-    by — so a rounded near-tie can never be pruned below a doc it ties with.
-
-    ``neg``: posting rows of excluded (NOT) terms; matching docs are dropped
-    before truncation. ``allow``: sorted array of permitted doc ids
-    (metadata filter) — applied at the driver-term step so every downstream
-    block probe shrinks.
-    """
-    if len(groups) < n_terms:
-        return [], []
-    groups = sorted(groups, key=lambda g: g["n"])  # rarest first
-    drv = groups[0]
-    cand = decode_doc_ids(drv["docs"], drv["n"])
-    cand_score = decode_scores(drv["scores"]) * qtf[drv["term_id"]]
-    if allow is not None:
-        mask = _member_sorted(cand, allow)
-        cand, cand_score = cand[mask], cand_score[mask]
-    for g in groups[1:]:
-        if cand.size == 0:
-            return [], []
-        ids, pos = _decode_candidate_blocks(g, cand)
-        loc = np.searchsorted(ids, cand)
-        loc_c = np.minimum(loc, max(len(ids) - 1, 0))
-        hit = ids.size > 0
-        member = (ids[loc_c] == cand) if hit else np.zeros(len(cand), dtype=bool)
-        cand = cand[member]
-        if cand.size == 0:
-            return [], []
-        sc = decode_scores(g["scores"])
-        cand_score = cand_score[member] + sc[pos[loc_c[member]]] * qtf[g["term_id"]]
-    if neg:
-        cand, cand_score = _drop_excluded(cand, cand_score, neg)
-        if cand.size == 0:
-            return [], []
-    if round_to is not None:
-        cand_score = np.round(cand_score, round_to)
-    return _topk(cand, cand_score, k)
 
 
 def _score_part_or(groups: list, qtf: dict, k: int, round_to=None, neg=(), allow=None):
@@ -322,16 +282,14 @@ def _phrase_match(by_tid: dict, slots: list[int]):
     (block_doc_off / block_pos_off), so a hot term's blobs are never fully
     decoded when the conjunctive candidate set is small.
 
-    Returns (cand, idxs): sorted surviving doc ids, and for each distinct
-    term the posting-row index of every survivor (for score gathering
-    without a second decode). (empty, {}) when nothing matches."""
+    Returns the sorted surviving doc ids (empty when nothing matches)."""
     empty = np.empty(0, dtype=np.int64)
     if any(t not in by_tid for t in slots):
-        return empty, {}
+        return empty
     distinct = sorted(dict.fromkeys(slots), key=lambda t: by_tid[t]["n"])
-    cand, idxs, pos_data = _candidate_positions(by_tid, distinct)
+    cand, pos_data = _candidate_positions(by_tid, distinct)
     if cand.size == 0:
-        return empty, {}
+        return empty
     # keys are strictly increasing per slot: owner asc, positions asc within
     offset = len(slots)  # keeps pos - slot_i strictly positive
     keys = None
@@ -341,38 +299,36 @@ def _phrase_match(by_tid: dict, slots: list[int]):
         keys_i = (owner << 32) | (vals - i + offset)
         keys = keys_i if keys is None else keys[_member_sorted(keys, keys_i)]
         if keys.size == 0:
-            return empty, {}
-    surv = np.unique(keys >> 32)  # candidate rows with >=1 phrase start
-    return cand[surv], {t: idxs[t][surv] for t in distinct}
+            return empty
+    return cand[np.unique(keys >> 32)]  # candidate rows with >=1 phrase start
 
 
 def _candidate_positions(by_tid: dict, distinct: list[int]):
     """Shared prologue of the positional matchers (phrase, NEAR):
     conjunctive intersection over ``distinct`` term_ids (assumed
-    rarest-first; block skip-decode, identical read pattern to
-    _score_part_and), then each term's positions gathered for the
+    rarest-first; block skip-decode, identical read pattern to the
+    kernel's must loop), then each term's positions gathered for the
     surviving candidates only.
 
-    Returns (cand, idxs, pos_data) where idxs[t] is each candidate's
-    posting-row index within term t's row and pos_data[t] =
-    (flat, starts, counts, rows_t) addresses t's decoded positions per
-    candidate. cand is empty when the intersection is."""
+    Returns (cand, pos_data) where pos_data[t] = (flat, starts, counts,
+    rows_t) addresses t's decoded positions per candidate. cand is empty
+    when the intersection is."""
     empty = np.empty(0, dtype=np.int64)
     drv = by_tid[distinct[0]]
     cand = decode_doc_ids(drv["docs"], drv["n"])
     decoded = {distinct[0]: (cand, np.arange(cand.size, dtype=np.int64))}
     for t in distinct[1:]:
         if cand.size == 0:
-            return empty, {}, {}
+            return empty, {}
         g = by_tid[t]
         ids, pos = _decode_candidate_blocks(g, cand)
         decoded[t] = (ids, pos)
         if ids.size == 0:
-            return empty, {}, {}
+            return empty, {}
         loc = np.minimum(np.searchsorted(ids, cand), ids.size - 1)
         cand = cand[ids[loc] == cand]
     if cand.size == 0:
-        return empty, {}, {}
+        return empty, {}
     # GLOBAL posting index of every candidate within each term's posting row
     # (the scores-array index); each term's decoded ids are a superset of the
     # final candidate set, so a sorted searchsorted lookup is exact
@@ -402,7 +358,7 @@ def _candidate_positions(by_tid: dict, distinct: list[int]):
             )
             rows_t = idxs[t]
         pos_data[t] = (flat, starts, counts, rows_t)
-    return cand, idxs, pos_data
+    return cand, pos_data
 
 
 def _near_match(by_tid: dict, terms: list[int], window: int, ordered: bool = False):
@@ -424,14 +380,14 @@ def _near_match(by_tid: dict, terms: list[int], window: int, ordered: bool = Fal
 
     Both are fully vectorized across all candidates (no per-candidate
     Python loop), with the same skip-decode read pattern as _phrase_match
-    via _candidate_positions. Returns (cand, idxs) like _phrase_match."""
+    via _candidate_positions. Returns the sorted surviving doc ids."""
     empty = np.empty(0, dtype=np.int64)
     if any(t not in by_tid for t in terms):
-        return empty, {}
+        return empty
     distinct = sorted(dict.fromkeys(terms), key=lambda t: by_tid[t]["n"])
-    cand, idxs, pos_data = _candidate_positions(by_tid, distinct)
+    cand, pos_data = _candidate_positions(by_tid, distinct)
     if cand.size == 0:
-        return empty, {}
+        return empty
     keys_t = {}
     for t in distinct:
         flat, starts, counts, rows_t = pos_data[t]
@@ -459,23 +415,7 @@ def _near_match(by_tid: dict, terms: list[int], window: int, ordered: bool = Fal
             hi = np.searchsorted(keys_t[t], anchors + window, side="right")
             ok &= lo < hi  # term t has a position in [p, p+window] here
         surv = np.unique(anchors[ok] >> 32)
-    return cand[surv], {t: idxs[t][surv] for t in distinct}
-
-
-def _score_part_phrase(groups: list, slots: list[int], qtf: dict, k: int, round_to=None):
-    """Exact-phrase top-k for one part: _phrase_match survivors scored as the
-    BM25 sum over the phrase's distinct terms (qtf weights included), using
-    the posting indices the match already resolved — no second decode."""
-    by_tid = {g["term_id"]: g for g in groups}
-    out_ids, idxs = _phrase_match(by_tid, slots)
-    if out_ids.size == 0:
-        return [], []
-    out_scores = np.zeros(out_ids.size, dtype=np.float64)
-    for t, rows in idxs.items():
-        out_scores += qtf[t] * decode_scores(by_tid[t]["scores"])[rows]
-    if round_to is not None:
-        out_scores = np.round(out_scores, round_to)
-    return _topk(out_ids, out_scores, k)
+    return cand[surv]
 
 
 def _score_part_bool(
@@ -490,38 +430,41 @@ def _score_part_bool(
     allow=None,
     nears: tuple = (),
 ):
-    """Composed boolean scoring for one part (the search_query engine):
+    """THE per-part kernel every query runs (via _score_part_queries):
 
-      must     conjunctive term_ids — every one must match (rarest-first
-               galloping intersection with block skip-decode)
+      must     conjunctive term_ids — every one must match: rarest-first
+               galloping intersection with block skip-decode, each term's
+               scores carried along with the surviving candidates
       phrases  tuples of slot term_ids — each must match exactly (adjacent,
                in order); survivors tighten the allow set
-      nears    (term_ids tuple, window) pairs — each must match within the
-               unordered window; survivors tighten the allow set
+      nears    (term_ids tuple, window, ordered) triples — each must match
+               within the window (see _near_match); survivors tighten the
+               allow set
       should   additive term_ids — probed at the surviving candidates only
                (block-sliced), contributing score where present
       neg      posting rows of excluded terms (dropped pre-truncation)
       allow    sorted permitted doc ids (metadata facet), or None
 
-    Score = sum over every distinct positive atom present (must + phrase
-    terms + should), each weighted by qtf — must/phrase terms are scored by
-    the same skip-decode probe as should terms, so no contribution is ever
-    double-counted when a term plays several roles.
+    Score = sum over every distinct positive atom present, each weighted
+    by qtf: the must terms' carried scores, added rarest first (so a must
+    term is decoded once), then every other phrase/near and should term
+    in query order, probed by the same skip-decode — no contribution is
+    ever counted twice when a term plays several roles. With ``round_to``
+    set, per-part top-k truncation happens on the ROUNDED score (doc_id
+    tie-break) — the same key the global merge sorts by.
 
     Candidate generation: must-intersection if any must terms; else the
-    phrase-survivor set; else a pure disjunction (delegated to
+    positional survivor set; else a pure disjunction (delegated to
     _score_part_or, MaxScore pruning intact)."""
     by_tid = {g["term_id"]: g for g in groups}
     if any(t not in by_tid for t in must):
         return [], []
-    positional = [(slots, None) for slots in phrases] + [
-        (terms, w) for terms, w in nears
-    ]
-    for slots, w in positional:
+    positional = [(slots, None, False) for slots in phrases] + list(nears)
+    for slots, w, ordered in positional:
         if w is None:
-            surv, _ = _phrase_match(by_tid, list(slots))
+            surv = _phrase_match(by_tid, list(slots))
         else:
-            surv, _ = _near_match(by_tid, list(slots), w)
+            surv = _near_match(by_tid, list(slots), w, ordered)
         if surv.size == 0:
             return [], []
         allow = surv if allow is None else allow[_member_sorted(allow, surv)]
@@ -529,18 +472,28 @@ def _score_part_bool(
             return [], []
 
     if must:
-        order = sorted(must, key=lambda t: by_tid[t]["n"])
+        # rarest first; equal counts by term_id, the stored row order
+        order = sorted(must, key=lambda t: (by_tid[t]["n"], t))
         drv = by_tid[order[0]]
         cand = decode_doc_ids(drv["docs"], drv["n"])
+        score = decode_scores(drv["scores"]) * qtf[order[0]]
         if allow is not None:
-            cand = cand[_member_sorted(cand, allow)]
+            keep = _member_sorted(cand, allow)
+            cand, score = cand[keep], score[keep]
         for t in order[1:]:
             if cand.size == 0:
                 return [], []
-            ids, _pos = _decode_candidate_blocks(by_tid[t], cand)
-            cand = cand[_member_sorted(cand, ids)]
+            g = by_tid[t]
+            ids, pos = _decode_candidate_blocks(g, cand)
+            if ids.size == 0:
+                return [], []
+            loc = np.minimum(np.searchsorted(ids, cand), ids.size - 1)
+            hit = ids[loc] == cand
+            cand = cand[hit]
+            score = score[hit] + decode_scores(g["scores"])[pos[loc[hit]]] * qtf[t]
     elif positional:
         cand = allow  # ⊆ positional survivors: every candidate matched them
+        score = np.zeros(cand.size, dtype=np.float64)
     else:
         sh = [by_tid[t] for t in should if t in by_tid]
         if not sh:
@@ -549,11 +502,10 @@ def _score_part_bool(
     if cand.size == 0:
         return [], []
 
-    phrase_terms = [t for slots, _w in positional for t in slots]
-    score = np.zeros(cand.size, dtype=np.float64)
-    for t in dict.fromkeys([*must, *phrase_terms, *should]):
+    carried = set(must)
+    for t in dict.fromkeys([*(t for slots, _w, _o in positional for t in slots), *should]):
         g = by_tid.get(t)
-        if g is not None:
+        if g is not None and t not in carried:
             score += qtf[t] * _probe_scores(g, cand)
     if neg:
         cand, score = _drop_excluded(cand, score, neg)
@@ -564,36 +516,31 @@ def _score_part_bool(
     return _topk(cand, score, k)
 
 
-def _score_compiled(comp: dict, rows: list, k: int, round_to=None, allow=None):
-    """Score one part's posting rows for a compiled query (_compile_spec):
-    the excluded terms' rows are split off as ``neg`` for
-    _score_part_bool. Shared by the distributed per-part UDFs and the
-    driver path of search_query_rows."""
-    pos_rows = [g for g in rows if g["term_id"] not in comp["exc"]]
-    neg = [g for g in rows if g["term_id"] in comp["exc"]]
-    return _score_part_bool(
-        pos_rows, comp["must"], comp["should"], comp["qtf"], k, comp["slots"],
-        round_to, neg, allow, comp["nears"],
-    )
-
-
-def _score_part_near(
-    groups: list, terms: list[int], window: int, qtf: dict, k: int,
-    round_to=None, ordered: bool = False,
-):
-    """Proximity top-k for one part: _near_match survivors scored as the
-    BM25 sum over the distinct terms (qtf weights included), using the
-    posting indices the match already resolved — no second decode."""
-    by_tid = {g["term_id"]: g for g in groups}
-    out_ids, idxs = _near_match(by_tid, terms, window, ordered)
-    if out_ids.size == 0:
-        return [], []
-    out_scores = np.zeros(out_ids.size, dtype=np.float64)
-    for t, rows in idxs.items():
-        out_scores += qtf[t] * decode_scores(by_tid[t]["scores"])[rows]
-    if round_to is not None:
-        out_scores = np.round(out_scores, round_to)
-    return _topk(out_ids, out_scores, k)
+def _score_part_queries(rows: list, comps: dict, k: int, round_to=None, allow_by_q=None):
+    """THE per-part scorer of both executors (the distributed plan's Arrow
+    call and the driver path): one part's posting rows, grouped by
+    term_id, score every compiled query (_compile_spec) of the call on its
+    own term ids — its excluded terms' rows become ``neg``.
+    ``allow_by_q``: {query_id: sorted allowed doc ids} for faceted queries
+    (an empty array = nothing allowed in this part); other queries are
+    unfiltered. Returns (query_ids, doc_ids, scores), each query's hits in
+    its per-part top-k order."""
+    by_tid = {r["term_id"]: r for r in rows}
+    out_q, out_d, out_s = [], [], []
+    for qid, c in comps.items():
+        pos = [by_tid[t] for t in c["qtf"] if t in by_tid]
+        if not pos:
+            continue
+        neg = [by_tid[t] for t in c["exc"] if t in by_tid]
+        allow = None if allow_by_q is None else allow_by_q.get(qid)
+        d, s = _score_part_bool(
+            pos, c["must"], c["should"], c["qtf"], k, c["slots"],
+            round_to, neg, allow, c["nears"],
+        )
+        out_q += [qid] * len(d)
+        out_d += d
+        out_s += s
+    return out_q, out_d, out_s
 
 
 def _lev_within(a: str, b: str, maxd: int) -> int:
@@ -751,61 +698,71 @@ def apply_facets(docs: DataFrame, facets: list[tuple[str, tuple]]) -> DataFrame:
     return docs
 
 
+def _tk(must=(), should=(), phrases=(), nears=(), exc=(), boosts=(),
+        prefixes=(), fuzzies=(), regexps=()) -> dict:
+    """The tokenized query form _compile_spec resolves — every entry point
+    builds one. ``positive`` lists every positive token occurrence (qtf
+    counts them), ``all`` is the raw-token union the dictionary probe must
+    cover; nears are (tokens, window, ordered) triples; prefixes, fuzzy
+    (word, dist) pairs and regexps are expanded against the dictionary."""
+    positive = [
+        *must, *should, *(t for p in phrases for t in p),
+        *(t for p, _w, _o in nears for t in p),
+    ]
+    return {
+        "must": list(must), "should": list(should), "phrases": list(phrases),
+        "nears": list(nears), "exc": list(exc), "positive": positive,
+        "boosts": list(boosts), "prefixes": list(prefixes),
+        "fuzzies": list(fuzzies), "regexps": list(regexps),
+        "all": set(positive) | set(exc),
+    }
+
+
+def _plain_tokens(query: str, mode: str, pattern: str, exclude=None) -> dict:
+    """The plain-terms form (search, score_all, search_filtered,
+    search_batch): every term is MUST in mode='and' and SHOULD otherwise,
+    each ``exclude`` term (lowercased, not tokenized) is NOT unless the
+    query holds it."""
+    toks = re.findall(pattern, query.lower())
+    exc = sorted({t.lower() for t in exclude or ()} - set(toks))
+    return _tk(must=toks, exc=exc) if mode == "and" else _tk(should=toks, exc=exc)
+
+
 def _spec_tokens(spec, mode: str, pattern: str) -> dict:
     """Tokenize a parsed QuerySpec's clauses under the index's term pattern.
-    Folds mode in: bare terms become MUST in mode='and'. ``all`` is the
-    raw-token union the dictionary probe must cover."""
+    Folds mode in: bare terms become MUST in mode='and'."""
     def toks(words: list[str]) -> list[str]:
         out: list[str] = []
         for w in words:
             out.extend(re.findall(pattern, w.lower()))
         return out
 
-    must_raw = toks(spec.must) + (toks(spec.should) if mode == "and" else [])
-    should_raw = toks(spec.should) if mode != "and" else []
-    phrase_toks = [p for p in (re.findall(pattern, s.lower()) for s in spec.phrases) if p]
-    near_toks = [
-        (p, w)
-        for p, w in ((re.findall(pattern, s.lower()), w) for s, w in spec.nears)
-        if p
-    ]
-    exc_raw = sorted(set(toks(spec.exclude)))
-    positive = (
-        must_raw
-        + should_raw
-        + [t for p in phrase_toks for t in p]
-        + [t for p, _w in near_toks for t in p]
-    )
-    return {
-        "must": must_raw,
-        "should": should_raw,
-        "phrases": phrase_toks,
-        "nears": near_toks,
-        "exc": exc_raw,
-        "positive": positive,
+    return _tk(
+        must=toks(spec.must) + (toks(spec.should) if mode == "and" else []),
+        should=toks(spec.should) if mode != "and" else [],
+        phrases=[p for p in (re.findall(pattern, s.lower()) for s in spec.phrases) if p],
+        nears=[
+            (p, w, False)  # the grammar's "..."~W is unordered
+            for p, w in ((re.findall(pattern, s.lower()), w) for s, w in spec.nears)
+            if p
+        ],
+        exc=sorted(set(toks(spec.exclude))),
         # term^B occurrences: tokenized word + its boost (qtf adjustment)
-        "boosts": [(toks([w]), b) for w, b in spec.boosts],
-        "all": set(positive) | set(exc_raw),
-    }
+        boosts=[(toks([w]), b) for w, b in spec.boosts],
+        prefixes=spec.prefixes, fuzzies=spec.fuzzies, regexps=spec.regexps,
+    )
 
 
 def _compile_spec(
-    tk: dict,
-    prefixes: list[str],
-    tid: dict,
-    expand,
-    fuzzies=(),
-    expand_fuzzy=None,
-    regexps=(),
-    expand_regexp=None,
+    tk: dict, tid: dict, expand_prefix=None, expand_fuzzy=None, expand_regexp=None
 ) -> dict | None:
-    """Resolve a tokenized spec (_spec_tokens) to scorer inputs for
+    """Resolve a tokenized query (_tk) to scorer inputs for
     _score_part_bool. ``tid`` must cover every token in tk['all'] that
-    exists in the dictionary; ``expand(prefix)`` -> df-ranked term_ids;
-    ``expand_fuzzy(word, dist)`` -> distance-then-df-ranked term_ids for
-    ``term~D`` clauses; ``expand_regexp(pattern)`` -> df-ranked term_ids
-    fully matching a ``/pattern/`` clause (each SHOULD qtf=1, same
-    collision rule as prefixes).
+    exists in the dictionary; ``expand_prefix(prefix)`` -> df-ranked
+    term_ids; ``expand_fuzzy(word, dist)`` -> distance-then-df-ranked
+    term_ids for ``term~D`` clauses; ``expand_regexp(pattern)`` ->
+    df-ranked term_ids fully matching a ``/pattern/`` clause. Every
+    expansion is SHOULD with qtf=1.
 
     Returns None when a required atom (must / phrase / near term) is
     missing from the dictionary or nothing is scorable. Expansion
@@ -816,7 +773,7 @@ def _compile_spec(
     if (
         any(t not in tid for t in tk["must"])
         or any(t not in tid for p in tk["phrases"] for t in p)
-        or any(t not in tid for p, _w in tk["nears"] for t in p)
+        or any(t not in tid for p, _w, _o in tk["nears"] for t in p)
     ):
         return None
     qtf = {tid[t]: float(c) for t, c in Counter(tk["positive"]).items() if t in tid}
@@ -834,23 +791,17 @@ def _compile_spec(
         if t in tid and tid[t] not in set(must_ids)
     ]
     slots = tuple(tuple(tid[t] for t in p) for p in tk["phrases"])
-    near_ids = tuple((tuple(tid[t] for t in p), w) for p, w in tk["nears"])
+    near_ids = tuple((tuple(tid[t] for t in p), w, o) for p, w, o in tk["nears"])
     exc_ids = {tid[t] for t in tk["exc"] if t in tid} - set(qtf)
-    for pre in prefixes:
-        for t in expand(pre):
-            if t not in qtf and t not in exc_ids:
-                qtf[t] = 1.0
-                should_ids.append(t)
-    for word, dist in fuzzies:
-        for t in expand_fuzzy(word, dist):
-            if t not in qtf and t not in exc_ids:
-                qtf[t] = 1.0
-                should_ids.append(t)
-    for pat in regexps:
-        for t in expand_regexp(pat):
-            if t not in qtf and t not in exc_ids:
-                qtf[t] = 1.0
-                should_ids.append(t)
+    expansions = (
+        [t for p in tk["prefixes"] for t in expand_prefix(p)]
+        + [t for w, d in tk["fuzzies"] for t in expand_fuzzy(w, d)]
+        + [t for p in tk["regexps"] for t in expand_regexp(p)]
+    )
+    for t in expansions:
+        if t not in qtf and t not in exc_ids:
+            qtf[t] = 1.0
+            should_ids.append(t)
     if not qtf:
         return None
     return {
@@ -963,8 +914,18 @@ def _rank_scored_df(scored: DataFrame, k: int, round_to: int | None) -> DataFram
     )
 
 
-#: the (query_id, doc_id, score) rows every batch entry point returns
+#: the (query_id, doc_id, score) rows the distributed plan and every
+#: batch entry point return, and the point entry points' (doc_id, score)
 _BATCH_SCHEMA = "query_id string, doc_id long, score double"
+_POINT_SCHEMA = "doc_id long, score double"
+
+
+def _comp_key(comp: dict) -> tuple:
+    """A compiled query (_compile_spec) as a hashable plan-cache key."""
+    return (
+        tuple(comp["qtf"].items()), tuple(comp["must"]), tuple(comp["should"]),
+        comp["slots"], comp["nears"], tuple(sorted(comp["exc"])),
+    )
 
 
 def _rank_scored_batch_df(scored: DataFrame, k: int, round_to: int | None) -> DataFrame:
@@ -1063,16 +1024,7 @@ class Bm25CompressedIndex:
         #: the cached ids/dfs re-sorted by term_id: df lookup by id
         self._ids_by_id: np.ndarray | None = None
         self._dfs_by_id: np.ndarray | None = None
-        #: prepared-PLAN cache for repeated point queries (r7): building a
-        #: query DataFrame costs a flat ~45-50 ms of driver py4j round
-        #: trips (PLANS.md §6) that repeats identically for an identical
-        #: query — the prepared-statement pattern removes it. Plans only:
-        #: every collect() on the returned frame re-executes the job from
-        #: the postings table, so no result is ever cached (and callers
-        #: must not persist() a returned result frame for the same
-        #: reason). Keyed on the full query signature + the postings
-        #: snapshot identity, so serving_mode()/dict_version refreshes
-        #: invalidate by construction.
+        #: prepared-PLAN cache of the point entry points (_point_frame)
         self._plan_cache: dict[tuple, DataFrame] = {}
         self._plan_cache_max = 512
 
@@ -1252,32 +1204,8 @@ class Bm25CompressedIndex:
         Excluded terms absent from the dictionary, or that also appear in the
         positive query, are no-ops."""
         self._check_version()
-        key = (
-            "search", query, k, mode, pattern, round_to,
-            tuple(sorted(exclude)) if exclude else None,
-            id(self.postings),
-        )
-        df = self._plan_cache.get(key)
-        if df is None:
-            scored = self._scored(query, k, mode, pattern, round_to, exclude)
-            df = self._rank_scored(scored, k, round_to)
-            if len(self._plan_cache) >= self._plan_cache_max:
-                self._plan_cache.clear()
-            self._plan_cache[key] = df
-        return df
-
-    def _rank_scored(self, scored: DataFrame, k: int, round_to: int | None) -> DataFrame:
-        """See :func:`_rank_scored_df` — the shared ranking epilogue."""
-        return _rank_scored_df(scored, k, round_to)
-
-    def _score_and_rank(self, cand: DataFrame, score_part, k: int,
-                        round_to: int | None) -> DataFrame:
-        """Per-part Arrow scoring over doc-disjoint parts (per-part
-        top-k merges exactly) followed by :meth:`_rank_scored`."""
-        scored = cand.groupBy("part").applyInPandas(
-            score_part, schema="doc_id long, score double"
-        )
-        return self._rank_scored(scored, k, round_to)
+        comp = self._compile_one(_plain_tokens(query, mode, pattern, exclude))
+        return self._point_frame(comp, k, round_to)
 
     def score_all(
         self,
@@ -1294,38 +1222,10 @@ class Bm25CompressedIndex:
         per-part lists are simply not cut (MaxScore tau stays disabled —
         every match must be scored)."""
         self._check_version()
-        return self._scored(query, 1 << 30, mode, pattern, None, exclude)
-
-    def _scored(self, query, k, mode, pattern, round_to, exclude):
-        """Shared scored-DataFrame construction of search()/score_all():
-        un-ordered (doc_id, score) rows, per-part lists cut at ``k``."""
-        q = tokenize_query(query, pattern)
-        tid = self._lookup([t for t, _ in q])
-        if not q or (mode == "and" and len(tid) < len(q)) or not tid:
-            return self.spark.createDataFrame([], "doc_id long, score double")
-        qtf = {tid[t]: float(c) for t, c in q if t in tid}
-        n_terms = len(qtf)
-        ids = list(qtf.keys())
-        exc_terms = sorted({t.lower() for t in (exclude or [])} - {t for t, _ in q})
-        exc_ids = set(self._lookup(exc_terms).values()) - set(ids)
-
-        cand = self.postings.filter(F.col("term_id").isin(ids + list(exc_ids)))
-
-        def score_part(pdf: pd.DataFrame) -> pd.DataFrame:
-            rows = pdf.to_dict("records")
-            groups = [g for g in rows if g["term_id"] not in exc_ids]
-            neg = [g for g in rows if g["term_id"] in exc_ids]
-            if mode == "and":
-                docs, scores = _score_part_and(groups, qtf, n_terms, k, round_to, neg)
-            else:
-                docs, scores = (
-                    _score_part_or(groups, qtf, k, round_to, neg) if groups else ([], [])
-                )
-            return pd.DataFrame({"doc_id": docs, "score": scores})
-
-        return cand.groupBy("part").applyInPandas(
-            score_part, schema="doc_id long, score double"
-        )
+        comp = self._compile_one(_plain_tokens(query, mode, pattern, exclude))
+        if comp is None:
+            return self.spark.createDataFrame([], _POINT_SCHEMA)
+        return self._scored({"": comp}, 1 << 30, None).select("doc_id", "score")
 
     def search_filtered(
         self,
@@ -1343,64 +1243,14 @@ class Bm25CompressedIndex:
         best ALLOWED docs (the filter applies inside each part BEFORE top-k
         truncation, never as a lossy post-filter on an unfiltered top-k).
 
-        Shuffle shape: the allowed set is bucketed by the SAME doc-range
-        ``part`` key as the postings and cogrouped
-        (``groupby(part).cogroup``), so each Arrow call receives exactly its
-        part's postings AND its part's allowed ids — the filter never
-        broadcasts globally and scales with the corpus. ``docs_per_part``
-        must exactly match the index geometry; it is NEVER inferred here —
-        it comes from the index's meta table (open an index via
-        ``open_index``) or from this explicit argument, and a ValueError is
-        raised when neither supplies it. Passing a WRONG value is silently
-        incorrect, not an error: allowed ids bucket to the wrong parts and
-        legitimate docs are dropped from the result.
-
-        MaxScore's tau seed is disabled in OR mode (a seed drawn from
-        potentially-filtered docs could over-prune); AND intersects the
-        allowed set at the driver-term step, which SHRINKS downstream block
-        probes rather than adding work.
+        The allowed set is cogrouped per part with the postings, and
+        ``docs_per_part`` must equal the index's build geometry: see
+        _scored (shuffle shape, GEOMETRY CONTRACT, MaxScore and AND with an
+        allowed set).
         """
-        q = tokenize_query(query, pattern)
-        tid = self.lookup_terms([t for t, _ in q])
-        if not q or (mode == "and" and len(tid) < len(q)) or not tid:
-            return self.spark.createDataFrame([], "doc_id long, score double")
-        qtf = {tid[t]: float(c) for t, c in q if t in tid}
-        n_terms = len(qtf)
-        ids = list(qtf.keys())
-        dpp = docs_per_part or self.docs_per_part
-        if dpp is None:
-            raise ValueError(
-                "search_filtered needs the index geometry: open the index "
-                "via open_index (reads the meta table) or pass docs_per_part="
-            )
-
-        cand = self.postings.filter(F.col("term_id").isin(ids))
-        allow = allowed.select(
-            F.col("doc_id").cast("long").alias("doc_id"),
-            (F.col("doc_id") / F.lit(dpp)).cast("int").alias("part"),
-        )
-
-        def score_cogroup(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-            if len(left) == 0 or len(right) == 0:
-                return pd.DataFrame({"doc_id": [], "score": []})
-            allow_ids = np.sort(right["doc_id"].to_numpy().astype(np.int64))
-            groups = left.to_dict("records")
-            if mode == "and":
-                docs, scores = _score_part_and(
-                    groups, qtf, n_terms, k, round_to, allow=allow_ids
-                )
-            else:
-                docs, scores = _score_part_or(
-                    groups, qtf, k, round_to, allow=allow_ids
-                )
-            return pd.DataFrame({"doc_id": docs, "score": scores})
-
-        scored = (
-            cand.groupby("part")
-            .cogroup(allow.groupby("part"))
-            .applyInPandas(score_cogroup, schema="doc_id long, score double")
-        )
-        return self._rank_scored(scored, k, round_to)
+        self._check_version()
+        comp = self._compile_one(_plain_tokens(query, mode, pattern))
+        return self._point_frame(comp, k, round_to, allowed, docs_per_part)
 
     def _expand_fuzzy(self, word: str, dist: int, max_expansions: int) -> list[int]:
         """term_ids of dictionary terms within edit distance ``dist`` of
@@ -1566,18 +1416,8 @@ class Bm25CompressedIndex:
         so a direct-API uppercase literal must not silently match
         nothing."""
         self._check_version()
-        ids = self._expand_regexp(pattern.lower(), max_expansions)
-        if not ids:
-            return self.spark.createDataFrame([], "doc_id long, score double")
-        qtf = {t: 1.0 for t in ids}
-
-        cand = self.postings.filter(F.col("term_id").isin(ids))
-
-        def score_part(pdf: pd.DataFrame) -> pd.DataFrame:
-            docs, scores = _score_part_or(pdf.to_dict("records"), qtf, k, round_to)
-            return pd.DataFrame({"doc_id": docs, "score": scores})
-
-        return self._score_and_rank(cand, score_part, k, round_to)
+        comp = self._compile_one(_tk(regexps=[pattern.lower()]), max_expansions)
+        return self._point_frame(comp, k, round_to)
 
     def search_prefix(
         self,
@@ -1596,18 +1436,8 @@ class Bm25CompressedIndex:
         rank (highest-df expansions kept; deterministic df-desc/term tie).
         """
         self._check_version()
-        ids = self._expand_prefix(prefix.lower(), max_expansions)
-        if not ids:
-            return self.spark.createDataFrame([], "doc_id long, score double")
-        qtf = {t: 1.0 for t in ids}
-
-        cand = self.postings.filter(F.col("term_id").isin(ids))
-
-        def score_part(pdf: pd.DataFrame) -> pd.DataFrame:
-            docs, scores = _score_part_or(pdf.to_dict("records"), qtf, k, round_to)
-            return pd.DataFrame({"doc_id": docs, "score": scores})
-
-        return self._score_and_rank(cand, score_part, k, round_to)
+        comp = self._compile_one(_tk(prefixes=[prefix.lower()]), max_expansions)
+        return self._point_frame(comp, k, round_to)
 
     def search_near(
         self,
@@ -1629,25 +1459,28 @@ class Bm25CompressedIndex:
         Requires a positions-enabled index; score is the BM25 sum over the
         distinct terms at their whole-query qtf (same scoring contract as
         search_phrase)."""
+        self._check_version()
         self._require_positions("search_near")
         toks = re.findall(pattern, query.lower())
-        if not toks:
-            return self.spark.createDataFrame([], "doc_id long, score double")
-        tid = self.lookup_terms(sorted(set(toks)))
-        if len(tid) < len(set(toks)):
-            return self.spark.createDataFrame([], "doc_id long, score double")
-        terms = [tid[t] for t in toks]
-        qtf = {tid[t]: float(c) for t, c in tokenize_query(query, pattern)}
+        comp = self._compile_one(_tk(nears=[(toks, window, ordered)]))
+        return self._point_frame(comp, k, round_to)
 
-        cand = self.postings.filter(F.col("term_id").isin(list(set(terms))))
+    def search_phrase(
+        self,
+        phrase: str,
+        k: int = 10,
+        pattern: str = IDENT_RE,
+        round_to: int | None = None,
+    ) -> DataFrame:
+        """Exact-phrase top-k: all terms adjacent and in order.
 
-        def score_part(pdf: pd.DataFrame) -> pd.DataFrame:
-            docs, scores = _score_part_near(
-                pdf.to_dict("records"), terms, window, qtf, k, round_to, ordered
-            )
-            return pd.DataFrame({"doc_id": docs, "score": scores})
-
-        return self._score_and_rank(cand, score_part, k, round_to)
+        Requires a positions-enabled index (build_postings over a
+        positions-carrying tf table). Score = the BM25 sum over the
+        phrase's distinct terms at their whole-phrase qtf."""
+        self._check_version()
+        self._require_positions("search_phrase")
+        toks = re.findall(pattern, phrase.lower())
+        return self._point_frame(self._compile_one(_tk(phrases=[toks])), k, round_to)
 
     def search_query(
         self,
@@ -1692,82 +1525,159 @@ class Bm25CompressedIndex:
         the whole query string.
         """
         self._check_version()
-        spec, comp = self._compile_query(query, mode, pattern, max_expansions)
-        return self._query_frame(spec, comp, k, docs, round_to, docs_per_part)
+        specs, comps = self._compile_query({"": query}, mode, pattern, max_expansions)
+        allowed = self._facet_allow(specs[""], docs)
+        return self._point_frame(comps.get(""), k, round_to, allowed, docs_per_part)
 
-    def _compile_query(self, query: str, mode: str, pattern: str, max_expansions: int):
-        """The prologue search_query and search_query_rows share: parse,
-        tokenize, one dictionary probe, expand and compile. Returns
-        (spec, comp); comp is None when nothing can match (no positive
-        atom, a missing required atom, or nothing scorable)."""
-        from ..functions.queryparse import parse_query
-
-        spec = parse_query(query)
-        if spec.phrases or spec.nears:
-            self._require_positions("search_query with phrase/proximity clauses")
-        if not spec.has_positive:
-            return spec, None
-        tk = _spec_tokens(spec, mode, pattern)
-        tid = self._lookup(sorted(tk["all"]))
-        comp = _compile_spec(
-            tk,
-            spec.prefixes,
-            tid,
+    def _compile(self, tks: dict, max_expansions: int = 1024) -> dict:
+        """{query_id: tokenized query (_tk)} -> {query_id: compiled query
+        (_compile_spec)}, with ONE dictionary probe for the union of their
+        tokens; a query that cannot match is left out."""
+        terms = sorted(set().union(*(tk["all"] for tk in tks.values())))
+        tid = self._lookup(terms) if terms else {}
+        expanders = (
             lambda p: self._expand_prefix(p, max_expansions),
-            spec.fuzzies,
             lambda w, d: self._expand_fuzzy(w, d, max_expansions),
-            spec.regexps,
             lambda p: self._expand_regexp(p, max_expansions),
         )
-        return spec, comp
+        comps = {}
+        for qid, tk in tks.items():
+            c = _compile_spec(tk, tid, *expanders)
+            if c is not None:
+                comps[qid] = c
+        return comps
 
-    def _query_frame(self, spec, comp, k, docs, round_to, docs_per_part) -> DataFrame:
-        """search_query's lazy distributed plan for a compiled query."""
+    def _compile_one(self, tk: dict, max_expansions: int = 1024) -> dict | None:
+        """One tokenized query compiled (_compile), or None."""
+        return self._compile({"": tk}, max_expansions).get("")
+
+    def _compile_query(self, queries: dict, mode: str, pattern: str, max_expansions: int):
+        """The grammar prologue of search_query, search_query_rows and
+        search_query_batch: parse every query string, tokenize, then one
+        dictionary probe, the expansions and the compile (_compile).
+        Returns ({query_id: QuerySpec}, {query_id: compiled query}); a
+        query with no positive atom or a missing required atom, or with
+        nothing scorable, has no compiled entry."""
+        from ..functions.queryparse import parse_query
+
+        specs = {qid: parse_query(q) for qid, q in queries.items()}
+        if any(s.phrases or s.nears for s in specs.values()):
+            self._require_positions("phrase/proximity clauses")
+        tks = {
+            qid: _spec_tokens(s, mode, pattern)
+            for qid, s in specs.items()
+            if s.has_positive
+        }
+        return specs, self._compile(tks, max_expansions)
+
+    @staticmethod
+    def _facet_allow(spec, docs: DataFrame | None) -> DataFrame | None:
+        """The docs a parsed query's facet clauses allow (apply_facets), or
+        None when it has none."""
+        if not spec.facets:
+            return None
+        if docs is None:
+            raise ValueError("facet clauses need the docs table: pass docs=")
+        return apply_facets(docs, spec.facets)
+
+    def _point_frame(
+        self, comp, k, round_to, allowed: DataFrame | None = None, docs_per_part=None
+    ) -> DataFrame:
+        """THE lazy plan of every single-query entry point: the distributed
+        plan (_scored) of one compiled query, ranked by _rank_scored_df
+        (one exchange, then TakeOrderedAndProject). ``allowed``: a frame
+        of permitted doc ids (search_filtered, facet clauses).
+
+        Unfiltered plans are prepared-plan cached (r7): building a query
+        DataFrame costs a flat ~45-50 ms of driver py4j round trips
+        (PLANS.md §6) that repeats identically for an identical compiled
+        query. Plans only: every collect() re-executes the job from the
+        postings table, so no result is ever cached (and callers must not
+        persist() a returned frame for the same reason). The key is the
+        compiled query + the postings snapshot identity, so
+        serving_mode()/dict_version refreshes invalidate by construction."""
         if comp is None:
-            return self.spark.createDataFrame([], "doc_id long, score double")
-        cand = self.postings.filter(
-            F.col("term_id").isin(list(comp["qtf"]) + list(comp["exc"]))
-        )
+            return self.spark.createDataFrame([], _POINT_SCHEMA)
+        key = (_comp_key(comp), k, round_to, id(self.postings))
+        df = None if allowed is not None else self._plan_cache.get(key)
+        if df is None:
+            allow = None if allowed is None else {"": allowed}
+            scored = self._scored({"": comp}, k, round_to, allow, docs_per_part)
+            df = _rank_scored_df(scored, k, round_to)
+            if allowed is None:
+                if len(self._plan_cache) >= self._plan_cache_max:
+                    self._plan_cache.clear()
+                self._plan_cache[key] = df
+        return df
 
-        if spec.facets:
-            if docs is None:
-                raise ValueError(
-                    "facet clauses need the docs table: search_query(..., docs=...)"
-                )
-            dpp = docs_per_part or self.docs_per_part
-            if dpp is None:
-                raise ValueError(
-                    "facet clauses need the index geometry: open the index via "
-                    "open_index (reads the meta table) or pass docs_per_part="
-                )
-            allowed = apply_facets(docs, spec.facets)
-            allow_df = allowed.select(
+    def _scored(self, comps: dict, k: int, round_to, allow=None, docs_per_part=None) -> DataFrame:
+        """THE distributed plan: {query_id: compiled query} -> unranked
+        (query_id, doc_id, score) rows, each query's per-part lists cut at
+        ``k``. The postings are filtered on the union of the compiled term
+        ids, and each part's rows reach ONE Arrow call
+        (groupBy('part').applyInPandas) that scores every query on its own
+        term ids (_score_part_queries): a posting row crosses the Python
+        boundary once per part, however many queries use it. Parts are
+        doc-disjoint, so per-part top-k then a global merge is exact.
+
+        ``allow``: {query_id: frame with a doc_id column} for filtered
+        queries (search_filtered, facet clauses). Their allowed ids are
+        tagged with the query_id, unioned, bucketed by the SAME doc-range
+        ``part`` key as the postings and cogrouped with them — one
+        exchange for all of them, so each Arrow call receives exactly its
+        part's postings AND its part's allowed ids (the filter never
+        broadcasts globally; exact, never a lossy post-filter). MaxScore's
+        tau seed is off for a filtered OR query (a seed drawn from
+        filtered-out docs could over-prune); an AND query intersects the
+        allowed ids at its rarest term, which shrinks the later probes.
+
+        GEOMETRY CONTRACT: ``docs_per_part`` (else the handle's, which
+        ``open_index`` reads from the index's meta table) must equal the
+        value the index was BUILT with; it is never inferred, and a
+        ValueError is raised when neither supplies it. A WRONG value is
+        silently incorrect: allowed ids bucket to the wrong parts and
+        legitimate docs drop out of the result."""
+        tids = sorted(set().union(*(set(c["qtf"]) | c["exc"] for c in comps.values())))
+        cand = self.postings.filter(F.col("term_id").isin(tids))
+
+        def frame(rows: list, allow_by_q) -> pd.DataFrame:
+            q, d, s = _score_part_queries(rows, comps, k, round_to, allow_by_q)
+            return pd.DataFrame({"query_id": q, "doc_id": d, "score": s})
+
+        if not allow:
+            return cand.groupBy("part").applyInPandas(
+                lambda pdf: frame(pdf.to_dict("records"), None), schema=_BATCH_SCHEMA
+            )
+        dpp = docs_per_part or self.docs_per_part
+        if dpp is None:
+            raise ValueError(
+                "filtered and faceted queries need the index geometry: open "
+                "the index via open_index (reads the meta table) or pass "
+                "docs_per_part="
+            )
+        allow_df = None
+        for qid in sorted(allow):
+            tagged = allow[qid].select(
+                F.lit(qid).alias("query_id"),
                 F.col("doc_id").cast("long").alias("doc_id"),
                 (F.col("doc_id") / F.lit(dpp)).cast("int").alias("part"),
             )
+            allow_df = tagged if allow_df is None else allow_df.unionByName(tagged)
+        filtered = list(allow)
 
-            def score_cogroup(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-                if len(left) == 0 or len(right) == 0:
-                    return pd.DataFrame({"doc_id": [], "score": []})
-                allow_ids = np.sort(right["doc_id"].to_numpy().astype(np.int64))
-                d, s = _score_compiled(comp, left.to_dict("records"), k, round_to, allow_ids)
-                return pd.DataFrame({"doc_id": d, "score": s})
+        def score_cogroup(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
+            # a filtered query with no allowed ids in this part gets an
+            # EMPTY array (no hits here), never None (unfiltered)
+            allow_by_q = {qid: np.empty(0, dtype=np.int64) for qid in filtered}
+            for qid, sub in right.groupby("query_id", sort=False):
+                allow_by_q[qid] = np.sort(sub["doc_id"].to_numpy().astype(np.int64))
+            return frame(left.to_dict("records"), allow_by_q)
 
-            scored = (
-                cand.groupby("part")
-                .cogroup(allow_df.groupby("part"))
-                .applyInPandas(score_cogroup, schema="doc_id long, score double")
-            )
-        else:
-
-            def score_part(pdf: pd.DataFrame) -> pd.DataFrame:
-                d, s = _score_compiled(comp, pdf.to_dict("records"), k, round_to)
-                return pd.DataFrame({"doc_id": d, "score": s})
-
-            scored = cand.groupBy("part").applyInPandas(
-                score_part, schema="doc_id long, score double"
-            )
-        return self._rank_scored(scored, k, round_to)
+        return (
+            cand.groupby("part")
+            .cogroup(allow_df.groupby("part"))
+            .applyInPandas(score_cogroup, schema=_BATCH_SCHEMA)
+        )
 
     def search_query_rows(
         self,
@@ -1794,31 +1704,33 @@ class Bm25CompressedIndex:
         Every other query (over the cap, no dict cache, facet clauses)
         collects search_query's distributed plan."""
         self._check_version()
-        spec, comp = self._compile_query(query, mode, pattern, max_expansions)
+        specs, comps = self._compile_query({"": query}, mode, pattern, max_expansions)
+        allowed = self._facet_allow(specs[""], docs)
+        comp = comps.get("")
         if comp is None:
             return []
         tids = sorted(set(comp["qtf"]) | comp["exc"])
-        n = None if spec.facets else self._summed_df(tids)
+        n = None if allowed is not None else self._summed_df(tids)
         if n is None or n > self.DRIVER_SCORE_MAX_POSTINGS:
-            frame = self._query_frame(spec, comp, k, docs, None, docs_per_part)
+            frame = self._point_frame(comp, k, None, allowed, docs_per_part)
             return [(r["doc_id"], r["score"]) for r in frame.collect()]
         table = None
         if self._resident_postings() is None:
             table = self._scan().filter(F.col("term_id").isin(tids)).toArrow()
-        return self._score_on_driver({None: comp}, k, table=table)[None]
+        return self._score_on_driver(comps, k, table=table)[""]
 
     def _score_on_driver(self, comps: dict, k: int, round_to=None, table=None) -> dict:
-        """THE driver scorer of search_query_rows and search_query_batch:
-        {key: compiled query} -> {key: top-k [(doc_id, score)]}, exactly
-        what the distributed plan ranks for each query.
+        """THE driver executor of search_query_rows and the batch executor:
+        {query_id: compiled query} -> {query_id: top-k [(doc_id, score)]},
+        exactly what the distributed plan ranks for each query.
 
         ``table`` holds the posting rows of every compiled term id (a
         narrow scan); None slices them out of the resident postings — one
         searchsorted + take for the union of the queries' term ids, in
-        stored row order. The rows are grouped part -> term_id, each query
-        is scored per part by the workers' kernel (_score_compiled, with
-        ``round_to`` as the UDFs pass it), and its hits are merged by
-        (score desc, doc_id asc)."""
+        stored row order. Each part's rows go through the workers'
+        per-part scorer (_score_part_queries, with ``round_to`` as the
+        UDFs pass it), and each query's hits are merged by (score desc,
+        doc_id asc)."""
         if table is None:
             tids = sorted(set().union(*(set(c["qtf"]) | c["exc"] for c in comps.values())))
             table, sorted_tids, order = self._resident
@@ -1826,20 +1738,16 @@ class Bm25CompressedIndex:
             hi = np.searchsorted(sorted_tids, tids, "right")
             at = np.sort(np.concatenate([order[a:b] for a, b in zip(lo, hi)]))
             table = table.take(at)
-        by_part: dict[int, dict[int, list]] = {}
+        by_part: dict[int, list] = {}
         for row in table.to_pylist():
-            by_part.setdefault(row["part"], {}).setdefault(row["term_id"], []).append(row)
-        out = {}
-        for key, comp in comps.items():
-            qtids = sorted(set(comp["qtf"]) | comp["exc"])
-            hits: list[tuple[int, float]] = []
-            for by_tid in by_part.values():
-                rows = [r for t in qtids for r in by_tid.get(t, ())]
-                if rows:
-                    d, s = _score_compiled(comp, rows, k, round_to)
-                    hits += zip(d, s)
+            by_part.setdefault(row["part"], []).append(row)
+        out: dict = {qid: [] for qid in comps}
+        for rows in by_part.values():
+            for q, d, s in zip(*_score_part_queries(rows, comps, k, round_to)):
+                out[q].append((d, s))
+        for hits in out.values():
             hits.sort(key=lambda h: (-h[1], h[0]))
-            out[key] = hits[:k]
+            del hits[k:]
         return out
 
     def suggest_rows(self, word: str, k: int = 10) -> list[tuple[str, float]]:
@@ -1879,163 +1787,28 @@ class Bm25CompressedIndex:
     ) -> DataFrame:
         """Composed-grammar batch: MANY query strings -> (query_id, doc_id,
         score) — the serving shape for search_query, same grammar and
-        semantics per query, with one dictionary probe for the whole batch.
-
-        When the handle's postings are resident on the driver (a dict
-        cache, and the whole index at most DRIVER_SCORE_MAX_POSTINGS; see
-        _resident_postings) and no query has a facet clause, the whole batch
-        is scored NOW on the driver by the kernel the workers run
-        (_score_on_driver, as search_query_rows) and returned as a local
-        DataFrame: no Spark job, and the same rows, floats included, as the
-        distributed plan. That frame holds the answers as of this call —
-        collecting it again does not re-score, so collect it at once and do
-        not keep it across index updates. Every other batch runs ONE
-        distributed job (see search_batch for why batching is the
-        Spark-idiomatic high-throughput form there).
+        semantics per query, with one dictionary probe for the whole batch,
+        run by the batch executor (_batch): on a small index and with no
+        facet clause, scored now on the driver with no Spark job; else ONE
+        distributed job.
 
         Facet clauses work per query (r4): pass ``docs`` (+
         ``docs_per_part`` unless the handle carries geometry); each
         faceted query's allowed-id set is computed by the same
-        :func:`apply_facets` Catalyst filters, tagged with its query_id,
-        unioned, bucketed by the index's part key, and cogrouped — one
+        :func:`apply_facets` Catalyst filters and cogrouped per part
+        with the postings (see _scored and its GEOMETRY CONTRACT) — one
         exchange for the whole batch, exact per query (never a lossy
         post-filter), queries without facets stay unfiltered. Phrase /
         proximity clauses need a positions-enabled index. Unmatchable
         queries (missing required atom) contribute no rows.
-
-        GEOMETRY CONTRACT: ``docs_per_part`` must equal the value the
-        index was BUILT with (``open_index`` handles carry it; bare
-        DataFrame handles must be told) — the allowed-id set is bucketed
-        by ``doc_id // docs_per_part`` so it cogroups against the same
-        part a doc's postings live in. A mismatched value silently
-        lands allowed ids in the wrong cogroup bucket and faceted
-        queries return rows as if their allow-set were empty in the
-        affected parts.
         """
-        from ..functions.queryparse import parse_query
-
         if isinstance(queries, list):
             queries = {str(i): q for i, q in enumerate(queries)}
-        specs = {qid: parse_query(q) for qid, q in queries.items()}
-        faceted = {qid for qid, s in specs.items() if s.facets}
-        if faceted:
-            if docs is None:
-                raise ValueError(
-                    "facet clauses need the docs table: "
-                    "search_query_batch(..., docs=...)"
-                )
-            dpp = docs_per_part or self.docs_per_part
-            if dpp is None:
-                raise ValueError(
-                    "facet clauses need the index geometry: open the index "
-                    "via open_index (reads the meta table) or pass "
-                    "docs_per_part="
-                )
-        if any(s.phrases or s.nears for s in specs.values()):
-            self._require_positions("search_query_batch with phrase/proximity clauses")
-
-        tks = {
-            qid: _spec_tokens(s, mode, pattern)
-            for qid, s in specs.items()
-            if s.has_positive
-        }
-        # ONE dictionary probe for the union of all queries' terms
-        tid = self.lookup_terms(sorted({t for tk in tks.values() for t in tk["all"]}))
-        expand = lambda p: self._expand_prefix(p, max_expansions)  # noqa: E731
-        expand_fz = lambda w, d: self._expand_fuzzy(w, d, max_expansions)  # noqa: E731
-        expand_re = lambda p: self._expand_regexp(p, max_expansions)  # noqa: E731
-        comp: dict[str, dict] = {}
-        rows = []
-        for qid, tk in tks.items():
-            c = _compile_spec(
-                tk, specs[qid].prefixes, tid, expand, specs[qid].fuzzies, expand_fz,
-                specs[qid].regexps, expand_re,
-            )
-            if c is None:
-                continue
-            comp[qid] = c
-            for t in set(c["qtf"]) | c["exc"]:
-                rows.append((qid, t))
-        if not rows:
-            return self.spark.createDataFrame([], _BATCH_SCHEMA)
-        if not faceted and self._resident_postings() is not None:
-            import pyarrow as pa
-
-            hits = self._score_on_driver(comp, k, round_to)
-            qids = [q for q, h in hits.items() for _ in h]
-            pairs = [p for h in hits.values() for p in h]
-            # from Arrow: a local relation, no job (a list of tuples would
-            # run a Python-worker job)
-            return self.spark.createDataFrame(pa.table({
-                "query_id": pa.array(qids, pa.string()),
-                "doc_id": pa.array([d for d, _ in pairs], pa.int64()),
-                "score": pa.array([s for _, s in pairs], pa.float64()),
-            }))
-        qdf = self.spark.createDataFrame(rows, "query_id string, term_id long")
-        bmeta = self.spark.sparkContext.broadcast(comp)
-        all_tids = sorted({t for _, t in rows})
-
-        cand = self.postings.filter(F.col("term_id").isin(all_tids)).join(
-            F.broadcast(qdf), "term_id"
-        )
-
-        faceted_compiled = frozenset(faceted & comp.keys())
-
-        def score_rows_batch(pdf: pd.DataFrame, allow_by_q: dict) -> pd.DataFrame:
-            out_q, out_d, out_s = [], [], []
-            for qid, sub in pdf.groupby("query_id", sort=False):
-                c = bmeta.value[qid]
-                if qid in faceted_compiled:
-                    # a faceted query with no allowed ids in this part gets
-                    # an EMPTY array (no hits here), never None (unfiltered)
-                    allow = allow_by_q.get(qid, np.empty(0, dtype=np.int64))
-                else:
-                    allow = None
-                d, s = _score_compiled(c, sub.to_dict("records"), k, round_to, allow)
-                out_q += [qid] * len(d)
-                out_d += d
-                out_s += s
-            return pd.DataFrame({"query_id": out_q, "doc_id": out_d, "score": out_s})
-
-        if faceted_compiled:
-            # per-query allowed-id sets, tagged by query_id, one union —
-            # bucketed by the SAME part key and cogrouped with the postings
-            # (the search_filtered shape, batched): one exchange total
-            allow_parts = []
-            for qid in sorted(faceted_compiled):
-                al = apply_facets(docs, specs[qid].facets)
-                allow_parts.append(
-                    al.select(
-                        F.lit(qid).alias("query_id"),
-                        F.col("doc_id").cast("long").alias("doc_id"),
-                        (F.col("doc_id") / F.lit(dpp)).cast("int").alias("part"),
-                    )
-                )
-            allow_df = allow_parts[0]
-            for a in allow_parts[1:]:
-                allow_df = allow_df.unionByName(a)
-
-            def score_cogroup(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-                if len(left) == 0:
-                    return pd.DataFrame({"query_id": [], "doc_id": [], "score": []})
-                allow_by_q = {
-                    qid: np.sort(sub["doc_id"].to_numpy().astype(np.int64))
-                    for qid, sub in right.groupby("query_id", sort=False)
-                }
-                return score_rows_batch(left, allow_by_q)
-
-            scored = (
-                cand.groupby("part")
-                .cogroup(allow_df.groupby("part"))
-                .applyInPandas(score_cogroup, schema=_BATCH_SCHEMA)
-            )
-        else:
-
-            def score_part(pdf: pd.DataFrame) -> pd.DataFrame:
-                return score_rows_batch(pdf, {})
-
-            scored = cand.groupBy("part").applyInPandas(score_part, schema=_BATCH_SCHEMA)
-        return _rank_scored_batch_df(scored, k, round_to)
+        self._check_version()
+        specs, comps = self._compile_query(queries, mode, pattern, max_expansions)
+        allowed = {qid: self._facet_allow(s, docs) for qid, s in specs.items() if s.facets}
+        allow = {qid: allowed[qid] for qid in comps if qid in allowed}
+        return self._batch(comps, k, round_to, allow, docs_per_part)
 
     def search_batch(
         self,
@@ -2045,58 +1818,53 @@ class Bm25CompressedIndex:
         pattern: str = IDENT_RE,
         round_to: int | None = None,
     ) -> DataFrame:
-        """Score MANY queries in ONE Spark job -> (query_id, doc_id, score).
+        """Score MANY plain-term queries at once -> (query_id, doc_id, score).
 
         The reference serves queries one RPC at a time
         (srpc/PageSearch/server.pb_skeleton.cc); on Spark the idiomatic
-        high-throughput shape is a batch: the query set joins the postings
-        once, every (part x query) group scores inside the same stage, and
-        a window takes per-query top-k. Fixed job overhead is paid once for
-        the whole batch instead of once per query.
+        high-throughput shape is a batch: one dictionary probe for the
+        whole set, then the batch executor (_batch) — every (part x query)
+        scores inside the same stage and a window takes per-query top-k, so
+        the fixed job overhead is paid once for the whole batch instead of
+        once per query; on a small index, no Spark job at all.
         """
         if isinstance(queries, list):
             queries = {str(i): q for i, q in enumerate(queries)}
-        tokenized = {qid: tokenize_query(text, pattern) for qid, text in queries.items()}
-        # ONE dictionary probe for the union of all query terms
-        tid = self.lookup_terms(
-            sorted({t for terms in tokenized.values() for t, _ in terms})
-        )
-        rows = []
-        qmeta: dict[str, dict] = {}
-        for qid, terms in tokenized.items():
-            matched = [t for t, _ in terms if t in tid]
-            if not terms or (mode == "and" and len(matched) < len(terms)) or not matched:
-                continue  # unmatchable query -> no rows
-            qtf = {tid[t]: float(c) for t, c in terms if t in tid}
-            qmeta[qid] = qtf
-            for t, c in qtf.items():
-                rows.append((qid, t))
-        if not rows:
+        self._check_version()
+        comps = self._compile({q: _plain_tokens(t, mode, pattern) for q, t in queries.items()})
+        return self._batch(comps, k, round_to)
+
+    def _batch(self, comps: dict, k: int, round_to, allow=None, docs_per_part=None) -> DataFrame:
+        """THE batch executor of search_batch and search_query_batch:
+        {query_id: compiled query} -> (query_id, doc_id, score), each
+        query's top k.
+
+        When no query is filtered and the handle's postings are resident on
+        the driver (a dict cache, and the whole index at most
+        DRIVER_SCORE_MAX_POSTINGS; see _resident_postings), the whole
+        batch is scored NOW on the driver by the workers' per-part scorer
+        (_score_on_driver) and returned as a local DataFrame: no Spark job,
+        and the same rows, floats included, as the distributed plan. That
+        frame holds the answers as of this call — collecting it again does
+        not re-score, so collect it at once and do not keep it across index
+        updates. Every other batch runs the distributed plan (_scored),
+        ranked per query by a window: ONE job."""
+        if not comps:
             return self.spark.createDataFrame([], _BATCH_SCHEMA)
-        qdf = self.spark.createDataFrame(rows, "query_id string, term_id long")
-        bmeta = self.spark.sparkContext.broadcast(qmeta)
-        n_by_q = {qid: len(qtf) for qid, qtf in qmeta.items()}
-        all_tids = list({t for qtf in qmeta.values() for t in qtf})
+        if not allow and self._resident_postings() is not None:
+            import pyarrow as pa
 
-        cand = self.postings.filter(F.col("term_id").isin(all_tids)).join(
-            F.broadcast(qdf), "term_id"
-        )
-
-        def score_part(pdf: pd.DataFrame) -> pd.DataFrame:
-            out_q, out_d, out_s = [], [], []
-            for qid, sub in pdf.groupby("query_id", sort=False):
-                qtf = bmeta.value[qid]
-                groups = sub.to_dict("records")
-                if mode == "and":
-                    docs, scores = _score_part_and(groups, qtf, n_by_q[qid], k, round_to)
-                else:
-                    docs, scores = _score_part_or(groups, qtf, k, round_to)
-                out_q += [qid] * len(docs)
-                out_d += docs
-                out_s += scores
-            return pd.DataFrame({"query_id": out_q, "doc_id": out_d, "score": out_s})
-
-        scored = cand.groupBy("part").applyInPandas(score_part, schema=_BATCH_SCHEMA)
+            hits = self._score_on_driver(comps, k, round_to)
+            qids = [q for q, h in hits.items() for _ in h]
+            pairs = [p for h in hits.values() for p in h]
+            # from Arrow: a local relation, no job (a list of tuples would
+            # run a Python-worker job)
+            return self.spark.createDataFrame(pa.table({
+                "query_id": pa.array(qids, pa.string()),
+                "doc_id": pa.array([d for d, _ in pairs], pa.int64()),
+                "score": pa.array([s for _, s in pairs], pa.float64()),
+            }))
+        scored = self._scored(comps, k, round_to, allow, docs_per_part)
         return _rank_scored_batch_df(scored, k, round_to)
 
     def fetch_docs(self, topk: DataFrame, docs: DataFrame, cols: list[str] | None = None) -> DataFrame:
@@ -2106,43 +1874,3 @@ class Bm25CompressedIndex:
         side is broadcast, so the docs table is probed, never shuffled."""
         sel = docs if cols is None else docs.select("doc_id", *cols)
         return F.broadcast(topk).join(sel, "doc_id").orderBy(F.desc("score"), F.asc("doc_id"))
-
-    def search_phrase(
-        self,
-        phrase: str,
-        k: int = 10,
-        pattern: str = IDENT_RE,
-        round_to: int | None = None,
-    ) -> DataFrame:
-        """Exact-phrase top-k: all terms adjacent and in order.
-
-        Requires a positions-enabled index (build_postings over a
-        positions-carrying tf table); the ``positions`` column is read only
-        by this path — non-phrase queries never scan it (column pruning).
-        """
-        self._check_version()
-        key = ("phrase", phrase, k, pattern, round_to, id(self.postings))
-        df = self._plan_cache.get(key)
-        if df is not None:
-            return df
-        self._require_positions("search_phrase")
-        toks = re.findall(pattern, phrase.lower())
-        if not toks:
-            return self.spark.createDataFrame([], "doc_id long, score double")
-        tid = self._lookup(sorted(set(toks)))
-        if len(tid) < len(set(toks)):
-            return self.spark.createDataFrame([], "doc_id long, score double")
-        slots = [tid[t] for t in toks]
-        qtf = {tid[t]: float(c) for t, c in tokenize_query(phrase, pattern)}
-
-        cand = self.postings.filter(F.col("term_id").isin(list(set(slots))))
-
-        def score_part(pdf: pd.DataFrame) -> pd.DataFrame:
-            docs, scores = _score_part_phrase(pdf.to_dict("records"), slots, qtf, k, round_to)
-            return pd.DataFrame({"doc_id": docs, "score": scores})
-
-        df = self._score_and_rank(cand, score_part, k, round_to)
-        if len(self._plan_cache) >= self._plan_cache_max:
-            self._plan_cache.clear()
-        self._plan_cache[key] = df
-        return df

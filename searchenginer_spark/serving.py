@@ -37,9 +37,12 @@ could share.
 Request shapes (both routes take GET query strings or POST bodies in
 ``application/x-www-form-urlencoded`` or JSON):
 
-* ``/api/search``: ``query`` (full grammar: phrases, +/-, fields,
-  facets...), optional ``k`` and ``mode`` — returns
-  ``{"query", "k", "results": [{"doc_id", "score"}...]}``.
+* ``/api/search``: ``query`` (the grammar: phrases, +/-, prefixes,
+  fuzzy, regexps...; no facet clauses, the gateway has no docs table),
+  optional ``k`` and ``mode`` — returns
+  ``{"query", "k", "results": [{"doc_id", "score"}...]}``. A query the
+  grammar rejects, or one with a facet clause, is a 400 with the reason
+  (in a batch, naming the query id).
 * ``/api/suggest``: ``word``, optional ``k`` — returns
   ``{"word", "suggestions": [{"term", "sim"}...]}``.
 * ``/api/search_batch`` (POST JSON): ``{"queries": {id: query, ...},
@@ -59,6 +62,8 @@ from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
 from pyspark.sql import Column, SparkSession
 from pyspark.sql import functions as F
+
+from .functions.queryparse import parse_query
 
 
 def url_decode(col) -> Column:
@@ -186,12 +191,25 @@ class SearchServer:
             raise _BadRequest(f"'mode' must be 'and' or 'or', got {mode!r}")
         return mode
 
+    @staticmethod
+    def _check_query(query: str, where: str = "") -> None:
+        """A query the grammar rejects (functions/queryparse) or that holds
+        a facet clause (the gateway has no docs table) is the client's
+        error."""
+        try:
+            spec = parse_query(query)
+        except ValueError as e:
+            raise _BadRequest(f"{where}{e}") from None
+        if spec.facets:
+            raise _BadRequest(f"{where}facet clauses need a docs table; the gateway has none")
+
     def api_search(self, params: dict[str, str]) -> dict:
         query = params.get("query") or params.get("q")
         if not query:
             raise _BadRequest("missing 'query'")
         k = self._k(params)
         mode = self._mode(params)
+        self._check_query(query)
         rows = self.idx.search_query_rows(query, k=k, mode=mode)
         return {
             "query": query,
@@ -211,6 +229,8 @@ class SearchServer:
         k = self._k(params)
         mode = self._mode(params)
         qs = {str(i): str(q) for i, q in queries.items()}
+        for i, q in qs.items():
+            self._check_query(q, f"query {i!r}: ")
         rows = self.idx.search_query_batch(qs, k=k, mode=mode).collect()
         results: dict[str, list] = {i: [] for i in qs}
         for r in rows:

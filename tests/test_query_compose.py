@@ -638,15 +638,15 @@ _ROWS_QUERIES = [
 
 
 def _frame_calls(monkeypatch, idx) -> list:
-    """Spy on the distributed plan builder of search_query_rows."""
+    """Spy on the point helper that builds search_query_rows' distributed plan."""
     calls = []
-    real = idx._query_frame
+    real = idx._point_frame
 
     def spy(*a, **kw):
         calls.append(a)
         return real(*a, **kw)
 
-    monkeypatch.setattr(idx, "_query_frame", spy)
+    monkeypatch.setattr(idx, "_point_frame", spy)
     return calls
 
 
@@ -775,3 +775,70 @@ def test_search_query_batch_faceted_takes_distributed_plan(qindex, spark, docs_s
     assert jobs > 0
     assert plain and [r for r in mixed if r[0] == "plain"] == plain
     assert any(r[0] == "de" for r in mixed)
+
+
+# ------------------------------------------------------------ one executor
+
+
+def test_entry_points_construct_with_no_job(qindex, spark, docs_sf0001, monkeypatch):
+    """Once the dict cache is filled, building any entry point's frame runs
+    no Spark job: compile on the driver, then a lazy plan (batches with the
+    cap at 0, so they build the distributed plan too)."""
+    from pyspark.sql import functions as F
+
+    qindex.search_query_rows("spark", k=1)  # fills the dict cache
+    monkeypatch.setattr(Bm25CompressedIndex, "DRIVER_SCORE_MAX_POSTINGS", 0)
+    allowed = docs_sf0001.filter(F.col("lang") == "de").select("doc_id")
+    builders = {
+        "search": lambda: qindex.search("spark query -merge", k=10),
+        "score_all": lambda: qindex.score_all("spark query", mode="or"),
+        "search_filtered": lambda: qindex.search_filtered("data value", allowed, k=10),
+        "search_prefix": lambda: qindex.search_prefix("quer", k=10),
+        "search_regexp": lambda: qindex.search_regexp("quer[a-z]*", k=10),
+        "search_near": lambda: qindex.search_near("merge part", 3, k=10, ordered=True),
+        "search_phrase": lambda: qindex.search_phrase("merge part", k=10),
+        "search_query": lambda: qindex.search_query('+data "merge part"~5 quer*'),
+        "search_query facets": lambda: qindex.search_query(
+            "data value lang:de", docs=docs_sf0001
+        ),
+        "search_batch": lambda: qindex.search_batch(["spark query", "data"], k=10),
+        "search_query_batch": lambda: qindex.search_query_batch(
+            ["spark -merge", "data value lang:de"], k=10, docs=docs_sf0001
+        ),
+    }
+    for name, build in builders.items():
+        frame, jobs = count_jobs(spark, build)
+        assert jobs == 0, name
+        assert frame.collect() or name == "search_filtered", name
+
+
+@pytest.mark.parametrize("mode", ["and", "or"])
+def test_search_batch_resident_equals_distributed(qindex, spark, monkeypatch, mode):
+    """search_batch on the driver-resident postings returns the distributed
+    plan's rows exactly (cap 0), with no Spark job, and each query's rows
+    are exactly search(...)'s."""
+    queries = {
+        "hot": "data", "pair": "spark query", "three": "data query spark",
+        "rep": "for for the", "absent": "zzz_not_here data", "none": "",
+    }
+    qindex.search_query_rows("spark", k=1)  # fills the dict cache + resident table
+    frame, jobs = count_jobs(spark, lambda: qindex.search_batch(queries, k=10, mode=mode))
+    got = _batch_rows(frame)
+    assert jobs == 0 and got
+    for qid, text in queries.items():
+        mine = [(d, s) for q, d, s in got if q == qid]
+        assert mine == _rows(qindex.search(text, k=10, mode=mode)), qid
+    monkeypatch.setattr(Bm25CompressedIndex, "DRIVER_SCORE_MAX_POSTINGS", 0)
+    dist = qindex.search_batch(queries, k=10, mode=mode)
+    assert got == _batch_rows(dist)
+    assert frame.schema == dist.schema
+
+
+def test_and_search_equals_must_grammar_bitwise(qindex):
+    """Plain AND terms and +MUST grammar terms are one compiled form, so
+    their scores agree to the last bit however many terms there are (the
+    kernel adds MUST scores rarest first)."""
+    for text in ("data query spark", "the data query value", "data data spark merge"):
+        want = _rows(qindex.search(text, k=10, mode="and"))
+        got = _rows(qindex.search_query(" ".join("+" + t for t in text.split()), k=10))
+        assert got == want and want, text

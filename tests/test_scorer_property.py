@@ -2,11 +2,12 @@
 
 hypothesis generates random small corpora; the REAL encoder
 (`operators.postings._encode_part`) produces compressed block-max rows,
-and the per-part scorers (`plans/bm25._score_part_and/_score_part_or`)
-must reproduce a brute-force python BM25 on every example — including
-multi-block postings, MaxScore's tau seed + essential split, the r4
-block-max segment pruning, deterministic kth-tie handling, boolean NOT
-and allow-set filtering. These paths carry every query; a generator is
+and the per-part kernel (`plans/bm25._score_part_bool`, with its
+disjunctive branch `_score_part_or`) must reproduce a brute-force python BM25 on every example — including
+multi-block postings, the conjunctive branch's carried scores, MaxScore's
+tau seed + essential split, the r4 block-max segment pruning,
+deterministic kth-tie handling, phrase / NEAR matching, boolean NOT and
+allow-set filtering. These paths carry every query; a generator is
 far more adversarial than the handful of fixed corpora in the other
 suites (this is what caught the argpartition tie bug's shape in r4)."""
 
@@ -21,7 +22,7 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from searchenginer_spark.operators.postings import _encode_part
-from searchenginer_spark.plans.bm25 import _score_part_and, _score_part_or
+from searchenginer_spark.plans.bm25 import _score_part_bool, _score_part_or
 
 K1, B = 1.2, 0.75
 
@@ -99,13 +100,19 @@ def test_or_scorer_matches_bruteforce(docs, k, repeat_first):
 
 
 @settings(max_examples=40, deadline=None, derandomize=True)
-@given(corpora(), st.integers(1, 12))
-def test_and_scorer_matches_bruteforce(docs, k):
+@given(
+    corpora(),
+    st.integers(1, 12),
+    st.lists(st.integers(1, 2), min_size=2, max_size=4),  # one qtf per MUST term
+)
+def test_and_scorer_matches_bruteforce(docs, k, weights):
+    """The kernel's MUST branch: 2-4 terms, so the rarest-first carried
+    scores run over 3+ intersections too."""
     rows, df, n_docs, avgdl = _encode(docs)
-    terms = sorted(df)[:2]
-    qtf = {t: 1.0 for t in terms}
+    terms = sorted(df)[: len(weights)]
+    qtf = {t: float(w) for t, w in zip(terms, weights)}
     groups = [g for g in rows if g["term_id"] in qtf]
-    got_d, got_s = _score_part_and(groups, qtf, len(terms), k)
+    got_d, got_s = _score_part_bool(groups, terms, [], qtf, k)
     brute = _brute(docs, df, n_docs, avgdl, qtf)
     conj = {d: s for d, s in brute.items()
             if all(t in docs[d] for t in terms)}
@@ -176,12 +183,10 @@ def _encode_pos(tok_docs: dict):
 @settings(max_examples=40, deadline=None, derandomize=True)
 @given(token_corpora(), st.lists(st.integers(0, 4), min_size=2, max_size=3))
 def test_phrase_matcher_matches_bruteforce(tok_docs, slots):
-    from searchenginer_spark.plans.bm25 import _score_part_phrase
-
     rows, df, n_docs, avgdl = _encode_pos(tok_docs)
     qtf = {t: float(c) for t, c in
            __import__("collections").Counter(slots).items()}
-    got_d, got_s = _score_part_phrase(rows, slots, qtf, k=1 << 20)
+    got_d, got_s = _score_part_bool(rows, [], [], qtf, 1 << 20, (tuple(slots),))
     want_docs = sorted(
         d for d, toks in tok_docs.items()
         if any(toks[i:i + len(slots)] == slots
@@ -205,12 +210,10 @@ def test_phrase_matcher_matches_bruteforce(tok_docs, slots):
 def test_near_matcher_matches_bruteforce(tok_docs, terms, window, ordered):
     import itertools
 
-    from searchenginer_spark.plans.bm25 import _score_part_near
-
     rows, df, n_docs, avgdl = _encode_pos(tok_docs)
     qtf = {t: 1.0 for t in terms}
-    got_d, _ = _score_part_near(
-        rows, terms, window, qtf, k=1 << 20, ordered=ordered
+    got_d, _ = _score_part_bool(
+        rows, [], [], qtf, 1 << 20, nears=((tuple(terms), window, ordered),)
     )
     want = []
     for d, toks in tok_docs.items():
@@ -249,8 +252,6 @@ def test_near_matcher_matches_bruteforce(tok_docs, terms, window, ordered):
 def test_bool_scorer_matches_bruteforce(
     tok_docs, n_must, n_should, with_phrase, with_neg, with_allow, k
 ):
-    from searchenginer_spark.plans.bm25 import _score_part_bool
-
     rows, df, n_docs, avgdl = _encode_pos(tok_docs)
     vocab = sorted(df)
     must = vocab[:n_must]

@@ -128,6 +128,35 @@ def test_gateway_k_validation(server):
     assert e.value.code == 400
 
 
+@pytest.mark.parametrize(
+    "bad,msg",
+    [
+        ('-"a b"', "negated phrase"),
+        ("x~3", "fuzzy distance"),
+        ("int f:[100]", "range facet"),
+        ("int /[/", "invalid regexp /[/"),
+        ("int lang:de", "facet clauses need a docs table"),
+    ],
+)
+def test_gateway_query_grammar_errors(server, bad, msg):
+    """A query the grammar rejects, an uncompilable /regexp/ and a facet
+    clause (the gateway has no docs table) are 400s carrying the reason,
+    not 500s; in a batch the message names the offending query id."""
+    with pytest.raises(urllib.error.HTTPError) as e:
+        _get(server, "/api/search?query=" + urllib.parse.quote_plus(bad))
+    assert e.value.code == 400
+    assert msg in json.loads(e.value.read())["error"]
+    with pytest.raises(urllib.error.HTTPError) as e:
+        _post(
+            server, "/api/search_batch",
+            json.dumps({"queries": {"ok": "int", "culprit": bad}}),
+            "application/json",
+        )
+    assert e.value.code == 400
+    err = json.loads(e.value.read())["error"]
+    assert "'culprit'" in err and msg in err
+
+
 def test_gateway_errors(server):
     with pytest.raises(urllib.error.HTTPError) as e:
         _get(server, "/api/search?k=5")
