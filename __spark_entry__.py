@@ -12,11 +12,13 @@ never flip top-k membership between engines.
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from searchenginer_spark.cache import CacheScope, current_scope
 from searchenginer_spark.functions import textstats as TS
 from searchenginer_spark.functions.hashing import (
     rolling_fingerprints,
@@ -45,6 +47,22 @@ from searchenginer_spark.operators.dict import DEFAULT_STOPWORDS as _STOPWORDS  
 
 _IDX_CACHE: dict[tuple[int, str], Bm25DataFrameIndex] = {}
 
+#: owns every cache and checkpoint the contract queries make — the shared
+#: index caches below and each query's own intermediates — until
+#: release_entry_caches() closes it
+_SCOPE = CacheScope()
+
+
+def _in_scope(q: Callable[..., DataFrame]):
+    """``q`` constructed with the module scope current."""
+
+    @functools.wraps(q)
+    def run(*args) -> DataFrame:
+        with _SCOPE.active():
+            return q(*args)
+
+    return run
+
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/documents.parquet")
@@ -65,10 +83,11 @@ def _cindex(spark: SparkSession, sf_dir: str) -> Bm25CompressedIndex:
     key = (id(spark), sf_dir)
     if key not in _CIDX_CACHE:
         m1 = _index(spark, sf_dir)
-        term_dict = build_term_dict(m1.dft).persist()
+        scope = current_scope()
+        term_dict = scope.persist(build_term_dict(m1.dft))
         postings = build_postings(m1.tf, m1.dl, term_dict, m1.stats, docs_per_part=128)
         _CIDX_CACHE[key] = Bm25CompressedIndex(
-            spark, postings.persist(), term_dict, docs_per_part=128
+            spark, scope.persist(postings), term_dict, docs_per_part=128
         )
     return _CIDX_CACHE[key]
 
@@ -151,6 +170,7 @@ FLAGSHIP_QUERY = "query data"
 # ------------------------------------------------------------------ queries
 
 
+@_in_scope
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: BM25 conjunctive top-10 over sf0.001 documents."""
     idx = _index(spark, "/root/testdata/sf0.001")
@@ -205,9 +225,10 @@ def _cindex_prod(spark: SparkSession, sf_dir: str) -> Bm25CompressedIndex:
     key = (id(spark), sf_dir)
     if key not in _CIDX_PROD_CACHE:
         m1 = _index(spark, sf_dir)
-        term_dict = build_term_dict(m1.dft).persist()
+        scope = current_scope()
+        term_dict = scope.persist(build_term_dict(m1.dft))
         postings = build_postings(m1.tf, m1.dl, term_dict, m1.stats)
-        _CIDX_PROD_CACHE[key] = Bm25CompressedIndex(spark, postings.persist(), term_dict)
+        _CIDX_PROD_CACHE[key] = Bm25CompressedIndex(spark, scope.persist(postings), term_dict)
     return _CIDX_PROD_CACHE[key]
 
 
@@ -215,58 +236,20 @@ def _q_bm25_compressed_prod(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _cindex_prod(spark, sf_dir).search(FLAGSHIP_QUERY, k=10, mode="and", round_to=4)
 
 
-def release_entry_caches(sweep_checkpoints: bool = False) -> None:
-    """Unpersist every cached handle this module holds (the shared
-    DataFrame/compressed indexes the contract queries reuse), release
-    their id-minting checkpoints, and clear the caches — the explicit
-    counterpart to session teardown for long-lived drivers (r3/r4
-    hygiene item). Dedup contract queries persist nothing
-    (persist_shared=False throughout).
-
-    What this does NOT cover by default: queries that build an index
-    INLINE (dedup/stopword/compacted/CJK/positional fixtures) leave
-    their term-dict localCheckpoint storage behind with no reachable
-    handle. ``sweep_checkpoints=True`` additionally unpersists EVERY
-    localCheckpoint RDD registered on the session — correct only for
-    the session's owner (a checkpoint another live index still depends
-    on cannot be recomputed once swept); with it, the session returns
-    to zero module-held persisted RDDs."""
-    for m1 in _IDX_CACHE.values():
-        for h in (m1.tf, m1.dl, m1.dft):
-            try:
-                h.unpersist()
-            except Exception:
-                pass
-    from searchenginer_spark.operators.ids import release_plan_checkpoints
-
-    for cache in (_CIDX_CACHE, _CIDX_PROD_CACHE):
-        for idx in cache.values():
-            for h in (idx.postings, idx.term_dict):
-                try:
-                    h.unpersist()
-                except Exception:
-                    pass
-            try:
-                # term_dict minting localCheckpoints its pinned partitions;
-                # DataFrame.unpersist never releases checkpoint storage
-                release_plan_checkpoints(idx.term_dict)
-            except Exception:
-                pass
+def release_entry_caches() -> None:
+    """Free every cache and checkpoint the contract queries made, and clear
+    the module's index caches: the explicit counterpart to session
+    teardown for long-lived drivers. Closing the module scope covers the
+    shared DataFrame/compressed indexes, the id-minting checkpoints under
+    them and each query's own intermediates (dedup signature tables,
+    clustering checkpoints, LM count tables); the inline index builds
+    already freed theirs when each build returned. A query result
+    constructed before the call may not be computable after it: its
+    lineage can start at a freed checkpoint."""
+    _SCOPE.close()
     _IDX_CACHE.clear()
     _CIDX_CACHE.clear()
     _CIDX_PROD_CACHE.clear()
-    if sweep_checkpoints:
-        spark = SparkSession.getActiveSession()
-        if spark is not None:
-            it = (
-                spark.sparkContext._jsc.getPersistentRDDs()
-                .entrySet()
-                .iterator()
-            )
-            while it.hasNext():
-                rdd = it.next().getValue()
-                if "localCheckpoint" in rdd.toString():
-                    rdd.unpersist(False)
 
 
 def _q_bm25_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -918,10 +901,7 @@ def _q_dedup_text_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("doc_id_2").alias("b"),
         F.round("jaccard", 4).alias("v"),
     )
-    # persist_occurrences=False: contract rows return lazy DataFrames whose
-    # materialization they never see, so they cannot release a persisted
-    # occurrence handle afterwards (same hygiene rule as dedup_minhash_lsh)
-    spans = duplicated_spans(_docs(spark, sf_dir), min_len=8, persist_occurrences=False).select(
+    spans = duplicated_spans(_docs(spark, sf_dir), min_len=8).select(
         F.lit("substr").alias("branch"),
         F.col("doc_id").alias("a"),
         F.col("span_start").cast("long").alias("b"),
@@ -931,15 +911,10 @@ def _q_dedup_text_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash-LSH near-dup pairs (md5-family hashes, DuckDB-checked).
-
-    persist_shared=False: this function returns a lazy DataFrame whose
-    materialization it never sees, so it cannot release a persisted
-    signature handle afterwards — recomputing the sig subtree per consumer
-    leaves no persisted RDDs behind (r3 hygiene item)."""
-    return minhash_lsh_pairs(
-        _union_docs(spark, sf_dir), threshold=0.7, persist_shared=False
-    ).select("doc_id", "doc_id_2", F.round("est_jaccard", 4).alias("est_jaccard"))
+    """MinHash-LSH near-dup pairs (md5-family hashes, DuckDB-checked)."""
+    return minhash_lsh_pairs(_union_docs(spark, sf_dir), threshold=0.7).select(
+        "doc_id", "doc_id_2", F.round("est_jaccard", 4).alias("est_jaccard")
+    )
 
 
 def _q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -947,10 +922,7 @@ def _q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _union_docs(spark, sf_dir)
     idx = Bm25DataFrameIndex.build(docs, text_col="text", persist=False)
     kw = tfidf_top_keywords(idx.tf, idx.dft, idx.stats, top_n=20)
-    # persist_shared=False: this returns a lazy frame whose materialization
-    # the harness owns — the leak-free contract release_entry_caches
-    # documents (the band-table persist is for lifecycle-managing callers)
-    return simhash_near_pairs(simhash(kw), max_hamming=3, persist_shared=False)
+    return simhash_near_pairs(simhash(kw), max_hamming=3)
 
 
 def _q_doc_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1393,8 +1365,6 @@ def _q_dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     return embedding_cosine_pairs(
         dv, threshold=0.95, tables=2, planes_per_table=4, seed=7,
         id_col="doc_id", vec_col="vec", round_to=4,
-        # lazy return — no handle lifecycle here; see _q_dedup_minhash
-        persist_shared=False,
     )
 
 
@@ -1853,7 +1823,6 @@ def _q_trained_model_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
         train_bpe,
         word_frequencies,
     )
-    from searchenginer_spark.operators.dedup import release_intermediates
     from searchenginer_spark.operators.embed import (
         cooccurrence_counts,
         doc_vectors_from,
@@ -1878,9 +1847,6 @@ def _q_trained_model_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("avg_logprob").cast("double").alias("v1"),
         F.col("perplexity").cast("double").alias("v2"),
     )
-    # drop the internal count-table persists right away: the oracle row
-    # is tiny, recompute-on-collect is cheap, and nothing leaks
-    release_intermediates(lm)
 
     # --- bpe: learn merges on the whole corpus, fixture them, count
     merges = train_bpe(word_frequencies(docs, text_col="text"), n_merges=60)
@@ -2716,15 +2682,11 @@ def _q_sql_generic_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Transitive MinHash near-dup clusters over the duplicate-injected
     union corpus: LSH pairs -> large-star/small-star connected components
-    -> lowest-id survivor. persist_shared=False + the CC loop's per-round
-    checkpoint release: no persisted RDDs survive this lazy return (the
-    final round's checkpoint blocks are swept by release_entry_caches,
-    same as the inline index builds)."""
+    -> lowest-id survivor. The clustering's checkpoints stay in the module
+    scope until release_entry_caches()."""
     from searchenginer_spark.operators.dedup import near_dup_clusters
 
-    return near_dup_clusters(
-        _union_docs(spark, sf_dir), threshold=0.7, persist_shared=False
-    )
+    return near_dup_clusters(_union_docs(spark, sf_dir), threshold=0.7)
 
 
 def _dedup_clusters_sql() -> str:
@@ -2759,7 +2721,9 @@ FROM alldocs a LEFT JOIN comp c USING (doc_id)
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return {
+    """Each query runs with the module scope current, so everything it
+    caches is freed by release_entry_caches()."""
+    qs = {
         "bm25_and_topk": _q_bm25_and,
         "bm25_or_topk": _q_bm25_or,
         "bm25_repeated_term": _q_bm25_repeated_term,
@@ -2822,6 +2786,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "dedup_embedding_pairs": _q_dedup_embedding,
         "sql_generic_suite": _q_sql_generic_suite,
     }
+    return {name: _in_scope(q) for name, q in qs.items()}
 
 
 def oracle_sql() -> dict[str, str]:

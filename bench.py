@@ -23,6 +23,7 @@ import shutil
 import sys
 import tempfile
 import time
+from contextlib import nullcontext
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
@@ -71,6 +72,7 @@ def main() -> None:
 
     from pyspark.sql import functions as F
 
+    from searchenginer_spark.cache import CacheScope, current_scope, scoped
     from searchenginer_spark.operators.ann import cosine_topk
     from searchenginer_spark.operators.dedup import minhash_lsh_pairs, simhash_near_pairs
     from searchenginer_spark.functions.hashing import simhash, tfidf_top_keywords
@@ -96,17 +98,31 @@ def main() -> None:
     extras: dict[str, float] = {"cpus": cpus, "corpus_docs": n_corpus}
     extras["cpu_probe_pre"] = cpu_probe(min(cpus, 16))
 
-    def timed(name: str, fn, reps: int = 1):
+    def persisted() -> set[int]:
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+    def timed(name: str, fn, reps: int = 1, keep: bool = False):
         """Record fn's wall. reps>1 = best-of-N (first result kept): the
         shared host's CPU-steal bursts add 50-100% to a single shot of the
         short operator phases, so one-rep numbers misrepresent round-over-
-        round deltas. Build phases (side-effecting, minutes-long) stay 1."""
+        round deltas. Build phases (side-effecting, minutes-long) stay 1.
+
+        Each rep runs in a CacheScope of its own and must leave the
+        persisted-RDD id set as it found it, so no rep reads a cache an
+        earlier rep left behind. ``keep=True`` phases build state that
+        later phases read: they cache into the session-lifetime root scope
+        instead, and are not checked."""
         out = None
         best = None
         for r in range(reps):
-            t = time.monotonic()
-            o = fn()
-            w = time.monotonic() - t
+            before = persisted()
+            with nullcontext() if keep else CacheScope():
+                t = time.monotonic()
+                o = fn()
+                w = time.monotonic() - t
+            if not keep:
+                left = persisted() - before
+                assert not left, f"{name} rep {r} left persisted RDDs {sorted(left)}"
             if best is None or w < best:
                 best = w
             if r == 0:
@@ -122,7 +138,7 @@ def main() -> None:
             d.count()
             return d
 
-        docs = timed("corpus_build", _corpus)
+        docs = timed("corpus_build", _corpus, keep=True)
 
         # warm-up build: JVM JIT + python-worker spawn + committer init are
         # session costs, not job costs; a tiny build pays them up front so
@@ -256,7 +272,7 @@ def main() -> None:
             pp.count()
             return Bm25CompressedIndex(spark, pp, ptd)
 
-        pidx = timed("phrase_index_build", _phrase_index)
+        pidx = timed("phrase_index_build", _phrase_index, keep=True)
         timed("phrase_hot", lambda: pidx.search_phrase("int return", k=10).collect(), reps=2)
 
         # ---- chunk -> pack training-pipeline pass (pure JVM, no shuffle
@@ -317,6 +333,7 @@ def main() -> None:
 
         # ---- PPMI embedding training (r5: JVM co-occurrence counting +
         # driver-side factorization of the vocab-capped matrix) -------------
+        @scoped
         def _embed_train():
             from searchenginer_spark.operators.embed import (
                 cooccurrence_counts,
@@ -337,6 +354,7 @@ def main() -> None:
         # ---- n-gram LM training + perplexity scoring (r5: stupid-backoff
         # quality gate — count shuffles + broadcast-join scoring, zero
         # Python rows) -------------------------------------------------------
+        @scoped
         def _lm_score():
             from searchenginer_spark.operators.ngram_lm import (
                 score_docs as lm_score_docs,
@@ -375,17 +393,13 @@ def main() -> None:
         )
 
         # ---- dedup over the synthetic corpus -------------------------------
-        from searchenginer_spark.operators.dedup import release_intermediates
-
         ddocs = docs.select("doc_id", F.col("content").alias("text"))
 
-        def _minhash():
-            pairs = minhash_lsh_pairs(ddocs, threshold=0.7)
-            n = pairs.count()
-            release_intermediates(pairs)
-            return n
-
-        timed("dedup_minhash_lsh", _minhash, reps=2)
+        timed(
+            "dedup_minhash_lsh",
+            lambda: minhash_lsh_pairs(ddocs, threshold=0.7).count(),
+            reps=2,
+        )
 
         # ExactSubstr spans (Lee et al. 2022) at the paper-ish L=20: one
         # corpus shuffle of 16-byte gram ids; count + total duplicated
@@ -398,7 +412,6 @@ def main() -> None:
                 F.count(F.lit(1)).alias("n"),
                 F.coalesce(F.sum(F.col("span_end") - F.col("span_start")), F.lit(0)).alias("t"),
             ).collect()[0]
-            release_intermediates(sp)
             return int(row["n"]), int(row["t"])
 
         (n_spans, dup_toks) = timed("dedup_substr_spans", _substr, reps=2)
@@ -411,14 +424,18 @@ def main() -> None:
         # the OPERATORS, not three repeated corpus tokenizations
         def _stats_tables():
             i = Bm25DataFrameIndex.build(ddocs, text_col="text", persist=True)
-            i.tf.count(), i.dft.count()
+            i.tf.count(), i.dl.count(), i.dft.count()
             return i
 
-        dfidx = timed("corpus_stats_build", _stats_tables)
+        dfidx = timed("corpus_stats_build", _stats_tables, keep=True)
 
         def _simhash_pairs():
+            # both sides of the banded self-join read the fingerprints:
+            # persist and fill them in this rep's scope, as the build does
             kw = tfidf_top_keywords(dfidx.tf, dfidx.dft, dfidx.stats, top_n=20)
-            return simhash_near_pairs(simhash(kw), max_hamming=3).count()
+            fp = current_scope().persist(simhash(kw))
+            fp.count()
+            return simhash_near_pairs(fp, max_hamming=3).count()
 
         timed("dedup_simhash", _simhash_pairs, reps=2)
 
@@ -430,7 +447,7 @@ def main() -> None:
             dv.count()
             return dv
 
-        dv = timed("doc_vectors_build", _doc_vectors)
+        dv = timed("doc_vectors_build", _doc_vectors, keep=True)
         extras["doc_vectors_per_sec"] = round(n_corpus / timings["doc_vectors_build"], 1)
         timed(
             "vector_search_text",
@@ -460,7 +477,7 @@ def main() -> None:
         coded.count()
         return cb, coded
 
-    pq_cb, pq_coded = timed("ann_pq_encode", _pq_build)
+    pq_cb, pq_coded = timed("ann_pq_encode", _pq_build, keep=True)
     timed("ann_pq_topk", lambda: pq_topk(pq_coded, pq_cb, qvec, k=10).collect(), reps=2)
     pq_coded.unpersist()
 

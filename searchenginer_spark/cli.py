@@ -30,6 +30,8 @@ import argparse
 import json
 import sys
 
+from .cache import current_scope, scoped
+
 
 def main(argv: list[str] | None = None) -> None:
     ap = argparse.ArgumentParser(prog="searchenginer_spark")
@@ -144,7 +146,14 @@ def main(argv: list[str] | None = None) -> None:
 
     owned = SparkSession.getActiveSession() is None
     spark = get_spark(f"cli-{args.cmd}")
+    _run(ap, args, spark)
+    if owned:  # don't stop a session we merely joined
+        spark.stop()
 
+
+@scoped
+def _run(ap: argparse.ArgumentParser, args: argparse.Namespace, spark) -> None:
+    """Run one command; its caches are freed when it returns."""
     if args.cmd == "gen-corpus":
         from .sources.corpus import generate_corpus
 
@@ -227,11 +236,8 @@ def main(argv: list[str] | None = None) -> None:
         corpus = spark.read.parquet(args.corpus)
         cooc = cooccurrence_counts(corpus, text_col=args.text_col, window=args.window)
         if args.distributed:
-            from .operators.dedup import release_intermediates
-
             tv = train_ppmi_vectors_distributed(cooc, dim=args.dim)
             tv.write.mode("overwrite").parquet(args.out)
-            release_intermediates(tv)
             tv = spark.read.parquet(args.out)
         else:
             tv = train_ppmi_vectors(cooc, dim=args.dim, top_vocab=args.top_vocab)
@@ -267,12 +273,9 @@ def main(argv: list[str] | None = None) -> None:
         )
         from pyspark.sql import functions as F
 
-        from .operators.dedup import release_intermediates
-
         target = spark.read.parquet(args.score) if args.score else corpus
         scored = lm_score(target, counts, text_col=args.text_col)
         scored.write.mode("overwrite").parquet(args.out)
-        release_intermediates(scored)
         # summarize from the WRITTEN table — re-aggregating the lazy plan
         # would execute the whole scoring pipeline a second time
         stats = spark.read.parquet(args.out).agg(
@@ -286,15 +289,10 @@ def main(argv: list[str] | None = None) -> None:
         from pyspark.sql import functions as F
 
         from .functions.textstats import repetition_signals
-        from .operators.dedup import (
-            duplicated_spans,
-            release_intermediates,
-            strip_duplicated_spans,
-        )
+        from .operators.dedup import duplicated_spans, strip_duplicated_spans
 
         docs = spark.read.parquet(args.corpus)
         n_in = docs.count()
-        gated = False
         if args.gate:
             sig = repetition_signals(F.col(args.text_col), top_ns=(2,), dup_ns=(5,))
             docs = docs.filter(
@@ -306,8 +304,7 @@ def main(argv: list[str] | None = None) -> None:
                 # the gated plan (scan + per-row repetition folds) feeds
                 # BOTH the span finder and the strip probe side — persist
                 # it or the gate math runs twice end to end
-                docs = docs.persist()
-                gated = True
+                docs = current_scope().persist(docs)
         if args.min_len:
             spans = duplicated_spans(
                 docs, text_col=args.text_col, id_col=args.id_col,
@@ -317,11 +314,8 @@ def main(argv: list[str] | None = None) -> None:
                 docs, spans, text_col=args.text_col, id_col=args.id_col
             )
             cleaned.write.mode("overwrite").parquet(args.out)
-            release_intermediates(spans)
         else:
             docs.write.mode("overwrite").parquet(args.out)
-        if gated:
-            docs.unpersist()
         # summarize from the WRITTEN table (same rule as lm-score: never
         # re-execute the lazy cleaning plan for stats)
         out_df = spark.read.parquet(args.out)
@@ -337,9 +331,6 @@ def main(argv: list[str] | None = None) -> None:
             summary["tokens_seen"] = int(stats["toks"])
             summary["tokens_removed"] = int(stats["cut"])
         print(json.dumps(summary))
-
-    if owned:  # don't stop a session we merely joined
-        spark.stop()
 
 
 if __name__ == "__main__":

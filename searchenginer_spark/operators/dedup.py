@@ -15,6 +15,13 @@ Every candidate generator here is a banded equi-join (LSH family), never an
 all-pairs join: simhash bands (pigeonhole over hamming), minhash band
 hashes (Jaccard), winnowing fingerprints, SRP bands for cosine. At 100 TB
 the only all-pairs work ever done is within tiny equal-band buckets.
+
+Caches: an operator whose lazy result reads an intermediate several times
+persists it in the current CacheScope (searchenginer_spark/cache.py), and
+the clustering's checkpoints go there too. Pair generators run no Spark
+job when constructed; dedup_docs_and_tf and near_dup_clusters fill their
+caches eagerly, because their consumers fork concurrent jobs. The caller
+that opened the scope frees everything by closing it.
 """
 
 from __future__ import annotations
@@ -22,42 +29,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..cache import CacheScope, current_scope
 from ..functions.hashing import minhash_signatures, simhash_bands, token_shingles
 from ..functions.spans import merge_token_spans
 from ..functions.tokenize import tokens
-from .ids import release_plan_checkpoints
-
-
-class _CheckpointHandle:
-    """Adapter so release_intermediates can reclaim localCheckpoint storage
-    (DataFrame.unpersist never drops RDD-level checkpoint blocks)."""
-
-    def __init__(self, df: DataFrame):
-        self._df = df
-
-    def unpersist(self) -> None:
-        release_plan_checkpoints(self._df)
-
-
-def _attach_intermediates(result: DataFrame, handles: list[DataFrame]) -> DataFrame:
-    """Record persisted intermediates on the result for later release.
-
-    Operators that persist a shared subtree (minhash signatures, the vector
-    table) cannot unpersist before returning — the lazy result still reads
-    them. The caller owns the lifecycle: after materializing the result,
-    call :func:`release_intermediates` (job-scoped runs may skip it; the
-    session teardown reclaims everything)."""
-    result._sg_intermediates = handles
-    return result
-
-
-def release_intermediates(df: DataFrame) -> None:
-    """Unpersist intermediates attached by dedup operators (idempotent)."""
-    for h in getattr(df, "_sg_intermediates", ()):  # noqa: B004 — plain attr
-        h.unpersist()
-    df._sg_intermediates = ()
-
-
 def exact_duplicates(
     docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
@@ -116,27 +91,14 @@ def dedup_docs(
 
     Wired into plans.build_index.build_index(dedup=...) so the end-to-end
     corpus -> dedup -> index pipeline is one call.
+
+    The stage's caches (the tf table, the loser set, minhash_cc's cluster
+    checkpoints) belong to the current :class:`CacheScope`; consume the
+    result before that scope closes.
     """
-    out, _tf, handles = dedup_docs_and_tf(
+    return dedup_docs_and_tf(
         docs, how, text_col, id_col, max_hamming=max_hamming, top_n=top_n
-    )
-    if how == "minhash_cc":
-        # the CC survivors' lineage is TRUNCATED at the clustering's
-        # localCheckpoints — releasing those blocks below would make the
-        # lazy result unrecomputable (the first action would fail with
-        # 'checkpoint block not found'). Snapshot the survivors first;
-        # the snapshot's own blocks ride _sg_intermediates so callers
-        # can reclaim them with release_intermediates after use.
-        out = out.localCheckpoint(eager=True)
-        for h in handles:
-            h.unpersist()
-        return _attach_intermediates(out, [_CheckpointHandle(out)])
-    for h in handles:
-        # plain dedup callers don't reuse the tf table — drop the cache marks
-        # so the result stays a lazy uncached plan (no block-manager residue;
-        # exact/simhash handles are plain persists, safe to recompute)
-        h.unpersist()
-    return out
+    )[0]
 
 
 def dedup_docs_and_tf(
@@ -148,9 +110,9 @@ def dedup_docs_and_tf(
     top_n: int = 20,
     with_positions: bool = False,
     tokenizer: str | None = None,
-) -> tuple[DataFrame, DataFrame, list[DataFrame]]:
-    """(deduped docs, tf over the deduped docs, persisted handles) — fused
-    dedup + term-frequency stage sharing ONE tokenize pass.
+) -> tuple[DataFrame, DataFrame, DataFrame | None]:
+    """(deduped docs, tf over the deduped docs, survivor (term, df, cf) or
+    None) — fused dedup + term-frequency stage sharing ONE tokenize pass.
 
     Tokenize+tf is the widest stage of the build DAG (PLANS.md §3); the
     ``dedup='simhash'`` pipeline needs tf twice — for the TF-IDF-keyword
@@ -160,25 +122,30 @@ def dedup_docs_and_tf(
     stats, so the end-to-end dedup build tokenizes the corpus exactly once.
 
     The returned tf carries (doc_id, term, tf[, positions]) regardless of
-    ``id_col`` (pair/tf frames are keyed on doc_id internally). The caller
-    must unpersist every handle in ``handles`` after its last tf-derived
-    action (build_index does this at return).
+    ``id_col`` (pair/tf frames are keyed on doc_id internally). The third
+    value is the survivors' precomputed term aggregate for 'simhash' (see
+    below) and None for the other modes. Every cache the stage fills
+    belongs to the current :class:`CacheScope`, so the caller consumes the
+    results before that scope closes (build_index opens one per build).
     """
     from ..functions.hashing import simhash, tfidf_top_keywords
     from .stats import corpus_stats, doc_lengths, document_frequencies, term_frequencies
 
+    scope = current_scope()
     out = dedup_exact(docs, text_col, id_col)
     if how not in ("exact", "simhash", "minhash_cc"):
         raise ValueError(
             f"unknown dedup mode {how!r} (use 'exact', 'simhash' or 'minhash_cc')"
         )
     named = out if id_col == "doc_id" else out.withColumnRenamed(id_col, "doc_id")
-    tf = term_frequencies(
-        named, text_col=text_col, with_positions=with_positions,
-        tokenizer=tokenizer,
-    ).persist()
+    tf = scope.persist(
+        term_frequencies(
+            named, text_col=text_col, with_positions=with_positions,
+            tokenizer=tokenizer,
+        )
+    )
     if how == "exact":
-        return out, tf, [tf]
+        return out, tf, None
     if how == "minhash_cc":
         # transitive MinHash clustering (r6): LSH pairs -> large-star/
         # small-star connected components -> lowest-id survivor per
@@ -190,7 +157,7 @@ def dedup_docs_and_tf(
         # dup-heavy corpora they are a large corpus fraction (AQE still
         # broadcasts when small).
         clusters = near_dup_clusters(named, text_col=text_col)
-        losers = clusters.filter(~F.col("is_kept")).select("doc_id").persist()
+        losers = scope.persist(clusters.filter(~F.col("is_kept")).select("doc_id"))
         # fill the cache before build_index's concurrent consumers fork
         # (see the simhash path below for the rationale); cheap here — the
         # cluster table is already checkpointed by near_dup_clusters
@@ -204,27 +171,31 @@ def dedup_docs_and_tf(
                 "left_anti",
             )
         )
-        handles = [tf, losers] + list(getattr(clusters, "_sg_intermediates", ()))
-        return kept_docs, kept_tf, handles
+        return kept_docs, kept_tf, None
     # persist + count dft: this path's single term-aggregate materializes
     # HERE, so the keyword pass's size-gated broadcast (see
     # tfidf_top_keywords) reads the cache instead of re-aggregating — and
     # when the vocabulary is bounded, the broadcast removes the pass's
     # only corpus-sized exchange (the tf-side term join)
-    dft = document_frequencies(tf).persist()
+    dft = scope.persist(document_frequencies(tf))
     dft.count()
     stats = corpus_stats(doc_lengths(tf))
-    pairs = simhash_near_pairs(
-        simhash(tfidf_top_keywords(tf, dft, stats, top_n=top_n)),
-        max_hamming=max_hamming,
+    # persist + EAGERLY fill the fingerprints before the banded self-join:
+    # both join sides otherwise execute the whole fingerprint lineage (the
+    # keyword aggregate + 64-bit vote), and a cold cache does not dedup
+    # the two sides' concurrent fills inside the join job. 16 B/doc.
+    fingerprints = scope.persist(
+        simhash(tfidf_top_keywords(tf, dft, stats, top_n=top_n))
     )
+    fingerprints.count()
+    pairs = simhash_near_pairs(fingerprints, max_hamming=max_hamming)
     # losers are consumed by every downstream tf/docs action — persist so
     # the banded self-join runs once, not once per consumer. NO broadcast
     # hint: in a dup-heavy web corpus the loser set is a large corpus
     # fraction (documented crawl near-dup rates run 25-40%), and a hint
     # would force-collect it regardless of size; AQE still broadcasts it
     # at runtime when it is actually small
-    losers = pairs.select(F.col("doc_id_2").alias("doc_id")).distinct().persist()
+    losers = scope.persist(pairs.select(F.col("doc_id_2").alias("doc_id")).distinct())
     # materialize ONCE, here, before any consumer forks: build_index runs
     # the docs write, the stats chain and the dict chain on CONCURRENT
     # threads, and a persisted-but-cold cache does not serialize parallel
@@ -233,9 +204,9 @@ def dedup_docs_and_tf(
     # ~2x the standalone chain cost). Eagerness is safe: since the no-op-
     # resume gate, this stage is only constructed when it is consumed.
     losers.count()
-    # the pairs table is fully consumed into `losers` — reclaim its band
-    # cache now rather than riding it through the whole build
-    release_intermediates(pairs)
+    # the fingerprints are fully consumed into `losers` — free them now
+    # rather than riding them through the whole build
+    scope.release(fingerprints)
     kept_tf = tf.join(losers, "doc_id", "left_anti")
     # precomputed survivor df/cf by SUBTRACTION (r7): the full-corpus dft
     # is already materialized for the keyword pass, and the losers are the
@@ -243,10 +214,9 @@ def dedup_docs_and_tf(
     # integer arithmetic over disjoint doc sets; terms whose every doc
     # lost drop out at df=0). The index build consumes this instead of
     # re-aggregating the whole kept tf — one corpus-wide term aggregate
-    # per dedup build instead of two. Attached as an attribute the same
-    # way _sg_intermediates rides results.
+    # per dedup build instead of two.
     loser_dft = document_frequencies(tf.join(losers, "doc_id", "left_semi"))
-    kept_tf._sg_dft = (
+    kept_dft = (
         dft.join(
             loser_dft.select(
                 "term", F.col("df").alias("_ldf"), F.col("cf").alias("_lcf")
@@ -270,14 +240,13 @@ def dedup_docs_and_tf(
         id_col,
         "left_anti",
     )
-    return kept_docs, kept_tf, [tf, losers, dft]
+    return kept_docs, kept_tf, kept_dft
 
 
 def simhash_near_pairs(
     fingerprints: DataFrame,
     max_hamming: int = 3,
     n_bands: int | None = None,
-    persist_shared: bool = True,
 ) -> DataFrame:
     """(doc_id, doc_id_2, hamming) pairs within the hamming threshold.
 
@@ -290,13 +259,10 @@ def simhash_near_pairs(
     threshold; passing an insufficient explicit value raises instead of
     silently missing pairs. doc_id < doc_id_2.
 
-    EAGER at construction (r7, ``persist_shared=True``): the band table
-    persists and fills here so the self-join's two sides read one
-    materialization of the fingerprint lineage instead of executing it
-    twice. Long-lived callers reclaim the cache with
-    :func:`release_intermediates`. ``persist_shared=False`` restores the
-    lazy uncached plan for one-shot callers that cannot manage the handle
-    lifecycle (the minhash_lsh_pairs contract).
+    A plain lazy plan: constructing it runs no job. Both sides of the
+    self-join read ``fingerprints``, so a caller whose fingerprint lineage
+    is expensive persists and fills it first, in its :class:`CacheScope`
+    (dedup_docs_and_tf does).
     """
     if n_bands is None:
         n_bands = max_hamming + 1
@@ -305,18 +271,7 @@ def simhash_near_pairs(
             f"n_bands={n_bands} cannot guarantee completeness for "
             f"max_hamming={max_hamming} (pigeonhole needs > max_hamming bands)"
         )
-    # persist + EAGERLY fill the band table before the self-join: both
-    # join sides otherwise execute the whole fingerprint lineage (the
-    # keyword aggregate + 64-bit vote), and a cold cache does not dedup
-    # the two sides' concurrent fills inside the join job (the same
-    # concurrency corner as the build's losers fill). 16 B/doc of
-    # fingerprint x n_bands rows — MEMORY_AND_DISK via default persist;
-    # riders on _sg_intermediates so callers reclaim the blocks with
-    # release_intermediates.
     a = simhash_bands(fingerprints.select("doc_id", "simhash"), n_bands=n_bands)
-    if persist_shared:
-        a = a.persist()
-        a.count()
     b = (
         a.select(
             F.col("doc_id").alias("doc_id_2"),
@@ -325,7 +280,7 @@ def simhash_near_pairs(
             "band_val",
         )
     )
-    pairs = (
+    return (
         a.join(b, ["band_idx", "band_val"])
         .filter(F.col("doc_id") < F.col("doc_id_2"))
         .select(
@@ -336,7 +291,6 @@ def simhash_near_pairs(
         .filter(F.col("hamming") <= max_hamming)
         .distinct()
     )
-    return _attach_intermediates(pairs, [a] if persist_shared else [])
 
 
 def dedup_by_pairs(docs: DataFrame, pairs: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -346,14 +300,9 @@ def dedup_by_pairs(docs: DataFrame, pairs: DataFrame, id_col: str = "doc_id") ->
     No broadcast hint on the loser set: dup-heavy corpora make it a large
     corpus fraction, and a hint overrides the size threshold; AQE picks a
     runtime broadcast whenever it is actually small, so the common case
-    still probes the docs table without shuffling it.
-
-    The pairs' persisted intermediates (simhash_near_pairs' band table)
-    ride on to the result, so :func:`release_intermediates` on it frees
-    them."""
+    still probes the docs table without shuffling it."""
     losers = pairs.select(F.col(f"{id_col}_2").alias(id_col)).distinct()
-    out = docs.join(losers, id_col, "left_anti")
-    return _attach_intermediates(out, list(getattr(pairs, "_sg_intermediates", ())))
+    return docs.join(losers, id_col, "left_anti")
 
 
 def minhash_lsh_pairs(
@@ -364,7 +313,6 @@ def minhash_lsh_pairs(
     bands: int = 16,
     threshold: float = 0.7,
     shingle_n: int = 3,
-    persist_shared: bool = True,
 ) -> DataFrame:
     """(doc_id, doc_id_2, est_jaccard) near-dup pairs via MinHash-LSH.
 
@@ -376,25 +324,19 @@ def minhash_lsh_pairs(
     Shuffle shape: the dominant band self-join carries 16 x 16 bytes per
     doc, never the 512-byte signature array (which would be ~16 KB/doc
     through the explode); signatures ride exactly two joins keyed by the
-    (small) surviving-pair set. ``sigs`` is persisted because three
-    downstream subtrees consume it — at warehouse scale it would be a
-    materialized signature table. The persisted handle is attached to the
-    result; call :func:`release_intermediates` after materializing.
-    ``persist_shared=False`` skips the persist (recompute the signature
-    subtree per consumer) for one-shot callers that cannot manage the
-    handle lifecycle — e.g. functions returning a lazy DataFrame whose
-    materialization they never see.
+    (small) surviving-pair set. ``sigs`` is persisted in the current
+    :class:`CacheScope` because three downstream subtrees consume it — at
+    warehouse scale it would be a materialized signature table. The
+    persist is lazy: the first action on the result fills it.
     """
     rows_per_band = num_hashes // bands
     toks = docs.select(F.col(id_col).alias("doc_id"), tokens(text_col).alias("toks"))
     # distinct=False: min over a multiset == min over its set, so skipping
     # the shingle-string distinct changes nothing downstream but removes
     # the widest shuffle of the pipeline
-    sigs = minhash_signatures(
-        token_shingles(toks, n=shingle_n, distinct=False), num_hashes
+    sigs = current_scope().persist(
+        minhash_signatures(token_shingles(toks, n=shingle_n, distinct=False), num_hashes)
     )
-    if persist_shared:
-        sigs = sigs.persist()
 
     # band value = the 4 raw minhash values, concatenated; hashed to 8 bytes
     # for the shuffle. (The DuckDB oracle joins on the raw concatenation —
@@ -432,7 +374,7 @@ def minhash_lsh_pairs(
         )
         / F.lit(float(num_hashes))
     )
-    out = (
+    return (
         pairs.join(sigs, "doc_id")
         .join(
             sigs.select(F.col("doc_id").alias("doc_id_2"), F.col("sig").alias("sig_2")),
@@ -441,7 +383,6 @@ def minhash_lsh_pairs(
         .select("doc_id", "doc_id_2", est.alias("est_jaccard"))
         .filter(F.col("est_jaccard") >= threshold)
     )
-    return _attach_intermediates(out, [sigs] if persist_shared else [])
 
 
 def embedding_cosine_pairs(
@@ -453,7 +394,6 @@ def embedding_cosine_pairs(
     id_col: str = "vec_id",
     vec_col: str = "vec",
     round_to: int | None = None,
-    persist_shared: bool = True,
 ) -> DataFrame:
     """(id, id_2, cos) near-dup pairs by embedding cosine similarity.
 
@@ -467,10 +407,9 @@ def embedding_cosine_pairs(
 
     Same band-join shape as minhash_lsh_pairs: only (id, table, 8-byte
     code) rides the self-join; vectors are re-joined per surviving pair.
-    The persisted source handle is attached to the result; call
-    :func:`release_intermediates` after materializing
-    (``persist_shared=False`` for one-shot callers, as in
-    minhash_lsh_pairs).
+    The source vectors are persisted in the current :class:`CacheScope`
+    (three subtrees read them). Construction runs one small job: the
+    dimension sniff.
     """
     from .ann import _dot, _norm, _planes, srp_code
 
@@ -492,7 +431,7 @@ def embedding_cosine_pairs(
             for t in range(tables)
         ]
     )
-    src = vecs.persist() if persist_shared else vecs
+    src = current_scope().persist(vecs)
     banded = src.select(F.col(id_col).alias("_id"), F.posexplode(codes).alias("tbl", "code"))
     other = banded.select(F.col("_id").alias("_id2"), "tbl", "code")
     pairs = (
@@ -506,7 +445,7 @@ def embedding_cosine_pairs(
     denom = _norm(F.col("_va")) * _norm(F.col("_vb"))
     cos = F.when(denom > 0, _dot(F.col("_va"), F.col("_vb")) / denom).otherwise(F.lit(0.0))
     out_cos = F.round(cos, round_to) if round_to is not None else cos
-    out = (
+    return (
         pairs.join(a, "_id")
         .join(b, "_id2")
         .filter(cos >= threshold)
@@ -516,7 +455,6 @@ def embedding_cosine_pairs(
             out_cos.alias("cos"),
         )
     )
-    return _attach_intermediates(out, [src] if persist_shared else [])
 
 
 def ngram_jaccard_pairs(
@@ -581,11 +519,16 @@ def connected_components(
     shaped ever sits on the driver — the loop only compares a per-round
     (count, xxhash-sum) digest, so 100 TB of edges iterate exactly like
     the test graphs. Lineage is truncated every round with an eager
-    localCheckpoint (on a real cluster with a checkpoint dir configured,
-    ``df.checkpoint`` is the drop-in durable variant).
+    localCheckpoint owned by the current :class:`CacheScope`; each round
+    frees the previous one, and the final round's and the nodes'
+    checkpoints back the result until the scope closes.
     """
+    scope = current_scope()
     u, v = F.col("u"), F.col("v")
-    edges = (
+    # checkpoint the INPUT once: the upstream pair generator (an LSH band
+    # join — the dominant shuffle of the whole clustering) would otherwise
+    # re-evaluate for the nodes job AND again for round 1
+    edges = scope.checkpoint(
         pairs.select(
             F.col(id_col).cast("long").alias("u"),
             F.col(f"{id_col}_2").cast("long").alias("v"),
@@ -593,20 +536,12 @@ def connected_components(
         .filter(u != v)
         .select(F.least(u, v).alias("u"), F.greatest(u, v).alias("v"))
         .distinct()
-        # checkpoint the INPUT once: the upstream pair generator (an LSH
-        # band join — the dominant shuffle of the whole clustering) would
-        # otherwise re-evaluate for the nodes job AND again for round 1
-        .localCheckpoint(eager=True)
     )
-    nodes = (
-        edges.select(u.alias("n"))
-        .union(edges.select(v.alias("n")))
-        .distinct()
-        .localCheckpoint(eager=True)
+    nodes = scope.checkpoint(
+        edges.select(u.alias("n")).union(edges.select(v.alias("n"))).distinct()
     )
 
     prev_digest = None
-    prev_cp: DataFrame | None = edges  # reclaimed once round 1 checkpoints
     e = edges
     for _ in range(max_iter):
         # LARGE-STAR: every neighbor larger than u links to min(N(u) ∪ {u})
@@ -633,13 +568,11 @@ def connected_components(
             .distinct()
             .select(F.least(u, v).alias("u"), F.greatest(u, v).alias("v"))
         )
-        e = e.localCheckpoint(eager=True)
+        prev, e = e, scope.checkpoint(e)
         # the previous round's checkpoint blocks are dead once this round
-        # is materialized — reclaim them so a long CC run holds at most
-        # two rounds of edge storage
-        if prev_cp is not None:
-            release_plan_checkpoints(prev_cp)
-        prev_cp = e
+        # is materialized — free them so a long CC run holds at most two
+        # rounds of edge storage
+        scope.release(prev)
         # bit_xor, not sum: order-independent over the distinct edge set
         # and immune to ANSI-mode long overflow
         digest = e.agg(
@@ -655,13 +588,10 @@ def connected_components(
     # converged: every edge is (member, root). Roots + isolated nodes map
     # to themselves (pairs input has no isolated nodes, but be total).
     assign = e.select(v.alias("n"), u.alias("root"))
-    out = nodes.join(assign, "n", "left").select(
+    return nodes.join(assign, "n", "left").select(
         F.col("n").alias(id_col),
         F.coalesce("root", "n").alias("component_id"),
     )
-    # the final round's + nodes' checkpoint blocks back the result; the
-    # caller reclaims them via release_intermediates after materializing
-    return _attach_intermediates(out, [_CheckpointHandle(e), _CheckpointHandle(nodes)])
 
 
 def near_dup_clusters(
@@ -674,20 +604,24 @@ def near_dup_clusters(
 
     minhash_lsh_pairs -> connected_components; ``is_kept`` marks the one
     survivor (smallest doc_id) per cluster. Docs with no near-dup form
-    singleton clusters and are kept."""
-    pairs = minhash_lsh_pairs(docs, text_col, id_col, **lsh_kwargs)
-    comp = connected_components(pairs, id_col=id_col)
-    release_intermediates(pairs)  # the CC loop checkpointed everything it needs
+    singleton clusters and are kept. The clustering runs now; its
+    checkpoints belong to the current :class:`CacheScope`."""
+    outer = current_scope()
+    # the signature cache lives only as long as the clustering reads it:
+    # the CC checkpoints (in the caller's scope) hold everything after
+    with CacheScope():
+        pairs = minhash_lsh_pairs(docs, text_col, id_col, **lsh_kwargs)
+        with outer.active():
+            comp = connected_components(pairs, id_col=id_col)
     all_docs = docs.select(F.col(id_col).cast("long").alias(id_col))
     # no broadcast hint: comp holds every doc in any near-dup pair — a
     # large corpus fraction in dup-heavy data — so forcing it executor-
     # resident would OOM at scale; AQE still broadcasts it when small
-    out = all_docs.join(comp, id_col, "left").select(
+    return all_docs.join(comp, id_col, "left").select(
         id_col,
         F.coalesce("component_id", F.col(id_col)).alias("cluster_id"),
         (F.coalesce("component_id", F.col(id_col)) == F.col(id_col)).alias("is_kept"),
     )
-    return _attach_intermediates(out, getattr(comp, "_sg_intermediates", []))
 
 
 #: splitmix64 finalizer constants (public-domain mixer) — used to spread
@@ -736,7 +670,6 @@ def duplicated_spans(
     id_col: str = "doc_id",
     min_len: int = 50,
     keep_first: bool = False,
-    persist_occurrences: bool = True,
 ) -> DataFrame:
     """(id_col, span_start, span_end) — maximal token spans every one of
     whose ``min_len``-grams occurs >= 2 times in the corpus (ExactSubstr
@@ -784,10 +717,9 @@ def duplicated_spans(
     The occurrence table feeds BOTH the group-by and the join probe side,
     and the group-by's partial-agg exchange is not reusable for the join —
     without a persist the O(n*L) gram hashing runs twice (measured 1.5x
-    the phase wall at 12M grams). Default ``persist_occurrences=True``
-    persists it MEMORY_AND_DISK (spill-safe at scale) and attaches the
-    handle for :func:`release_intermediates`; pass False for one-shot
-    callers that must leave no block-manager residue.
+    the phase wall at 12M grams). It is persisted MEMORY_AND_DISK
+    (spill-safe at scale) in the current :class:`CacheScope`; the first
+    action on the result fills it.
     """
     import numpy as np
     import pyarrow as pa
@@ -841,13 +773,10 @@ def duplicated_spans(
                 ["doc_id", "pos", "h1", "h2"],
             )
 
-    occ = base.mapInArrow(
-        window_ids, schema=f"doc_id {id_type}, pos int, h1 long, h2 long"
+    occ = current_scope().persist(
+        base.mapInArrow(window_ids, schema=f"doc_id {id_type}, pos int, h1 long, h2 long"),
+        StorageLevel.MEMORY_AND_DISK,
     )
-    handles: list[DataFrame] = []
-    if persist_occurrences:
-        occ = occ.persist(StorageLevel.MEMORY_AND_DISK)
-        handles.append(occ)
     # the keeper min-struct rides the hot groupBy only when keep_first
     # actually consumes it
     aggs = [F.count(F.lit(1)).alias("n_occ")]
@@ -862,12 +791,11 @@ def duplicated_spans(
     merged = dup.groupBy("doc_id").agg(
         merge_token_spans(F.sort_array(F.collect_list("pos")), L).alias("sp")
     )
-    out = merged.select("doc_id", F.explode("sp").alias("s")).select(
+    return merged.select("doc_id", F.explode("sp").alias("s")).select(
         F.col("doc_id").alias(id_col),
         F.col("s.s").alias("span_start"),
         F.col("s.e").alias("span_end"),
     )
-    return _attach_intermediates(out, handles)
 
 
 def strip_duplicated_spans(

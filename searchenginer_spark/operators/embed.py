@@ -44,6 +44,7 @@ import pyarrow.compute as _pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..cache import current_scope
 from ..functions.tokenize import IDENT_RE
 
 
@@ -130,54 +131,53 @@ def train_ppmi_vectors(
     """
     # the counts table feeds two consumers (vocab totals + the filtered
     # pull) — persist it so the corpus-sized counting pass runs ONCE
-    cooc = cooc.persist()
-    try:
-        # ONE pass over the cached counts: explode each row into its two
-        # (term, n) margin contributions and hash-aggregate once — the
-        # previous union-of-two-groupBys scanned the counts table twice
-        # and re-aggregated the union (3 exchanges -> 1, measured ~2x
-        # faster; sums of longs, so totals are bit-identical)
-        totals = (
-            cooc.select(
-                F.explode(
-                    F.array(
-                        F.struct(F.col("w").alias("t"), F.col("n").alias("n")),
-                        F.struct(F.col("c").alias("t"), F.col("n").alias("n")),
-                    )
-                ).alias("p")
-            )
-            .groupBy(F.col("p.t").alias("w"))
-            .agg(F.sum("p.n").alias("m"))
+    scope = current_scope()
+    cooc = scope.persist(cooc)
+    # ONE pass over the cached counts: explode each row into its two
+    # (term, n) margin contributions and hash-aggregate once — the
+    # previous union-of-two-groupBys scanned the counts table twice
+    # and re-aggregated the union (3 exchanges -> 1, measured ~2x
+    # faster; sums of longs, so totals are bit-identical)
+    totals = (
+        cooc.select(
+            F.explode(
+                F.array(
+                    F.struct(F.col("w").alias("t"), F.col("n").alias("n")),
+                    F.struct(F.col("c").alias("t"), F.col("n").alias("n")),
+                )
+            ).alias("p")
         )
-        vocab_rows = (
-            totals.orderBy(F.desc("m"), F.asc("w")).limit(top_vocab).collect()
+        .groupBy(F.col("p.t").alias("w"))
+        .agg(F.sum("p.n").alias("m"))
+    )
+    vocab_rows = (
+        totals.orderBy(F.desc("m"), F.asc("w")).limit(top_vocab).collect()
+    )
+    vocab = [r["w"] for r in vocab_rows]
+    index = {t: i for i, t in enumerate(vocab)}
+    V = len(vocab)
+    if V == 0:
+        raise ValueError("empty co-occurrence table")
+    if V < dim:
+        # silently returning V-dim vectors would make downstream
+        # element_at('vec', d+1) reads throw under ANSI mode
+        raise ValueError(
+            f"dim={dim} exceeds the usable vocabulary ({V} terms); "
+            "lower dim or provide more text"
         )
-        vocab = [r["w"] for r in vocab_rows]
-        index = {t: i for i, t in enumerate(vocab)}
-        V = len(vocab)
-        if V == 0:
-            raise ValueError("empty co-occurrence table")
-        if V < dim:
-            # silently returning V-dim vectors would make downstream
-            # element_at('vec', d+1) reads throw under ANSI mode
-            raise ValueError(
-                f"dim={dim} exceeds the usable vocabulary ({V} terms); "
-                "lower dim or provide more text"
-            )
-        spark = cooc.sparkSession
-        # broadcast semi-joins, NOT isin(V literals): a 2048-literal In
-        # expression costs seconds of driver planning and defeats codegen;
-        # Arrow toPandas moves the ~V^2-bounded pair list in columnar
-        # batches instead of py4j row objects
-        vocab_df = spark.createDataFrame([(t,) for t in vocab], "t string")
-        pairs = (
-            cooc.join(F.broadcast(vocab_df), cooc["w"] == vocab_df["t"], "leftsemi")
-            .join(F.broadcast(vocab_df), cooc["c"] == vocab_df["t"], "leftsemi")
-            .select("w", "c", "n")
-            .toPandas()
-        )
-    finally:
-        cooc.unpersist()
+    spark = cooc.sparkSession
+    # broadcast semi-joins, NOT isin(V literals): a 2048-literal In
+    # expression costs seconds of driver planning and defeats codegen;
+    # Arrow toPandas moves the ~V^2-bounded pair list in columnar
+    # batches instead of py4j row objects
+    vocab_df = spark.createDataFrame([(t,) for t in vocab], "t string")
+    pairs = (
+        cooc.join(F.broadcast(vocab_df), cooc["w"] == vocab_df["t"], "leftsemi")
+        .join(F.broadcast(vocab_df), cooc["c"] == vocab_df["t"], "leftsemi")
+        .select("w", "c", "n")
+        .toPandas()
+    )
+    scope.release(cooc)
     M = np.zeros((V, V), dtype=np.float64)
     np.add.at(
         M,
@@ -306,16 +306,16 @@ def ppmi_coo(cooc: DataFrame, alpha: float = 0.75) -> tuple[DataFrame, DataFrame
         .groupBy("w", "c")
         .agg(F.sum("n").alias("n"))
     )
-    sym = sym.persist()
-    margins = sym.groupBy(F.col("w").alias("term")).agg(F.sum("n").alias("m"))
-    margins = margins.persist()
+    scope = current_scope()
+    sym = scope.persist(sym)
+    margins = scope.persist(
+        sym.groupBy(F.col("w").alias("term")).agg(F.sum("n").alias("m"))
+    )
     tot_row = margins.agg(
         F.sum("m").alias("total"), F.sum(F.pow("m", alpha)).alias("ctx_sum")
     ).first()
     total, ctx_sum = float(tot_row["total"] or 0.0), float(tot_row["ctx_sum"] or 1.0)
     if total == 0:
-        sym.unpersist()
-        margins.unpersist()
         raise ValueError("no in-vocabulary co-occurrences (empty pair pull)")
     mw = margins.select(F.col("term").alias("w"), F.col("m").alias("_mw"))
     mc = margins.select(F.col("term").alias("c"), F.col("m").alias("_mc"))
@@ -327,10 +327,7 @@ def ppmi_coo(cooc: DataFrame, alpha: float = 0.75) -> tuple[DataFrame, DataFrame
     pc_c = F.pow("_mc", alpha) / F.lit(ctx_sum)
     pos = lambda col: F.greatest(col, F.lit(0.0))  # noqa: E731
     v = (pos(F.log(x / (pw_w * pc_c))) + pos(F.log(x / (pw_c * pc_w)))) / 2
-    ppmi = e.select("w", "c", v.alias("v")).filter(F.col("v") > 0)
-    from .dedup import _attach_intermediates
-
-    return _attach_intermediates(ppmi, [sym]), margins
+    return e.select("w", "c", v.alias("v")).filter(F.col("v") > 0), margins
 
 
 def _seeded_gaussians(term_col, r: int, seed: int):
@@ -381,27 +378,20 @@ def train_ppmi_vectors_distributed(
     Parity: test_embed pins cosine >= 0.99 (up to sign) against the
     eigh path on a shared corpus.
 
-    The result rides its persisted intermediates (the PPMI COO + final
-    Q) as ``_sg_intermediates`` — release via
-    :func:`searchenginer_spark.operators.dedup.release_intermediates`
-    after materializing."""
-    from .dedup import _attach_intermediates, release_intermediates
-
+    The result reads its persisted intermediates (the PPMI COO, the final
+    Q and the raw projection), which belong to the current
+    :class:`~searchenginer_spark.cache.CacheScope`: write or collect the
+    result before that scope closes."""
+    scope = current_scope()
     A, margins = ppmi_coo(cooc, alpha=alpha)
-    A = A.persist()
+    A = scope.persist(A)
     n_aggs = A.agg(
         F.count(F.lit(1)).alias("nnz"), F.countDistinct("w").alias("v")
     ).first()
     V = int(n_aggs["v"] or 0)
     if V == 0:
-        release_intermediates(A)
-        A.unpersist()
-        margins.unpersist()
         raise ValueError("empty PPMI matrix (no positive associations)")
     if V < dim:
-        release_intermediates(A)
-        A.unpersist()
-        margins.unpersist()
         raise ValueError(
             f"dim={dim} exceeds the usable vocabulary ({V} terms); "
             "lower dim or provide more text"
@@ -416,14 +406,14 @@ def train_ppmi_vectors_distributed(
     # the whole matmul chain from omega (O(power_iters^2) corpus-vocab
     # shuffles instead of O(power_iters))
     y_handles: list[DataFrame] = []
-    Y = _matmul_coo(A, omega, r).persist()
+    Y = scope.persist(_matmul_coo(A, omega, r))
     y_handles.append(Y)
     Q = _apply_right(Y, _orth_factor(_gram(Y, r)))
     for _ in range(power_iters):
-        Y = _matmul_coo(A, Q, r).persist()
+        Y = scope.persist(_matmul_coo(A, Q, r))
         y_handles.append(Y)
         Q = _apply_right(Y, _orth_factor(_gram(Y, r)))
-    Q = Q.persist()
+    Q = scope.persist(Q)
 
     # Rayleigh-Ritz: B = Q^T (A Q), r x r via one joined aggregate pass
     T = _matmul_coo(A, Q, r)
@@ -447,7 +437,7 @@ def train_ppmi_vectors_distributed(
     # the row aggregate above materialized Q's cache; the intermediate
     # sketches are dead now — every later consumer reads Q directly
     for y in y_handles:
-        y.unpersist()
+        scope.release(y)
     B = np.zeros((r, r))
     for a in range(r):
         for b in range(r):
@@ -456,7 +446,7 @@ def train_ppmi_vectors_distributed(
     top = np.argsort(-vals)[:dim]
     U_small = vecs[:, top] * np.sqrt(np.maximum(vals[top], 0.0))
 
-    raw = _apply_right(Q, U_small).persist()
+    raw = scope.persist(_apply_right(Q, U_small))
     # deterministic sign fix (driver-path semantics: the largest-|value|
     # component of each column ends up positive), then row L2 normalize
     rp = _project_components(raw, "x", dim)
@@ -469,10 +459,8 @@ def train_ppmi_vectors_distributed(
     vec = F.array(
         *[F.when(nrm > 0, c / nrm).otherwise(F.lit(0.0)) for c in comps]
     )
-    result = rp.select("term", vec.alias("vec"))
-    margins.unpersist()
-    handles = list(getattr(A, "_sg_intermediates", ())) + [A, Q, raw]
-    return _attach_intermediates(result, handles)
+    scope.release(margins)
+    return rp.select("term", vec.alias("vec"))
 
 
 def doc_vectors_from(

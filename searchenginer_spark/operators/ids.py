@@ -32,6 +32,11 @@ def assign_sequential_ids(
     Keys must be unique for the rank to be well-defined. Deterministic for
     a given input regardless of upstream partitioning.
 
+    Runs its jobs now (range sampling, the pinning checkpoint, a counts
+    collect). The pinned copy belongs to the current
+    :class:`~searchenginer_spark.cache.CacheScope`: the result reads it,
+    so write or cache the result before that scope closes.
+
     ``checkpoint_dir``: when given, the pinned copy uses a RELIABLE
     checkpoint (written to that filesystem path) instead of
     ``localCheckpoint()`` — local checkpoints pin partitions to executors
@@ -47,13 +52,15 @@ def assign_sequential_ids(
         ``spark.cleaner.referenceTracking.cleanCheckpoints``) once the
         result has been written/persisted, or runs accumulate files.
     """
-    from ..deploy import ship_package
-
     from pyspark import StorageLevel
+
+    from ..cache import current_scope
+    from ..deploy import ship_package
 
     spark = df.sparkSession
     ship_package(spark)  # workers must import this package for the UDF below
     n_parts = num_partitions or spark.sparkContext.defaultParallelism
+    scope = current_scope()
     # Persist the INPUT first: RangePartitioner's boundary-sampling job
     # executes the full child plan, and the checkpoint materialization
     # below executes it again — for an expensive upstream (the df
@@ -62,21 +69,18 @@ def assign_sequential_ids(
     # pass fills this cache; the checkpoint pass reads it. MEMORY_AND_DISK
     # so a vocabulary larger than executor memory spills instead of
     # evicting (and recomputing) partitions.
-    src = df.persist(StorageLevel.MEMORY_AND_DISK)
+    src = scope.persist(df, StorageLevel.MEMORY_AND_DISK)
     ranged = src.repartitionByRange(n_parts, *sort_cols).sortWithinPartitions(*sort_cols)
     # Pin the partitioning: RangePartitioner SAMPLES its boundaries with a
     # job-dependent seed, so the counts pass and the assignment pass below
     # would otherwise re-partition differently and corrupt the ids. A
     # checkpoint makes both jobs read the SAME materialized partitions.
-    with_pid = ranged.withColumn("_pid", F.spark_partition_id())
-    if checkpoint_dir is not None:
-        spark.sparkContext.setCheckpointDir(checkpoint_dir)
-        with_pid = with_pid.checkpoint()
-    else:
-        with_pid = with_pid.localCheckpoint()
-    # both checkpoint flavors are eager: the pinned copy exists now and
-    # the source cache is dead weight
-    src.unpersist()
+    with_pid = scope.checkpoint(
+        ranged.withColumn("_pid", F.spark_partition_id()), checkpoint_dir
+    )
+    # the checkpoint is eager: the pinned copy exists now and the source
+    # cache is dead weight
+    scope.release(src)
     counts = with_pid.groupBy("_pid").count().collect()
     offsets: dict[int, int] = {}
     acc = 0
@@ -99,35 +103,3 @@ def assign_sequential_ids(
     schema = T.StructType(list(with_pid.schema.fields) + [T.StructField(id_col, T.LongType())])
     return with_pid.mapInPandas(assign, schema=schema).drop("_pid")
 
-
-def release_plan_checkpoints(df: DataFrame) -> int:
-    """Unpersist every ``localCheckpoint`` ancestor in ``df``'s physical
-    plan lineage; returns how many were released.
-
-    :func:`assign_sequential_ids`' local checkpoint persists its pinned
-    partitions for the life of the session (DataFrame.unpersist only
-    drops cacheManager entries, never RDD-level checkpoint storage).
-    Long-lived drivers that DISCARD a derived table (a term_dict, a doc-id
-    mapping) call this on the discarded handle to reclaim the executors'
-    memory. The checkpoint's lineage truncation means the RDD cannot be
-    recomputed afterwards — only call when every derived DataFrame is
-    dead too."""
-    released = 0
-    seen: set[int] = set()
-
-    def walk(jrdd) -> None:
-        nonlocal released
-        rid = jrdd.id()
-        if rid in seen:
-            return
-        seen.add(rid)
-        lvl = jrdd.getStorageLevel()
-        if (lvl.useMemory() or lvl.useDisk()) and "localCheckpoint" in jrdd.toString():
-            jrdd.unpersist(False)
-            released += 1
-        deps = jrdd.dependencies()
-        for i in range(deps.size()):
-            walk(deps.apply(i).rdd())
-
-    walk(df._jdf.queryExecution().toRdd())
-    return released

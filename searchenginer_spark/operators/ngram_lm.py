@@ -34,6 +34,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..cache import current_scope
 from ..functions.tokenize import IDENT_RE
 
 BACKOFF = 0.4
@@ -172,11 +173,9 @@ def score_docs(
     The count tables are PERSISTED here: each is consumed 2-3 times (the
     n_total aggregate, its own gram join, the next order's context
     join), and without a persist every consumer re-runs the full
-    training-corpus counting pass. The handles ride the result as
-    ``_sg_intermediates`` — call
-    :func:`searchenginer_spark.operators.dedup.release_intermediates`
-    after materializing (same caller-owned lifecycle as the dedup
-    operators); session teardown reclaims them otherwise.
+    training-corpus counting pass. They belong to the current
+    :class:`~searchenginer_spark.cache.CacheScope`, which frees them when
+    it closes (the same lifecycle as the dedup operators).
 
     ``broadcast_counts``: a broadcast HINT overrides Spark's size
     threshold, so hinting an unpruned web-scale count table would
@@ -191,10 +190,9 @@ def score_docs(
     joins broadcast/shuffle (``False`` still lets AQE pick a runtime
     broadcast when a table turns out tiny — the point is that no HINT
     overrides the size gate)."""
-    from .dedup import _attach_intermediates
-
     order = order or max(counts)
-    counts = {k: counts[k].persist() for k in range(1, order + 1)}
+    scope = current_scope()
+    counts = {k: scope.persist(counts[k]) for k in range(1, order + 1)}
     if broadcast_counts is None:
         # ONE job sizes every table AND computes n_total: per-table
         # aggregates unioned, so the gate costs a single pass that fills
@@ -289,10 +287,9 @@ def score_docs(
         .groupBy(id_col)
         .agg(F.count(F.lit(1)).alias("n_tokens"), F.avg("_lp").alias("_avg"))
     )
-    result = agg.select(
+    return agg.select(
         id_col,
         "n_tokens",
         F.round("_avg", 6).alias("avg_logprob"),
         F.round(F.pow(F.lit(10.0), -F.col("_avg")), 4).alias("perplexity"),
     )
-    return _attach_intermediates(result, list(counts.values()))

@@ -30,6 +30,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..cache import current_scope
 from ..functions.tokenize import IDENT_RE
 from ..operators import stats as S
 
@@ -88,9 +89,8 @@ class Bm25DataFrameIndex:
         dft = S.document_frequencies(tf)
         stats = S.corpus_stats(dl)
         if persist:
-            tf = tf.persist()
-            dl = dl.persist()
-            dft = dft.persist()
+            scope = current_scope()
+            tf, dl, dft = (scope.persist(t) for t in (tf, dl, dft))
         return cls(docs.sparkSession, tf, dl, dft, stats)
 
     def search(

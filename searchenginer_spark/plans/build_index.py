@@ -24,12 +24,15 @@ this is north-rule scope.
 
 from __future__ import annotations
 
+import threading
 import time
 import uuid
+from contextvars import copy_context
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..cache import current_scope, scoped
 from ..operators import stats as S
 from ..operators.dict import build_term_dict
 from ..operators.postings import build_postings
@@ -160,6 +163,7 @@ def drop_stopwords(tf: DataFrame, stopwords: DataFrame | None) -> DataFrame:
     return tf.join(F.broadcast(stopwords.select("term")), "term", "left_anti")
 
 
+@scoped
 def build_index(
     docs: DataFrame,
     root: str,
@@ -199,6 +203,10 @@ def build_index(
     functions.tokenize.explode_tokens). Recorded in the meta table; query
     strings must be tokenized/segmented consistently (e.g.
     cjk_segment.MixSegmenter for dict_cjk).
+
+    Every cache and checkpoint the build makes (the tf table, the dedup
+    stage's, the term-id minting's) belongs to a CacheScope that the call
+    opens and closes, so a build leaves no persisted RDD behind.
 
     Returns a summary dict (n_docs, parts_built, parts_total, wall_s).
     """
@@ -277,14 +285,13 @@ def build_index(
         and _table_ready(spark, paths.stats)
         and _table_ready(spark, paths.meta)
     )
-    dedup_tf = None
-    dedup_handles: list[DataFrame] = []
+    dedup_tf = pre_dft = None
     if dedup is not None and (fresh_docs or stage1_pending):
         from ..operators.dedup import dedup_docs_and_tf
 
         # fused stage: the dedup fingerprints and the index stats share ONE
         # tokenize+tf pass (the widest stage of the DAG) instead of two
-        docs, dedup_tf, dedup_handles = dedup_docs_and_tf(
+        docs, dedup_tf, pre_dft = dedup_docs_and_tf(
             docs, how=dedup, text_col=text_col, with_positions=with_positions,
             tokenizer=tokenizer,
         )
@@ -300,8 +307,6 @@ def build_index(
         # submit the docs write as a CONCURRENT job: it shares the scan of
         # `docs` with the stats jobs below but is otherwise independent, so
         # overlapping them removes it from the serial critical path
-        import threading
-
         _werr: list[BaseException] = []
 
         def _write_docs():
@@ -310,12 +315,11 @@ def build_index(
             except BaseException as e:  # surfaced after join()
                 _werr.append(e)
 
-        writer = threading.Thread(target=_write_docs)
+        writer = threading.Thread(target=copy_context().run, args=(_write_docs,))
         writer.start()
 
     tcur = _mark("setup", t0)
     tf = None
-    owns_tf = False
     # meta is in the stage1_pending gate so a crash BETWEEN the stats and
     # meta writes re-runs this (idempotent) stage instead of leaving the
     # root permanently meta-less (meta is the last write below)
@@ -325,13 +329,14 @@ def build_index(
         if dedup_tf is not None:
             tf = drop_stop(dedup_tf)  # survivor-filtered view of the dedup tf
         else:
-            tf = drop_stop(
-                S.term_frequencies(
-                    docs, text_col=text_col, with_positions=with_positions,
-                    tokenizer=tokenizer,
+            tf = current_scope().persist(
+                drop_stop(
+                    S.term_frequencies(
+                        docs, text_col=text_col, with_positions=with_positions,
+                        tokenizer=tokenizer,
+                    )
                 )
-            ).persist()
-            owns_tf = True
+            )
         dl = S.doc_lengths(tf)
 
         # the stats chain (per-part stats -> global stats -> meta) is three
@@ -342,8 +347,6 @@ def build_index(
         # executor has spare slots for the tiny jobs' tasks to slip into:
         # on a <4-slot session concurrency is zero-sum and the time-slicing
         # measurably slows the wide dict stage, so run sequentially there.
-        import threading
-
         overlap = spark.sparkContext.defaultParallelism >= 4
         _serr: list[BaseException] = []
         _stats_row: list[int | None] = []
@@ -354,7 +357,7 @@ def build_index(
                 # below reads it from cache instead of re-listing+re-reading
                 # the parquet it was just written to (one fewer read job in
                 # the serial thread chain; rows are identical either way)
-                ps = part_stats(dl, docs_per_part).persist()
+                ps = current_scope().persist(part_stats(dl, docs_per_part))
                 ps.write.mode("overwrite").partitionBy("part").parquet(
                     paths.stats_parts
                 )
@@ -375,7 +378,7 @@ def build_index(
                     [(n_docs_v, avgdl_v)], "n_docs long, avgdl double"
                 ).write.mode("overwrite").parquet(paths.stats)
                 _stats_row.append(n_docs_v)
-                ps.unpersist()
+                current_scope().release(ps)
                 if stopwords is not None:
                     stopwords.select("term").dropDuplicates(["term"]).coalesce(
                         1
@@ -415,7 +418,11 @@ def build_index(
             except BaseException as e:  # surfaced after join()
                 _serr.append(e)
 
-        stats_writer = threading.Thread(target=_write_stats) if overlap else None
+        stats_writer = (
+            threading.Thread(target=copy_context().run, args=(_write_stats,))
+            if overlap
+            else None
+        )
         if stats_writer is not None:
             stats_writer.start()
         # the dedup stage may carry a precomputed survivor dft (df/cf by
@@ -423,7 +430,6 @@ def build_index(
         # dedup_docs_and_tf); filtering stopword TERMS from the aggregate
         # equals aggregating the stopword-filtered tf, so drop_stop applies
         # directly to the (term, df, cf) frame
-        pre_dft = getattr(dedup_tf, "_sg_dft", None) if dedup_tf is not None else None
         dft_for_dict = (
             drop_stop(pre_dft) if pre_dft is not None else S.document_frequencies(tf)
         )
@@ -484,9 +490,9 @@ def build_index(
         # cache the encoded rows once: the write below and the metrics
         # aggregation both consume them, so the written parquet is never
         # re-read from disk just to count its own bytes
-        postings = build_postings(
-            pend_tf, pend_dl, term_dict, stats, docs_per_part
-        ).persist()
+        postings = current_scope().persist(
+            build_postings(pend_tf, pend_dl, term_dict, stats, docs_per_part)
+        )
         # dynamic overwrite per-write: a resume must replace ONLY the pending
         # parts' partitions, never clobber parts committed by earlier runs
         postings.write.mode("overwrite").option(
@@ -555,14 +561,9 @@ def build_index(
             F.lit(wall_ms).cast("long").alias("wall_ms"),
         )
         metrics.write.mode("append").parquet(paths.metrics)
-        postings.unpersist()
         built = len(pending)
         tcur = _mark("metrics", tcur)
 
-    if tf is not None and owns_tf:
-        tf.unpersist()
-    for h in dedup_handles:
-        h.unpersist()
     if dedup is not None:
         # legacy-meta migration: a pre-r6 root resumed with its true dedup
         # mode keeps a 3-column meta (the stats stage is gated off once

@@ -45,6 +45,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..cache import current_scope, scoped
 from ..operators import stats as S
 from ..operators.ids import assign_sequential_ids
 from ..operators.postings import build_postings
@@ -210,6 +211,9 @@ def incremental_index(
             "doc_id",
         ).write.mode("overwrite").parquet(paths.hashes)
 
+    # each fold owns its caches: the survivor set, the tf table and the
+    # term-id minting's checkpoint are freed when the fold returns
+    @scoped
     def fold_batch(batch: DataFrame, batch_id: int) -> None:
         if batch.isEmpty():
             return
@@ -258,9 +262,8 @@ def incremental_index(
                 hashed = hashed.join(
                     evict, hashed["doc_id"] == evict["_bid"], "left_anti"
                 )
-            survivors = hashed.persist()
+            survivors = current_scope().persist(hashed)
             if survivors.isEmpty():  # whole batch was already stored
-                survivors.unpersist()
                 return
             batch = survivors.drop("_h")
         new_docs = batch.withColumn("part", (F.col("doc_id") / docs_per_part).cast("int"))
@@ -278,8 +281,6 @@ def incremental_index(
         # partition overwrite below is a correct idempotent replacement.
         # dropDuplicates makes a replayed (double-appended) batch harmless.
         touched = [r["part"] for r in new_docs.select("part").distinct().collect()]
-        if survivors is not None:
-            survivors.unpersist()
         docs = (
             bspark.read.parquet(paths.docs)
             .filter(F.col("part").isin(touched))
@@ -297,13 +298,15 @@ def incremental_index(
         )
         from ..plans.build_index import drop_stopwords
 
-        tf = drop_stopwords(
-            S.term_frequencies(
-                docs, text_col=text_col, tokenizer=tokenizer,
-                with_positions=with_positions,
-            ),
-            sw_df,
-        ).persist()
+        tf = current_scope().persist(
+            drop_stopwords(
+                S.term_frequencies(
+                    docs, text_col=text_col, tokenizer=tokenizer,
+                    with_positions=with_positions,
+                ),
+                sw_df,
+            )
+        )
         dl = S.doc_lengths(tf)
         term_dict = _append_term_dict(bspark, paths, S.document_frequencies(tf))
 
@@ -369,7 +372,6 @@ def incremental_index(
         postings.write.mode("overwrite").option(
             "partitionOverwriteMode", "dynamic"
         ).partitionBy("part").parquet(paths.postings)
-        tf.unpersist()
         # signal open Bm25CompressedIndex handles (root-opened) that
         # term_dict/postings changed: their driver dict cache and parquet
         # file-listing snapshots are stale until they re-read

@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import time
 import uuid
 
 import pytest
@@ -26,6 +27,22 @@ def count_jobs(spark, fn):
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
     return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def persisted_ids(spark) -> set[int]:
+    """Ids of the session's persisted RDDs (caches and local checkpoints).
+    Leak checks compare these sets, never counts: a count can hide a new
+    RDD behind an unrelated one freed at the same time."""
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+
+def assert_released(spark, before: set[int], timeout_s: float = 5.0) -> None:
+    """Assert every persisted RDD outside ``before`` goes away. Polls:
+    unpersists that the JVM's cleaner issues land asynchronously."""
+    deadline = time.monotonic() + timeout_s
+    while (left := persisted_ids(spark) - before) and time.monotonic() < deadline:
+        time.sleep(0.25)
+    assert not left, f"persisted RDDs left behind: {sorted(left)}"
 
 
 @pytest.fixture(scope="session")

@@ -15,6 +15,7 @@ from searchenginer_spark.operators.postings import (
 )
 from searchenginer_spark.plans.bm25 import Bm25CompressedIndex
 from searchenginer_spark.plans.bm25_dataframe import Bm25DataFrameIndex
+from tests.conftest import assert_released, persisted_ids
 
 QUERIES = [
     ("data", "and"),
@@ -484,21 +485,20 @@ def test_serving_mode_repeat_does_not_stack_persisted_rdds(spark, docs_sf0001):
     post = build_postings(m1.tf, m1.dl, td, m1.stats, docs_per_part=128)
     comp = Bm25CompressedIndex(spark, post, td, docs_per_part=128)
 
-    def n_persisted():
-        return spark.sparkContext._jsc.getPersistentRDDs().size()
-
-    base = n_persisted()
+    base = persisted_ids(spark)
     comp.serving_mode(n_partitions=4)
-    first = n_persisted()
+    first = persisted_ids(spark) - base
     comp.serving_mode(n_partitions=4)
+    second = persisted_ids(spark) - base - first
     comp.serving_mode(n_partitions=4)
-    # unpersist is async, so the count can transiently dip below `first`;
-    # the leak regression (r4) made it GROW by 1-2 per call
-    assert n_persisted() <= first, "repeated serving_mode stacked caches"
+    # the leak regression (r4) kept every earlier call's cache: only the
+    # last call's may stay
+    last = persisted_ids(spark) - base - first - second
+    assert_released(spark, base | last)
     # teardown
     for df in (comp.postings, comp.term_dict):
         df.unpersist()
-    assert n_persisted() <= base
+    assert_released(spark, base)
     spark.conf.set("spark.sql.adaptive.enabled", "true")
     spark.conf.set("spark.sql.shuffle.partitions", "32")
 

@@ -3,6 +3,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from searchenginer_spark.cache import CacheScope
 from searchenginer_spark.functions.hashing import (
     simhash,
     tfidf_top_keywords,
@@ -17,6 +18,7 @@ from searchenginer_spark.operators.dedup import (
     simhash_near_pairs,
 )
 from searchenginer_spark.sources.corpus import generate_corpus, mint_doc_ids
+from tests.conftest import assert_released, count_jobs, persisted_ids
 
 
 @pytest.fixture(scope="module")
@@ -104,11 +106,8 @@ def test_banding_pigeonhole_property(spark):
 
 
 def test_minhash_lsh_finds_near_dups(docs):
-    from searchenginer_spark.operators.dedup import release_intermediates
-
-    df = minhash_lsh_pairs(docs, threshold=0.5)
-    pairs = df.collect()
-    release_intermediates(df)
+    with CacheScope():
+        pairs = minhash_lsh_pairs(docs, threshold=0.5).collect()
     assert len(pairs) >= 1
     assert all(0 <= p["est_jaccard"] <= 1 for p in pairs)
     # exact dups estimate at 1.0
@@ -122,71 +121,70 @@ def test_ngram_jaccard_exact(docs):
     assert any(p["jaccard"] > 0.999 for p in pairs)  # exact dups
 
 
-def _n_persistent(spark) -> int:
-    return spark.sparkContext._jsc.getPersistentRDDs().size()
-
-
 def test_dedup_by_pairs_releases_band_table(spark, docs, fingerprints):
-    """dedup_by_pairs keeps the pairs' intermediates: releasing its result
-    frees simhash_near_pairs' persisted band table. Compared as sets of
-    persisted-RDD ids: other tests' asynchronous unpersists may still be
-    landing, so a count could hide a leak."""
-    import time
-
-    from searchenginer_spark.operators.dedup import release_intermediates
-
-    def persisted() -> set[int]:
-        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
-
+    """dedup_by_pairs over simhash_near_pairs: the band table is derived
+    from the fingerprints the caller persisted in its CacheScope, and
+    closing the scope frees them. Compared as sets of persisted-RDD ids:
+    other tests' asynchronous unpersists may still be landing, so a count
+    could hide a leak."""
     docs.count()  # materialize the fixtures' own caches first
     fingerprints.count()
-    fp = fingerprints.filter(F.col("doc_id") < 250)  # unique plan: no CacheManager
-    before = persisted()  # plan-dedup against other tests' band tables
-    out = dedup_by_pairs(docs, simhash_near_pairs(fp))
-    assert persisted() - before, "the band table should be live"
-    assert out.count() < docs.count()
-    release_intermediates(out)
-    for _ in range(20):  # unpersist is async
-        if persisted() <= before:
-            break
-        time.sleep(0.25)
-    assert persisted() <= before, sorted(persisted() - before)
+    before = persisted_ids(spark)
+    with CacheScope() as scope:
+        # unique plan: no CacheManager plan-dedup against other tests'
+        fp = scope.persist(fingerprints.filter(F.col("doc_id") < 250))
+        out = dedup_by_pairs(docs, simhash_near_pairs(fp))
+        assert out.count() < docs.count()
+        assert persisted_ids(spark) - before, "the band table should be live"
+    assert_released(spark, before)
 
 
-def test_minhash_release_intermediates_no_leak(spark, docs):
-    from searchenginer_spark.operators.dedup import release_intermediates
-
+def test_minhash_scope_close_no_leak(spark, docs):
     docs.count()  # materialize the fixture's own cache first
     sub = docs.filter(F.col("doc_id") < 150)  # unique plan: no CacheManager
-    before = _n_persistent(spark)  # plan-dedup against other tests' caches
-    pairs = minhash_lsh_pairs(sub, threshold=0.5)
-    pairs.count()  # materialize (sigs persisted during the job)
-    release_intermediates(pairs)
-    assert _n_persistent(spark) == before  # no cached RDD left behind
-    release_intermediates(pairs)  # idempotent
+    before = persisted_ids(spark)  # plan-dedup against other tests' caches
+    with CacheScope() as scope:
+        pairs = minhash_lsh_pairs(sub, threshold=0.5)
+        pairs.count()  # materialize (sigs persisted during the job)
+    assert_released(spark, before)  # no cached RDD left behind
+    scope.close()  # idempotent
 
 
 def test_embedding_pairs_empty_input_and_release(spark):
-    from searchenginer_spark.operators.dedup import (
-        embedding_cosine_pairs,
-        release_intermediates,
-    )
+    from searchenginer_spark.operators.dedup import embedding_cosine_pairs
 
     empty = spark.createDataFrame([], "vec_id long, vec array<double>")
     out = embedding_cosine_pairs(empty, id_col="vec_id", vec_col="vec")
     assert out.count() == 0
     assert out.columns == ["vec_id", "vec_id_2", "cos"]
 
-    before = _n_persistent(spark)
+    before = persisted_ids(spark)
     vecs = spark.createDataFrame(
         [(0, [1.0, 0.0]), (1, [1.0, 0.0]), (2, [0.0, 1.0])],
         "vec_id long, vec array<double>",
     )
-    pairs = embedding_cosine_pairs(vecs, id_col="vec_id", vec_col="vec")
-    got = {(r["vec_id"], r["vec_id_2"]) for r in pairs.collect()}
+    with CacheScope():
+        pairs = embedding_cosine_pairs(vecs, id_col="vec_id", vec_col="vec")
+        got = {(r["vec_id"], r["vec_id_2"]) for r in pairs.collect()}
     assert (0, 1) in got
-    release_intermediates(pairs)
-    assert _n_persistent(spark) == before
+    assert_released(spark, before)
+
+
+def test_pair_operators_construct_with_no_job(spark, docs, fingerprints):
+    """The pair operators are plain lazy plans: building them submits no
+    Spark job (the scope's persists are lazy too)."""
+    from searchenginer_spark.operators.dedup import duplicated_spans
+
+    docs.count()
+    fingerprints.count()
+    with CacheScope():
+        for build in (
+            lambda: simhash_near_pairs(fingerprints),
+            lambda: minhash_lsh_pairs(docs, threshold=0.5),
+            lambda: duplicated_spans(docs, min_len=8),
+            lambda: dedup_by_pairs(docs, simhash_near_pairs(fingerprints)),
+        ):
+            assert count_jobs(spark, build)[1] == 0
 
 
 def test_dedup_docs_custom_id_col(spark, docs):
@@ -331,39 +329,25 @@ def test_near_dup_clusters_end_to_end(spark, docs):
 
 
 def test_dedup_docs_minhash_cc_materializes_after_release(spark, docs):
-    """r6 fix: dedup_docs('minhash_cc') must snapshot the survivors
-    BEFORE releasing the clustering's localCheckpoint blocks — the lazy
-    result's lineage is truncated at those checkpoints, so releasing
-    first made the first action fail with 'checkpoint block not found'.
-    Result must equal the transitive-cluster survivor set, and
-    release_intermediates must reclaim the snapshot afterwards."""
-    from searchenginer_spark.operators.dedup import (
-        dedup_docs,
-        near_dup_clusters,
-        release_intermediates,
-    )
+    """dedup_docs('minhash_cc') returns a lazy result whose lineage is
+    truncated at the clustering's localCheckpoints: those must stay live
+    until its owner's scope closes (freeing them first made the first
+    action fail with 'checkpoint block not found'). Result must equal the
+    transitive-cluster survivor set, and closing the scope must reclaim
+    both paths' checkpoints."""
+    from searchenginer_spark.operators.dedup import dedup_docs, near_dup_clusters
 
     docs.count()  # materialize the fixture's persist + id-mint checkpoint
     # BEFORE the baseline — in an isolated run they'd otherwise first
     # materialize inside this test and read as a leak
-    base = _n_persistent(spark)
-    kept = dedup_docs(docs, how="minhash_cc", text_col="text")
-    got = {r["doc_id"] for r in kept.collect()}  # the action that crashed
-    cl = near_dup_clusters(docs, text_col="text")
-    want = {r["doc_id"] for r in cl.filter(F.col("is_kept")).collect()}
+    base = persisted_ids(spark)
+    with CacheScope():
+        kept = dedup_docs(docs, how="minhash_cc", text_col="text")
+        got = {r["doc_id"] for r in kept.collect()}  # the action that crashed
+        cl = near_dup_clusters(docs, text_col="text")
+        want = {r["doc_id"] for r in cl.filter(F.col("is_kept")).collect()}
     assert got == want
-    # release BOTH paths' handles: the want-side clustering checkpoints
-    # its rounds too — dropping the df and hoping py4j/JVM GC unpersists
-    # them made this assert a race (passed only after enough GC churn)
-    release_intermediates(cl)
-    release_intermediates(kept)
-    import time
-
-    for _ in range(20):
-        if _n_persistent(spark) <= base:
-            break
-        time.sleep(0.25)
-    assert _n_persistent(spark) <= base
+    assert_released(spark, base)
 
 
 def test_simhash_bands_derive_from_max_hamming(spark):
@@ -409,11 +393,11 @@ def test_vector_sniffs_skip_null_rows(spark):
     want = {r["vec_id"]: r["bucket"] for r in b.collect()}
     assert got == want and len(set(want.values())) > 1
 
-    pairs = embedding_cosine_pairs(
-        vecs.filter(F.col("vec").isNotNull()).unionByName(
-            spark.createDataFrame([(0, None)], "vec_id long, vec array<double>")
-        ),
-        threshold=0.95,
-        persist_shared=False,
-    ).collect()
+    with CacheScope():
+        pairs = embedding_cosine_pairs(
+            vecs.filter(F.col("vec").isNotNull()).unionByName(
+                spark.createDataFrame([(0, None)], "vec_id long, vec array<double>")
+            ),
+            threshold=0.95,
+        ).collect()
     assert {(r["vec_id"], r["vec_id_2"]) for r in pairs} == {(1, 2)}

@@ -76,11 +76,8 @@ def test_build_with_minhash_cc_dedup(spark, tmp_path_factory):
     is_kept set over the exact-deduped corpus (parity with the
     dedup_clusters contract row), and the index must be IDENTICAL to a
     clean build over exactly those survivors."""
-    from searchenginer_spark.operators.dedup import (
-        dedup_exact,
-        near_dup_clusters,
-        release_intermediates,
-    )
+    from searchenginer_spark.cache import CacheScope
+    from searchenginer_spark.operators.dedup import dedup_exact, near_dup_clusters
 
     docs = build_docs(spark, 200, seed=42, num_partitions=4).persist()
     dup = docs.unionByName(docs.withColumn("doc_id", F.col("doc_id") + 1000))
@@ -89,11 +86,11 @@ def test_build_with_minhash_cc_dedup(spark, tmp_path_factory):
     summary = build_index(dup, cc_root, docs_per_part=64, dedup="minhash_cc")
 
     exact = dedup_exact(dup.withColumnRenamed("content", "text"), "text")
-    clusters = near_dup_clusters(exact, text_col="text")
-    want_kept = sorted(
-        r["doc_id"] for r in clusters.filter("is_kept").collect()
-    )
-    release_intermediates(clusters)
+    with CacheScope():
+        clusters = near_dup_clusters(exact, text_col="text")
+        want_kept = sorted(
+            r["doc_id"] for r in clusters.filter("is_kept").collect()
+        )
 
     built_docs = spark.read.parquet(IndexPaths(cc_root).docs)
     got_kept = sorted(r["doc_id"] for r in built_docs.select("doc_id").collect())

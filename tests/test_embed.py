@@ -7,6 +7,7 @@ from __future__ import annotations
 import numpy as np
 import pytest
 
+from searchenginer_spark.cache import CacheScope
 from searchenginer_spark.operators.embed import (
     cooccurrence_counts,
     doc_vectors_from,
@@ -26,6 +27,13 @@ CORPUS = [
 @pytest.fixture(scope="module")
 def docs(spark):
     return spark.createDataFrame(CORPUS, "doc_id long, text string")
+
+
+@pytest.fixture
+def scope():
+    """A CacheScope for the test: the operators' caches are freed at its end."""
+    with CacheScope() as s:
+        yield s
 
 
 def _brute_counts(window):
@@ -100,7 +108,7 @@ def test_vocab_cap(docs):
         train_ppmi_vectors(cooc, dim=4, top_vocab=3)
 
 
-def test_distributed_svd_matches_eigh_path(spark):
+def test_distributed_svd_matches_eigh_path(spark, scope):
     """r6: the randomized block eigendecomposition over the distributed
     PPMI COO (train_ppmi_vectors_distributed) must reproduce the
     driver-eigh vectors — cosine >= 0.99 per term up to sign — while
@@ -114,7 +122,6 @@ def test_distributed_svd_matches_eigh_path(spark):
     mirror-symmetric (every eigenvalue doubled), so this test uses an
     asymmetric corpus whose top spectrum is 4.46 > 3.70 >> 1.15 and
     compares at dim=2 — a clean gap above the cut."""
-    from searchenginer_spark.operators.dedup import release_intermediates
     from searchenginer_spark.operators.embed import (
         ppmi_coo,
         train_ppmi_vectors_distributed,
@@ -146,7 +153,6 @@ def test_distributed_svd_matches_eigh_path(spark):
             continue
         cos = abs(float(want[t] @ got[t])) / (nw * ng)
         assert cos >= 0.99, (t, cos, want[t], got[t])
-    release_intermediates(got_df)
 
     # no V x V densification: the PPMI COO carries only observed pairs
     # (<= nnz of the symmetric count matrix), and the whole distributed
@@ -160,17 +166,15 @@ def test_distributed_svd_matches_eigh_path(spark):
         ).distinct().count()
     )
     assert nnz <= sym_nnz < v * v
-    release_intermediates(ppmi)
     margins.unpersist()
     cooc.unpersist()
 
 
-def test_ppmi_coo_matches_dense_pipeline(spark, docs):
+def test_ppmi_coo_matches_dense_pipeline(spark, docs, scope):
     """The distributed symmetrized-PPMI COO must equal the driver path's
     dense matrix entry for entry (the per-entry two-orientation formula
     replaces the (P + P^T)/2 self-join — only valid because the count
     matrix is symmetric; this pins it)."""
-    from searchenginer_spark.operators.dedup import release_intermediates
     from searchenginer_spark.operators.embed import ppmi_coo
 
     cooc = cooccurrence_counts(docs, window=2).persist()
@@ -196,36 +200,32 @@ def test_ppmi_coo_matches_dense_pipeline(spark, docs):
     for r in ppmi.collect():
         D[idx[r["w"]], idx[r["c"]]] = r["v"]
     assert np.abs(P - D).max() < 1e-12
-    release_intermediates(ppmi)
     margins.unpersist()
     cooc.unpersist()
 
 
-def test_distributed_svd_plan_is_jvm_only(spark, docs):
+def test_distributed_svd_plan_is_jvm_only(spark, docs, scope):
     """Every distributed stage of the randomized factorization (matmul,
     Gram, right-multiply, sign/normalize) is codegen column math — no
     Python/Arrow eval anywhere in the executed plan. The cooc INPUT is
     checkpointed first: its own (r7) Arrow partial-count stage is pinned
     by test_cooccurrence_plan_shape, and this test is about the
     factorization stages only."""
-    from searchenginer_spark.operators.dedup import release_intermediates
     from searchenginer_spark.operators.embed import train_ppmi_vectors_distributed
 
     cooc = cooccurrence_counts(docs, window=2).localCheckpoint()
     tv = train_ppmi_vectors_distributed(cooc, dim=2, oversample=4, power_iters=1)
     plan = tv._jdf.queryExecution().executedPlan().toString()
     assert "Python" not in plan and "Arrow" not in plan
-    release_intermediates(tv)
 
 
-def test_distributed_svd_scales_past_driver_cap_shape(spark):
+def test_distributed_svd_scales_past_driver_cap_shape(spark, scope):
     """The point of the distributed path: no top_vocab argument exists,
     and a vocabulary larger than a tiny driver cap trains fine — every
     term gets a unit vector. (Scale stand-in: 600 distinct terms beats
     any cap we could densify in this test's budget; the structural
     guarantee — driver holds only r x r — is what the plan/sparsity
     tests above pin.)"""
-    from searchenginer_spark.operators.dedup import release_intermediates
     from searchenginer_spark.operators.embed import train_ppmi_vectors_distributed
 
     rows = [
@@ -241,7 +241,6 @@ def test_distributed_svd_scales_past_driver_cap_shape(spark):
     for r in got:
         n = np.linalg.norm(np.array(r["vec"]))
         assert abs(n - 1.0) < 1e-9 or n == 0.0
-    release_intermediates(tv)
 
 
 def test_empty_pair_pull_raises(spark):

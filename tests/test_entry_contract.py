@@ -10,6 +10,7 @@ import duckdb
 import pytest
 
 import __spark_entry__ as entrymod
+from tests.conftest import assert_released, persisted_ids
 
 SF_DIR = "/root/testdata/sf0.01"
 
@@ -65,32 +66,24 @@ def test_query_matches_oracle(spark, ddb, name):
 
 
 def test_release_entry_caches_leaves_no_persisted_rdds(spark):
-    """Contract queries persist only through the module-level index
-    caches; release_entry_caches() must release every RDD they persisted
-    (dedup queries persist nothing — persist_shared=False throughout).
-    Compared as sets of persisted-RDD ids, not counts: earlier tests'
-    asynchronous unpersists may still be landing, so a count can drop
-    under the queries' new caches, while an id set cannot hide them."""
-    import time
-
-    def persisted() -> set[int]:
-        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
-
-    base = persisted()
+    """Contract queries cache only through the module's CacheScope;
+    release_entry_caches() must release every RDD they persisted or
+    checkpointed: the index caches, the dedup operators' intermediates
+    and the clustering's checkpoints. Compared as sets of persisted-RDD
+    ids, not counts: earlier tests' asynchronous unpersists may still be
+    landing, so a count can drop under the queries' new caches, while an
+    id set cannot hide them."""
+    base = persisted_ids(spark)
     sf = "/root/testdata/sf0.001"
     qs = entrymod.queries()
-    # the last entry builds an index INLINE (its term-dict checkpoint has
-    # no reachable handle afterwards) — covered only by the sweep
+    # the last entry builds an index INLINE: build_index frees its own
+    # caches (the term-dict checkpoint included) before it returns
     for name in ("bm25_compressed_and_topk", "bm25_compressed_prod_geometry",
                  "dedup_minhash_lsh", "dedup_simhash_pairs",
                  "dedup_embedding_pairs", "dedup_text_suite",
-                 "dedup_clusters",  # CC loop: localCheckpoint blocks swept
+                 "dedup_clusters",  # CC loop: localCheckpoint blocks
                  "bm25_stopword_topk"):
         qs[name](spark, sf).collect()
-    assert persisted() - base, "index caches should be live mid-run"
-    entrymod.release_entry_caches(sweep_checkpoints=True)
-    for _ in range(20):  # unpersist is async
-        if persisted() <= base:
-            break
-        time.sleep(0.25)
-    assert persisted() <= base, sorted(persisted() - base)
+    assert persisted_ids(spark) - base, "index caches should be live mid-run"
+    entrymod.release_entry_caches()
+    assert_released(spark, base)

@@ -9,6 +9,7 @@ from searchenginer_spark.operators import stats as S
 from searchenginer_spark.operators.dict import build_term_dict
 from searchenginer_spark.operators.postings import build_postings
 from searchenginer_spark.sources.corpus import build_docs
+from tests.conftest import assert_released, persisted_ids
 
 
 @pytest.fixture(scope="module")
@@ -67,29 +68,68 @@ def test_content_sha_invariant(built):
     assert docs.filter(F.sha2("content", 256) != F.col("content_sha256")).count() == 0
 
 
-def test_release_plan_checkpoints_unpersists_id_minting(spark):
-    """assign_sequential_ids pins partitions via localCheckpoint;
-    release_plan_checkpoints on a derived DataFrame must find and
-    unpersist exactly that storage (session-lifetime leak otherwise)."""
-    from searchenginer_spark.operators.ids import (
-        assign_sequential_ids,
-        release_plan_checkpoints,
-    )
+def test_scope_frees_id_minting_checkpoint(spark):
+    """assign_sequential_ids pins partitions via localCheckpoint in the
+    current CacheScope: a derived frame computes while the scope is open,
+    and closing it must unpersist exactly that storage (a session-lifetime
+    leak otherwise)."""
+    from searchenginer_spark.cache import CacheScope
+    from searchenginer_spark.operators.ids import assign_sequential_ids
 
-    def n_persisted():
-        return spark.sparkContext._jsc.getPersistentRDDs().size()
+    base = persisted_ids(spark)
+    with CacheScope():
+        df = spark.range(500).selectExpr("concat('t', id) AS term")
+        ids = assign_sequential_ids(df, ["term"], "term_id")
+        derived = ids.selectExpr("term_id", "upper(term) AS u")
+        assert derived.count() == 500
+        assert len(persisted_ids(spark) - base) == 1  # the checkpoint only
+    assert_released(spark, base)
 
-    base = n_persisted()
-    df = spark.range(500).selectExpr("concat('t', id) AS term")
-    ids = assign_sequential_ids(df, ["term"], "term_id")
-    derived = ids.selectExpr("term_id", "upper(term) AS u")
-    assert derived.count() == 500
-    assert n_persisted() == base + 1
-    assert release_plan_checkpoints(derived) == 1
-    import time
 
-    for _ in range(20):
-        if n_persisted() <= base:
-            break
-        time.sleep(0.25)
-    assert n_persisted() <= base
+def test_no_adhoc_cache_lifecycles():
+    """Every persist/cache/checkpoint in the package goes through a
+    CacheScope (searchenginer_spark/cache.py), so no operator owns a
+    cache lifecycle of its own. Scope calls are spelled
+    ``current_scope().persist(...)`` or ``scope.persist(...)``; the one
+    other owner is Bm25CompressedIndex.serving_mode, which replaces its
+    cache on every refresh."""
+    import ast
+    import pathlib
+
+    import searchenginer_spark
+
+    pkg = pathlib.Path(searchenginer_spark.__file__).parent
+    banned = {"persist", "cache", "localCheckpoint", "checkpoint"}
+
+    def scope_call(recv: ast.expr) -> bool:
+        if isinstance(recv, ast.Name):
+            return recv.id == "scope"
+        return (
+            isinstance(recv, ast.Call)
+            and isinstance(recv.func, ast.Name)
+            and recv.func.id == "current_scope"
+        )
+
+    bad = []
+    for path in sorted(pkg.rglob("*.py")):
+        if path == pkg / "cache.py":
+            continue
+        tree = ast.parse(path.read_text())
+        allowed: list[range] = []
+        for cls in ast.walk(tree):
+            if isinstance(cls, ast.ClassDef) and cls.name == "Bm25CompressedIndex":
+                allowed += [
+                    range(f.lineno, f.end_lineno + 1)
+                    for f in cls.body
+                    if isinstance(f, ast.FunctionDef) and f.name == "serving_mode"
+                ]
+        for node in ast.walk(tree):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr in banned
+                and not scope_call(node.func.value)
+                and not any(node.lineno in r for r in allowed)
+            ):
+                bad.append(f"{path.relative_to(pkg)}:{node.lineno} .{node.func.attr}(")
+    assert not bad, bad

@@ -208,20 +208,19 @@ def test_empty_docs_dropped(spark, train_docs):
     assert [r["doc_id"] for r in rows] == [1]
 
 
-def test_score_docs_release_intermediates(spark, train_docs, score_docs_df):
-    """score_docs persists its count tables (each feeds 2-3 consumers);
-    the handles ride the result and release_intermediates reclaims them
-    — same caller-owned lifecycle as the dedup operators."""
-    from pyspark import StorageLevel
+def test_score_docs_count_tables_freed_with_scope(spark, train_docs, score_docs_df):
+    """score_docs persists its count tables (each feeds 2-3 consumers) in
+    the current CacheScope, and closing the scope reclaims them — the same
+    lifecycle as the dedup operators."""
+    from searchenginer_spark.cache import CacheScope
+    from tests.conftest import assert_released, persisted_ids
 
-    from searchenginer_spark.operators.dedup import release_intermediates
-
-    counts = train_ngram_counts(train_docs, order=3)
-    scored = score_docs(score_docs_df, counts)
-    scored.collect()
-    handles = scored._sg_intermediates
-    assert len(handles) == 3  # one persisted count table per order
-    assert all(h.storageLevel != StorageLevel.NONE for h in handles)
-    release_intermediates(scored)
-    assert all(h.storageLevel == StorageLevel.NONE for h in handles)
-    assert scored._sg_intermediates == ()  # idempotent release
+    # unique plan: no CacheManager plan-dedup against other tests' caches
+    counts = train_ngram_counts(train_docs.filter("doc_id >= 0"), order=3)
+    before = persisted_ids(spark)
+    with CacheScope() as scope:
+        score_docs(score_docs_df, counts).collect()
+        # one persisted count table per order
+        assert len(persisted_ids(spark) - before) == 3
+    assert_released(spark, before)
+    scope.close()  # idempotent release

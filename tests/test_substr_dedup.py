@@ -11,11 +11,8 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
-from searchenginer_spark.operators.dedup import (
-    duplicated_spans,
-    release_intermediates,
-    strip_duplicated_spans,
-)
+from searchenginer_spark.cache import CacheScope
+from searchenginer_spark.operators.dedup import duplicated_spans, strip_duplicated_spans
 from tests._repetition_oracles import merge as _merge
 from tests._repetition_oracles import tok as _tok
 
@@ -57,29 +54,31 @@ def docs_df(spark):
 
 @pytest.mark.parametrize("keep_first", [False, True])
 def test_spans_match_bruteforce(spark, docs_df, keep_first):
-    sp = duplicated_spans(docs_df, min_len=4, keep_first=keep_first)
-    got = sorted(tuple(r) for r in sp.collect())
-    release_intermediates(sp)  # reclaim the persisted occurrence table
+    with CacheScope():  # reclaims the persisted occurrence table
+        sp = duplicated_spans(docs_df, min_len=4, keep_first=keep_first)
+        got = sorted(tuple(r) for r in sp.collect())
     assert got == _oracle_spans(DOCS, 4, keep_first)
 
 
 def test_within_doc_repeat_marked(spark, docs_df):
     """Doc 3's self-repeated run is duplicated even with no partner doc —
     the count is over (doc, pos) sites, not distinct docs."""
-    got = {
-        (r["doc_id"], r["span_start"], r["span_end"])
-        for r in duplicated_spans(docs_df, min_len=4, persist_occurrences=False).collect()
-    }
+    with CacheScope():
+        got = {
+            (r["doc_id"], r["span_start"], r["span_end"])
+            for r in duplicated_spans(docs_df, min_len=4).collect()
+        }
     assert (3, 0, 8) in got
 
 
 def test_strip_removes_exactly_the_spans(spark, docs_df):
-    spans = duplicated_spans(docs_df, min_len=4, persist_occurrences=False)
     want_spans = _oracle_spans(DOCS, 4, keep_first=False)
-    out = {
-        r["doc_id"]: (r["text"], r["n_tokens"], r["n_removed"])
-        for r in strip_duplicated_spans(docs_df, spans).collect()
-    }
+    with CacheScope():
+        spans = duplicated_spans(docs_df, min_len=4)
+        out = {
+            r["doc_id"]: (r["text"], r["n_tokens"], r["n_removed"])
+            for r in strip_duplicated_spans(docs_df, spans).collect()
+        }
     assert set(out) == {i for i, _ in DOCS}  # no doc lost, span-free included
     for i, t in DOCS:
         ts = _tok(t)
@@ -98,14 +97,15 @@ def test_keep_first_semantics(spark, docs_df):
     marking. (No stronger guarantee exists: merged spans from OTHER
     overlapping duplicated grams may still cover a keeper's tokens —
     inherent to span-based cutting, same as the published tool.)"""
-    kf = {
-        (r["doc_id"], r["span_start"], r["span_end"])
-        for r in duplicated_spans(docs_df, min_len=4, keep_first=True, persist_occurrences=False).collect()
-    }
+    with CacheScope():
+        kf = {
+            (r["doc_id"], r["span_start"], r["span_end"])
+            for r in duplicated_spans(docs_df, min_len=4, keep_first=True).collect()
+        }
+        all_spans = duplicated_spans(docs_df, min_len=4).collect()
     assert not any(d == 0 for d, _, _ in kf)  # first copy survives whole
     assert (1, 1, 9) in kf  # second copy still cut
     marked_kf = {(d, p) for d, s, e in kf for p in range(s, e)}
-    all_spans = duplicated_spans(docs_df, min_len=4, persist_occurrences=False).collect()
     marked_all = {
         (r["doc_id"], p)
         for r in all_spans
@@ -119,8 +119,9 @@ def test_plan_shape(spark, docs_df):
     (O(n) rolling polynomial over JVM-salted token hashes — never a
     row-at-a-time UDF, never the O(n*L) concat), and the strip side stays
     pure JVM codegen."""
-    spans = duplicated_spans(docs_df, min_len=4, persist_occurrences=False)
-    plan = spans._jdf.queryExecution().executedPlan().toString()
+    with CacheScope():
+        spans = duplicated_spans(docs_df, min_len=4)
+        plan = spans._jdf.queryExecution().executedPlan().toString()
     assert "MapInArrow" in plan  # the batch-vectorized window-hash pass
     assert "BatchEvalPython" not in plan  # no row-at-a-time Python
     strip = strip_duplicated_spans(docs_df, spans.localCheckpoint())
@@ -144,12 +145,11 @@ def test_spans_property(spark, token_lists, L, keep_first):
     hypothesis-safe — only function scope is reset between examples)."""
     docs = [(i, " ".join(ts)) for i, ts in enumerate(token_lists)]
     df = spark.createDataFrame(docs, "doc_id long, text string")
-    got = sorted(
-        tuple(r)
-        for r in duplicated_spans(
-            df, min_len=L, keep_first=keep_first, persist_occurrences=False
-        ).collect()
-    )
+    with CacheScope():
+        got = sorted(
+            tuple(r)
+            for r in duplicated_spans(df, min_len=L, keep_first=keep_first).collect()
+        )
     assert got == _oracle_spans(docs, L, keep_first)
 
 
@@ -159,12 +159,11 @@ def test_custom_id_col_end_to_end(spark):
     any id_col != 'doc_id' crashed with UNRESOLVED_COLUMN."""
     docs = [(i, t) for i, t in DOCS]
     df = spark.createDataFrame(docs, "page_id long, body string")
-    spans = duplicated_spans(
-        df, text_col="body", id_col="page_id", min_len=4, persist_occurrences=False
-    )
-    assert spans.columns == ["page_id", "span_start", "span_end"]
-    got = sorted(tuple(r) for r in spans.collect())
-    assert got == _oracle_spans(DOCS, 4, keep_first=False)
-    out = strip_duplicated_spans(df, spans, text_col="body", id_col="page_id")
-    rows = {r["page_id"]: r["body"] for r in out.collect()}
+    with CacheScope():
+        spans = duplicated_spans(df, text_col="body", id_col="page_id", min_len=4)
+        assert spans.columns == ["page_id", "span_start", "span_end"]
+        got = sorted(tuple(r) for r in spans.collect())
+        assert got == _oracle_spans(DOCS, 4, keep_first=False)
+        out = strip_duplicated_spans(df, spans, text_col="body", id_col="page_id")
+        rows = {r["page_id"]: r["body"] for r in out.collect()}
     assert rows[3] == "tail"  # within-doc repeat stripped, via custom cols
