@@ -5,7 +5,9 @@
    "queries": {<name>: sec, ...}, "sf": <sf>, "extras": {...}}
 
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
-     SPARK_GRAFT_CPUS   (default 32)  -> master local[N] + shuffle partitions,
+     SPARK_GRAFT_CPUS   (default: the CPUs this process may run on)
+                                      -> master local[N] + shuffle partitions,
+                                         reported as extras.cpus,
      BENCH_CORPUS_DOCS  (default 20000) -> synthetic corpus size for the
                                            index-build phase.
 
@@ -66,7 +68,7 @@ def cpu_probe(nproc: int) -> float:
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
     n_corpus = int(os.environ.get("BENCH_CORPUS_DOCS", "20000"))
     sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in sf_dir else -1.0
 

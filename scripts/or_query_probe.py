@@ -5,12 +5,14 @@ Builds the bench corpus + index at bench scale, then measures BOTH layers:
 
   1. end-to-end Spark latency (median of R warm runs) for the bench's
      and_hot / or_hot queries — the number BENCH reports;
-  2. the pure-Python per-part kernel (_score_part_bool's conjunctive
-     branch, and its disjunctive branch _score_part_or) run in-process
-     over the SAME posting rows Spark ships to the workers — isolating
-     worker-side scoring from scheduling/shuffle;
-  3. OR pruning effectiveness: candidates scored and essential-term
-     postings decoded, with the tau seed as shipped (top term's own
+  2. the kernel (_score_part_bool's conjunctive branch, and its
+     disjunctive branch _score_part_or) run in-process over the SAME
+     posting rows Spark ships to the workers, decoded per part as the
+     workers decode them (decode_table) — isolating worker-side scoring
+     from scheduling/shuffle — and once over the whole index decoded flat,
+     as the driver scores a resident index;
+  3. OR pruning effectiveness: essential-term blocks left live and the
+     candidate bound, with the tau seed as shipped (top term's own
      top-k) vs a hypothetical stronger seed (kth best of top-term scores
      + second term probed at those docs).
 
@@ -32,7 +34,7 @@ sys.path.insert(0, REPO)
 
 import numpy as np  # noqa: E402
 
-from searchenginer_spark.operators.postings import BLOCK, decode_scores  # noqa: E402
+from searchenginer_spark.operators.postings import BLOCK, decode_table  # noqa: E402
 from searchenginer_spark.plans import bm25 as B  # noqa: E402
 from searchenginer_spark.plans.build_index import build_index, open_index  # noqa: E402
 from searchenginer_spark.session import get_spark  # noqa: E402
@@ -42,20 +44,27 @@ AND_Q, OR_Q = "int return value", "for while void"
 
 
 def part_groups(idx, query):
-    """The exact per-part posting rows the Spark scorer receives."""
+    """({part: TermPostings list}, TermPostings list, qtf): the posting rows
+    the Spark scorer receives, decoded per part as the workers decode
+    them, and the same rows decoded flat as one doc range."""
     tids = list(idx.lookup_terms(query.split()).values())
-    rows = idx.postings.filter(B.F.col("term_id").isin(tids)).collect()
-    parts: dict[int, list] = {}
-    for r in rows:
-        parts.setdefault(r["part"], []).append(r.asDict())
-    return parts, {t: 1.0 for t in tids}
+    table = idx.postings.filter(B.F.col("term_id").isin(tids)).toArrow()
+    parts = table.column("part").to_numpy()
+    out = {}
+    for p in sorted(set(parts.tolist())):
+        dec = decode_table(table.filter(parts == p))
+        out[p] = [dec.term(t) for t in dec.term_ids.tolist()]
+    flat = decode_table(table)
+    return out, [flat.term(t) for t in flat.term_ids.tolist()], {t: 1.0 for t in tids}
 
 
-def time_scorer(fn, parts, qtf, reps):
+def time_scorer(fn, ranges, qtf, reps):
+    """Median ms to score every doc range of ``ranges`` (lists of
+    TermPostings) once."""
     walls = []
     for _ in range(reps):
         t = time.monotonic()
-        for groups in parts.values():
+        for groups in ranges:
             fn(groups, qtf)
         walls.append(time.monotonic() - t)
     return round(1000 * sorted(walls)[len(walls) // 2], 2)
@@ -63,22 +72,21 @@ def time_scorer(fn, parts, qtf, reps):
 
 def or_prune_stats(parts, qtf, k=10):
     """Replicate _score_part_or's pruning bookkeeping: how many essential
-    postings decode under (a) no tau, (b) the shipped seed, (c) a top-2
+    blocks stay live under (a) no tau, (b) the shipped seed, (c) a top-2
     intersection seed."""
-    stats = {s: {"decoded": 0, "total": 0, "cand": 0} for s in ("shipped", "top2")}
+    stats = {s: {"live": 0, "total": 0, "cand": 0} for s in ("shipped", "top2")}
     for groups in parts.values():
-        uppers = [qtf[g["term_id"]] * max(g["block_max"]) for g in groups]
+        uppers = [qtf[g.term_id] * g.block_max.max() for g in groups]
         order = np.argsort(-np.asarray(uppers))
         gs = [groups[i] for i in order]
         g0 = gs[0]
-        s0 = decode_scores(g0["scores"]) * qtf[g0["term_id"]]
+        s0 = g0.scores * qtf[g0.term_id]
         seeds = {}
         seeds["shipped"] = (
             np.partition(s0, s0.size - k)[s0.size - k] if s0.size >= k else -np.inf
         )
         if len(gs) > 1 and s0.size >= k:
-            ids0 = B.decode_doc_ids(g0["docs"], g0["n"])
-            probe = B._probe_scores(gs[1], ids0) * qtf[gs[1]["term_id"]]
+            probe = B._probe_scores(gs[1], g0.doc_ids) * qtf[gs[1].term_id]
             s01 = s0 + probe
             seeds["top2"] = np.partition(s01, s01.size - k)[s01.size - k]
         else:
@@ -86,18 +94,14 @@ def or_prune_stats(parts, qtf, k=10):
         for name, tau in seeds.items():
             st = stats[name]
             for g in gs:
-                bl = np.asarray(g["block_last"], dtype=np.int64)
-                st["total"] += bl.size
+                st["total"] += g.block_last.size
             if not np.isfinite(tau):
                 for g in gs:
-                    st["decoded"] += len(g["block_last"])
-                    st["cand"] += g["n"]
+                    st["live"] += g.block_last.size
+                    st["cand"] += g.doc_ids.size
                 continue
-            bl = [np.asarray(g["block_last"], dtype=np.int64) for g in gs]
-            bm = [
-                np.asarray(g["block_max"], dtype=np.float64) * qtf[g["term_id"]]
-                for g in gs
-            ]
+            bl = [g.block_last for g in gs]
+            bm = [g.block_max * qtf[g.term_id] for g in gs]
             seg_ends = np.unique(np.concatenate(bl))
             seg_upper = np.zeros(seg_ends.size)
             for bl_t, bm_t in zip(bl, bm):
@@ -108,7 +112,7 @@ def or_prune_stats(parts, qtf, k=10):
             for g, bl_t in zip(gs, bl):
                 bidx = np.unique(np.searchsorted(bl_t, live))
                 bidx = bidx[bidx < bl_t.size]
-                st["decoded"] += int(bidx.size)
+                st["live"] += int(bidx.size)
                 st["cand"] += int(bidx.size) * BLOCK
     return stats
 
@@ -135,22 +139,21 @@ def main():
             runs.append(time.monotonic() - t)
         out[f"{name}_e2e_med_ms"] = round(1000 * sorted(runs)[len(runs) // 2], 1)
 
-    and_parts, and_qtf = part_groups(idx, AND_Q)
-    or_parts, or_qtf = part_groups(idx, OR_Q)
+    and_parts, and_flat, and_qtf = part_groups(idx, AND_Q)
+    or_parts, or_flat, or_qtf = part_groups(idx, OR_Q)
     out["and_rows"] = sum(len(v) for v in and_parts.values())
     out["or_rows"] = sum(len(v) for v in or_parts.values())
-    out["and_postings"] = sum(g["n"] for v in and_parts.values() for g in v)
-    out["or_postings"] = sum(g["n"] for v in or_parts.values() for g in v)
-    out["and_scorer_ms"] = time_scorer(
-        lambda g, q: B._score_part_bool(g, list(q), [], q, 10, round_to=4),
-        and_parts, and_qtf, reps,
-    )
-    out["or_scorer_ms"] = time_scorer(
-        lambda g, q: B._score_part_or(g, q, 10, 4), or_parts, or_qtf, reps
-    )
+    out["and_postings"] = sum(g.doc_ids.size for g in and_flat)
+    out["or_postings"] = sum(g.doc_ids.size for g in or_flat)
+    and_fn = lambda g, q: B._score_part_bool(g, list(q), [], q, 10, round_to=4)  # noqa: E731
+    or_fn = lambda g, q: B._score_part_or(g, q, 10, 4)  # noqa: E731
+    out["and_scorer_ms"] = time_scorer(and_fn, and_parts.values(), and_qtf, reps)
+    out["or_scorer_ms"] = time_scorer(or_fn, or_parts.values(), or_qtf, reps)
+    out["and_flat_scorer_ms"] = time_scorer(and_fn, [and_flat], and_qtf, reps)
+    out["or_flat_scorer_ms"] = time_scorer(or_fn, [or_flat], or_qtf, reps)
     pr = or_prune_stats(or_parts, or_qtf)
     for name, st in pr.items():
-        out[f"or_blocks_decoded_{name}"] = st["decoded"]
+        out[f"or_blocks_live_{name}"] = st["live"]
         out[f"or_cand_bound_{name}"] = st["cand"]
     out["or_blocks_total"] = pr["shipped"]["total"]
     print(json.dumps(out))

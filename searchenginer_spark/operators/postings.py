@@ -16,8 +16,11 @@ Layout (one row per (term_id, part)):
     block_last array<long>   last doc_id of each 128-posting block (skip ptr)
     block_max  array<double> max score per block (block-max WAND pruning)
     block_doc_off/block_tf_off array<long> byte offset of each block inside
-                         docs/tfs — enables decoding ONLY the blocks a query
-                         needs
+                         docs/tfs (a block decodes on its own)
+
+Queries read none of the block columns: the query side decodes whole rows
+once into flat per-term arrays (:func:`decode_table`) and recomputes the
+block maxima over them.
 
 Reference counterpart: text postings `word \\t (docid weight)*` sorted by
 docid (/root/reference/Make_Page/MakePage.cpp:196-215, ReadPage.h:55 —
@@ -34,10 +37,12 @@ doc-disjoint so query-side per-part top-k merges exactly.
 
 from __future__ import annotations
 
-import math
+from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -62,8 +67,7 @@ POSTING_COLS = [
 #: POSTING (first value absolute), so any block boundary decodes
 #: independently; per-posting slicing derives from the tf counts (posting i
 #: holds tf_i values). ``block_pos_off`` stores each block's byte offset
-#: inside ``positions`` (same skip-pointer pattern as block_doc_off), so
-#: phrase queries decode ONLY the blocks holding conjunctive candidates.
+#: inside ``positions`` (same skip-pointer pattern as block_doc_off).
 #: ``positions`` is kept as the LAST column so plans that don't need
 #: positions prune it at the parquet scan (SURVEY §7.4.4).
 POSTINGS_POS_SCHEMA = POSTINGS_SCHEMA + ", block_pos_off array<long>, positions binary"
@@ -231,35 +235,11 @@ def decode_doc_ids(docs: bytes, n: int) -> np.ndarray:
     """Full decode of one row's doc ids (block-local deltas -> absolute)."""
     v = varbyte_decode(docs)
     cs = np.cumsum(v, dtype=np.uint64)
-    nblocks = math.ceil(n / BLOCK) if n else 0
     starts = np.arange(0, n, BLOCK)
     # base[b] = prefix sum before block start (so cs - base == within-block cumsum)
     base = cs[starts] - v[starts]
     out = cs - np.repeat(base, np.minimum(BLOCK, n - starts))
     return out.astype(np.int64)
-
-
-def decode_blocks(
-    docs: bytes, block_doc_off: np.ndarray, n: int, needed: np.ndarray
-) -> tuple[np.ndarray, np.ndarray]:
-    """Decode only ``needed`` block indices -> (doc_ids, global positions).
-
-    This is the skip-pointer read path: byte-slices per block, nothing else
-    touched. Positions index into the row's full posting order (for score
-    lookup into the fixed-width scores array)."""
-    buf = np.frombuffer(docs, dtype=np.uint8)
-    offs = np.asarray(block_doc_off, dtype=np.int64)
-    ids_parts = []
-    pos_parts = []
-    for b in needed.tolist():
-        lo = offs[b]
-        hi = offs[b + 1] if b + 1 < len(offs) else len(buf)
-        v = varbyte_decode(buf[lo:hi])
-        ids_parts.append(np.cumsum(v, dtype=np.uint64).astype(np.int64))
-        pos_parts.append(np.arange(b * BLOCK, b * BLOCK + len(v)))
-    if not ids_parts:
-        return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.int64)
-    return np.concatenate(ids_parts), np.concatenate(pos_parts)
 
 
 def decode_scores(scores: bytes) -> np.ndarray:
@@ -292,52 +272,140 @@ def decode_positions_flat(
     return out_flat, starts, counts
 
 
-def decode_positions_blocks(
-    positions: bytes,
-    tfs: bytes,
-    block_pos_off: np.ndarray,
-    block_tf_off: np.ndarray,
-    n: int,
-    needed: np.ndarray,
-) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
-    """Decode ONLY ``needed`` blocks' positions (and their tfs).
-
-    The positions delta stream restarts at every posting (first value
-    absolute), so a block slice decodes independently; per-posting split
-    points inside the block come from the block's tf slice. Returns
-    ``(flat, starts, counts, posting_idx)``: posting ``posting_idx[i]``
-    (GLOBAL index into the row's posting order — the scores-array index)
-    has sorted absolute positions ``flat[starts[i] : starts[i]+counts[i]]``.
-    This is the phrase path's skip-pointer read: a hot term's position blob
-    is never fully decoded when the conjunctive candidate set is small.
-    """
-    pbuf = np.frombuffer(positions, dtype=np.uint8)
-    tbuf = np.frombuffer(tfs, dtype=np.uint8)
-    poffs = np.asarray(block_pos_off, dtype=np.int64)
-    toffs = np.asarray(block_tf_off, dtype=np.int64)
-    flat_parts, count_parts, idx_parts = [], [], []
-    for b in needed.tolist():
-        thi = toffs[b + 1] if b + 1 < len(toffs) else len(tbuf)
-        cnt = varbyte_decode(tbuf[toffs[b] : thi]).astype(np.int64)
-        phi = poffs[b + 1] if b + 1 < len(poffs) else len(pbuf)
-        deltas = varbyte_decode(pbuf[poffs[b] : phi])
-        sl = np.concatenate(([0], np.cumsum(cnt)[:-1]))
-        cs = np.cumsum(deltas, dtype=np.uint64)
-        base = np.zeros(len(cnt), dtype=np.uint64)
-        nz = cnt > 0
-        base[nz] = cs[sl[nz]] - deltas[sl[nz]]
-        flat_parts.append((cs - np.repeat(base, cnt)).astype(np.int64))
-        count_parts.append(cnt)
-        idx_parts.append(np.arange(b * BLOCK, b * BLOCK + len(cnt), dtype=np.int64))
-    if not flat_parts:
-        e = np.empty(0, dtype=np.int64)
-        return e, e.copy(), e.copy(), e.copy()
-    counts = np.concatenate(count_parts)
-    starts = np.concatenate(([0], np.cumsum(counts)[:-1]))
-    return np.concatenate(flat_parts), starts, counts, np.concatenate(idx_parts)
-
-
 def decode_positions(positions: bytes, tfs: np.ndarray) -> list[np.ndarray]:
     """Per-posting view of :func:`decode_positions_flat` (tests/debugging)."""
     flat, starts, counts = decode_positions_flat(positions, tfs)
     return [flat[s : s + c] for s, c in zip(starts, counts)]
+
+
+# ------------------------------------------------------ decoded, flat per term
+
+
+class TermPostings(NamedTuple):
+    """One term's decoded postings: views into a :class:`DecodedPostings`.
+
+    ``doc_ids`` ascending int64 with their float64 ``scores`` and int64
+    ``tfs``; ``block_last``/``block_max`` per 128-posting block of this
+    flat list; posting i's positions are ``positions[pos_off[i] :
+    pos_off[i + 1]]`` (both None without a positions column)."""
+
+    term_id: int
+    doc_ids: np.ndarray
+    scores: np.ndarray
+    tfs: np.ndarray
+    block_last: np.ndarray
+    block_max: np.ndarray
+    pos_off: np.ndarray | None
+    positions: np.ndarray | None
+
+
+class DecodedPostings(NamedTuple):
+    """A postings table decoded once, flat per term (CSR layout).
+
+    Term ``term_ids[i]`` owns postings ``term_off[i]:term_off[i + 1]`` of
+    the shared posting arrays (``doc_ids``, ``scores``, ``tfs``,
+    ``pos_off``) and blocks ``block_off[i]:block_off[i + 1]`` of
+    ``block_last``/``block_max``. A term's rows of several parts are
+    concatenated in part order; parts are ascending doc-disjoint ranges,
+    so its doc ids stay sorted. ``pos_off`` has one more entry than there
+    are postings and indexes the absolute ``positions``."""
+
+    term_ids: np.ndarray
+    term_off: np.ndarray
+    doc_ids: np.ndarray
+    scores: np.ndarray
+    tfs: np.ndarray
+    block_off: np.ndarray
+    block_last: np.ndarray
+    block_max: np.ndarray
+    pos_off: np.ndarray | None
+    positions: np.ndarray | None
+
+    def term(self, term_id: int) -> TermPostings | None:
+        """The decoded postings of ``term_id``, or None when it has none."""
+        i = int(np.searchsorted(self.term_ids, term_id))
+        if i == self.term_ids.size or self.term_ids[i] != term_id:
+            return None
+        lo, hi = self.term_off[i], self.term_off[i + 1]
+        b0, b1 = self.block_off[i], self.block_off[i + 1]
+        return TermPostings(
+            int(term_id), self.doc_ids[lo:hi], self.scores[lo:hi], self.tfs[lo:hi],
+            self.block_last[b0:b1], self.block_max[b0:b1],
+            None if self.pos_off is None else self.pos_off[lo : hi + 1],
+            self.positions,
+        )
+
+    @property
+    def nbytes(self) -> int:
+        """Bytes held by the decoded arrays."""
+        return sum(a.nbytes for a in self if a is not None)
+
+
+def _binary_values(col: pa.ChunkedArray) -> np.ndarray:
+    """The bytes of every row of a binary column, concatenated in row order
+    (a view of the column's data buffer, no per-row copy)."""
+    arr = col.combine_chunks()
+    _, offsets, data = arr.buffers()
+    if len(arr) == 0 or data is None:
+        return np.empty(0, dtype=np.uint8)
+    width = np.int64 if pa.types.is_large_binary(arr.type) else np.int32
+    offs = np.frombuffer(offsets, dtype=width)[arr.offset : arr.offset + len(arr) + 1]
+    return np.frombuffer(data, dtype=np.uint8)[offs[0] : offs[-1]]
+
+
+def _restart_cumsum(deltas: np.ndarray, starts: np.ndarray) -> np.ndarray:
+    """Absolute int64 values from a delta stream that restarts (first value
+    absolute) at each index of ascending ``starts``, which begins at 0."""
+    cs = np.cumsum(deltas, dtype=np.uint64)
+    seg_len = np.diff(np.append(starts, deltas.size))
+    base = cs[starts] - deltas[starts]
+    return (cs - np.repeat(base, seg_len)).astype(np.int64)
+
+
+def decode_table(table: pa.Table) -> DecodedPostings:
+    """Decode a postings Arrow table (any subset of the stored rows, with at
+    least term_id, part, n, docs, tfs and scores) into one flat form per
+    term, in whole-column numpy passes: the rows are sorted by (term_id,
+    part), then each binary column is varbyte-decoded in one pass, doc-id
+    deltas restarting at every 128-posting block of a row and position
+    deltas at every posting. Block maxima and last doc ids are recomputed
+    over each term's flat list, so they cover its rows of every part.
+
+    Decoded, a posting holds 32 B (doc id, score, tf and position offset)
+    and a position 8 B."""
+    order = pc.sort_indices(table, [("term_id", "ascending"), ("part", "ascending")])
+    table = table.take(order)
+    row_tid = table.column("term_id").to_numpy().astype(np.int64)
+    row_n = table.column("n").to_numpy().astype(np.int64)
+    row_off = np.concatenate(([0], np.cumsum(row_n)))
+    total = int(row_off[-1])
+
+    def block_starts(group_off: np.ndarray) -> np.ndarray:
+        local = np.arange(total) - np.repeat(group_off[:-1], np.diff(group_off))
+        return np.flatnonzero(local % BLOCK == 0)
+
+    doc_ids = _restart_cumsum(
+        varbyte_decode(_binary_values(table.column("docs"))), block_starts(row_off)
+    )
+    scores = _binary_values(table.column("scores")).view("<f8").copy()
+    tfs = varbyte_decode(_binary_values(table.column("tfs"))).astype(np.int64)
+
+    first_row = np.flatnonzero(np.diff(row_tid, prepend=-1) != 0)
+    term_ids = row_tid[first_row]
+    term_off = np.append(row_off[first_row], total)
+    bstart = block_starts(term_off)
+    block_last = doc_ids[np.append(bstart[1:], total)[: bstart.size] - 1]
+    block_max = np.maximum.reduceat(scores, bstart) if total else np.empty(0)
+    block_off = np.searchsorted(bstart, term_off)
+
+    pos_off = positions = None
+    if "positions" in table.column_names:
+        pos_off = np.concatenate(([0], np.cumsum(tfs)))
+        positions = _restart_cumsum(
+            varbyte_decode(_binary_values(table.column("positions"))),
+            pos_off[:-1][tfs > 0],
+        )
+    return DecodedPostings(
+        term_ids, term_off, doc_ids, scores, tfs,
+        block_off, block_last, block_max, pos_off, positions,
+    )

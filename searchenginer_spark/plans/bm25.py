@@ -9,104 +9,98 @@ srpc/PageSearch/server.pb_skeleton.cc:154-250 pipeline):
      min/max row-group pruning does the index seek (rows are written
      sorted by term_id within part files)
   4. per-part scoring in ONE Arrow call per part (groupBy('part')
-     .applyInPandas, Bm25CompressedIndex._scored): every entry point
-     compiles to one query form (_compile_spec), and that one call
-     scores EVERY query of the call (_score_part_queries -> the one
-     kernel, _score_part_bool): conjunctive galloping intersection with
-     block skip-decode, positional matching, or disjunctive MaxScore
+     .applyInArrow, Bm25CompressedIndex._scored): the call decodes its
+     part's rows once into flat per-term arrays (operators/postings.py
+     decode_table), and every entry point compiles to one query form
+     (_compile_spec), so that one call scores EVERY query of the call
+     (_score_queries -> the one kernel, _score_part_bool): conjunctive
+     sorted intersection, positional matching, or disjunctive MaxScore
      with block-max pruning. Each posting row crosses the Arrow boundary
-     once per part, however many queries of a batch use it
+     and is decoded once per part, however many queries of a batch use it
   5. per-part top-k -> global TakeOrderedAndProject(k) (per query_id
      window for batches)
 
 Parts are doc-disjoint ranges, so per-part top-k then global merge is
 exact — this is what lets the scoring stage scale out with zero shared
 state (the Spark analog of the reference's single-address-space docids).
+A small index skips steps 3-5: its postings stay on the driver decoded
+flat per term (_resident_postings), and the same kernel scores each query
+once over the whole index. A doc's score adds its terms' impacts in
+ascending term_id order (_term_sum), so both executors give the same
+float whichever doc range scored it.
 
 Pruning:
-  - AND: rarest term drives; other terms decode ONLY blocks whose
-    block_last range can contain surviving candidates (skip pointers).
+  - AND: the rarest term's doc ids are the candidates; every other term
+    only shrinks them (sorted membership).
   - OR: MaxScore (Turtle & Flood 1995, public algorithm): threshold tau
     seeded from the highest-upper-bound term's own top-k; terms whose
     summed upper bounds stay below tau become non-essential and are only
-    probed at existing candidates via selective block decode — documents
-    matching only non-essential terms are provably below tau and never
-    decoded. ESSENTIAL terms additionally prune at block granularity
-    (block-max pruning, Ding & Suel 2011): doc-id space is segmented at
-    the union of their block boundaries, each segment bounded by the sum
-    of covering qtf-weighted block maxes + the non-essential suffix
-    upper, and segments provably below tau are never varbyte-decoded by
-    any term.
+    probed at existing candidates — documents matching only
+    non-essential terms are provably below tau and never scored.
+    ESSENTIAL terms additionally prune at block granularity (block-max
+    pruning, Ding & Suel 2011): doc-id space is segmented at the union of
+    their block boundaries, each segment bounded by the sum of covering
+    qtf-weighted block maxes + the non-essential suffix upper, and
+    candidates in segments provably below tau are never scored.
 """
 
 from __future__ import annotations
 
+import os
+
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 import re
 
 from ..functions.tokenize import IDENT_RE
-from ..operators.postings import (
-    BLOCK,
-    decode_blocks,
-    decode_doc_ids,
-    decode_positions_blocks,
-    decode_positions_flat,
-    decode_scores,
-    decode_tfs,
-)
+from ..operators.postings import DecodedPostings, TermPostings, decode_table
 
 
-def _decode_candidate_blocks(g: dict, cand: np.ndarray):
-    """THE shared skip-decode walk: decode only the blocks of posting row
-    ``g`` whose block_last range can contain a SORTED candidate id — the
-    single galloping-intersection read pattern behind every conjunctive
-    probe (AND loop, boolean MUST loop, positional prologue, NOT exclusion,
-    SHOULD probes). Returns (ids, pos): decoded doc ids (sorted) and their
-    global posting indices within the row (the scores-array index)."""
-    block_last = np.asarray(g["block_last"], dtype=np.int64)
-    bidx = np.unique(np.searchsorted(block_last, cand))
-    bidx = bidx[bidx < len(block_last)]
-    return decode_blocks(
-        g["docs"], np.asarray(g["block_doc_off"], dtype=np.int64), g["n"], bidx
-    )
-
-
-def _drop_excluded(cand: np.ndarray, scores: np.ndarray, neg: list):
+def _drop_excluded(cand: np.ndarray, neg: list) -> np.ndarray:
     """Remove candidates appearing in any NEGATIVE term's postings.
 
-    Runs BEFORE per-part top-k truncation (exactness: an excluded doc must
-    never occupy a top-k slot another doc should get). Negative terms use
-    the same block skip-decode as conjunctive probes — only blocks that can
-    contain surviving candidates are touched."""
+    Runs BEFORE top-k truncation (exactness: an excluded doc must never
+    occupy a top-k slot another doc should get)."""
     for g in neg:
-        if cand.size == 0:
-            break
-        ids, _ = _decode_candidate_blocks(g, cand)
-        keep = ~_member_sorted(cand, ids)
-        cand, scores = cand[keep], scores[keep]
-    return cand, scores
+        cand = cand[~_member_sorted(cand, g.doc_ids)]
+    return cand
+
+
+def _term_sum(by_tid: dict, qtf: dict, cand: np.ndarray) -> np.ndarray:
+    """Each SORTED candidate's score: the qtf-weighted impacts of the
+    query's terms, added in ascending term_id order, one probe per term (a
+    term absent from the doc, or from these postings, adds +0.0). One
+    canonical order makes a doc's score the same float whichever doc range
+    scores it: the whole resident index on the driver, or one part of the
+    distributed plan."""
+    score = np.zeros(cand.size, dtype=np.float64)
+    for t in sorted(qtf):
+        g = by_tid.get(t)
+        if g is not None:
+            score += qtf[t] * _probe_scores(g, cand)
+    return score
 
 
 def _score_part_or(groups: list, qtf: dict, k: int, round_to=None, neg=(), allow=None):
-    """Disjunctive MaxScore scoring for one part.
+    """Disjunctive MaxScore scoring over one doc range (a part, or the
+    whole resident index).
 
     With ``round_to`` set, the MaxScore threshold tau gets a one-ulp-of-the-
     rounding slack (10^-round_to) so a doc whose unrounded score is below
     tau but whose ROUNDED score ties the kth result is never pruned, and the
-    final per-part truncation uses the rounded key (global-merge key).
+    final truncation uses the rounded key (global-merge key).
 
-    ``neg``: posting rows of excluded (NOT) terms. ``allow``: sorted array
-    of permitted doc ids (metadata filter). Either one disables the tau
-    seed (a seed drawn from scores of docs that may later be dropped could
-    over-prune legitimate results) — plain full-union scoring, then the
-    dropped docs leave before truncation. Correctness over pruning.
+    ``neg``: decoded postings of excluded (NOT) terms. ``allow``: sorted
+    array of permitted doc ids (metadata filter). Either one disables the
+    tau seed (a seed drawn from scores of docs that may later be dropped
+    could over-prune legitimate results) — plain full-union scoring, then
+    the dropped docs leave before truncation. Correctness over pruning.
     """
     uppers = np.array(
-        [qtf[g["term_id"]] * max(g["block_max"]) for g in groups], dtype=np.float64
+        [qtf[g.term_id] * g.block_max.max() for g in groups], dtype=np.float64
     )
     order = np.argsort(-uppers)
     groups = [groups[i] for i in order]
@@ -114,7 +108,7 @@ def _score_part_or(groups: list, qtf: dict, k: int, round_to=None, neg=(), allow
 
     # tau seed: top-k of the single highest-impact term
     g0 = groups[0]
-    s0 = decode_scores(g0["scores"]) * qtf[g0["term_id"]]
+    s0 = g0.scores * qtf[g0.term_id]
     if s0.size >= k and not neg and allow is None:
         tau = np.partition(s0, s0.size - k)[s0.size - k]
         if round_to is not None:
@@ -131,87 +125,47 @@ def _score_part_or(groups: list, qtf: dict, k: int, round_to=None, neg=(), allow
             break
     non_ess_upper = suffix[ess_end] if ess_end < len(groups) else 0.0
 
-    # union of essential terms (these dominate the scores). With a finite
-    # tau, prune at BLOCK granularity first — block-max pruning (Ding &
-    # Suel 2011, public algorithm), vectorized: doc-id space is segmented
-    # at the union of the essential terms' block boundaries (block i of a
-    # term covers (block_last[i-1], block_last[i]], so boundaries define
-    # the segments exactly); a segment's upper bound is the sum of the
-    # covering blocks' qtf-weighted block_max plus the non-essential
-    # suffix upper, and a segment strictly below tau is skipped — no
-    # essential term varbyte-decodes any block all of whose segments are
-    # dead, and candidates landing in a dead segment (a decoded block can
-    # straddle dead and live segments) are dropped BEFORE scoring so every
-    # surviving candidate is fully scored. Same tau-slack contract as the
-    # seed: with round_to, tau already carries the one-ulp slack.
+    # candidates: the union of the essential terms' postings; documents
+    # matching only non-essential terms are provably below tau. With a
+    # finite tau, block-max pruning (Ding & Suel 2011, public algorithm)
+    # drops more: doc-id space is segmented at the union of the essential
+    # terms' block boundaries (block i of a term covers (block_last[i-1],
+    # block_last[i]], so boundaries define the segments exactly); a
+    # segment's upper bound is the sum of the covering blocks'
+    # qtf-weighted block_max plus the non-essential suffix upper, and a
+    # candidate in a segment strictly below tau is never scored. Same
+    # tau-slack contract as the seed: with round_to, tau already carries
+    # the one-ulp slack.
     ess = groups[:ess_end]
-    seg_ends = None
+    ids = np.concatenate([g.doc_ids for g in ess])
     if np.isfinite(tau):
-        bl = [np.asarray(g["block_last"], dtype=np.int64) for g in ess]
-        bm = [
-            np.asarray(g["block_max"], dtype=np.float64) * qtf[g["term_id"]]
-            for g in ess
-        ]
-        seg_ends = np.unique(np.concatenate(bl))
+        seg_ends = np.unique(np.concatenate([g.block_last for g in ess]))
         seg_upper = np.full(seg_ends.size, non_ess_upper, dtype=np.float64)
-        for bl_t, bm_t in zip(bl, bm):
-            idx = np.searchsorted(bl_t, seg_ends)
-            valid = idx < bl_t.size  # segments past a term's last doc: +0
-            seg_upper[valid] += bm_t[idx[valid]]
-        seg_alive = seg_upper >= tau
-        live_ends = seg_ends[seg_alive]
-        if live_ends.size == 0:
-            return [], []
-        ids_all, sc_all = [], []
-        for g, bl_t in zip(ess, bl):
-            bidx = np.unique(np.searchsorted(bl_t, live_ends))
-            bidx = bidx[bidx < bl_t.size]
-            ids, pos = decode_blocks(
-                g["docs"],
-                np.asarray(g["block_doc_off"], dtype=np.int64),
-                g["n"],
-                bidx,
-            )
-            ids_all.append(ids)
-            sc_all.append(decode_scores(g["scores"])[pos] * qtf[g["term_id"]])
-    else:
-        ids_all, sc_all = [], []
         for g in ess:
-            ids_all.append(decode_doc_ids(g["docs"], g["n"]))
-            sc_all.append(decode_scores(g["scores"]) * qtf[g["term_id"]])
-    cand, inv = np.unique(np.concatenate(ids_all), return_inverse=True)
-    score = np.zeros(cand.size, dtype=np.float64)
-    np.add.at(score, inv, np.concatenate(sc_all))
-    if seg_ends is not None and cand.size:
+            idx = np.searchsorted(g.block_last, seg_ends)
+            valid = idx < g.block_last.size  # segments past a term's last doc: +0
+            seg_upper[valid] += g.block_max[idx[valid]] * qtf[g.term_id]
+        seg_alive = seg_upper >= tau
         # every posting doc id <= its term's last block_last <= seg_ends[-1]
-        keep = seg_alive[np.searchsorted(seg_ends, cand)]
-        cand, score = cand[keep], score[keep]
-        if cand.size == 0:
-            return [], []
+        ids = ids[seg_alive[np.searchsorted(seg_ends, ids)]]
+    cand = np.unique(ids)
     if allow is not None:
-        mask = _member_sorted(cand, allow)
-        cand, score = cand[mask], score[mask]
-        if cand.size == 0:
-            return [], []
-
-    # non-essential terms: probe only at existing candidates, block-sliced
-    for g in groups[ess_end:]:
-        score += qtf[g["term_id"]] * _probe_scores(g, cand)
-
+        cand = cand[_member_sorted(cand, allow)]
     if neg:
-        cand, score = _drop_excluded(cand, score, neg)
-        if cand.size == 0:
-            return [], []
+        cand = _drop_excluded(cand, neg)
+    if cand.size == 0:
+        return [], []
+    score = _term_sum({g.term_id: g for g in groups}, qtf, cand)
     if round_to is not None:
         score = np.round(score, round_to)
     return _topk(cand, score, k)
 
 
 def _topk(cand: np.ndarray, score: np.ndarray, k: int):
-    """Deterministic per-part top-k: (score desc, doc_id asc) — the global
-    merge's exact sort key. Unlike a bare argpartition cut, ties AT the kth
-    score keep the lowest doc ids (argpartition picks an arbitrary tie
-    subset, which can disagree with the SQL oracle's ORDER BY ... , doc_id
+    """Deterministic top-k: (score desc, doc_id asc) — the global merge's
+    exact sort key. Unlike a bare argpartition cut, ties AT the kth score
+    keep the lowest doc ids (argpartition picks an arbitrary tie subset,
+    which can disagree with the SQL oracle's ORDER BY ... , doc_id
     whenever the boundary lands inside a tie group). Cost: one partition
     pass + a lexsort over only the >= kth-score survivors (k + ties)."""
     if cand.size > k:
@@ -233,43 +187,39 @@ def _member_sorted(a: np.ndarray, b: np.ndarray) -> np.ndarray:
 
 
 def _gather_runs(
-    flat: np.ndarray, starts: np.ndarray, counts: np.ndarray, rows: np.ndarray
+    flat: np.ndarray, starts: np.ndarray, counts: np.ndarray
 ) -> tuple[np.ndarray, np.ndarray]:
-    """Concatenate flat[starts[r] : starts[r]+counts[r]] for r in rows.
+    """Concatenate flat[starts[r] : starts[r]+counts[r]] for every r.
 
-    Returns (values, owner) where owner[i] is the index into ``rows`` the
-    value came from. One fancy-index over the whole part — no per-row loop.
+    Returns (values, owner) where owner[i] is the run ``values[i]`` came
+    from. One fancy-index over all runs — no per-run loop.
     """
-    c = counts[rows]
-    total = int(c.sum())
+    total = int(counts.sum())
     if total == 0:
         return np.empty(0, dtype=flat.dtype), np.empty(0, dtype=np.int64)
-    ends = np.cumsum(c)
-    owner = np.repeat(np.arange(rows.size, dtype=np.int64), c)
-    within = np.arange(total, dtype=np.int64) - np.repeat(ends - c, c)
-    return flat[starts[rows][owner] + within], owner
+    ends = np.cumsum(counts)
+    owner = np.repeat(np.arange(counts.size, dtype=np.int64), counts)
+    within = np.arange(total, dtype=np.int64) - np.repeat(ends - counts, counts)
+    return flat[starts[owner] + within], owner
 
 
-def _probe_scores(g: dict, cand: np.ndarray) -> np.ndarray:
-    """Impact scores of posting row ``g`` at SORTED candidate doc ids
-    (0.0 where the doc is absent), decoding ONLY the blocks whose
-    block_last range can contain a candidate — the shared skip-decode
-    probe under OR non-essential terms and boolean SHOULD clauses."""
+def _probe_scores(g: TermPostings, cand: np.ndarray) -> np.ndarray:
+    """Impact scores of term postings ``g`` at SORTED candidate doc ids
+    (0.0 where the doc is absent): one searchsorted over its doc ids."""
     out = np.zeros(cand.size, dtype=np.float64)
-    ids, pos = _decode_candidate_blocks(g, cand)
+    ids = g.doc_ids
     if ids.size == 0:
         return out
     loc = np.minimum(np.searchsorted(ids, cand), ids.size - 1)
     member = ids[loc] == cand
-    sc = decode_scores(g["scores"])
-    out[member] = sc[pos[loc[member]]]
+    out[member] = g.scores[loc[member]]
     return out
 
 
 def _phrase_match(by_tid: dict, slots: list[int]):
-    """Exact-phrase matching for one part: conjunctive intersection, then
-    positional adjacency verification (slot i's term must appear at
-    position p+i for some p). Rows must carry the `positions` column.
+    """Exact-phrase matching: conjunctive intersection, then positional
+    adjacency verification (slot i's term must appear at position p+i for
+    some p). The postings must carry positions.
 
     Fully vectorized across ALL candidate docs at once (no per-candidate
     Python loop — SURVEY §7.4.3): each slot's positions become composite
@@ -277,16 +227,13 @@ def _phrase_match(by_tid: dict, slots: list[int]):
     survives iff its key appears in every slot's sorted key array, so the
     adjacency check is len(slots)-1 sorted-membership passes over flat
     arrays. A hot phrase with thousands of candidates costs the same numpy
-    passes as a rare one. Reads are skip-pointer-bounded end to end: doc ids
-    of non-driver terms AND every term's positions decode per-block
-    (block_doc_off / block_pos_off), so a hot term's blobs are never fully
-    decoded when the conjunctive candidate set is small.
+    passes as a rare one.
 
     Returns the sorted surviving doc ids (empty when nothing matches)."""
     empty = np.empty(0, dtype=np.int64)
     if any(t not in by_tid for t in slots):
         return empty
-    distinct = sorted(dict.fromkeys(slots), key=lambda t: by_tid[t]["n"])
+    distinct = sorted(dict.fromkeys(slots), key=lambda t: by_tid[t].doc_ids.size)
     cand, pos_data = _candidate_positions(by_tid, distinct)
     if cand.size == 0:
         return empty
@@ -294,8 +241,7 @@ def _phrase_match(by_tid: dict, slots: list[int]):
     offset = len(slots)  # keeps pos - slot_i strictly positive
     keys = None
     for i, t in enumerate(slots):
-        flat, starts, counts, rows_t = pos_data[t]
-        vals, owner = _gather_runs(flat, starts, counts, rows_t)
+        vals, owner = _gather_runs(*pos_data[t])
         keys_i = (owner << 32) | (vals - i + offset)
         keys = keys_i if keys is None else keys[_member_sorted(keys, keys_i)]
         if keys.size == 0:
@@ -306,63 +252,31 @@ def _phrase_match(by_tid: dict, slots: list[int]):
 def _candidate_positions(by_tid: dict, distinct: list[int]):
     """Shared prologue of the positional matchers (phrase, NEAR):
     conjunctive intersection over ``distinct`` term_ids (assumed
-    rarest-first; block skip-decode, identical read pattern to the
-    kernel's must loop), then each term's positions gathered for the
-    surviving candidates only.
+    rarest-first), then each term's positions located for the surviving
+    candidates only.
 
-    Returns (cand, pos_data) where pos_data[t] = (flat, starts, counts,
-    rows_t) addresses t's decoded positions per candidate. cand is empty
-    when the intersection is."""
+    Returns (cand, pos_data) where pos_data[t] = (positions, starts,
+    counts): candidate i's positions of term t are ``positions[starts[i] :
+    starts[i] + counts[i]]``. cand is empty when the intersection is."""
     empty = np.empty(0, dtype=np.int64)
-    drv = by_tid[distinct[0]]
-    cand = decode_doc_ids(drv["docs"], drv["n"])
-    decoded = {distinct[0]: (cand, np.arange(cand.size, dtype=np.int64))}
+    cand = by_tid[distinct[0]].doc_ids
     for t in distinct[1:]:
         if cand.size == 0:
             return empty, {}
-        g = by_tid[t]
-        ids, pos = _decode_candidate_blocks(g, cand)
-        decoded[t] = (ids, pos)
-        if ids.size == 0:
-            return empty, {}
-        loc = np.minimum(np.searchsorted(ids, cand), ids.size - 1)
-        cand = cand[ids[loc] == cand]
+        cand = cand[_member_sorted(cand, by_tid[t].doc_ids)]
     if cand.size == 0:
         return empty, {}
-    # GLOBAL posting index of every candidate within each term's posting row
-    # (the scores-array index); each term's decoded ids are a superset of the
-    # final candidate set, so a sorted searchsorted lookup is exact
-    idxs = {}
-    for t in distinct:
-        ids, pos = decoded[t]
-        idxs[t] = pos[np.searchsorted(ids, cand)]
-    # positions: decode ONLY the blocks containing candidate postings via
-    # block_pos_off skip pointers (full decode for legacy rows without them)
     pos_data = {}
     for t in distinct:
         g = by_tid[t]
-        bpo = g.get("block_pos_off")
-        if bpo is not None:
-            flat, starts, counts, posting_idx = decode_positions_blocks(
-                g["positions"],
-                g["tfs"],
-                np.asarray(bpo, dtype=np.int64),
-                np.asarray(g["block_tf_off"], dtype=np.int64),
-                g["n"],
-                np.unique(idxs[t] // BLOCK),
-            )
-            rows_t = np.searchsorted(posting_idx, idxs[t])
-        else:
-            flat, starts, counts = decode_positions_flat(
-                g["positions"], decode_tfs(g["tfs"])
-            )
-            rows_t = idxs[t]
-        pos_data[t] = (flat, starts, counts, rows_t)
+        at = np.searchsorted(g.doc_ids, cand)  # every candidate is a posting of t
+        starts = g.pos_off[at]
+        pos_data[t] = (g.positions, starts, g.pos_off[at + 1] - starts)
     return cand, pos_data
 
 
 def _near_match(by_tid: dict, terms: list[int], window: int, ordered: bool = False):
-    """Proximity matching for one part (window in token positions).
+    """Proximity matching (window in token positions).
 
     Unordered (default): a candidate survives iff one position per
     distinct term can be chosen with max - min <= window. Anchor
@@ -379,19 +293,18 @@ def _near_match(by_tid: dict, terms: list[int], window: int, ordered: bool = Fal
     anchor, so the span test is exact.
 
     Both are fully vectorized across all candidates (no per-candidate
-    Python loop), with the same skip-decode read pattern as _phrase_match
-    via _candidate_positions. Returns the sorted surviving doc ids."""
+    Python loop), with the same candidate prologue as _phrase_match
+    (_candidate_positions). Returns the sorted surviving doc ids."""
     empty = np.empty(0, dtype=np.int64)
     if any(t not in by_tid for t in terms):
         return empty
-    distinct = sorted(dict.fromkeys(terms), key=lambda t: by_tid[t]["n"])
+    distinct = sorted(dict.fromkeys(terms), key=lambda t: by_tid[t].doc_ids.size)
     cand, pos_data = _candidate_positions(by_tid, distinct)
     if cand.size == 0:
         return empty
     keys_t = {}
     for t in distinct:
-        flat, starts, counts, rows_t = pos_data[t]
-        vals, owner = _gather_runs(flat, starts, counts, rows_t)
+        vals, owner = _gather_runs(*pos_data[t])
         keys_t[t] = (owner << 32) | vals  # sorted: owner asc, pos asc within
     if ordered:
         anchors = keys_t[terms[0]]
@@ -430,33 +343,31 @@ def _score_part_bool(
     allow=None,
     nears: tuple = (),
 ):
-    """THE per-part kernel every query runs (via _score_part_queries):
+    """THE kernel every query runs (via _score_queries), over the decoded
+    postings (TermPostings) of one doc range — one part of the distributed
+    plan, or the whole resident index on the driver:
 
       must     conjunctive term_ids — every one must match: rarest-first
-               galloping intersection with block skip-decode, each term's
-               scores carried along with the surviving candidates
+               sorted intersection
       phrases  tuples of slot term_ids — each must match exactly (adjacent,
                in order); survivors tighten the allow set
       nears    (term_ids tuple, window, ordered) triples — each must match
                within the window (see _near_match); survivors tighten the
                allow set
-      should   additive term_ids — probed at the surviving candidates only
-               (block-sliced), contributing score where present
-      neg      posting rows of excluded terms (dropped pre-truncation)
+      should   additive term_ids — contributing score where present
+      neg      decoded postings of excluded terms (dropped pre-truncation)
       allow    sorted permitted doc ids (metadata facet), or None
 
     Score = sum over every distinct positive atom present, each weighted
-    by qtf: the must terms' carried scores, added rarest first (so a must
-    term is decoded once), then every other phrase/near and should term
-    in query order, probed by the same skip-decode — no contribution is
-    ever counted twice when a term plays several roles. With ``round_to``
-    set, per-part top-k truncation happens on the ROUNDED score (doc_id
-    tie-break) — the same key the global merge sorts by.
+    by qtf, added in ascending term_id order (_term_sum) — no contribution
+    is ever counted twice when a term plays several roles. With
+    ``round_to`` set, top-k truncation happens on the ROUNDED score
+    (doc_id tie-break) — the same key the global merge sorts by.
 
     Candidate generation: must-intersection if any must terms; else the
     positional survivor set; else a pure disjunction (delegated to
     _score_part_or, MaxScore pruning intact)."""
-    by_tid = {g["term_id"]: g for g in groups}
+    by_tid = {g.term_id: g for g in groups}
     if any(t not in by_tid for t in must):
         return [], []
     positional = [(slots, None, False) for slots in phrases] + list(nears)
@@ -472,66 +383,47 @@ def _score_part_bool(
             return [], []
 
     if must:
-        # rarest first; equal counts by term_id, the stored row order
-        order = sorted(must, key=lambda t: (by_tid[t]["n"], t))
-        drv = by_tid[order[0]]
-        cand = decode_doc_ids(drv["docs"], drv["n"])
-        score = decode_scores(drv["scores"]) * qtf[order[0]]
+        # rarest first: every later term only shrinks the candidates
+        order = sorted(must, key=lambda t: by_tid[t].doc_ids.size)
+        cand = by_tid[order[0]].doc_ids
         if allow is not None:
-            keep = _member_sorted(cand, allow)
-            cand, score = cand[keep], score[keep]
+            cand = cand[_member_sorted(cand, allow)]
         for t in order[1:]:
-            if cand.size == 0:
-                return [], []
-            g = by_tid[t]
-            ids, pos = _decode_candidate_blocks(g, cand)
-            if ids.size == 0:
-                return [], []
-            loc = np.minimum(np.searchsorted(ids, cand), ids.size - 1)
-            hit = ids[loc] == cand
-            cand = cand[hit]
-            score = score[hit] + decode_scores(g["scores"])[pos[loc[hit]]] * qtf[t]
+            cand = cand[_member_sorted(cand, by_tid[t].doc_ids)]
     elif positional:
         cand = allow  # ⊆ positional survivors: every candidate matched them
-        score = np.zeros(cand.size, dtype=np.float64)
     else:
         sh = [by_tid[t] for t in should if t in by_tid]
         if not sh:
             return [], []
         return _score_part_or(sh, qtf, k, round_to, neg, allow)
+    if neg:
+        cand = _drop_excluded(cand, neg)
     if cand.size == 0:
         return [], []
-
-    carried = set(must)
-    for t in dict.fromkeys([*(t for slots, _w, _o in positional for t in slots), *should]):
-        g = by_tid.get(t)
-        if g is not None and t not in carried:
-            score += qtf[t] * _probe_scores(g, cand)
-    if neg:
-        cand, score = _drop_excluded(cand, score, neg)
-        if cand.size == 0:
-            return [], []
+    score = _term_sum(by_tid, qtf, cand)
     if round_to is not None:
         score = np.round(score, round_to)
     return _topk(cand, score, k)
 
 
-def _score_part_queries(rows: list, comps: dict, k: int, round_to=None, allow_by_q=None):
-    """THE per-part scorer of both executors (the distributed plan's Arrow
-    call and the driver path): one part's posting rows, grouped by
-    term_id, score every compiled query (_compile_spec) of the call on its
-    own term ids — its excluded terms' rows become ``neg``.
-    ``allow_by_q``: {query_id: sorted allowed doc ids} for faceted queries
-    (an empty array = nothing allowed in this part); other queries are
-    unfiltered. Returns (query_ids, doc_ids, scores), each query's hits in
-    its per-part top-k order."""
-    by_tid = {r["term_id"]: r for r in rows}
+def _score_queries(
+    index: DecodedPostings, comps: dict, k: int, round_to=None, allow_by_q=None
+):
+    """THE scorer of both executors (the driver path over the whole
+    resident index, and the distributed plan's Arrow call over one part):
+    score every compiled query (_compile_spec) of the call over the
+    decoded postings of its own term ids — its excluded terms' postings
+    become ``neg``. ``allow_by_q``: {query_id: sorted allowed doc ids} for
+    faceted queries (an empty array = nothing allowed here); other queries
+    are unfiltered. Returns (query_ids, doc_ids, scores), each query's
+    hits in its top-k order."""
     out_q, out_d, out_s = [], [], []
     for qid, c in comps.items():
-        pos = [by_tid[t] for t in c["qtf"] if t in by_tid]
+        pos = [g for g in map(index.term, c["qtf"]) if g is not None]
         if not pos:
             continue
-        neg = [by_tid[t] for t in c["exc"] if t in by_tid]
+        neg = [g for g in map(index.term, c["exc"]) if g is not None]
         allow = None if allow_by_q is None else allow_by_q.get(qid)
         d, s = _score_part_bool(
             pos, c["must"], c["should"], c["qtf"], k, c["slots"],
@@ -815,11 +707,15 @@ def _compile_spec(
 
 
 def _dict_version_marker(spark: SparkSession, root: str):
-    """(FileSystem, Path) of the index's ``dict_version`` marker: resolved
-    once per handle, since the class lookups and ``getFileSystem`` are
-    most of a version read's py4j round trips."""
+    """(FileSystem, Path, local path) of the index's ``dict_version``
+    marker: resolved once per handle, since the class lookups and
+    ``getFileSystem`` are most of a version read's py4j round trips. The
+    local path is the marker's path on this host when the root resolves
+    to Hadoop's local filesystem, else None."""
     p = spark._jvm.org.apache.hadoop.fs.Path(f"{root}/dict_version")
-    return p.getFileSystem(spark._jsc.hadoopConfiguration()), p
+    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
+    local = fs.makeQualified(p).toUri().getPath() if fs.getScheme() == "file" else None
+    return fs, p, local
 
 
 def read_dict_version(spark: SparkSession, root: str, marker=None):
@@ -831,11 +727,30 @@ def read_dict_version(spark: SparkSession, root: str, marker=None):
     mounts) and serve a stale dict cache. One small read — microseconds
     on a local/HDFS namenode, a GET on an object store (where a handle
     held across folds should batch queries anyway). With ``marker``
-    (:func:`_dict_version_marker`) it is three py4j calls: open,
-    readAllBytes, close (~0.6 ms)."""
+    (:func:`_dict_version_marker`) a marker on the local filesystem is
+    read by this process with no py4j call at all; any other is three
+    py4j calls: open, readAllBytes, close (~0.6 ms alone). A serving
+    thread's first py4j call also opens its own JVM connection (pinned
+    thread mode), so the local read keeps the per-request path of the
+    HTTP gateway, whose handler threads are new per request, off the JVM
+    entirely."""
     from py4j.protocol import Py4JJavaError
 
-    fs, p = marker or _dict_version_marker(spark, root)
+    fs, p, local = marker or _dict_version_marker(spark, root)
+    if local is not None:
+        # os-level calls: each syscall of a read under the GIL is a chance
+        # for another thread to take it, and open() makes twice as many
+        try:
+            fd = os.open(local, os.O_RDONLY)
+        except FileNotFoundError:
+            return None
+        try:
+            chunks = [os.read(fd, 4096)]
+            while len(chunks[-1]) == 4096:
+                chunks.append(os.read(fd, 4096))
+        finally:
+            os.close(fd)
+        return next(iter(b"".join(chunks).decode("utf-8").splitlines()), "")
     try:
         stream = fs.open(p)
     except Py4JJavaError as e:
@@ -857,7 +772,7 @@ def bump_dict_version(spark: SparkSession, root: str) -> None:
     stale lookups."""
     import uuid as _uuid
 
-    fs, p = _dict_version_marker(spark, root)
+    fs, p, _ = _dict_version_marker(spark, root)
     out = fs.create(p, True)
     out.write(bytearray(_uuid.uuid4().hex, "ascii"))
     out.close()
@@ -920,6 +835,20 @@ _BATCH_SCHEMA = "query_id string, doc_id long, score double"
 _POINT_SCHEMA = "doc_id long, score double"
 
 
+def _hits_table(query_ids: list, doc_ids: list, scores: list) -> pa.Table:
+    """_score_queries' hits as an Arrow table of _BATCH_SCHEMA."""
+    return pa.table({
+        "query_id": pa.array(query_ids, pa.string()),
+        "doc_id": pa.array(doc_ids, pa.int64()),
+        "score": pa.array(scores, pa.float64()),
+    })
+
+
+def _needs_positions(comps: dict) -> bool:
+    """Whether any compiled query has a phrase or proximity clause."""
+    return any(c["slots"] or c["nears"] for c in comps.values())
+
+
 def _comp_key(comp: dict) -> tuple:
     """A compiled query (_compile_spec) as a hashable plan-cache key."""
     return (
@@ -961,17 +890,18 @@ class Bm25CompressedIndex:
     #: its compiled term ids (positive + excluded) is at most this many
     #: postings. Per-query driver memory at the cap: the Arrow copy of the
     #: query's rows (8 B score + ~2 B doc/tf varbyte per posting, plus
-    #: positions), its pandas bytes copy, and the decoded int64 ids /
-    #: float64 scores with their candidate intermediates — under
-    #: ~100 B/posting, so ~100 MB at the cap. An index whose WHOLE summed
-    #: df is under the cap also keeps its postings resident on the driver
-    #: as one Arrow table (measured ~43 B/posting with positions: 9.96 MB
-    #: for 232,908 postings, so ~43 MB at the cap) plus an 8 B/row
-    #: term_id order — both a small share of the dict cache's budget above.
-    #: search_query_batch scores a whole unfaceted batch from that resident
-    #: table too: its transient rows are one slice for the union of the
-    #: batch's term ids, so they are bounded by the index's rows however
-    #: many queries the batch holds.
+    #: positions), their decoded form (below) and the candidate
+    #: intermediates — under ~100 B/posting, so ~100 MB at the cap. An
+    #: index whose WHOLE summed df is under the cap also keeps its
+    #: postings resident on the driver, decoded flat per term
+    #: (decode_table): 32 B/posting (int64 doc id, float64 score, int64 tf
+    #: and position offset), 8 B/position, 16 B per 128-posting block and
+    #: 24 B per term. Measured on the 1000-doc benchmark index (232,908
+    #: postings, 608,358 positions, 18,828 terms): 13.08 MB, ~56 B/posting
+    #: all in, so ~56 MB at the cap for that shape (~36 B/posting without
+    #: positions) — a small share of the dict cache's budget above.
+    #: search_query_batch scores a whole unfaceted batch from those
+    #: resident arrays too, with no per-call copy of the postings.
     #: Larger queries keep the distributed plan, whose per-part scoring
     #: runs in parallel on the executors.
     DRIVER_SCORE_MAX_POSTINGS = 1_000_000
@@ -1006,9 +936,9 @@ class Bm25CompressedIndex:
         #: of it. None scans ``self.postings`` itself (bare-DataFrame
         #: handles, and the persisted copy after serving_mode()).
         self._postings_scan = postings_scan
-        #: the stored postings held on the driver for an index under
-        #: DRIVER_SCORE_MAX_POSTINGS (_resident_postings): (Arrow table,
-        #: its term_ids sorted, the stable argsort that sorts them)
+        #: the stored postings held on the driver, decoded flat per term
+        #: (DecodedPostings), for an index under DRIVER_SCORE_MAX_POSTINGS
+        #: (_resident_postings)
         self._resident = None
         #: the dict_version marker's (FileSystem, Path), resolved once
         self._version_marker = _dict_version_marker(spark, root) if root else None
@@ -1030,7 +960,8 @@ class Bm25CompressedIndex:
 
     def _check_version(self) -> None:
         """Drop caches + re-snapshot the tables when a writer bumped the
-        index's dict_version since this handle last looked. One read is
+        index's dict_version since this handle last looked. One read is a
+        local file read (~12 us) for a root on the local filesystem, else
         three py4j calls (~0.6 ms), so each public entry point calls this
         once and the helpers under it (_lookup, _maybe_cache_dict, the
         expansions) never do."""
@@ -1101,23 +1032,27 @@ class Bm25CompressedIndex:
         at = np.searchsorted(self._ids_by_id, tids)
         return int(self._dfs_by_id[at].sum())
 
-    def _resident_postings(self):
-        """The stored postings as one driver-side Arrow table with a
-        term_id index (its term_ids stably sorted, and the argsort that
-        sorts them), loaded once per snapshot — or None without a driver
+    def _resident_postings(self) -> DecodedPostings | None:
+        """The stored postings decoded once on the driver, flat per term
+        (decode_table), loaded once per snapshot — or None without a driver
         dict cache, or when the index's whole summed df (from that cache)
         is over DRIVER_SCORE_MAX_POSTINGS. The in-memory twin of the
-        reference's startup index load (srpc/PageSearch/ReadPage.cpp)."""
+        reference's startup index load (srpc/PageSearch/ReadPage.cpp),
+        which also holds its postings decoded."""
         if self._maybe_cache_dict() is None:
             return None
         if int(self._sorted_dfs.sum()) > self.DRIVER_SCORE_MAX_POSTINGS:
             return None
         if self._resident is None:
-            table = self._scan().toArrow()
-            tids = table.column("term_id").to_numpy()
-            order = np.argsort(tids, kind="stable")
-            self._resident = (table, tids[order], order)
+            cols = self._decode_cols(positions=True)
+            self._resident = decode_table(self._scan().select(*cols).toArrow())
         return self._resident
+
+    def _decode_cols(self, positions: bool) -> list[str]:
+        """The stored columns decode_table reads, with ``positions`` when
+        asked for and the index has them."""
+        extra = ["positions"] if positions and "positions" in self.postings.columns else []
+        return ["term_id", "part", "n", "docs", "tfs", "scores", *extra]
 
     def _scan(self) -> DataFrame:
         """The postings as stored (the persisted copy after serving_mode)."""
@@ -1614,11 +1549,13 @@ class Bm25CompressedIndex:
         """THE distributed plan: {query_id: compiled query} -> unranked
         (query_id, doc_id, score) rows, each query's per-part lists cut at
         ``k``. The postings are filtered on the union of the compiled term
-        ids, and each part's rows reach ONE Arrow call
-        (groupBy('part').applyInPandas) that scores every query on its own
-        term ids (_score_part_queries): a posting row crosses the Python
-        boundary once per part, however many queries use it. Parts are
-        doc-disjoint, so per-part top-k then a global merge is exact.
+        ids (and cut to the columns decode_table reads, positions only
+        when a query has a phrase or proximity clause), and each part's
+        rows reach ONE Arrow call (groupBy('part').applyInArrow) that
+        decodes them once and scores every query on its own term ids
+        (_score_queries): a posting row crosses the Python boundary once
+        per part, however many queries use it. Parts are doc-disjoint, so
+        per-part top-k then a global merge is exact.
 
         ``allow``: {query_id: frame with a doc_id column} for filtered
         queries (search_filtered, facet clauses). Their allowed ids are
@@ -1638,15 +1575,17 @@ class Bm25CompressedIndex:
         silently incorrect: allowed ids bucket to the wrong parts and
         legitimate docs drop out of the result."""
         tids = sorted(set().union(*(set(c["qtf"]) | c["exc"] for c in comps.values())))
-        cand = self.postings.filter(F.col("term_id").isin(tids))
+        cols = self._decode_cols(_needs_positions(comps))
+        cand = self.postings.filter(F.col("term_id").isin(tids)).select(*cols)
 
-        def frame(rows: list, allow_by_q) -> pd.DataFrame:
-            q, d, s = _score_part_queries(rows, comps, k, round_to, allow_by_q)
-            return pd.DataFrame({"query_id": q, "doc_id": d, "score": s})
+        def score(table, allow_by_q):
+            return _hits_table(
+                *_score_queries(decode_table(table), comps, k, round_to, allow_by_q)
+            )
 
         if not allow:
-            return cand.groupBy("part").applyInPandas(
-                lambda pdf: frame(pdf.to_dict("records"), None), schema=_BATCH_SCHEMA
+            return cand.groupBy("part").applyInArrow(
+                lambda table: score(table, None), schema=_BATCH_SCHEMA
             )
         dpp = docs_per_part or self.docs_per_part
         if dpp is None:
@@ -1665,18 +1604,18 @@ class Bm25CompressedIndex:
             allow_df = tagged if allow_df is None else allow_df.unionByName(tagged)
         filtered = list(allow)
 
-        def score_cogroup(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
+        def score_cogroup(left, right):
             # a filtered query with no allowed ids in this part gets an
             # EMPTY array (no hits here), never None (unfiltered)
             allow_by_q = {qid: np.empty(0, dtype=np.int64) for qid in filtered}
-            for qid, sub in right.groupby("query_id", sort=False):
+            for qid, sub in right.to_pandas().groupby("query_id", sort=False):
                 allow_by_q[qid] = np.sort(sub["doc_id"].to_numpy().astype(np.int64))
-            return frame(left.to_dict("records"), allow_by_q)
+            return score(left, allow_by_q)
 
         return (
-            cand.groupby("part")
-            .cogroup(allow_df.groupby("part"))
-            .applyInPandas(score_cogroup, schema=_BATCH_SCHEMA)
+            cand.groupBy("part")
+            .cogroup(allow_df.groupBy("part"))
+            .applyInArrow(score_cogroup, schema=_BATCH_SCHEMA)
         )
 
     def search_query_rows(
@@ -1695,14 +1634,13 @@ class Bm25CompressedIndex:
 
         A small query — at most DRIVER_SCORE_MAX_POSTINGS summed df over
         its compiled term ids, known from the driver dict cache — is scored
-        per part on the driver by the same kernel the workers run, and
-        merged by (score desc, doc_id asc). Its posting rows come from the
-        driver-resident postings when the whole index is under the cap
-        (no Spark job at all), else from one narrow filtered scan of the
-        stored postings collected as Arrow (one job: no exchange, no
-        Python-worker stage). Either way the rows arrive in stored order.
-        Every other query (over the cap, no dict cache, facet clauses)
-        collects search_query's distributed plan."""
+        on the driver by the kernel the workers run (_score_queries), once
+        over all its postings. They come from the decoded driver-resident
+        postings when the whole index is under the cap (no Spark job at
+        all), else from one narrow filtered scan of the stored postings
+        collected as Arrow and decoded (one job: no exchange, no
+        Python-worker stage). Every other query (over the cap, no dict
+        cache, facet clauses) collects search_query's distributed plan."""
         self._check_version()
         specs, comps = self._compile_query({"": query}, mode, pattern, max_expansions)
         allowed = self._facet_allow(specs[""], docs)
@@ -1714,41 +1652,14 @@ class Bm25CompressedIndex:
         if n is None or n > self.DRIVER_SCORE_MAX_POSTINGS:
             frame = self._point_frame(comp, k, None, allowed, docs_per_part)
             return [(r["doc_id"], r["score"]) for r in frame.collect()]
-        table = None
-        if self._resident_postings() is None:
-            table = self._scan().filter(F.col("term_id").isin(tids)).toArrow()
-        return self._score_on_driver(comps, k, table=table)[""]
-
-    def _score_on_driver(self, comps: dict, k: int, round_to=None, table=None) -> dict:
-        """THE driver executor of search_query_rows and the batch executor:
-        {query_id: compiled query} -> {query_id: top-k [(doc_id, score)]},
-        exactly what the distributed plan ranks for each query.
-
-        ``table`` holds the posting rows of every compiled term id (a
-        narrow scan); None slices them out of the resident postings — one
-        searchsorted + take for the union of the queries' term ids, in
-        stored row order. Each part's rows go through the workers'
-        per-part scorer (_score_part_queries, with ``round_to`` as the
-        UDFs pass it), and each query's hits are merged by (score desc,
-        doc_id asc)."""
-        if table is None:
-            tids = sorted(set().union(*(set(c["qtf"]) | c["exc"] for c in comps.values())))
-            table, sorted_tids, order = self._resident
-            lo = np.searchsorted(sorted_tids, tids, "left")
-            hi = np.searchsorted(sorted_tids, tids, "right")
-            at = np.sort(np.concatenate([order[a:b] for a, b in zip(lo, hi)]))
-            table = table.take(at)
-        by_part: dict[int, list] = {}
-        for row in table.to_pylist():
-            by_part.setdefault(row["part"], []).append(row)
-        out: dict = {qid: [] for qid in comps}
-        for rows in by_part.values():
-            for q, d, s in zip(*_score_part_queries(rows, comps, k, round_to)):
-                out[q].append((d, s))
-        for hits in out.values():
-            hits.sort(key=lambda h: (-h[1], h[0]))
-            del hits[k:]
-        return out
+        index = self._resident_postings()
+        if index is None:
+            cols = self._decode_cols(_needs_positions(comps))
+            index = decode_table(
+                self._scan().filter(F.col("term_id").isin(tids)).select(*cols).toArrow()
+            )
+        _q, d, s = _score_queries(index, comps, k)
+        return list(zip(d, s))
 
     def suggest_rows(self, word: str, k: int = 10) -> list[tuple[str, float]]:
         """Keyword suggestions now: exactly ``[(r.term, r.sim) for r in
@@ -1842,8 +1753,9 @@ class Bm25CompressedIndex:
         When no query is filtered and the handle's postings are resident on
         the driver (a dict cache, and the whole index at most
         DRIVER_SCORE_MAX_POSTINGS; see _resident_postings), the whole
-        batch is scored NOW on the driver by the workers' per-part scorer
-        (_score_on_driver) and returned as a local DataFrame: no Spark job,
+        batch is scored NOW on the driver by the workers' scorer
+        (_score_queries), each query once over the decoded resident
+        postings, and returned as a local DataFrame: no Spark job,
         and the same rows, floats included, as the distributed plan. That
         frame holds the answers as of this call — collecting it again does
         not re-score, so collect it at once and do not keep it across index
@@ -1851,19 +1763,13 @@ class Bm25CompressedIndex:
         ranked per query by a window: ONE job."""
         if not comps:
             return self.spark.createDataFrame([], _BATCH_SCHEMA)
-        if not allow and self._resident_postings() is not None:
-            import pyarrow as pa
-
-            hits = self._score_on_driver(comps, k, round_to)
-            qids = [q for q, h in hits.items() for _ in h]
-            pairs = [p for h in hits.values() for p in h]
+        index = None if allow else self._resident_postings()
+        if index is not None:
             # from Arrow: a local relation, no job (a list of tuples would
             # run a Python-worker job)
-            return self.spark.createDataFrame(pa.table({
-                "query_id": pa.array(qids, pa.string()),
-                "doc_id": pa.array([d for d, _ in pairs], pa.int64()),
-                "score": pa.array([s for _, s in pairs], pa.float64()),
-            }))
+            return self.spark.createDataFrame(
+                _hits_table(*_score_queries(index, comps, k, round_to))
+            )
         scored = self._scored(comps, k, round_to, allow, docs_per_part)
         return _rank_scored_batch_df(scored, k, round_to)
 

@@ -13,12 +13,14 @@ that handle plays the in-memory services' part.
 Per-request cost, on an index whose summed df is at most
 ``Bm25CompressedIndex.DRIVER_SCORE_MAX_POSTINGS`` postings: after the
 first request has filled the handle's driver dict cache and loaded its
-postings as one Arrow table, ``/api/search``
-(``search_query_rows``) and ``/api/suggest`` (``suggest_rows``) run NO
-Spark job — a term lookup, a slice of the resident postings scored on
-the driver, or a numpy edit-distance rank over the first-letter
-candidates; what is left per request is one ``dict_version`` read
-(three py4j calls, ~0.6 ms). Measured one request at a time on a
+postings decoded flat per term (``operators/postings.py::decode_table``),
+``/api/search`` (``search_query_rows``) and ``/api/suggest``
+(``suggest_rows``) run NO Spark job — a term lookup, the query's terms
+scored on the driver straight from the decoded arrays, or a numpy
+edit-distance rank over the first-letter candidates; what is left per request is one ``dict_version`` read
+(a local file read for a root on the local filesystem: no py4j call, so
+a handler thread never opens its own JVM connection; elsewhere three
+py4j calls, ~0.6 ms). Measured one request at a time on a
 4-vCPU host (1000 docs with positions, local[4]): search 14 ms mean and
 suggest 18-22 ms median, against 110 ms and 92 ms when each ran one
 Spark job. On a larger index a query whose own terms hold at most that

@@ -8,9 +8,9 @@ from searchenginer_spark.operators.dict import build_term_dict
 from searchenginer_spark.operators.postings import (
     BLOCK,
     build_postings,
-    decode_blocks,
     decode_doc_ids,
     decode_scores,
+    decode_table,
     decode_tfs,
 )
 from searchenginer_spark.plans.bm25 import Bm25CompressedIndex
@@ -159,12 +159,15 @@ def test_posting_row_layout(engines):
         lo, hi = b * BLOCK, min((b + 1) * BLOCK, row["n"])
         assert row["block_last"][b] == ids[hi - 1]
         assert abs(row["block_max"][b] - scores[lo:hi].max()) < 1e-12
-    # selective block decode == slice of full decode
-    sel, pos = decode_blocks(
-        row["docs"], np.asarray(row["block_doc_off"]), row["n"], np.array([nblocks - 1])
-    )
-    assert np.array_equal(sel, ids[(nblocks - 1) * BLOCK :])
-    assert np.array_equal(pos, np.arange((nblocks - 1) * BLOCK, row["n"]))
+    # the loader's flat form of the row: the same ids and scores, and its
+    # recomputed blocks are the stored ones
+    g = decode_table(
+        postings.filter(postings.term_id == row["term_id"]).toArrow()
+    ).term(row["term_id"])
+    assert np.array_equal(g.doc_ids[(nblocks - 1) * BLOCK :], ids[(nblocks - 1) * BLOCK :])
+    assert np.array_equal(g.doc_ids, ids) and np.array_equal(g.scores, scores)
+    assert g.block_last.tolist() == row["block_last"]
+    assert g.block_max.tolist() == row["block_max"]
 
 
 def test_parts_cover_disjoint_doc_ranges(engines):
@@ -456,6 +459,15 @@ def test_dict_version_two_rapid_bumps_distinct(spark, tmp_path):
     v2 = read_dict_version(spark, root)
     assert v1 and v2 and v1 != v2
     assert len(v1) == 32  # uuid4 hex
+    # a local marker is read in-process; the py4j read that every other
+    # filesystem takes reads the same version, and None when it is missing
+    from searchenginer_spark.plans.bm25 import _dict_version_marker
+
+    fs, p, local = _dict_version_marker(spark, root)
+    assert local is not None
+    assert read_dict_version(spark, root, (fs, p, None)) == v2
+    fs, p, _ = _dict_version_marker(spark, str(tmp_path / "none"))
+    assert read_dict_version(spark, str(tmp_path / "none"), (fs, p, None)) is None
 
     # a handle resolves the marker once and reads it through that path:
     # a missing marker reads as None, two back-to-back bumps as two versions

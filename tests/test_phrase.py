@@ -94,11 +94,13 @@ def multiblock(spark):
     return Bm25CompressedIndex(spark, postings, term_dict), pydocs
 
 
-def test_decode_positions_blocks_matches_full(multiblock):
+def test_decoded_positions_match_full_decode(multiblock):
+    """The loader's positions of a >3-block hot term equal the row's full
+    decode, posting by posting, in every block."""
     from searchenginer_spark.operators.postings import (
         BLOCK,
-        decode_positions_blocks,
         decode_positions_flat,
+        decode_table,
     )
 
     idx, _ = multiblock
@@ -106,18 +108,78 @@ def test_decode_positions_blocks_matches_full(multiblock):
     assert row is not None, "fixture needs a >3-block hot term"
     tfs = decode_tfs(row["tfs"])
     flat_full, starts_full, counts_full = decode_positions_flat(row["positions"], tfs)
-    nblocks = len(row["block_pos_off"])
-    # every strided subset of blocks decodes to the full decode's values
-    for needed in (np.array([0]), np.array([nblocks - 1]), np.arange(0, nblocks, 2)):
-        flat, starts, counts, pidx = decode_positions_blocks(
-            row["positions"], row["tfs"],
-            np.asarray(row["block_pos_off"]), np.asarray(row["block_tf_off"]),
-            row["n"], needed,
+    g = decode_table(
+        idx.postings.filter(idx.postings.term_id == row["term_id"]).toArrow()
+    ).term(row["term_id"])
+    assert np.array_equal(g.pos_off[:-1] - g.pos_off[0], starts_full)
+    assert np.array_equal(np.diff(g.pos_off), counts_full)
+    assert np.array_equal(g.positions[g.pos_off[0] : g.pos_off[-1]], flat_full)
+
+
+def test_decode_table_matches_row_decoders(spark):
+    """decode_table over a multi-part, multi-block positions index: every
+    term's flat arrays equal its rows' per-row decodes concatenated in part
+    order, its blocks are the flat list's 128-posting blocks, and a term
+    one doc repeats 10^5 times keeps its positions exact. One row holds
+    exactly 2 * BLOCK postings."""
+    from searchenginer_spark.operators.postings import (
+        BLOCK,
+        decode_doc_ids,
+        decode_positions_flat,
+        decode_scores,
+        decode_table,
+    )
+
+    def text(i: int) -> str:
+        words = [f"w{i % 7}"] * (1 + i % 3) + ["common"]
+        # alpha: docs 0-255 of part 0 (n = 2 * BLOCK), 300-429 of part 1,
+        # all of part 2
+        if i < 256 or 300 <= i < 430 or i >= 600:
+            words.insert(i % len(words), "alpha")
+        if i == 5:
+            words += ["beta"] * 100_000
+        return " ".join(words)
+
+    docs = spark.createDataFrame(
+        [(i, text(i)) for i in range(900)], "doc_id long, text string"
+    )
+    tf = S.term_frequencies(docs, text_col="text", with_positions=True)
+    dl = S.doc_lengths(tf)
+    term_dict = build_term_dict(S.document_frequencies(tf))
+    table = build_postings(
+        tf, dl, term_dict, S.corpus_stats(dl), docs_per_part=300
+    ).toArrow()
+    index = decode_table(table)
+    rows = sorted(table.to_pylist(), key=lambda r: (r["term_id"], r["part"]))
+    assert any(r["n"] == 2 * BLOCK for r in rows)
+    assert index.term_ids.tolist() == sorted({r["term_id"] for r in rows})
+    for t in index.term_ids.tolist():
+        mine = [r for r in rows if r["term_id"] == t]
+        g = index.term(t)
+        ids = np.concatenate([decode_doc_ids(r["docs"], r["n"]) for r in mine])
+        tfs = np.concatenate([decode_tfs(r["tfs"]) for r in mine])
+        assert np.array_equal(g.doc_ids, ids), t
+        assert np.array_equal(g.scores, np.concatenate([decode_scores(r["scores"]) for r in mine]))
+        assert np.array_equal(g.tfs, tfs)
+        flat = np.concatenate(
+            [decode_positions_flat(r["positions"], decode_tfs(r["tfs"]))[0] for r in mine]
         )
-        for local, g in enumerate(pidx.tolist()):
-            a = flat[starts[local] : starts[local] + counts[local]]
-            b = flat_full[starts_full[g] : starts_full[g] + counts_full[g]]
-            assert np.array_equal(a, b), (g, needed)
+        assert np.array_equal(np.diff(g.pos_off), tfs)
+        assert np.array_equal(g.positions[g.pos_off[0] : g.pos_off[-1]], flat), t
+        ends = np.minimum(np.arange(BLOCK, ids.size + BLOCK, BLOCK), ids.size)
+        assert np.array_equal(g.block_last, ids[ends - 1])
+        assert np.array_equal(
+            g.block_max, np.maximum.reduceat(g.scores, np.arange(0, ids.size, BLOCK))
+        )
+    term_ids = {r["term"]: r["term_id"] for r in term_dict.collect()}
+    alpha = index.term(term_ids["alpha"])
+    assert alpha.doc_ids.size == 256 + 130 + 300 and alpha.block_last.size == 6
+    beta = index.term(term_ids["beta"])
+    assert beta.doc_ids.tolist() == [5]
+    start = len(text(5).split()) - 100_000
+    assert np.array_equal(
+        beta.positions[beta.pos_off[0] : beta.pos_off[1]], np.arange(start, start + 100_000)
+    )
 
 
 @pytest.mark.parametrize("phrase", ["int return", "def id42", "return return"])

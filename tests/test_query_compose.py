@@ -634,6 +634,10 @@ _ROWS_QUERIES = [
     ("zzz_not_here", "or"),
     ("+zzz_not_here data", "or"),
     ("-data -merge", "or"),
+    # 3+ terms co-occurring in docs of several parts: each score is a sum
+    # of 3+ impacts, so these pin the summation order of both executors
+    ("spark merge window data", "or"),
+    ("+spark +merge +window +data", "or"),
 ]
 
 
@@ -747,6 +751,44 @@ def test_search_query_batch_resident_equals_distributed(
     assert frame.schema == dist.schema
 
 
+def test_multi_term_rows_queries_span_parts(qindex):
+    """The 3+-term entries of _ROWS_QUERIES match docs of several parts
+    (docs_per_part=128), so the summation-order checks above see them."""
+    for query in ("spark merge window data", "+spark +merge +window +data"):
+        hits = qindex.search_query_rows(query, k=10)
+        assert len({d // 128 for d, _ in hits}) > 1, query
+
+
+def test_resident_queries_decode_nothing(qindex, spark, monkeypatch):
+    """Once one search has filled the caches, a batch and a point query
+    score from the decoded resident index: no varbyte decode and no Spark
+    job. The spy is live: decoding an encoded part calls it."""
+    import pandas as pd
+    import pyarrow as pa
+
+    from searchenginer_spark.functions import codec
+    from searchenginer_spark.operators import postings as P
+
+    qindex.search_query_rows("spark", k=1)  # fills the dict cache + resident index
+    calls = []
+
+    def spy(buf):
+        calls.append(len(buf))
+        return codec.varbyte_decode(buf)
+
+    monkeypatch.setattr(P, "varbyte_decode", spy)
+    queries = [q for q, _mode in _ROWS_QUERIES]
+    batch, jobs = count_jobs(spark, lambda: _batch_rows(qindex.search_query_batch(queries, k=10)))
+    rows, row_jobs = count_jobs(
+        spark, lambda: qindex.search_query_rows("spark merge window data", k=10)
+    )
+    assert batch and rows
+    assert (jobs, row_jobs, calls) == (0, 0, [])
+    pdf = pd.DataFrame({"part": [0], "term_id": [1], "doc_id": [3], "tf": [1], "df": [1]})
+    P.decode_table(pa.Table.from_pandas(P._encode_part(pdf, 4.0, 1.0)))
+    assert calls
+
+
 def test_search_query_batch_resident_unmatchable(qindex, monkeypatch):
     """An all-unmatchable batch is an empty frame with the distributed
     frame's schema."""
@@ -837,7 +879,7 @@ def test_search_batch_resident_equals_distributed(qindex, spark, monkeypatch, mo
 def test_and_search_equals_must_grammar_bitwise(qindex):
     """Plain AND terms and +MUST grammar terms are one compiled form, so
     their scores agree to the last bit however many terms there are (the
-    kernel adds MUST scores rarest first)."""
+    kernel adds every term's score in ascending term_id order)."""
     for text in ("data query spark", "the data query value", "data data spark merge"):
         want = _rows(qindex.search(text, k=10, mode="and"))
         got = _rows(qindex.search_query(" ".join("+" + t for t in text.split()), k=10))

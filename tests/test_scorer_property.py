@@ -2,9 +2,10 @@
 
 hypothesis generates random small corpora; the REAL encoder
 (`operators.postings._encode_part`) produces compressed block-max rows,
-and the per-part kernel (`plans/bm25._score_part_bool`, with its
-disjunctive branch `_score_part_or`) must reproduce a brute-force python BM25 on every example — including
-multi-block postings, the conjunctive branch's carried scores, MaxScore's
+the loader (`operators.postings.decode_table`) decodes them, and the
+kernel (`plans/bm25._score_part_bool`, with its disjunctive branch
+`_score_part_or`) must reproduce a brute-force python BM25 on every
+example — including multi-block postings, the conjunctive branch, MaxScore's
 tau seed + essential split, the r4 block-max segment pruning,
 deterministic kth-tie handling, phrase / NEAR matching, boolean NOT and
 allow-set filtering. These paths carry every query; a generator is
@@ -17,11 +18,12 @@ import math
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 import pytest  # noqa: F401  (pytest collects via hypothesis decorators)
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from searchenginer_spark.operators.postings import _encode_part
+from searchenginer_spark.operators.postings import _encode_part, decode_table
 from searchenginer_spark.plans.bm25 import _score_part_bool, _score_part_or
 
 K1, B = 1.2, 0.75
@@ -48,6 +50,12 @@ def corpora(draw):
     return docs
 
 
+def _decoded(enc: pd.DataFrame) -> list:
+    """Every term's decoded postings (TermPostings), the kernel's input."""
+    index = decode_table(pa.Table.from_pandas(enc, preserve_index=False))
+    return [index.term(t) for t in index.term_ids.tolist()]
+
+
 def _encode(docs: dict) -> tuple[list, dict, float, float]:
     rows = []
     df = {}
@@ -61,7 +69,7 @@ def _encode(docs: dict) -> tuple[list, dict, float, float]:
     n_docs = float(len(docs))
     avgdl = float(np.mean([sum(t.values()) for t in docs.values()]))
     enc = _encode_part(pdf, n_docs, avgdl)
-    return enc.to_dict("records"), df, n_docs, avgdl
+    return _decoded(enc), df, n_docs, avgdl
 
 
 def _brute(docs, df, n_docs, avgdl, qtf):
@@ -91,7 +99,7 @@ def test_or_scorer_matches_bruteforce(docs, k, repeat_first):
     rows, df, n_docs, avgdl = _encode(docs)
     qtf = {t: (2.0 if repeat_first and i == 0 else 1.0)
            for i, t in enumerate(sorted(df))}
-    groups = [g for g in rows if g["term_id"] in qtf]
+    groups = [g for g in rows if g.term_id in qtf]
     got_d, got_s = _score_part_or(groups, qtf, k)
     want = _topk_ref(_brute(docs, df, n_docs, avgdl, qtf), k)
     assert got_d == [d for d, _ in want]
@@ -111,7 +119,7 @@ def test_and_scorer_matches_bruteforce(docs, k, weights):
     rows, df, n_docs, avgdl = _encode(docs)
     terms = sorted(df)[: len(weights)]
     qtf = {t: float(w) for t, w in zip(terms, weights)}
-    groups = [g for g in rows if g["term_id"] in qtf]
+    groups = [g for g in rows if g.term_id in qtf]
     got_d, got_s = _score_part_bool(groups, terms, [], qtf, k)
     brute = _brute(docs, df, n_docs, avgdl, qtf)
     conj = {d: s for d, s in brute.items()
@@ -132,8 +140,8 @@ def test_or_scorer_with_neg_and_allow(docs, k):
     if not pos:
         return
     allow = np.array(sorted(d for d in docs if d % 2 == 0), dtype=np.int64)
-    groups = [g for g in rows if g["term_id"] in pos]
-    neg = [g for g in rows if g["term_id"] == neg_t]
+    groups = [g for g in rows if g.term_id in pos]
+    neg = [g for g in rows if g.term_id == neg_t]
     got_d, got_s = _score_part_or(groups, pos, k, None, neg, allow)
     brute = _brute(docs, df, n_docs, avgdl, pos)
     keep = {d: s for d, s in brute.items()
@@ -177,7 +185,7 @@ def _encode_pos(tok_docs: dict):
     n_docs = float(len(tok_docs))
     avgdl = float(np.mean([len(t) for t in tok_docs.values()]))
     enc = _encode_part(pdf, n_docs, avgdl)
-    return enc.to_dict("records"), df, n_docs, avgdl
+    return _decoded(enc), df, n_docs, avgdl
 
 
 @settings(max_examples=40, deadline=None, derandomize=True)
@@ -272,8 +280,8 @@ def test_bool_scorer_matches_bruteforce(
         if with_allow
         else None
     )
-    pos_rows = [g for g in rows if g["term_id"] != neg_t]
-    neg = [g for g in rows if g["term_id"] == neg_t]
+    pos_rows = [g for g in rows if g.term_id != neg_t]
+    neg = [g for g in rows if g.term_id == neg_t]
     got_d, got_s = _score_part_bool(
         pos_rows, must, should, qtf, k, phrases, None, neg, allow, ()
     )

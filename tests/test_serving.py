@@ -205,3 +205,25 @@ def test_search_batch_route(server):
     with pytest.raises(urllib.error.HTTPError) as e:
         _post(server, "/api/search_batch", "{}", "application/json")
     assert e.value.code == 400
+
+
+def test_warm_routes_make_no_jvm_call(server, spark, monkeypatch):
+    """Once warm, a search and a suggest on an index root on the local
+    filesystem make no py4j call: the dict_version check reads the marker
+    in this process, so a handler thread (a new one per request) never
+    opens its own JVM connection. The spy is live: a JVM call passes it."""
+    assert _get(server, "/api/search?query=int&k=5")[0] == 200
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    calls = []
+
+    def spy(*args, **kwargs):
+        calls.append(args[0][:20] if args else None)
+        return send(*args, **kwargs)
+
+    monkeypatch.setattr(client, "send_command", spy)
+    for path in ("/api/search?query=int+return&k=5", "/api/suggest?word=retrun&k=5"):
+        assert _get(server, path)[0] == 200
+    assert calls == []
+    spark.sparkContext._jsc.sc().applicationId()
+    assert calls
