@@ -17,7 +17,7 @@ Builds the bench corpus + index at bench scale, then measures BOTH layers:
      + second term probed at those docs).
 
 Usage: python scripts/or_query_probe.py [n_docs] [reps]
-(the index is written under $TMPDIR, default /tmp)
+(the index is written under $TMPDIR, default /tmp, and removed on exit)
 Prints one JSON line; findings recorded in PLANS.md §7.
 """
 
@@ -25,6 +25,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import sys
 import tempfile
 import time
@@ -124,39 +125,42 @@ def main():
     docs = build_docs(spark, n_docs=n_docs, seed=7).persist()
     docs.count()
     root = os.path.join(tempfile.gettempdir(), f"or_probe_idx_{n_docs}")
-    build_index(docs, root, docs_per_part=max(256, n_docs // 64))
-    idx = open_index(spark, root)
-    idx.postings = idx.postings.persist()
-    idx.term_dict = idx.term_dict.persist()
-    idx.search("int return", k=10).collect()
+    try:
+        build_index(docs, root, docs_per_part=max(256, n_docs // 64))
+        idx = open_index(spark, root)
+        idx.postings = idx.postings.persist()
+        idx.term_dict = idx.term_dict.persist()
+        idx.search("int return", k=10).collect()
 
-    out = {"n_docs": n_docs}
-    for name, (q, mode) in {"and_hot": (AND_Q, "and"), "or_hot": (OR_Q, "or")}.items():
-        runs = []
-        for _ in range(reps):
-            t = time.monotonic()
-            idx.search(q, k=10, mode=mode).collect()
-            runs.append(time.monotonic() - t)
-        out[f"{name}_e2e_med_ms"] = round(1000 * sorted(runs)[len(runs) // 2], 1)
+        out = {"n_docs": n_docs}
+        for name, (q, mode) in {"and_hot": (AND_Q, "and"), "or_hot": (OR_Q, "or")}.items():
+            runs = []
+            for _ in range(reps):
+                t = time.monotonic()
+                idx.search(q, k=10, mode=mode).collect()
+                runs.append(time.monotonic() - t)
+            out[f"{name}_e2e_med_ms"] = round(1000 * sorted(runs)[len(runs) // 2], 1)
 
-    and_parts, and_flat, and_qtf = part_groups(idx, AND_Q)
-    or_parts, or_flat, or_qtf = part_groups(idx, OR_Q)
-    out["and_rows"] = sum(len(v) for v in and_parts.values())
-    out["or_rows"] = sum(len(v) for v in or_parts.values())
-    out["and_postings"] = sum(g.doc_ids.size for g in and_flat)
-    out["or_postings"] = sum(g.doc_ids.size for g in or_flat)
-    and_fn = lambda g, q: B._score_part_bool(g, list(q), [], q, 10, round_to=4)  # noqa: E731
-    or_fn = lambda g, q: B._score_part_or(g, q, 10, 4)  # noqa: E731
-    out["and_scorer_ms"] = time_scorer(and_fn, and_parts.values(), and_qtf, reps)
-    out["or_scorer_ms"] = time_scorer(or_fn, or_parts.values(), or_qtf, reps)
-    out["and_flat_scorer_ms"] = time_scorer(and_fn, [and_flat], and_qtf, reps)
-    out["or_flat_scorer_ms"] = time_scorer(or_fn, [or_flat], or_qtf, reps)
-    pr = or_prune_stats(or_parts, or_qtf)
-    for name, st in pr.items():
-        out[f"or_blocks_live_{name}"] = st["live"]
-        out[f"or_cand_bound_{name}"] = st["cand"]
-    out["or_blocks_total"] = pr["shipped"]["total"]
-    print(json.dumps(out))
+        and_parts, and_flat, and_qtf = part_groups(idx, AND_Q)
+        or_parts, or_flat, or_qtf = part_groups(idx, OR_Q)
+        out["and_rows"] = sum(len(v) for v in and_parts.values())
+        out["or_rows"] = sum(len(v) for v in or_parts.values())
+        out["and_postings"] = sum(g.doc_ids.size for g in and_flat)
+        out["or_postings"] = sum(g.doc_ids.size for g in or_flat)
+        and_fn = lambda g, q: B._score_part_bool(g, list(q), [], q, 10, round_to=4)  # noqa: E731
+        or_fn = lambda g, q: B._score_part_or(g, q, 10, 4)  # noqa: E731
+        out["and_scorer_ms"] = time_scorer(and_fn, and_parts.values(), and_qtf, reps)
+        out["or_scorer_ms"] = time_scorer(or_fn, or_parts.values(), or_qtf, reps)
+        out["and_flat_scorer_ms"] = time_scorer(and_fn, [and_flat], and_qtf, reps)
+        out["or_flat_scorer_ms"] = time_scorer(or_fn, [or_flat], or_qtf, reps)
+        pr = or_prune_stats(or_parts, or_qtf)
+        for name, st in pr.items():
+            out[f"or_blocks_live_{name}"] = st["live"]
+            out[f"or_cand_bound_{name}"] = st["cand"]
+        out["or_blocks_total"] = pr["shipped"]["total"]
+        print(json.dumps(out))
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
 
 
 if __name__ == "__main__":

@@ -12,10 +12,18 @@ reference pads results to exactly 10 with "" (fixed-width RPC response,
 server.pb_skeleton.cc:169-185); ``pad=True`` reproduces that wire shape,
 the default returns only real candidates.
 
-Driver shape (:func:`suggest_sorted`, used by
+Driver shape (:class:`CodeGroups`, used by
 ``Bm25CompressedIndex.suggest_rows`` over its driver dict cache): the same
-ranking computed in numpy — the reference's in-memory WordSearch service
-(srpc/WordSearch/ReadIndist.cpp) without a Spark job per request.
+ranking computed in numpy, the reference's in-memory WordSearch service
+(srpc/WordSearch/ReadIndist.cpp) without a Spark job per request. The
+dictionary is grouped once per snapshot by code-point length into
+transposed code-point matrices, term-sorted, so the first-character
+prune is one ``searchsorted`` range per character of the word in each
+group. Groups are scored in descending order of the best sim their
+length allows (the distance is at least the length difference), and the
+scan stops once the k-th best sim found is strictly above the next
+group's bound. :func:`levenshtein` is the one
+kernel; fuzzy query expansion (:meth:`CodeGroups.within`) runs on it too.
 """
 
 from __future__ import annotations
@@ -69,51 +77,116 @@ def suggest(
     return out
 
 
-#: DP cells (candidates x longest candidate) scored per numpy block by
-#: suggest_sorted: a few MB of int32 rows whatever the dictionary size
-_DP_CELLS = 1 << 20
+def levenshtein(word: np.ndarray, codes: np.ndarray) -> np.ndarray:
+    """Levenshtein distance by code point (what Spark's ``levenshtein``
+    counts) from ``word``, a code-point vector, to each column of
+    ``codes``, an ``(L, n)`` code-point matrix of n terms of length L.
+
+    Wagner-Fischer, one DP column per term position, vectorised over the
+    n terms. The column holds ``K(i, j) = i + j - D(i, j)`` rather than
+    the distance D: a deletion or an insertion then keeps K and a
+    diagonal step adds 1, or 2 on a match, so the insertions are a
+    running maximum down the column and K(i, 0) is always 0. Every K lies
+    in ``[0, L + len(word)]``, which is why uint8 holds it below 255."""
+    L, n = codes.shape
+    lw = word.size
+    dt = np.uint8 if L + lw < 255 else np.int32
+    # one spare cell per row: a ufunc whose output row touches an input
+    # row end to end takes numpy's overlap-copy path, ~10x slower
+    col = np.zeros((lw + 1, n + 1), dtype=dt)[:, :n]
+    nxt = np.zeros((lw + 1, n + 1), dtype=dt)[:, :n]
+    word = word[:, None]
+    for i in range(L):
+        np.add(col[:-1], word == codes[i], out=nxt[1:])  # diagonal
+        nxt[1:] += 1
+        np.maximum(nxt[1:], col[1:], out=nxt[1:])  # deletion
+        for j in range(1, lw + 1):  # insertions
+            np.maximum(nxt[j], nxt[j - 1], out=nxt[j])
+        col, nxt = nxt, col
+    return L + lw - col[lw].astype(np.int64)
 
 
-def edit_distances(word: str, terms: list[str], lens: np.ndarray) -> np.ndarray:
-    """Levenshtein distance from ``word`` to each of ``terms`` by code
-    point (what Spark's ``levenshtein`` counts); ``lens`` are the terms'
-    code-point lengths. One DP row per character of ``word``, vectorised
-    across the terms: a ``U``-dtype view gives their code points, and a
-    term's distance is read at its own length, so the padding past it
-    never feeds back."""
-    width = max(int(lens.max()), 1)
-    codes = np.array(terms, dtype=f"U{width}").view(np.uint32).reshape(len(terms), width)
-    cols = np.arange(width + 1, dtype=np.int32)
-    row = np.tile(cols, (len(terms), 1))  # distances from the empty prefix
-    for j, c in enumerate(word, 1):
-        cur = np.empty_like(row)
-        cur[:, 0] = j
-        # deletion or substitution from the previous row...
-        np.minimum(row[:, 1:] + 1, row[:, :-1] + (codes != ord(c)), out=cur[:, 1:])
-        # ...then insertions: min over i' <= i of cur[i'] + (i - i')
-        row = np.minimum.accumulate(cur - cols, axis=1) + cols
-    return row[np.arange(len(terms)), lens]
+def _codes(word: str) -> np.ndarray:
+    return np.fromiter(map(ord, word), dtype=np.uint32, count=len(word))
 
 
-def suggest_sorted(
-    word: str, terms: list[str], lens: np.ndarray, k: int
-) -> list[tuple[str, float]]:
-    """The driver twin of :func:`suggest` with its defaults: top-k
-    ``(term, sim)`` over ``terms``, which are already prefix-pruned and in
-    ascending order (``lens`` their code-point lengths), for the
-    lowercased ``word``. Same sim arithmetic in float64 and the same
-    (sim desc, term asc) rank, so the rows equal the operator's bit for
-    bit. Candidates are scored longest first in blocks of at most
-    ``_DP_CELLS`` DP cells."""
-    n = len(terms)
-    dist = np.empty(n, dtype=np.int64)
-    by_len = np.argsort(-lens, kind="stable")
-    start = 0
-    while start < n:
-        stop = start + max(1, _DP_CELLS // max(int(lens[by_len[start]]), 1))
-        at = by_len[start:stop]
-        dist[at] = edit_distances(word, [terms[i] for i in at], lens[at])
-        start = stop
-    sim = 1.0 - dist / np.maximum(lens, len(word))
-    top = np.argsort(-sim, kind="stable")[:k]
-    return [(terms[i], float(sim[i])) for i in top]
+class CodeGroups:
+    """A term-sorted dictionary grouped by code-point length, built once
+    per dictionary snapshot: the driver's resident suggest dictionary,
+    the in-memory twin of the reference's WordSearch index
+    (srpc/WordSearch/ReadIndist.h), which it also keeps by first
+    character.
+
+    Group ``g`` holds the terms of length ``lens[g]`` in term order as a
+    transposed ``(L, n_L)`` uint32 code-point matrix, whose first row is
+    the sorted first-code-point column, and each term's position in the
+    term-sorted dictionary (``rows``). Memory is 4 B per code point plus
+    8 B per term, with no padding across lengths: one pathological long
+    term costs only its own length."""
+
+    def __init__(self, terms: list[str]):
+        lens = np.fromiter(map(len, terms), dtype=np.int64, count=len(terms))
+        order = np.argsort(lens, kind="stable")  # term order within a length
+        self.lens, starts = np.unique(lens[order], return_index=True)
+        self.codes: list[np.ndarray] = []
+        self.rows = np.split(order, starts[1:])
+        for L, rows in zip(self.lens.tolist(), self.rows):
+            width = max(L, 1)  # U0 is not a dtype; the empty term has no codes
+            flat = np.array([terms[i] for i in rows], dtype=f"U{width}")
+            mat = flat.view(np.uint32).reshape(len(rows), width)[:, :L]
+            self.codes.append(np.ascontiguousarray(mat.T))
+
+    @property
+    def nbytes(self) -> int:
+        return sum(c.nbytes + r.nbytes for c, r in zip(self.codes, self.rows))
+
+    def top_k(self, word: str, k: int) -> tuple[np.ndarray, np.ndarray]:
+        """Positions and sims of the top-k terms for :func:`suggest` with
+        its defaults, for the lowercased ``word``: the terms whose first
+        character occurs in it, ranked by ``1 - lev / max(len)`` (float64,
+        Spark's arithmetic) descending, position (term order) ascending.
+
+        Groups are visited in descending order of their bound
+        ``1 - |L - lw| / max(L, lw)``: the distance is at least the
+        length difference, so no term of the group scores above it. The
+        scan stops once k candidates are scored and the k-th best sim is
+        strictly above the next group's bound; a term tying it could still
+        win on term order. The bound must be that same float expression:
+        ``6/7`` is not ``1 - 1/7`` in float64."""
+        lw = len(word)
+        w = _codes(word)
+        chars = np.unique(w)
+        bound = 1.0 - np.abs(self.lens - lw) / np.maximum(self.lens, lw)
+        pos = np.empty(0, dtype=np.int64)
+        sim = np.empty(0, dtype=np.float64)
+        for g in np.argsort(-bound, kind="stable").tolist():
+            if k < 1 or (pos.size == k and sim[-1] > bound[g]):
+                break
+            codes, rows = self.codes[g], self.rows[g]
+            L = len(codes)
+            if not L:
+                continue  # the empty term has no first character
+            # the first-character prune: one contiguous range per character
+            lo = codes[0].searchsorted(chars, "left").tolist()
+            hi = codes[0].searchsorted(chars, "right").tolist()
+            spans = [slice(a, b) for a, b in zip(lo, hi) if b > a]
+            if not spans:
+                continue
+            d = levenshtein(w, np.concatenate([codes[:, s] for s in spans], axis=1))
+            pos = np.concatenate([pos, *(rows[s] for s in spans)])
+            sim = np.concatenate([sim, 1.0 - d / max(L, lw)])
+            best = np.lexsort((pos, -sim))[:k]
+            pos, sim = pos[best], sim[best]
+        return pos, sim
+
+    def within(self, word: str, dist: int) -> tuple[np.ndarray, np.ndarray]:
+        """Positions and distances of every term within edit distance
+        ``dist`` of ``word``, in group order: only the groups whose length
+        is within ``dist`` of the word's are scored."""
+        w = _codes(word)
+        near = np.nonzero(np.abs(self.lens - len(word)) <= dist)[0].tolist()
+        d = [levenshtein(w, self.codes[g]) for g in near]
+        pos = np.concatenate([np.empty(0, np.int64), *(self.rows[g] for g in near)])
+        d = np.concatenate([np.empty(0, np.int64), *d])
+        keep = d <= dist
+        return pos[keep], d[keep]

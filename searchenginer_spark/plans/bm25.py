@@ -57,6 +57,7 @@ import re
 
 from ..functions.tokenize import IDENT_RE
 from ..operators.postings import DecodedPostings, TermPostings, decode_table
+from ..operators.suggest import CodeGroups, suggest
 
 
 def _drop_excluded(cand: np.ndarray, neg: list) -> np.ndarray:
@@ -433,31 +434,6 @@ def _score_queries(
         out_d += d
         out_s += s
     return out_q, out_d, out_s
-
-
-def _lev_within(a: str, b: str, maxd: int) -> int:
-    """Levenshtein distance of ``a``/``b`` when it is <= ``maxd``, else
-    ``maxd + 1`` (any value past the cutoff is equivalent). Classic DP
-    with a row-min early abandon — once every cell of a row exceeds
-    ``maxd`` no later row can come back under it. Matches Spark's
-    ``levenshtein`` on the same inputs (plain unit-cost edits)."""
-    if abs(len(a) - len(b)) > maxd:
-        return maxd + 1
-    if a == b:
-        return 0
-    prev = list(range(len(b) + 1))
-    for i, ca in enumerate(a, 1):
-        cur = [i]
-        row_min = i
-        for j, cb in enumerate(b, 1):
-            v = min(prev[j] + 1, cur[j - 1] + 1, prev[j - 1] + (ca != cb))
-            cur.append(v)
-            if v < row_min:
-                row_min = v
-        if row_min > maxd:
-            return maxd + 1
-        prev = cur
-    return prev[-1] if prev[-1] <= maxd else maxd + 1
 
 
 _REGEX_META = set(".^$*+?{}[]|()\\")
@@ -950,7 +926,9 @@ class Bm25CompressedIndex:
         self._sorted_terms: list[str] | None = None
         self._sorted_ids: np.ndarray | None = None
         self._sorted_dfs: np.ndarray | None = None
-        self._sorted_lens: np.ndarray | None = None
+        #: the term-sorted dictionary grouped by length (CodeGroups), built
+        #: on the first suggest_rows or fuzzy expansion of a snapshot
+        self._code_groups: CodeGroups | None = None
         #: the cached ids/dfs re-sorted by term_id: df lookup by id
         self._ids_by_id: np.ndarray | None = None
         self._dfs_by_id: np.ndarray | None = None
@@ -989,7 +967,7 @@ class Bm25CompressedIndex:
         self._dict_cache = None
         self._dict_cache_checked = False
         self._sorted_terms = self._sorted_ids = self._sorted_dfs = None
-        self._sorted_lens = self._ids_by_id = self._dfs_by_id = None
+        self._code_groups = self._ids_by_id = self._dfs_by_id = None
         self._resident = None
         self._plan_cache.clear()  # stale-keyed plans reference dropped tables
 
@@ -1013,11 +991,6 @@ class Bm25CompressedIndex:
                 self._sorted_dfs = tbl.column("df").to_numpy().astype(np.int64)
                 self._dict_cache = dict(
                     zip(self._sorted_terms, self._sorted_ids.tolist())
-                )
-                # per-term code-point lengths: fuzzy expansion's length band
-                # (|len(term) - len(word)| <= dist) is a vectorized mask
-                self._sorted_lens = (
-                    pc.utf8_length(tbl.column("term")).to_numpy().astype(np.int64)
                 )
                 by_id = np.argsort(self._sorted_ids, kind="stable")
                 self._ids_by_id = self._sorted_ids[by_id]
@@ -1194,32 +1167,20 @@ class Bm25CompressedIndex:
         over the external term dictionary (suggest's ranking, applied as
         query expansion). Length pre-filter bounds the levenshtein scan.
 
-        Cached path (mirrors _expand_prefix/_expand_regexp): a vectorized
-        length-band mask over the cached arrays picks candidates, a
-        row-min-cutoff DP scores them in-process — zero Spark jobs, which
-        matters because a point query otherwise pays the ~0.3 s job floor
-        PER fuzzy term. Uncached dicts keep the parallel Spark
-        levenshtein probe (O(V/cores), the web-scale shape)."""
+        Cached path: the length groups of the term dictionary within
+        ``dist`` of the word's length are scored by suggest's edit-distance
+        kernel (:class:`~searchenginer_spark.operators.suggest.CodeGroups`)
+        on the driver — zero Spark jobs, which matters because a point
+        query otherwise pays the ~0.3 s job floor PER fuzzy term. Uncached
+        dicts keep the parallel Spark levenshtein probe (O(V/cores), the
+        web-scale shape)."""
         if not word:
             return []
         if self._maybe_cache_dict() is not None:
-            band = np.nonzero(
-                np.abs(self._sorted_lens - len(word)) <= dist
-            )[0]
-            terms = self._sorted_terms
-            dfs = self._sorted_dfs
-            # candidates iterate in term order, sorted() is stable, so the
-            # (distance asc, df desc) key leaves term-asc ties in place —
-            # identical ranking to the Spark path's orderBy
-            cands = []
-            for i in band:
-                d = _lev_within(word, terms[i], dist)
-                if d <= dist:
-                    cands.append((d, -dfs[i], i))
-            cands.sort()
-            return self._sorted_ids[
-                [i for _, _, i in cands[:max_expansions]]
-            ].tolist()
+            pos, d = self._groups().within(word, dist)
+            # positions are term order: the Spark path's orderBy
+            rank = np.lexsort((pos, -self._sorted_dfs[pos], d))[:max_expansions]
+            return self._sorted_ids[pos[rank]].tolist()
         rows = (
             self.term_dict.filter(
                 F.length("term").between(len(word) - dist, len(word) + dist)
@@ -1666,24 +1627,26 @@ class Bm25CompressedIndex:
         operators.suggest.suggest(term_dict, word, k).collect()]``, the
         gateway's /api/suggest shape.
 
-        With a driver dict cache this runs no Spark job: the operator's
-        first-character prune is one bisected range of the term-sorted
-        cache per distinct character of the word, and
-        :func:`~searchenginer_spark.operators.suggest.suggest_sorted`
-        scores and ranks the candidates in numpy. Without a cache (or for
-        an empty word) it collects the operator."""
-        from ..operators.suggest import suggest, suggest_sorted
-
+        With a driver dict cache this runs no Spark job: the candidates
+        are ranked on the driver by
+        :meth:`~searchenginer_spark.operators.suggest.CodeGroups.top_k`
+        over the dictionary grouped by length. Without a cache (or for an
+        empty word) it collects the operator."""
         self._check_version()
         low = word.lower()
         if not low or self._maybe_cache_dict() is None:
             rows = suggest(self.term_dict, word, k=k).collect()
             return [(r["term"], r["sim"]) for r in rows]
-        at = np.concatenate(
-            [np.arange(*self._sorted_range(c)) for c in sorted(set(low))]
-        )
-        terms = [self._sorted_terms[i] for i in at]
-        return suggest_sorted(low, terms, self._sorted_lens[at], k)
+        pos, sim = self._groups().top_k(low, k)
+        terms = self._sorted_terms
+        return [(terms[p], s) for p, s in zip(pos.tolist(), sim.tolist())]
+
+    def _groups(self) -> CodeGroups:
+        """The dict cache's terms grouped by length, built once per
+        snapshot; callers have filled the dict cache."""
+        if self._code_groups is None:
+            self._code_groups = CodeGroups(self._sorted_terms)
+        return self._code_groups
 
     def search_query_batch(
         self,

@@ -17,13 +17,15 @@ postings decoded flat per term (``operators/postings.py::decode_table``),
 ``/api/search`` (``search_query_rows``) and ``/api/suggest``
 (``suggest_rows``) run NO Spark job — a term lookup, the query's terms
 scored on the driver straight from the decoded arrays, or a numpy
-edit-distance rank over the first-letter candidates; what is left per request is one ``dict_version`` read
-(a local file read for a root on the local filesystem: no py4j call, so
-a handler thread never opens its own JVM connection; elsewhere three
-py4j calls, ~0.6 ms). Measured one request at a time on a
-4-vCPU host (1000 docs with positions, local[4]): search 14 ms mean and
-suggest 18-22 ms median, against 110 ms and 92 ms when each ran one
-Spark job. On a larger index a query whose own terms hold at most that
+edit-distance rank over the dictionary grouped by length
+(``operators/suggest.py::CodeGroups``, built once per snapshot); what is
+left per request is one ``dict_version`` read (a local file read for a
+root on the local filesystem: no py4j call, so a handler thread never
+opens its own JVM connection; elsewhere three py4j calls, ~0.6 ms).
+Measured one HTTP request at a time on a 4-vCPU host (the benchmark's
+seed-1 index: 1000 docs with positions, 18,828 terms; local[4]): search
+1.9 ms mean (1.6 ms median) and suggest 2.1 ms mean (1.9 ms median),
+against 110 ms and 92 ms when each ran one Spark job. On a larger index a query whose own terms hold at most that
 many postings is one narrow filtered scan job, scored on the driver;
 larger or faceted queries pay the distributed plan's one-or-two jobs (~0.3-0.5 s
 scheduling floor on local mode, see PLANS.md §6), and suggest without

@@ -392,10 +392,11 @@ def test_search_regexp_alternation_cached_matches_fallback(engines, spark):
 
 
 def test_lev_within_matches_bruteforce():
-    import itertools
+    """Fuzzy expansion's cached path: CodeGroups.within keeps exactly the
+    terms a plain Levenshtein puts within the distance, with it."""
     import random
 
-    from searchenginer_spark.plans.bm25 import _lev_within
+    from searchenginer_spark.operators.suggest import CodeGroups
 
     def lev(a, b):
         prev = list(range(len(b) + 1))
@@ -409,11 +410,13 @@ def test_lev_within_matches_bruteforce():
     rng = random.Random(7)
     words = ["".join(rng.choice("abc_") for _ in range(rng.randint(0, 6)))
              for _ in range(40)]
-    for a, b in itertools.product(words[:20], words[20:]):
+    terms = sorted(set(words[20:]))
+    groups = CodeGroups(terms)
+    for a in words[:20]:
         for maxd in (0, 1, 2):
-            d = lev(a, b)
-            got = _lev_within(a, b, maxd)
-            assert got == (d if d <= maxd else maxd + 1), (a, b, maxd)
+            pos, d = groups.within(a, maxd)
+            want = {t: lev(a, t) for t in terms if lev(a, t) <= maxd}
+            assert {terms[p]: x for p, x in zip(pos.tolist(), d.tolist())} == want, (a, maxd)
 
 
 def test_expand_fuzzy_cached_matches_spark_and_runs_no_job(engines, spark):

@@ -119,7 +119,7 @@ def test_open_handle_sees_folded_terms(spark, tmp_path_factory):
 
 def test_expansion_caches_refresh_after_fold(spark, tmp_path_factory):
     """r5 verdict item 8: the prefix/fuzzy/regexp expansion caches
-    (_sorted_terms/_sorted_lens snapshots in the driver) must be
+    (_sorted_terms/_code_groups snapshots in the driver) must be
     invalidated by a fold that ADDS dictionary terms — expand once
     (warm the caches), fold in new matching terms, expand again on the
     SAME handle, and the new ids' docs must appear. Covers all three

@@ -152,6 +152,8 @@ _SUGGEST_TERMS = [
     "搜索", "搜索引擎", "索引", "引擎",
     "𝒳ab", "𝒳abc", "𝒳", "😀x", "😀😀",
     "a", "ab", "ba",
+    "abcdef", "abcdefx", "abcdefy",
+    "w" * 320,  # one long term: its own length group
 ]
 
 
@@ -179,6 +181,11 @@ def suggest_index(spark):
         ("qqq", 10),  # no term starts with any of its letters
         ("ab", 10),  # ties at sim 0.5 and at sim 0
         ("zeta", 1),
+        # all three at sim 1 - 1/7: abcdef wins the tie from the shorter
+        # length group, whose bound 1 - 1/7 is not below the k-th sim
+        # (a bound computed as 6/7 is, and stops before it)
+        ("abcdefg", 2),
+        pytest.param("w" * 310 + "x", 3, id="long-word"),  # int32 DP cells
     ],
 )
 def test_suggest_rows_equals_operator(spark, suggest_index, word, k):
@@ -206,7 +213,7 @@ def test_suggest_rows_without_dict_cache_runs_operator(spark, suggest_index):
 
 
 def test_edit_distances_match_python_levenshtein():
-    from searchenginer_spark.operators.suggest import edit_distances
+    from searchenginer_spark.operators.suggest import CodeGroups, levenshtein
 
     def lev(a: str, b: str) -> int:
         prev = list(range(len(b) + 1))
@@ -219,10 +226,14 @@ def test_edit_distances_match_python_levenshtein():
 
     rng = np.random.default_rng(7)
     alphabet = list("abc") + ["搜", "𝒳"]
-    terms = [
-        "".join(rng.choice(alphabet, size=rng.integers(0, 9))) for _ in range(300)
-    ]
-    lens = np.array([len(t) for t in terms], dtype=np.int64)
-    for word in ("a", "abca", "搜𝒳b", "ccccccccc"):
-        got = edit_distances(word, terms, lens)
-        assert got.tolist() == [lev(word, t) for t in terms], word
+    terms = sorted(
+        {"".join(rng.choice(alphabet, size=rng.integers(0, 9))) for _ in range(300)}
+        | {"a" * 260}
+    )
+    groups = CodeGroups(terms)
+    assert groups.nbytes == 4 * sum(map(len, terms)) + 8 * len(terms)
+    for word in ("a", "abca", "搜𝒳b", "ccccccccc", "ab" * 130):
+        codes = np.array([ord(c) for c in word], dtype=np.uint32)
+        for mat, rows in zip(groups.codes, groups.rows):
+            got = levenshtein(codes, mat)
+            assert got.tolist() == [lev(word, terms[i]) for i in rows], word
