@@ -33,6 +33,7 @@ from ..cache import CacheScope, current_scope
 from ..functions.hashing import minhash_signatures, simhash_bands, token_shingles
 from ..functions.spans import merge_token_spans
 from ..functions.tokenize import tokens
+from ..plans.build_index import IndexPaths
 def exact_duplicates(
     docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
@@ -51,18 +52,15 @@ def exact_duplicates(
 def dedup_exact(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """docs with exact duplicates removed (lowest doc_id kept).
 
-    When the frame already carries ``content_sha256`` for ``content`` text
-    (the corpus-prep convention this codebase's build pipeline relies on —
-    plans/build_index writes its cross-fold hashes table from the same
-    column), the stored digest is reused instead of re-hashing every byte
-    of the corpus; any other text column is hashed fresh."""
-    hcol = (
-        F.col("content_sha256")
-        if text_col == "content" and "content_sha256" in docs.columns
-        else F.sha2(F.col(text_col), 256)
-    )
+    Hashes with the index root's content-hash rule
+    (``IndexPaths.content_hash``), so the cross-fold hashes table dedups
+    folds by the same digests: a stored ``content_sha256`` is reused for
+    ``content`` text instead of re-hashing every byte of the corpus."""
     w_keep = (
-        docs.select(hcol.alias("content_hash"), F.col(id_col))
+        docs.select(
+            IndexPaths.content_hash(docs, text_col).alias("content_hash"),
+            F.col(id_col),
+        )
         .groupBy("content_hash")
         .agg(F.min(id_col).alias(id_col))
     )

@@ -688,8 +688,9 @@ def _dict_version_marker(spark: SparkSession, root: str):
     ``getFileSystem`` are most of a version read's py4j round trips. The
     local path is the marker's path on this host when the root resolves
     to Hadoop's local filesystem, else None."""
-    p = spark._jvm.org.apache.hadoop.fs.Path(f"{root}/dict_version")
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
+    from .build_index import hadoop_path
+
+    fs, p = hadoop_path(spark, f"{root}/dict_version")
     local = fs.makeQualified(p).toUri().getPath() if fs.getScheme() == "file" else None
     return fs, p, local
 

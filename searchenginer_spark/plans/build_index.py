@@ -28,6 +28,7 @@ import threading
 import time
 import uuid
 from contextvars import copy_context
+from dataclasses import dataclass, fields
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -51,8 +52,89 @@ METRICS_SCHEMA = (
 #: puts nulls in one group). Never collides with a real digest (hex-only).
 NULL_CONTENT_HASH = "__null_content__"
 
+#: the dedup field of a meta written before the field existed (pre-r6,
+#: 3 columns): the recorded mode is unknowable, so a check accepts any
+#: mode and an inherit reads it as None (no dedup)
+UNKNOWN_DEDUP = object()
+
+_META_SCHEMA = (
+    "docs_per_part int, with_positions boolean, tokenizer string, dedup string"
+)
+
+
+def hadoop_path(spark: SparkSession, path: str):
+    """(FileSystem, Path) of ``path`` on the session's Hadoop filesystem:
+    two py4j calls, and the one place the package resolves a filesystem."""
+    p = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return p.getFileSystem(spark._jsc.hadoopConfiguration()), p
+
+
+@dataclass(frozen=True)
+class Geometry:
+    """A root's build geometry: how every writer of the root (the build,
+    its resumes, incremental folds, compaction) tokenizes, buckets,
+    filters and dedups. Committed parts describe it, so a writer that
+    differs in any field corrupts them. None means "not given"."""
+
+    docs_per_part: int | None = None
+    with_positions: bool | None = None
+    tokenizer: str | None = None
+    dedup: str | None = None
+    #: (term) table removed from the token stream before any statistic
+    stopwords: DataFrame | None = None
+
+    def stop_terms(self) -> frozenset[str]:
+        """The stopword list as a driver-side set (a tiny curated list)."""
+        if self.stopwords is None:
+            return frozenset()
+        return frozenset(r["term"] for r in self.stopwords.select("term").collect())
+
+    def inherit(self, recorded: Geometry | None) -> Geometry:
+        """This geometry with each None field filled from ``recorded``, or
+        from the build defaults on a root that records none."""
+        base = recorded or Geometry(1 << 16, False)
+        filled = {
+            f.name: getattr(self, f.name)
+            if getattr(self, f.name) is not None
+            else getattr(base, f.name)
+            for f in fields(self)
+        }
+        if filled["dedup"] is UNKNOWN_DEDUP:
+            filled["dedup"] = None
+        return Geometry(**filled)
+
+    def check(self, recorded: Geometry | None) -> None:
+        """Raise ValueError naming the first field that differs from the
+        ``recorded`` geometry. An unknown legacy dedup mode is skipped."""
+        if recorded is None:
+            return
+        for name, given, rec in (
+            ("docs_per_part", int(self.docs_per_part), recorded.docs_per_part),
+            ("with_positions", bool(self.with_positions), recorded.with_positions),
+            ("tokenizer", self.tokenizer or None, recorded.tokenizer or None),
+            ("dedup", self.dedup or None, recorded.dedup or None),
+        ):
+            if given != rec and rec is not UNKNOWN_DEDUP:
+                raise ValueError(
+                    f"{name}={given!r} conflicts with the root's recorded "
+                    f"{rec!r}: the committed parts were built with it"
+                )
+        # an inherited list is the recorded one: no need to collect both
+        if self.stopwords is not recorded.stopwords:
+            given, rec = self.stop_terms(), recorded.stop_terms()
+            if given != rec:
+                raise ValueError(
+                    f"stopwords ({len(given)} terms) conflict with the root's "
+                    f"recorded stopwords ({len(rec)} terms): the committed "
+                    "parts' dl/df/postings describe the recorded filter"
+                )
+
 
 class IndexPaths:
+    """The tables under an index root, and the one owner of the root's
+    build geometry: its ``meta``, ``stopwords`` and ``content_hashes``
+    tables are read, checked and written here and nowhere else."""
+
     def __init__(self, root: str):
         self.root = root
         self.docs = f"{root}/docs"
@@ -64,18 +146,74 @@ class IndexPaths:
         self.stats_parts = f"{root}/stats_parts"
         self.postings = f"{root}/postings"
         self.metrics = f"{root}/metrics"
-        #: 1-row build geometry (docs_per_part, with_positions) — consumers
-        #: that must bucket doc ids identically to the build (e.g.
-        #: search_filtered's cogroup) read it via open_index
+        #: 1-row build geometry (docs_per_part, with_positions, tokenizer,
+        #: dedup); its presence certifies the stopwords and hashes tables
         self.meta = f"{root}/meta"
-        #: the stopword list the index was built with (absent = none) —
-        #: part of the build geometry: folds/compactions/resumes MUST
-        #: filter the token stream identically or dl/df/postings diverge
+        #: the stopword list the index was built with (absent = none)
         self.stopwords = f"{root}/stopwords"
         #: (content_hash, doc_id) of every stored doc — written by
         #: dedup-mode builds, appended by incremental folds: the ~72 B/doc
         #: side table cross-fold exact dedup anti-joins against (r6)
         self.hashes = f"{root}/content_hashes"
+
+    def read_geometry(self, spark: SparkSession) -> Geometry | None:
+        """The recorded geometry, or None for a root with no meta."""
+        if not _table_ready(spark, self.meta):
+            return None
+        meta = spark.read.parquet(self.meta).first()
+        return Geometry(
+            int(meta["docs_per_part"]),
+            bool(meta["with_positions"]),
+            meta["tokenizer"],
+            meta["dedup"] if "dedup" in meta.__fields__ else UNKNOWN_DEDUP,
+            spark.read.parquet(self.stopwords)
+            if _table_ready(spark, self.stopwords)
+            else None,
+        )
+
+    def write_geometry(self, spark: SparkSession, geo: Geometry, text_col: str) -> None:
+        """Record ``geo``: the stopwords table (a stale one is removed when
+        there is none), the content hashes of the stored docs on a dedup
+        root, then meta LAST — meta's presence certifies the group. A
+        dedup root's docs must be committed first."""
+        if geo.stopwords is None:
+            fs, p = hadoop_path(spark, self.stopwords)
+            fs.delete(p, True)
+        else:
+            geo.stopwords.select("term").dropDuplicates(["term"]).coalesce(
+                1
+            ).write.mode("overwrite").parquet(self.stopwords)
+        if geo.dedup is not None:
+            self.write_hashes(spark.read.parquet(self.docs), text_col)
+        spark.createDataFrame(
+            [(int(geo.docs_per_part), bool(geo.with_positions), geo.tokenizer, geo.dedup)],
+            _META_SCHEMA,
+        ).write.mode("overwrite").parquet(self.meta)
+
+    @staticmethod
+    def content_hash(docs: DataFrame, text_col: str):
+        """The one content-hash rule of exact dedup and the hashes table:
+        the stored ``content_sha256`` when it digests ``text_col`` (that
+        is, text_col is ``content``), else sha256 of ``text_col``; NULL
+        text hashes to NULL_CONTENT_HASH."""
+        h = (
+            F.col("content_sha256")
+            if text_col == "content" and "content_sha256" in docs.columns
+            else F.sha2(F.col(text_col), 256)
+        )
+        return F.coalesce(h, F.lit(NULL_CONTENT_HASH))
+
+    def write_hashes(self, docs: DataFrame, text_col: str, mode: str = "overwrite") -> None:
+        """Write (or append) the (content_hash, doc_id) rows of ``docs``."""
+        docs.select(
+            self.content_hash(docs, text_col).alias("content_hash"), "doc_id"
+        ).write.mode(mode).parquet(self.hashes)
+
+    def stored_hashes(self, spark: SparkSession) -> DataFrame | None:
+        """The committed content_hashes table, or None."""
+        if not _table_ready(spark, self.hashes):
+            return None
+        return spark.read.parquet(self.hashes)
 
 
 def _done_parts(spark: SparkSession, paths: IndexPaths) -> set[int]:
@@ -97,10 +235,14 @@ def _done_parts(spark: SparkSession, paths: IndexPaths) -> set[int]:
 
 
 def _dir_exists(spark: SparkSession, path: str) -> bool:
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
+    fs, p = hadoop_path(spark, path)
     return bool(fs.exists(p))
+
+
+def _table_ready(spark: SparkSession, path: str) -> bool:
+    """True iff a committed write exists at ``path`` (_SUCCESS marker) —
+    works on any Hadoop filesystem, not just local."""
+    return _dir_exists(spark, path + "/_SUCCESS")
 
 
 def _list_parts(spark: SparkSession, docs_path: str) -> list[int] | None:
@@ -108,9 +250,7 @@ def _list_parts(spark: SparkSession, docs_path: str) -> list[int] | None:
     listing — no Spark job. Returns None if the layout isn't recognized
     (caller falls back to a distinct() scan)."""
     try:
-        jvm = spark._jvm
-        p = jvm.org.apache.hadoop.fs.Path(docs_path)
-        fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
+        fs, p = hadoop_path(spark, docs_path)
         parts = []
         for st in fs.listStatus(p):
             name = st.getPath().getName()
@@ -130,27 +270,6 @@ def part_stats(dl: DataFrame, docs_per_part: int) -> DataFrame:
         .groupBy("part")
         .agg(F.count(F.lit(1)).alias("n_docs"), F.sum("dl").alias("sum_dl"))
     )
-
-
-def _table_ready(spark: SparkSession, path: str) -> bool:
-    """True iff a committed write exists at ``path`` (_SUCCESS marker) —
-    works on any Hadoop filesystem, not just local."""
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path + "/_SUCCESS")
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-    return bool(fs.exists(p))
-
-
-def _stopword_set(spark: SparkSession, paths: IndexPaths) -> set[str] | None:
-    """The root's recorded stopword list, or None if built without one.
-    Stopword tables are tiny curated lists — a driver-side set is the
-    cheap comparable form for geometry-conflict checks."""
-    if not _table_ready(spark, paths.stopwords):
-        return None
-    return {
-        r["term"]
-        for r in spark.read.parquet(paths.stopwords).select("term").collect()
-    }
 
 
 def drop_stopwords(tf: DataFrame, stopwords: DataFrame | None) -> DataFrame:
@@ -208,58 +327,28 @@ def build_index(
     stage's, the term-id minting's) belongs to a CacheScope that the call
     opens and closes, so a build leaves no persisted RDD behind.
 
-    Returns a summary dict (n_docs, parts_built, parts_total, wall_s).
+    The root's geometry (docs_per_part, with_positions, tokenizer, dedup,
+    stopwords) is recorded on the first run; a resume that differs in any
+    field raises (IndexPaths.read_geometry, Geometry.check).
+
+    Returns a summary dict:
+
+    - ``n_docs``: docs with at least one indexed token;
+    - ``parts_total``, ``parts_built``, ``parts_done_before``: doc-range
+      parts in the root, built by this run, and committed before it;
+    - ``wall_s`` and ``root``;
+    - ``phases``: seconds per phase — ``setup``, ``dict``, ``stats``,
+      ``docs_write_wait``, ``listing``, ``encode``, ``metrics`` and
+      ``summary`` (``dict``/``stats`` only when stage 1 runs,
+      ``encode``/``metrics`` only when parts are pending).
     """
     spark = docs.sparkSession
     paths = IndexPaths(root)
-    # resume geometry contract: a root's recorded meta is authoritative —
-    # resuming with different bucketing/positions/tokenizer/stopwords would
-    # encode the pending parts inconsistently with the committed ones (the
-    # same raise-on-conflict rule incremental_index enforces)
-    if _table_ready(spark, paths.meta):
-        meta = spark.read.parquet(paths.meta).first()
-        if int(meta["docs_per_part"]) != int(docs_per_part):
-            raise ValueError(
-                f"docs_per_part={docs_per_part} conflicts with the root's "
-                f"recorded build geometry {meta['docs_per_part']} — resuming "
-                "would bucket pending parts inconsistently with committed ones"
-            )
-        if bool(meta["with_positions"]) != bool(with_positions):
-            raise ValueError(
-                f"with_positions={with_positions} conflicts with the root's "
-                f"recorded {bool(meta['with_positions'])}"
-            )
-        if "dedup" in meta.__fields__:
-            recorded_dedup = meta["dedup"]
-            if (dedup or None) != (recorded_dedup or None):
-                raise ValueError(
-                    f"dedup={dedup!r} conflicts with the root's recorded "
-                    f"dedup mode {recorded_dedup!r} — resuming with a "
-                    "different dedup rule would admit docs the committed "
-                    "parts excluded (or vice versa)"
-                )
-        # legacy 3-column meta (pre-r6): the recorded mode is unknowable —
-        # accept the caller's dedup so old interrupted dedup builds stay
-        # resumable; the explicit migration step before the summary
-        # upgrades meta to 4 columns and backfills the hashes table
-        if (tokenizer or "default") != (meta["tokenizer"] or "default"):
-            raise ValueError(
-                f"tokenizer={tokenizer!r} conflicts with the root's recorded "
-                f"{meta['tokenizer']!r} — a tokenizer mismatch corrupts term "
-                "consistency with every committed posting"
-            )
-        recorded_sw = _stopword_set(spark, paths) or set()
-        passed_sw = (
-            set()
-            if stopwords is None
-            else {r["term"] for r in stopwords.select("term").collect()}
-        )
-        if recorded_sw != passed_sw:
-            raise ValueError(
-                "stopword set conflicts with the root's recorded stopwords "
-                f"({len(passed_sw)} vs {len(recorded_sw)} terms) — dl/df/"
-                "postings of committed parts describe the recorded filter"
-            )
+    geo = Geometry(docs_per_part, with_positions, tokenizer, dedup, stopwords)
+    recorded = paths.read_geometry(spark)
+    # resuming with a different geometry would encode the pending parts
+    # inconsistently with the committed ones
+    geo.check(recorded)
     t0 = time.monotonic()
     phases: dict[str, float] = {}
 
@@ -281,9 +370,9 @@ def build_index(
     # which already holds only survivors.
     fresh_docs = not _table_ready(spark, paths.docs)
     stage1_pending = not (
-        _table_ready(spark, paths.term_dict)
+        recorded is not None
+        and _table_ready(spark, paths.term_dict)
         and _table_ready(spark, paths.stats)
-        and _table_ready(spark, paths.meta)
     )
     dedup_tf = pre_dft = None
     if dedup is not None and (fresh_docs or stage1_pending):
@@ -379,42 +468,15 @@ def build_index(
                 ).write.mode("overwrite").parquet(paths.stats)
                 _stats_row.append(n_docs_v)
                 current_scope().release(ps)
-                if stopwords is not None:
-                    stopwords.select("term").dropDuplicates(["term"]).coalesce(
-                        1
-                    ).write.mode("overwrite").parquet(paths.stopwords)
-                if dedup is not None:
-                    # survivor content hashes, read back from the WRITTEN
-                    # docs store (the lazy dedup plan would re-run the
-                    # whole dedup stage) — the per-doc side table the
-                    # incremental fold anti-joins new batches against.
-                    # MUST wait for the concurrent docs writer first: a
-                    # read of a half-committed store would certify an
-                    # incomplete hash table under meta
-                    if writer is not None:
-                        writer.join()
-                        if _werr:
-                            raise _werr[0]
-                    stored = spark.read.parquet(paths.docs)
-                    hcol = (
-                        F.col("content_sha256")
-                        if "content_sha256" in stored.columns
-                        else F.sha2(F.col(text_col), 256)
-                    )
-                    stored.select(
-                        F.coalesce(hcol, F.lit(NULL_CONTENT_HASH)).alias(
-                            "content_hash"
-                        ),
-                        "doc_id",
-                    ).write.mode("overwrite").parquet(paths.hashes)
-                # meta stays the LAST write: its presence certifies the
-                # whole stats/stopwords/hashes group (the stage-1 gate
-                # checks it)
-                spark.createDataFrame(
-                    [(int(docs_per_part), bool(with_positions), tokenizer, dedup)],
-                    "docs_per_part int, with_positions boolean, "
-                    "tokenizer string, dedup string",
-                ).write.mode("overwrite").parquet(paths.meta)
+                if dedup is not None and writer is not None:
+                    # the hashes table is read back from the WRITTEN docs
+                    # store (the lazy dedup plan would re-run the whole
+                    # dedup stage): wait for the concurrent docs writer,
+                    # or meta would certify a half-read store's hashes
+                    writer.join()
+                    if _werr:
+                        raise _werr[0]
+                paths.write_geometry(spark, geo, text_col)
             except BaseException as e:  # surfaced after join()
                 _serr.append(e)
 
@@ -533,11 +595,7 @@ def build_index(
                         F.count(F.lit(1)).alias("n_docs"),
                         # order-independent, overflow-free content fingerprint
                         F.bit_xor(
-                            F.xxhash64(
-                                F.col("content_sha256")
-                                if "content_sha256" in pend_docs.columns
-                                else F.sha2(F.col(text_col), 256)
-                            )
+                            F.xxhash64(IndexPaths.content_hash(pend_docs, text_col))
                         ).cast("string").alias("input_sha"),
                     )
                 ),
@@ -564,29 +622,11 @@ def build_index(
         built = len(pending)
         tcur = _mark("metrics", tcur)
 
-    if dedup is not None:
+    if not stage1_pending and dedup is not None and recorded.dedup is UNKNOWN_DEDUP:
         # legacy-meta migration: a pre-r6 root resumed with its true dedup
-        # mode keeps a 3-column meta (the stats stage is gated off once
-        # meta exists) — upgrade it here and backfill the hashes side
-        # table so incremental folds can start enforcing the mode
-        m = spark.read.parquet(paths.meta).first()
-        if "dedup" not in m.__fields__:
-            if not _table_ready(spark, paths.hashes):
-                stored = spark.read.parquet(paths.docs)
-                hcol = (
-                    F.col("content_sha256")
-                    if "content_sha256" in stored.columns
-                    else F.sha2(F.col(text_col), 256)
-                )
-                stored.select(
-                    F.coalesce(hcol, F.lit(NULL_CONTENT_HASH)).alias("content_hash"),
-                    "doc_id",
-                ).write.mode("overwrite").parquet(paths.hashes)
-            spark.createDataFrame(
-                [(int(docs_per_part), bool(with_positions), tokenizer, dedup)],
-                "docs_per_part int, with_positions boolean, "
-                "tokenizer string, dedup string",
-            ).write.mode("overwrite").parquet(paths.meta)
+        # mode keeps its 3-column meta (stage 1 is gated off once meta
+        # exists): record the mode, with the hashes table folds dedup by
+        paths.write_geometry(spark, geo, text_col)
     if built:
         # open handles on this root must drop stale dict caches / snapshots
         from .bm25 import bump_dict_version
@@ -631,35 +671,20 @@ def compact_indexes(
     in-place delta fold; this is the periodic consolidation that clears its
     accumulated idf staleness). Doc ids must be disjoint across inputs.
 
-    ``docs_per_part`` / ``with_positions`` / ``tokenizer`` /
-    ``stopwords`` default to the FIRST root's meta + stopwords tables
-    (r5, stopwords r6) — a compaction must not silently re-bucket, drop
-    positions, swap the tokenizer, or reintroduce stopwords into the
-    indexes it consolidates; pass explicit values to deliberately change
-    the geometry of the output index. A meta-less first root falls back
-    to the build defaults (1 << 16, no positions, regex tokenizer, no
-    stopwords).
-
-    ``dedup`` also defaults from the first root's meta (r6): compaction is
-    where the full dedup rule RE-RUNS over the union — incremental folds
-    only apply the cheap exact-hash subset, so near-dup pairs that span
-    folds (and exact/near dups that span roots) accumulate until this
-    consolidation clears them, exactly like fold-accumulated idf
-    staleness.
+    ``docs_per_part``, ``with_positions``, ``tokenizer``, ``stopwords`` and
+    ``dedup`` left None are inherited from the FIRST root's recorded
+    geometry (``Geometry.inherit``; the build defaults when it records
+    none), so a compaction never silently re-buckets, drops positions,
+    swaps the tokenizer or reintroduces stopwords; pass explicit values
+    to change the output's geometry on purpose. The inherited ``dedup``
+    RE-RUNS in full over the union: incremental folds only apply its
+    exact-hash subset, so near-dup pairs that span folds (and dups that
+    span roots) accumulate until this consolidation clears them, exactly
+    like fold-accumulated idf staleness.
     """
-    first = IndexPaths(roots[0])
-    if _table_ready(spark, first.meta):
-        meta = spark.read.parquet(first.meta).first()
-        if docs_per_part is None:
-            docs_per_part = int(meta["docs_per_part"])
-        if with_positions is None:
-            with_positions = bool(meta["with_positions"])
-        if tokenizer is None:
-            tokenizer = meta["tokenizer"]
-        if dedup is None and "dedup" in meta.__fields__:
-            dedup = meta["dedup"]
-    if stopwords is None and _table_ready(spark, first.stopwords):
-        stopwords = spark.read.parquet(first.stopwords)
+    geo = Geometry(docs_per_part, with_positions, tokenizer, dedup, stopwords).inherit(
+        IndexPaths(roots[0]).read_geometry(spark)
+    )
     docs = None
     for r in roots:
         d = spark.read.parquet(IndexPaths(r).docs).drop("part")
@@ -667,12 +692,12 @@ def compact_indexes(
     return build_index(
         docs,
         out_root,
-        docs_per_part=int(docs_per_part) if docs_per_part is not None else 1 << 16,
-        with_positions=bool(with_positions),
+        docs_per_part=geo.docs_per_part,
+        with_positions=geo.with_positions,
         text_col=text_col,
-        tokenizer=tokenizer,
-        stopwords=stopwords,
-        dedup=dedup,
+        tokenizer=geo.tokenizer,
+        stopwords=geo.stopwords,
+        dedup=geo.dedup,
     )
 
 
@@ -709,15 +734,13 @@ def open_postings(
 
 def open_index(spark: SparkSession, root: str) -> Bm25CompressedIndex:
     paths = IndexPaths(root)
-    dpp = None
-    if _table_ready(spark, paths.meta):
-        dpp = int(spark.read.parquet(paths.meta).first()["docs_per_part"])
+    geo = paths.read_geometry(spark)
     scan = read_postings(spark, root)
     return Bm25CompressedIndex(
         spark,
         open_postings(spark, root, scan),
         spark.read.parquet(paths.term_dict),
-        docs_per_part=dpp,
+        docs_per_part=geo.docs_per_part if geo else None,
         # handles opened by root watch dict_version: an incremental fold
         # bumping it invalidates the driver dict cache + table snapshots
         root=root,

@@ -50,11 +50,12 @@ from ..operators import stats as S
 from ..operators.ids import assign_sequential_ids
 from ..operators.postings import build_postings
 from ..plans.build_index import (
-    NULL_CONTENT_HASH,
+    Geometry,
     IndexPaths,
     _dir_exists,
-    _stopword_set,
     _table_ready,
+    drop_stopwords,
+    hadoop_path,
     part_stats,
 )
 
@@ -99,86 +100,25 @@ def incremental_index(
     still-empty ``input_dir`` is a clean no-op (drain loops may fire
     before the first file lands).
 
-    Build-geometry contract (r5, stopwords r6): when the root carries a
-    ``meta`` table (every build_index root does), the fold READS its
-    build parameters from it — ``docs_per_part``, ``with_positions``,
-    ``tokenizer`` and the ``stopwords`` list all default to the values
-    the index was built with (so folding a phrase-enabled index keeps
-    encoding positions, a dict_cjk index keeps segmenting, a
-    stopword-filtered index keeps filtering, and part bucketing matches
-    by construction). Passing an EXPLICIT value that conflicts with the
-    recorded one raises instead of silently corrupting the committed
-    parts' statistics. A brand-new root (no meta yet) PINS its geometry
-    on the first invocation by writing the meta (and stopwords) tables,
-    so later folds and build_index resumes enforce it.
+    Build geometry: ``docs_per_part``, ``with_positions``, ``tokenizer``
+    and ``stopwords`` left None are inherited from the root's recorded
+    geometry, and an explicit value that differs from it raises
+    (``Geometry.inherit`` and ``Geometry.check`` in plans/build_index.py),
+    so a fold encodes, segments, filters and buckets exactly like the
+    committed parts. The recorded dedup mode turns on cross-fold exact
+    dedup (module docstring). A brand-new root records its geometry on
+    the first invocation, so later folds and build_index resumes enforce
+    it.
     """
     paths = IndexPaths(root)
-    dedup_mode: str | None = None
-    if _table_ready(spark, paths.meta):
-        meta = spark.read.parquet(paths.meta).first()
-        # pre-r6 roots have a 3-column meta with no dedup field: None
-        dedup_mode = meta["dedup"] if "dedup" in meta.__fields__ else None
-        if docs_per_part is None:
-            docs_per_part = int(meta["docs_per_part"])
-        elif int(meta["docs_per_part"]) != int(docs_per_part):
-            raise ValueError(
-                f"docs_per_part={docs_per_part} conflicts with the index's "
-                f"build geometry {meta['docs_per_part']} (root meta table); "
-                "part bucketing must match or queries read wrong parts"
-            )
-        if with_positions is None:
-            with_positions = bool(meta["with_positions"])
-        elif bool(meta["with_positions"]) != bool(with_positions):
-            raise ValueError(
-                f"with_positions={with_positions} conflicts with the index's "
-                f"build geometry {bool(meta['with_positions'])} (root meta "
-                "table); folding position-less rows into a positional index "
-                "(or vice versa) corrupts phrase/NEAR decoding"
-            )
-        if tokenizer is None:
-            tokenizer = meta["tokenizer"]
-        elif (tokenizer or "default") != (meta["tokenizer"] or "default"):
-            raise ValueError(
-                f"tokenizer={tokenizer!r} conflicts with the index's build "
-                f"tokenizer {meta['tokenizer']!r} (root meta table); a "
-                "tokenizer mismatch corrupts term consistency with every "
-                "existing posting row"
-            )
-    docs_per_part = int(docs_per_part) if docs_per_part is not None else 1 << 16
-    with_positions = bool(with_positions)
-
-    # stopword contract: default from the root's recorded list; raise on
-    # an explicit conflict (folding unfiltered tokens into a filtered
-    # index corrupts dl/df exactly like a tokenizer mismatch would)
-    recorded_sw = _stopword_set(spark, paths)
-    if stopwords is None:
-        sw_terms = frozenset(recorded_sw or ())
-    else:
-        sw_terms = frozenset(
-            r["term"] for r in stopwords.select("term").collect()
-        )
-        if recorded_sw is not None or _table_ready(spark, paths.meta):
-            if sw_terms != frozenset(recorded_sw or ()):
-                raise ValueError(
-                    f"stopword set ({len(sw_terms)} terms) conflicts with the "
-                    f"index's recorded stopwords ({len(recorded_sw or ())} "
-                    "terms); committed parts' dl/df describe the recorded "
-                    "filter"
-                )
-
-    if not _table_ready(spark, paths.meta):
-        # brand-new root: PIN the geometry now so every later fold and
-        # build_index resume enforces it (previously never written ->
-        # a second fold with docs_per_part omitted silently re-bucketed)
-        spark.createDataFrame(
-            [(int(docs_per_part), bool(with_positions), tokenizer, None)],
-            "docs_per_part int, with_positions boolean, "
-            "tokenizer string, dedup string",
-        ).write.mode("overwrite").parquet(paths.meta)
-        if sw_terms:
-            spark.createDataFrame(
-                [(t,) for t in sorted(sw_terms)], "term string"
-            ).coalesce(1).write.mode("overwrite").parquet(paths.stopwords)
+    recorded = paths.read_geometry(spark)
+    geo = Geometry(docs_per_part, with_positions, tokenizer, stopwords=stopwords).inherit(
+        recorded
+    )
+    geo.check(recorded)
+    if recorded is None:
+        paths.write_geometry(spark, geo, text_col)
+    sw_terms = geo.stop_terms()
 
     if not _dir_exists(spark, input_dir):
         return  # nothing has landed yet — clean no-op
@@ -189,28 +129,6 @@ def incremental_index(
             return
         raise
 
-    if (
-        dedup_mode is not None
-        and not _table_ready(spark, paths.hashes)
-        and _dir_exists(spark, paths.docs)
-    ):
-        # one-time bootstrap when meta records a mode but the hashes side
-        # table is absent or half-written (_SUCCESS gate — a crashed write
-        # self-heals here instead of wedging every later fold): e.g. a
-        # legacy root whose meta a dedup resume upgraded, or a manually
-        # cleared side table. Reuses a stored content_sha256 column when
-        # the docs schema carries one; otherwise one O(corpus) sha256.
-        booted = spark.read.parquet(paths.docs).dropDuplicates(["doc_id"])
-        bcol = (
-            F.col("content_sha256")
-            if "content_sha256" in booted.columns
-            else F.sha2(F.col(text_col), 256)
-        )
-        booted.select(
-            F.coalesce(bcol, F.lit(NULL_CONTENT_HASH)).alias("content_hash"),
-            "doc_id",
-        ).write.mode("overwrite").parquet(paths.hashes)
-
     # each fold owns its caches: the survivor set, the tf table and the
     # term-id minting's checkpoint are freed when the fold returns
     @scoped
@@ -219,7 +137,7 @@ def incremental_index(
             return
         bspark = batch.sparkSession
         survivors = None
-        if dedup_mode is not None:
+        if geo.dedup is not None:
             # cross-fold EXACT dedup — the cheap subset of every recorded
             # dedup mode: a batch doc survives iff no STRICTLY smaller
             # doc_id with the same content hash exists in the batch or the
@@ -228,27 +146,29 @@ def incremental_index(
             # rules are deliberately NOT applied per fold; compact_indexes
             # re-runs the full recorded mode over the union (its docstring
             # — the same consolidation that clears fold idf staleness).
-            bh = (
-                F.col("content_sha256")
-                if "content_sha256" in batch.columns
-                else F.sha2(F.col(text_col), 256)
-            )
-            hashed = batch.dropDuplicates(["doc_id"]).withColumn(
-                "_h", F.coalesce(bh, F.lit(NULL_CONTENT_HASH))
-            )
+            hashed = batch.dropDuplicates(["doc_id"])
+            hashed = hashed.withColumn("_h", IndexPaths.content_hash(hashed, text_col))
             bmin = hashed.groupBy("_h").agg(F.min("doc_id").alias("_bmin"))
             hashed = (
                 hashed.join(bmin, "_h")
                 .filter(F.col("doc_id") == F.col("_bmin"))
                 .drop("_bmin")
             )
-            if _table_ready(bspark, paths.hashes):
+            stored = paths.stored_hashes(bspark)
+            if stored is None and _dir_exists(bspark, paths.docs):
+                # one-time bootstrap when the hashes table is absent or
+                # half-written (no _SUCCESS: a crashed write self-heals
+                # here instead of wedging every later fold), e.g. on a
+                # legacy root whose meta a dedup resume upgraded
+                paths.write_hashes(bspark.read.parquet(paths.docs), text_col)
+                stored = paths.stored_hashes(bspark)
+            if stored is not None:
                 # evict list via an INNER join of the (huge) store against
                 # the (small) batch keys — AQE broadcasts the batch side,
                 # so a fold is a store column SCAN + O(matches), never a
                 # store-wide shuffle/aggregate (a groupBy-min over all N
                 # stored hashes per micro-batch would be exactly that)
-                ex = bspark.read.parquet(paths.hashes).select(
+                ex = stored.select(
                     F.col("content_hash").alias("_h"),
                     F.col("doc_id").alias("_sid"),
                 )
@@ -266,15 +186,15 @@ def incremental_index(
             if survivors.isEmpty():  # whole batch was already stored
                 return
             batch = survivors.drop("_h")
-        new_docs = batch.withColumn("part", (F.col("doc_id") / docs_per_part).cast("int"))
+        new_docs = batch.withColumn(
+            "part", (F.col("doc_id") / geo.docs_per_part).cast("int")
+        )
         new_docs.write.mode("append").partitionBy("part").parquet(paths.docs)
         if survivors is not None:
             # hash append AFTER the docs append: a crash in between leaves
             # same-id store rows, which the >= rule keeps on replay; dupes
             # in the hash table are harmless (min-groupBy consumers)
-            survivors.select(F.col("_h").alias("content_hash"), "doc_id").write.mode(
-                "append"
-            ).parquet(paths.hashes)
+            paths.write_hashes(survivors, text_col, mode="append")
 
         # a batch may land in a part that earlier batches already touched:
         # rebuild the touched parts from ALL docs in them, so the dynamic
@@ -296,13 +216,11 @@ def incremental_index(
             if sw_terms
             else None
         )
-        from ..plans.build_index import drop_stopwords
-
         tf = current_scope().persist(
             drop_stopwords(
                 S.term_frequencies(
-                    docs, text_col=text_col, tokenizer=tokenizer,
-                    with_positions=with_positions,
+                    docs, text_col=text_col, tokenizer=geo.tokenizer,
+                    with_positions=geo.with_positions,
                 ),
                 sw_df,
             )
@@ -338,27 +256,25 @@ def incremental_index(
                     S.doc_lengths(
                         drop_stopwords(
                             S.term_frequencies(
-                                others, text_col=text_col, tokenizer=tokenizer,
-                                with_positions=with_positions,
+                                others, text_col=text_col, tokenizer=geo.tokenizer,
+                                with_positions=geo.with_positions,
                             ),
                             sw_df,
                         )
                     ),
-                    docs_per_part,
+                    geo.docs_per_part,
                 ).write.mode("overwrite").option(
                     "partitionOverwriteMode", "dynamic"
                 ).partitionBy("part").parquet(paths.stats_parts)
             # bootstrap complete (incl. the nothing-to-derive case) —
             # record it AFTER the write so a crash above leaves no marker
             # and the next fold re-runs the idempotent bootstrap
-            jvm = bspark._jvm
-            sp_ = jvm.org.apache.hadoop.fs.Path(boot_sentinel)
-            fs_ = sp_.getFileSystem(bspark._jsc.hadoopConfiguration())
-            fs_.create(sp_, True).close()
+            fs, p = hadoop_path(bspark, boot_sentinel)
+            fs.create(p, True).close()
         # per-write dynamic overwrite (replaces only the touched parts'
         # partitions) — a writer option, never a session-conf mutation that
         # would silently change unrelated writes' overwrite semantics
-        part_stats(dl, docs_per_part).write.mode("overwrite").option(
+        part_stats(dl, geo.docs_per_part).write.mode("overwrite").option(
             "partitionOverwriteMode", "dynamic"
         ).partitionBy("part").parquet(paths.stats_parts)
         sp = bspark.read.parquet(paths.stats_parts)
@@ -368,7 +284,7 @@ def incremental_index(
         ).write.mode("overwrite").parquet(paths.stats)
         stats = bspark.read.parquet(paths.stats)
 
-        postings = build_postings(tf, dl, term_dict, stats, docs_per_part)
+        postings = build_postings(tf, dl, term_dict, stats, geo.docs_per_part)
         postings.write.mode("overwrite").option(
             "partitionOverwriteMode", "dynamic"
         ).partitionBy("part").parquet(paths.postings)

@@ -307,6 +307,40 @@ def test_new_root_fold_pins_geometry(spark, tmp_path_factory):
     docs.unpersist()
 
 
+def test_new_root_fold_retries_after_stopwords_write_fails(
+    spark, tmp_path_factory, monkeypatch
+):
+    """A fold on a brand-new root records its stopwords before meta, so a
+    stopwords write that fails leaves no meta behind, and a retry with the
+    same list succeeds and filters it."""
+    import pytest
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    base = str(tmp_path_factory.mktemp("incswfail"))
+    input_dir, root, ckpt = f"{base}/in", f"{base}/idx", f"{base}/ckpt"
+    build_docs(spark, 100, seed=5, num_partitions=2).write.parquet(input_dir)
+    sw = spark.createDataFrame([("int",), ("return",)], "term string")
+
+    real_parquet = DataFrameWriter.parquet
+    failed = []
+
+    def flaky_parquet(self, path, *args, **kwargs):
+        if path.endswith("/stopwords") and not failed:
+            failed.append(path)
+            raise RuntimeError("injected stopwords write failure")
+        return real_parquet(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", flaky_parquet)
+    with pytest.raises(RuntimeError, match="injected"):
+        incremental_index(spark, input_dir, root, ckpt, docs_per_part=DPP,
+                          stopwords=sw)
+    incremental_index(spark, input_dir, root, ckpt, docs_per_part=DPP,
+                      stopwords=sw)
+    td = spark.read.parquet(IndexPaths(root).term_dict)
+    assert td.count() > 0
+    assert td.filter(F.col("term").isin("int", "return")).count() == 0
+
+
 def test_stats_bootstrap_runs_at_most_once(spark, tmp_path_factory, monkeypatch):
     """r6 fix: the stats_parts bootstrap gate uses directory existence,
     not _SUCCESS (dynamic partition overwrite never writes one) — on an

@@ -187,3 +187,28 @@ def test_legacy_meta_resume_with_dedup_is_accepted(spark, tmp_path_factory):
     build_index(d, root, docs_per_part=DPP, dedup="exact")  # must not raise
     meta = spark.read.parquet(paths.meta).first()
     assert "dedup" in meta.__fields__ and meta["dedup"] == "exact"
+
+
+def test_fold_dedups_by_the_text_col_the_build_hashed(spark, tmp_path_factory):
+    """One content-hash rule: a build with text_col="text" over a frame
+    that also carries content/content_sha256 records sha256(text) in the
+    hashes table (the digest it dedups on), so a fold of a stored text's
+    byte-copy under a larger id is dropped."""
+    base = str(tmp_path_factory.mktemp("xtextcol"))
+    input_dir, root, ckpt = f"{base}/in", f"{base}/idx", f"{base}/ckpt"
+    paths = IndexPaths(root)
+
+    seed = spark.createDataFrame(
+        [(i, f"indexed body {i} alpha", f"other content {i}") for i in range(80)],
+        "doc_id long, text string, content string",
+    ).withColumn("content_sha256", F.sha2("content", 256))
+    build_index(seed, root, docs_per_part=DPP, dedup="exact", text_col="text")
+
+    spark.createDataFrame(
+        [(1000, "indexed body 7 alpha"), (1001, "fresh text body")],
+        "doc_id long, text string",
+    ).write.mode("append").parquet(input_dir)
+    incremental_index(spark, input_dir, root, ckpt, text_col="text")
+    stored = {r["doc_id"] for r in spark.read.parquet(paths.docs)
+              .filter(F.col("doc_id") >= 1000).collect()}
+    assert stored == {1001}  # 1000 is a copy of stored doc 7's text

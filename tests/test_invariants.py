@@ -133,3 +133,27 @@ def test_no_adhoc_cache_lifecycles():
             ):
                 bad.append(f"{path.relative_to(pkg)}:{node.lineno} .{node.func.attr}(")
     assert not bad, bad
+
+
+def test_geometry_has_one_owner():
+    """IndexPaths (plans/build_index.py) owns the index root's build
+    geometry: no other module reads or writes its ``meta``, ``stopwords``
+    or ``hashes`` (content_hashes) table, or resolves a Hadoop filesystem
+    (getFileSystem) itself. This keeps the build, the incremental fold
+    and compaction on one copy of the rule."""
+    import ast
+    import pathlib
+
+    import searchenginer_spark
+
+    pkg = pathlib.Path(searchenginer_spark.__file__).parent
+    owner = pkg / "plans" / "build_index.py"
+    attrs = {"meta", "stopwords", "hashes", "getFileSystem"}
+    bad = []
+    for path in sorted(pkg.rglob("*.py")):
+        if path == owner:
+            continue
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, ast.Attribute) and node.attr in attrs:
+                bad.append(f"{path.relative_to(pkg)}:{node.lineno} .{node.attr}")
+    assert not bad, bad
