@@ -37,7 +37,10 @@ import numpy as np  # noqa: E402
 
 from searchenginer_spark.operators.postings import BLOCK, decode_table  # noqa: E402
 from searchenginer_spark.plans import bm25 as B  # noqa: E402
-from searchenginer_spark.plans.build_index import build_index, open_index  # noqa: E402
+from searchenginer_spark.cache import CacheScope  # noqa: E402
+from searchenginer_spark.plans.build_index import (  # noqa: E402
+    IndexPaths, build_index, open_postings,
+)
 from searchenginer_spark.session import get_spark  # noqa: E402
 from searchenginer_spark.sources.corpus import build_docs  # noqa: E402
 
@@ -127,9 +130,13 @@ def main():
     root = os.path.join(tempfile.gettempdir(), f"or_probe_idx_{n_docs}")
     try:
         build_index(docs, root, docs_per_part=max(256, n_docs // 64))
-        idx = open_index(spark, root)
-        idx.postings = idx.postings.persist()
-        idx.term_dict = idx.term_dict.persist()
+        scope = CacheScope()  # the handle's tables, cached for the whole probe
+        idx = B.Bm25CompressedIndex(
+            spark,
+            scope.persist(open_postings(spark, root)),
+            scope.persist(spark.read.parquet(IndexPaths(root).term_dict)),
+            docs_per_part=max(256, n_docs // 64),
+        )
         idx.search("int return", k=10).collect()
 
         out = {"n_docs": n_docs}

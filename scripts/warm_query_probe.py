@@ -34,7 +34,11 @@ sys.path.insert(0, REPO)
 
 from searchenginer_spark.session import get_spark  # noqa: E402
 from searchenginer_spark.sources.corpus import build_docs  # noqa: E402
-from searchenginer_spark.plans.build_index import build_index, open_index  # noqa: E402
+from searchenginer_spark.cache import CacheScope  # noqa: E402
+from searchenginer_spark.plans.bm25 import Bm25CompressedIndex  # noqa: E402
+from searchenginer_spark.plans.build_index import (  # noqa: E402
+    IndexPaths, build_index, open_postings,
+)
 
 QUERIES = ["int return value", "def id42 result", "for while void",
            "id1729 id999 self", "int open close"]
@@ -91,9 +95,13 @@ def main() -> None:
     docs.count()
     root = tempfile.mkdtemp()
     build_index(docs, root, docs_per_part=max(256, n_docs // 64))
-    idx = open_index(spark, root)
-    idx.postings = idx.postings.persist()
-    idx.term_dict = idx.term_dict.persist()
+    scope = CacheScope()  # the handle's tables, cached for the whole probe
+    idx = Bm25CompressedIndex(
+        spark,
+        scope.persist(open_postings(spark, root)),
+        scope.persist(spark.read.parquet(IndexPaths(root).term_dict)),
+        docs_per_part=max(256, n_docs // 64),
+    )
     for q in QUERIES[:3]:
         idx.search(q, k=10, mode="or").collect()  # warm: JIT, caches, workers
 

@@ -24,7 +24,7 @@ Parts are doc-disjoint ranges, so per-part top-k then global merge is
 exact — this is what lets the scoring stage scale out with zero shared
 state (the Spark analog of the reference's single-address-space docids).
 A small index skips steps 3-5: its postings stay on the driver decoded
-flat per term (_resident_postings), and the same kernel scores each query
+flat per term (Snapshot.resident), and the same kernel scores each query
 once over the whole index. A doc's score adds its terms' impacts in
 ascending term_id order (_term_sum), so both executors give the same
 float whichever doc range scored it.
@@ -47,6 +47,9 @@ Pruning:
 from __future__ import annotations
 
 import os
+import threading
+from functools import cached_property
+from typing import NamedTuple
 
 import numpy as np
 import pyarrow as pa
@@ -701,7 +704,7 @@ def read_dict_version(spark: SparkSession, root: str, marker=None):
     roots). The CONTENT is the version: bump_dict_version always writes a
     constant-length uuid, so an (mtime, len) stamp would miss two bumps
     inside the filesystem's mtime granularity (1 s on some local/NFS
-    mounts) and serve a stale dict cache. One small read — microseconds
+    mounts) and serve a stale snapshot. One small read — microseconds
     on a local/HDFS namenode, a GET on an object store (where a handle
     held across folds should batch queries anyway). With ``marker``
     (:func:`_dict_version_marker`) a marker on the local filesystem is
@@ -744,9 +747,8 @@ def read_dict_version(spark: SparkSession, root: str, marker=None):
 def bump_dict_version(spark: SparkSession, root: str) -> None:
     """Overwrite the ``dict_version`` marker — called by every writer that
     changes term_dict/postings under an existing root (build_index resume,
-    the incremental fold) so long-lived Bm25CompressedIndex handles drop
-    their driver dict cache and re-snapshot the tables instead of serving
-    stale lookups."""
+    the incremental fold) so long-lived Bm25CompressedIndex handles swap in
+    a new Snapshot of the tables instead of serving stale lookups."""
     import uuid as _uuid
 
     fs, p, _ = _dict_version_marker(spark, root)
@@ -849,16 +851,115 @@ def _rank_scored_batch_df(scored: DataFrame, k: int, round_to: int | None) -> Da
     )
 
 
-class Bm25CompressedIndex:
-    """Query engine over (postings, term_dict) tables."""
+def _decode_cols(postings: DataFrame, positions: bool) -> list[str]:
+    """The stored columns decode_table reads, with ``positions`` when asked
+    for and ``postings`` has them."""
+    extra = ["positions"] if positions and "positions" in postings.columns else []
+    return ["term_id", "part", "n", "docs", "tfs", "scores", *extra]
 
-    #: term_dicts up to this many rows are collected to the driver once and
-    #: probed in-process (kills one Spark job per query). Web-scale dicts
-    #: exceed it and fall back to per-query filtered probes.
+
+def _unpersist(*frames: DataFrame) -> None:
+    for df in frames:
+        try:
+            df.unpersist()
+        except Exception:
+            pass
+
+
+class DriverDict(NamedTuple):
+    """A term_dict on the driver, probed in-process (no dictionary job per
+    query): the terms in code-point order with their ids and dfs (prefix
+    and regexp expansion bisect a range), the term -> id lookup, and the
+    ids and dfs re-sorted by id (df lookup by id)."""
+
+    terms: list[str]
+    ids: np.ndarray
+    dfs: np.ndarray
+    tid: dict[str, int]
+    ids_by_id: np.ndarray
+    dfs_by_id: np.ndarray
+
+    def prefix_range(self, prefix: str) -> tuple[int, int]:
+        """[lo, hi) index range of the ``prefix``-prefixed terms — every
+        string with this prefix sorts in [prefix, prefix[:-1] + succ(last
+        char)); exact range, two bisects."""
+        import bisect
+
+        lo = bisect.bisect_left(self.terms, prefix)
+        last = prefix[-1]
+        if ord(last) < 0x10FFFF:
+            hi = bisect.bisect_left(self.terms, prefix[:-1] + chr(ord(last) + 1), lo)
+        else:
+            hi = len(self.terms)
+        return lo, hi
+
+    def ranked_ids(self, idxs: np.ndarray, max_expansions: int) -> list[int]:
+        """term_ids at an ASCENDING index array, capped by df rank (df desc,
+        term asc tie — stable argsort over the term-ordered indices)."""
+        if idxs.size > max_expansions:
+            idxs = idxs[np.argsort(-self.dfs[idxs], kind="stable")[:max_expansions]]
+        return self.ids[idxs].tolist()
+
+
+class Snapshot:
+    """One ``dict_version`` of an index as its queries read it: the tables
+    (``postings`` hash-partitioned on part, ``scan`` as stored) and what
+    the driver derives from them, filled on first use (cached_property: no
+    Spark job at construction) and never reassigned — the reference's
+    load-once index (srpc/PageSearch/ReadPage.cpp)."""
+
+    def __init__(self, version, postings: DataFrame, scan: DataFrame, term_dict: DataFrame):
+        self.version = version
+        self.postings = postings
+        self.scan = scan
+        self.term_dict = term_dict
+        #: prepared plans of the point entry points (_point_frame)
+        self.plans: dict[tuple, DataFrame] = {}
+
+    @cached_property
+    def n_terms(self) -> int:
+        return self.term_dict.count()
+
+    @cached_property
+    def dictionary(self) -> DriverDict:
+        import pyarrow.compute as pc
+
+        # sorted on the driver: Arrow compares strings by bytes, which is
+        # Spark's UTF8String order and, for UTF-8, Python's code-point order
+        # (what the bisects assume)
+        tbl = self.term_dict.select("term", "term_id", "df").toArrow()
+        tbl = tbl.take(pc.sort_indices(tbl, [("term", "ascending")]))
+        terms = tbl.column("term").to_pylist()
+        ids = tbl.column("term_id").to_numpy().astype(np.int64)
+        dfs = tbl.column("df").to_numpy().astype(np.int64)
+        by_id = np.argsort(ids, kind="stable")
+        return DriverDict(terms, ids, dfs, dict(zip(terms, ids.tolist())), ids[by_id], dfs[by_id])
+
+    @cached_property
+    def groups(self) -> CodeGroups:
+        """The dictionary's terms grouped by length (suggest, fuzzy)."""
+        return CodeGroups(self.dictionary.terms)
+
+    @cached_property
+    def resident(self) -> DecodedPostings:
+        """The stored postings decoded on the driver, flat per term: the
+        in-memory twin of the reference's startup index load
+        (srpc/PageSearch/ReadPage.cpp), which also holds them decoded."""
+        cols = _decode_cols(self.postings, positions=True)
+        return decode_table(self.scan.select(*cols).toArrow())
+
+
+class Bm25CompressedIndex:
+    """Query engine over (postings, term_dict) tables. Every query reads
+    one immutable Snapshot of them, so threads may share a handle."""
+
+    #: term_dicts up to this many rows are collected to the driver once per
+    #: snapshot and probed in-process (kills one Spark job per query).
+    #: Web-scale dicts exceed it and fall back to per-query filtered probes.
     #: Driver memory at the cap: 2M entries x (~100 B str key + 28 B int +
     #: dict slot) plus the sorted-term list (8 B pointer/entry, strings
-    #: shared with the dict) and five int64 numpy arrays (40 B/entry: the
-    #: term-ordered ids/dfs/lengths and the id-ordered ids/dfs)
+    #: shared with the dict), four int64 arrays (32 B/entry: term- and
+    #: id-ordered ids/dfs) and CodeGroups (4 B/code point + 8 B/term)
     #: ~= 400-500 MB — sized for the 8 GB driver this engine configures
     #: (session.py); lower it for smaller drivers.
     DRIVER_DICT_CACHE_MAX = 2_000_000
@@ -876,12 +977,15 @@ class Bm25CompressedIndex:
     #: 24 B per term. Measured on the 1000-doc benchmark index (232,908
     #: postings, 608,358 positions, 18,828 terms): 13.08 MB, ~56 B/posting
     #: all in, so ~56 MB at the cap for that shape (~36 B/posting without
-    #: positions) — a small share of the dict cache's budget above.
+    #: positions) — a small share of the driver dictionary's budget above.
     #: search_query_batch scores a whole unfaceted batch from those
     #: resident arrays too, with no per-call copy of the postings.
     #: Larger queries keep the distributed plan, whose per-part scoring
     #: runs in parallel on the executors.
     DRIVER_SCORE_MAX_POSTINGS = 1_000_000
+
+    #: prepared plans a snapshot keeps (_point_frame) before starting over
+    PLANS_MAX = 512
 
     def __init__(
         self,
@@ -896,141 +1000,71 @@ class Bm25CompressedIndex:
 
         ship_package(spark)  # scoring closures import this package on workers
         self.spark = spark
-        self.postings = postings
-        self.term_dict = term_dict
         #: index geometry (doc-range part size) — needed by search_filtered
         #: to bucket an allowed-id set identically to the build; open_index
         #: loads it from the index's meta table
         self.docs_per_part = docs_per_part
-        #: index root (open_index passes it): enables dict_version staleness
-        #: checks so a handle held across incremental folds re-snapshots the
-        #: appended term_dict/postings instead of serving stale lookups.
-        #: Handles built from bare DataFrames (root=None) skip the check —
-        #: they are documented handle-per-build.
+        #: index root (open_index passes it): a handle held across
+        #: incremental folds swaps in a new snapshot on each dict_version
+        #: bump; one built from bare DataFrames (root=None) keeps its one.
         self._root = root
-        #: the postings as stored, before any repartition: the driver
-        #: scoring path (search_query_rows) runs one narrow filtered scan
-        #: of it. None scans ``self.postings`` itself (bare-DataFrame
-        #: handles, and the persisted copy after serving_mode()).
-        self._postings_scan = postings_scan
-        #: the stored postings held on the driver, decoded flat per term
-        #: (DecodedPostings), for an index under DRIVER_SCORE_MAX_POSTINGS
-        #: (_resident_postings)
-        self._resident = None
         #: the dict_version marker's (FileSystem, Path), resolved once
         self._version_marker = _dict_version_marker(spark, root) if root else None
-        self._seen_version = (
-            read_dict_version(spark, root, self._version_marker) if root else None
-        )
-        self._dict_cache: dict[str, int] | None = None
-        self._dict_cache_checked = False
-        self._sorted_terms: list[str] | None = None
-        self._sorted_ids: np.ndarray | None = None
-        self._sorted_dfs: np.ndarray | None = None
-        #: the term-sorted dictionary grouped by length (CodeGroups), built
-        #: on the first suggest_rows or fuzzy expansion of a snapshot
-        self._code_groups: CodeGroups | None = None
-        #: the cached ids/dfs re-sorted by term_id: df lookup by id
-        self._ids_by_id: np.ndarray | None = None
-        self._dfs_by_id: np.ndarray | None = None
-        #: prepared-PLAN cache of the point entry points (_point_frame)
-        self._plan_cache: dict[tuple, DataFrame] = {}
-        self._plan_cache_max = 512
+        # postings_scan: the postings as stored, before any repartition
+        scan = postings if postings_scan is None else postings_scan
+        self._snap = Snapshot(self._version(), postings, scan, term_dict)
+        #: held only while _snapshot or serving_mode replaces _snap
+        self._swap = threading.Lock()
 
-    def _check_version(self) -> None:
-        """Drop caches + re-snapshot the tables when a writer bumped the
-        index's dict_version since this handle last looked. One read is a
-        local file read (~12 us) for a root on the local filesystem, else
-        three py4j calls (~0.6 ms), so each public entry point calls this
-        once and the helpers under it (_lookup, _maybe_cache_dict, the
-        expansions) never do."""
+    #: the current snapshot's tables
+    postings = property(lambda self: self._snap.postings)
+    term_dict = property(lambda self: self._snap.term_dict)
+
+    def _version(self):
         if self._root is None:
-            return
-        v = read_dict_version(self.spark, self._root, self._version_marker)
-        if v == self._seen_version:
-            return
-        self._seen_version = v
-        # parquet DataFrames pin their file listing at read time, so a
-        # version bump means BOTH the cache and the snapshots are stale.
-        # Release any persisted partitions (serving_mode's coalesced
-        # cache) BEFORE dropping the handles, or a long-lived serving
-        # session leaks a full cached copy per incremental fold.
-        for df in (self.postings, self.term_dict):
-            try:
-                df.unpersist()
-            except Exception:
-                pass
-        from .build_index import open_postings, read_postings
+            return None
+        return read_dict_version(self.spark, self._root, self._version_marker)
 
-        self._postings_scan = read_postings(self.spark, self._root)
-        self.postings = open_postings(self.spark, self._root, self._postings_scan)
-        self.term_dict = self.spark.read.parquet(f"{self._root}/term_dict")
-        self._dict_cache = None
-        self._dict_cache_checked = False
-        self._sorted_terms = self._sorted_ids = self._sorted_dfs = None
-        self._code_groups = self._ids_by_id = self._dfs_by_id = None
-        self._resident = None
-        self._plan_cache.clear()  # stale-keyed plans reference dropped tables
+    def _snapshot(self) -> Snapshot:
+        """The snapshot of the index's current dict_version: each public
+        entry point takes one and hands it down, so a query never mixes two
+        versions. The marker read is a local file read (~12 us) for a root
+        on the local filesystem, else three py4j calls (~0.6 ms). After a
+        bump, the new snapshot is built under _swap with the version
+        re-read inside, so callers racing on one bump build it once. An
+        empty marker is a bump caught between its truncate and its write
+        (the overwrite is not atomic): the current snapshot stays."""
+        snap = self._snap
+        if self._version() in (snap.version, ""):
+            return snap
+        with self._swap:
+            v = self._version()
+            if v not in (self._snap.version, ""):
+                from .build_index import open_postings, read_postings
 
-    def _maybe_cache_dict(self) -> dict[str, int] | None:
-        if not self._dict_cache_checked:
-            self._dict_cache_checked = True
-            n = self.term_dict.count()
-            if n <= self.DRIVER_DICT_CACHE_MAX:
-                import pyarrow.compute as pc
-
-                # sorted on the driver: Arrow compares strings by bytes,
-                # which is Spark's UTF8String order and, for UTF-8, Python's
-                # code-point order (what the bisects below assume)
-                tbl = self.term_dict.select("term", "term_id", "df").toArrow()
-                tbl = tbl.take(pc.sort_indices(tbl, [("term", "ascending")]))
-                # term-sorted parallel arrays: prefix expansion bisects the
-                # [prefix, succ(prefix)) range in O(log V) instead of
-                # scanning the whole vocabulary per prefix query
-                self._sorted_terms = tbl.column("term").to_pylist()
-                self._sorted_ids = tbl.column("term_id").to_numpy().astype(np.int64)
-                self._sorted_dfs = tbl.column("df").to_numpy().astype(np.int64)
-                self._dict_cache = dict(
-                    zip(self._sorted_terms, self._sorted_ids.tolist())
+                # parquet DataFrames pin their file listing at read time, so
+                # the old tables are stale; release any persisted copy
+                # (serving_mode's) or a serving session leaks one per fold
+                _unpersist(self._snap.postings, self._snap.term_dict)
+                scan = read_postings(self.spark, self._root)
+                self._snap = Snapshot(
+                    v, open_postings(self.spark, self._root, scan), scan,
+                    self.spark.read.parquet(f"{self._root}/term_dict"),
                 )
-                by_id = np.argsort(self._sorted_ids, kind="stable")
-                self._ids_by_id = self._sorted_ids[by_id]
-                self._dfs_by_id = self._sorted_dfs[by_id]
-        return self._dict_cache
+            return self._snap
 
-    def _summed_df(self, tids: list[int]) -> int | None:
-        """Total df of ``tids`` from the driver dict cache (the number of
-        postings a filtered scan of them returns), or None without one."""
-        if self._maybe_cache_dict() is None:
+    def _driver_dict(self, snap) -> DriverDict | None:
+        """``snap``'s driver dictionary, or None when its term_dict has
+        more than DRIVER_DICT_CACHE_MAX rows (Spark probes stand in)."""
+        return snap.dictionary if snap.n_terms <= self.DRIVER_DICT_CACHE_MAX else None
+
+    def _driver_postings(self, snap) -> DecodedPostings | None:
+        """``snap``'s resident postings, or None without a driver dictionary
+        or when its whole summed df is over DRIVER_SCORE_MAX_POSTINGS."""
+        d = self._driver_dict(snap)
+        if d is None or int(d.dfs.sum()) > self.DRIVER_SCORE_MAX_POSTINGS:
             return None
-        at = np.searchsorted(self._ids_by_id, tids)
-        return int(self._dfs_by_id[at].sum())
-
-    def _resident_postings(self) -> DecodedPostings | None:
-        """The stored postings decoded once on the driver, flat per term
-        (decode_table), loaded once per snapshot — or None without a driver
-        dict cache, or when the index's whole summed df (from that cache)
-        is over DRIVER_SCORE_MAX_POSTINGS. The in-memory twin of the
-        reference's startup index load (srpc/PageSearch/ReadPage.cpp),
-        which also holds its postings decoded."""
-        if self._maybe_cache_dict() is None:
-            return None
-        if int(self._sorted_dfs.sum()) > self.DRIVER_SCORE_MAX_POSTINGS:
-            return None
-        if self._resident is None:
-            cols = self._decode_cols(positions=True)
-            self._resident = decode_table(self._scan().select(*cols).toArrow())
-        return self._resident
-
-    def _decode_cols(self, positions: bool) -> list[str]:
-        """The stored columns decode_table reads, with ``positions`` when
-        asked for and the index has them."""
-        extra = ["positions"] if positions and "positions" in self.postings.columns else []
-        return ["term_id", "part", "n", "docs", "tfs", "scores", *extra]
-
-    def _scan(self) -> DataFrame:
-        """The postings as stored (the persisted copy after serving_mode)."""
-        return self.postings if self._postings_scan is None else self._postings_scan
+        return snap.resident
 
     def serving_mode(self, n_partitions: int = 8) -> "Bm25CompressedIndex":
         """Tune THIS SESSION + handle for low-latency point queries
@@ -1054,45 +1088,38 @@ class Bm25CompressedIndex:
         SIDE EFFECT: flips session confs (adaptive.enabled,
         shuffle.partitions) — intended for a dedicated serving session;
         batch/analytic jobs on the same session should restore them.
-        A dict_version refresh (_check_version) re-snapshots the tables
-        and drops the coalesced cache — re-call after incremental folds.
-        The driver-resident postings are dropped too: the next point query
-        reloads them from the persisted copy.
+        The persisted tables become a new snapshot of the same version
+        (its resident postings reload from the persisted copy); a
+        dict_version refresh drops it — re-call after incremental folds.
         The canonical measured gain is bench.py's serving_loop_qps vs
         warm_loop_qps in the current BENCH json (r4: 2.73 vs 1.68 q/s
         at 20k docs / local[32]; see PLANS.md §6)."""
-        self._check_version()
+        self._snapshot()
         self.spark.conf.set("spark.sql.adaptive.enabled", "false")
         self.spark.conf.set("spark.sql.shuffle.partitions", str(n_partitions))
-        # repeated serving_mode() calls must not stack persisted copies
-        for df in (self.postings, self.term_dict):
-            try:
-                df.unpersist()
-            except Exception:
-                pass
-        # hash-partition on part (adjacent repartitions collapse, so a
-        # handle from open_index re-partitions once, to n_partitions):
-        # the cached layout then satisfies every scorer's groupBy('part')
-        # distribution and point queries run shuffle-free
-        self.postings = self.postings.repartition(n_partitions, "part").persist()
-        self._postings_scan = None  # driver scoring reads the persisted copy
-        self._resident = None
-        self.term_dict = self.term_dict.persist()
-        self.postings.count()
-        self._plan_cache.clear()  # plans built on the pre-snapshot tables
-        self._maybe_cache_dict()
+        with self._swap:
+            old = self._snap
+            # repeated serving_mode() calls must not stack persisted copies
+            _unpersist(old.postings, old.term_dict)
+            # hash-partition on part (adjacent repartitions collapse, so a
+            # handle from open_index re-partitions once, to n_partitions):
+            # the cached layout then satisfies every scorer's groupBy('part')
+            # distribution and point queries run shuffle-free
+            postings = old.postings.repartition(n_partitions, "part").persist()
+            postings.count()
+            self._snap = Snapshot(old.version, postings, postings, old.term_dict.persist())
+        self._driver_dict(self._snap)
         return self
 
     def lookup_terms(self, terms: list[str]) -> dict[str, int]:
-        self._check_version()
-        return self._lookup(terms)
+        return self._lookup(self._snapshot(), terms)
 
-    def _lookup(self, terms: list[str]) -> dict[str, int]:
-        cache = self._maybe_cache_dict()
-        if cache is not None:
-            return {t: cache[t] for t in terms if t in cache}
+    def _lookup(self, snap, terms: list[str]) -> dict[str, int]:
+        d = self._driver_dict(snap)
+        if d is not None:
+            return {t: d.tid[t] for t in terms if t in d.tid}
         rows = (
-            self.term_dict.filter(F.col("term").isin(terms))
+            snap.term_dict.filter(F.col("term").isin(terms))
             .select("term", "term_id")
             .collect()
         )
@@ -1112,9 +1139,9 @@ class Bm25CompressedIndex:
         top-k truncation, so the k results are exactly the best survivors).
         Excluded terms absent from the dictionary, or that also appear in the
         positive query, are no-ops."""
-        self._check_version()
-        comp = self._compile_one(_plain_tokens(query, mode, pattern, exclude))
-        return self._point_frame(comp, k, round_to)
+        snap = self._snapshot()
+        comp = self._compile_one(snap, _plain_tokens(query, mode, pattern, exclude))
+        return self._point_frame(snap, comp, k, round_to)
 
     def score_all(
         self,
@@ -1130,11 +1157,11 @@ class Bm25CompressedIndex:
         BEFORE the sum would be lossy. Same one-exchange plan as search();
         per-part lists are simply not cut (MaxScore tau stays disabled —
         every match must be scored)."""
-        self._check_version()
-        comp = self._compile_one(_plain_tokens(query, mode, pattern, exclude))
+        snap = self._snapshot()
+        comp = self._compile_one(snap, _plain_tokens(query, mode, pattern, exclude))
         if comp is None:
             return self.spark.createDataFrame([], _POINT_SCHEMA)
-        return self._scored({"": comp}, 1 << 30, None).select("doc_id", "score")
+        return self._scored(snap, {"": comp}, 1 << 30, None).select("doc_id", "score")
 
     def search_filtered(
         self,
@@ -1157,11 +1184,11 @@ class Bm25CompressedIndex:
         _scored (shuffle shape, GEOMETRY CONTRACT, MaxScore and AND with an
         allowed set).
         """
-        self._check_version()
-        comp = self._compile_one(_plain_tokens(query, mode, pattern))
-        return self._point_frame(comp, k, round_to, allowed, docs_per_part)
+        snap = self._snapshot()
+        comp = self._compile_one(snap, _plain_tokens(query, mode, pattern))
+        return self._point_frame(snap, comp, k, round_to, allowed, docs_per_part)
 
-    def _expand_fuzzy(self, word: str, dist: int, max_expansions: int) -> list[int]:
+    def _expand_fuzzy(self, snap, word: str, dist: int, max_expansions: int) -> list[int]:
         """term_ids of dictionary terms within edit distance ``dist`` of
         ``word``, ranked distance-then-df-desc-then-term (deterministic),
         capped at max_expansions — the Lucene FuzzyQuery expansion analog
@@ -1177,13 +1204,14 @@ class Bm25CompressedIndex:
         web-scale shape)."""
         if not word:
             return []
-        if self._maybe_cache_dict() is not None:
-            pos, d = self._groups().within(word, dist)
+        dd = self._driver_dict(snap)
+        if dd is not None:
+            pos, d = snap.groups.within(word, dist)
             # positions are term order: the Spark path's orderBy
-            rank = np.lexsort((pos, -self._sorted_dfs[pos], d))[:max_expansions]
-            return self._sorted_ids[pos[rank]].tolist()
+            rank = np.lexsort((pos, -dd.dfs[pos], d))[:max_expansions]
+            return dd.ids[pos[rank]].tolist()
         rows = (
-            self.term_dict.filter(
+            snap.term_dict.filter(
                 F.length("term").between(len(word) - dist, len(word) + dist)
             )
             .withColumn("_d", F.levenshtein(F.col("term"), F.lit(word)))
@@ -1195,41 +1223,19 @@ class Bm25CompressedIndex:
         )
         return [r["term_id"] for r in rows]
 
-    def _require_positions(self, op: str) -> None:
+    @staticmethod
+    def _require_positions(snap, op: str) -> None:
         """Fail fast (driver-side, clear message) when a positional operator
         runs against an index built without positions — instead of a
         KeyError inside the worker-side scorer."""
-        if "positions" not in self.postings.columns:
+        if "positions" not in snap.postings.columns:
             raise ValueError(
                 f"{op} needs a positions-enabled index: build with "
                 "term_frequencies(with_positions=True) / "
                 "build_index(with_positions=True)"
             )
 
-    def _sorted_range(self, prefix: str) -> tuple[int, int]:
-        """[lo, hi) index range of ``prefix``-prefixed terms in the sorted
-        cache arrays — every string with this prefix sorts in [prefix,
-        prefix[:-1] + succ(last char)); exact range, two bisects."""
-        import bisect
-
-        terms = self._sorted_terms
-        lo = bisect.bisect_left(terms, prefix)
-        last = prefix[-1]
-        if ord(last) < 0x10FFFF:
-            hi = bisect.bisect_left(terms, prefix[:-1] + chr(ord(last) + 1), lo)
-        else:
-            hi = len(terms)
-        return lo, hi
-
-    def _take_ranked(self, idxs: np.ndarray, max_expansions: int) -> list[int]:
-        """Cap an ASCENDING index array by df rank (df desc, term asc tie —
-        stable argsort over the term-ordered indices)."""
-        if idxs.size > max_expansions:
-            dfs = self._sorted_dfs[idxs]
-            idxs = idxs[np.argsort(-dfs, kind="stable")[:max_expansions]]
-        return self._sorted_ids[idxs].tolist()
-
-    def _expand_prefix(self, prefix: str, max_expansions: int) -> list[int]:
+    def _expand_prefix(self, snap, prefix: str, max_expansions: int) -> list[int]:
         """term_ids of dictionary terms starting with ``prefix``, capped by
         df rank (highest-df kept; deterministic df-desc/term tie).
 
@@ -1240,12 +1246,12 @@ class Bm25CompressedIndex:
         first-character index, Make_dir/MakeDictAndIndex.cpp:203-209)."""
         if not prefix:
             return []
-        cache = self._maybe_cache_dict()
-        if cache is not None:
-            lo, hi = self._sorted_range(prefix)
-            return self._take_ranked(np.arange(lo, hi, dtype=np.int64), max_expansions)
+        d = self._driver_dict(snap)
+        if d is not None:
+            lo, hi = d.prefix_range(prefix)
+            return d.ranked_ids(np.arange(lo, hi, dtype=np.int64), max_expansions)
         rows = (
-            self.term_dict.filter(
+            snap.term_dict.filter(
                 (F.col("prefix") == prefix[0]) & F.col("term").startswith(prefix)
             )
             .orderBy(F.desc("df"), F.asc("term"))
@@ -1255,7 +1261,7 @@ class Bm25CompressedIndex:
         )
         return [r["term_id"] for r in rows]
 
-    def _expand_regexp(self, pattern: str, max_expansions: int) -> list[int]:
+    def _expand_regexp(self, snap, pattern: str, max_expansions: int) -> list[int]:
         """term_ids of dictionary terms FULLY matching ``pattern``
         (Lucene-RegexpQuery whole-term semantics), df-ranked and capped.
 
@@ -1274,21 +1280,20 @@ class Bm25CompressedIndex:
         if not pattern:
             return []
         rx = re.compile(pattern)
-        cache = self._maybe_cache_dict()
+        d = self._driver_dict(snap)
         lits = [
             _regex_literal_prefix(b)
             for b in _split_top_level_alternation(pattern)
         ]
-        if cache is not None and all(lits):
-            terms = self._sorted_terms
+        if d is not None and all(lits):
             hit: set[int] = set()
             for lit in lits:
-                lo, hi = self._sorted_range(lit)
-                hit.update(i for i in range(lo, hi) if rx.fullmatch(terms[i]))
+                lo, hi = d.prefix_range(lit)
+                hit.update(i for i in range(lo, hi) if rx.fullmatch(d.terms[i]))
             idxs = np.fromiter(sorted(hit), dtype=np.int64)
-            return self._take_ranked(idxs, max_expansions)
+            return d.ranked_ids(idxs, max_expansions)
         rows = (
-            self.term_dict.filter(F.col("term").rlike(f"^(?:{pattern})$"))
+            snap.term_dict.filter(F.col("term").rlike(f"^(?:{pattern})$"))
             .orderBy(F.desc("df"), F.asc("term"))
             .limit(max_expansions)
             .select("term_id")
@@ -1312,9 +1317,9 @@ class Bm25CompressedIndex:
         search_prefix and the grammar's /re/ clause already lowercase,
         so a direct-API uppercase literal must not silently match
         nothing."""
-        self._check_version()
-        comp = self._compile_one(_tk(regexps=[pattern.lower()]), max_expansions)
-        return self._point_frame(comp, k, round_to)
+        snap = self._snapshot()
+        comp = self._compile_one(snap, _tk(regexps=[pattern.lower()]), max_expansions)
+        return self._point_frame(snap, comp, k, round_to)
 
     def search_prefix(
         self,
@@ -1332,9 +1337,9 @@ class Bm25CompressedIndex:
         term. ``max_expansions`` caps runaway one-letter prefixes by df
         rank (highest-df expansions kept; deterministic df-desc/term tie).
         """
-        self._check_version()
-        comp = self._compile_one(_tk(prefixes=[prefix.lower()]), max_expansions)
-        return self._point_frame(comp, k, round_to)
+        snap = self._snapshot()
+        comp = self._compile_one(snap, _tk(prefixes=[prefix.lower()]), max_expansions)
+        return self._point_frame(snap, comp, k, round_to)
 
     def search_near(
         self,
@@ -1356,11 +1361,11 @@ class Bm25CompressedIndex:
         Requires a positions-enabled index; score is the BM25 sum over the
         distinct terms at their whole-query qtf (same scoring contract as
         search_phrase)."""
-        self._check_version()
-        self._require_positions("search_near")
+        snap = self._snapshot()
+        self._require_positions(snap, "search_near")
         toks = re.findall(pattern, query.lower())
-        comp = self._compile_one(_tk(nears=[(toks, window, ordered)]))
-        return self._point_frame(comp, k, round_to)
+        comp = self._compile_one(snap, _tk(nears=[(toks, window, ordered)]))
+        return self._point_frame(snap, comp, k, round_to)
 
     def search_phrase(
         self,
@@ -1374,10 +1379,10 @@ class Bm25CompressedIndex:
         Requires a positions-enabled index (build_postings over a
         positions-carrying tf table). Score = the BM25 sum over the
         phrase's distinct terms at their whole-phrase qtf."""
-        self._check_version()
-        self._require_positions("search_phrase")
+        snap = self._snapshot()
+        self._require_positions(snap, "search_phrase")
         toks = re.findall(pattern, phrase.lower())
-        return self._point_frame(self._compile_one(_tk(phrases=[toks])), k, round_to)
+        return self._point_frame(snap, self._compile_one(snap, _tk(phrases=[toks])), k, round_to)
 
     def search_query(
         self,
@@ -1421,21 +1426,21 @@ class Bm25CompressedIndex:
         positive atoms present, qtf = each atom's occurrence count across
         the whole query string.
         """
-        self._check_version()
-        specs, comps = self._compile_query({"": query}, mode, pattern, max_expansions)
+        snap = self._snapshot()
+        specs, comps = self._compile_query(snap, {"": query}, mode, pattern, max_expansions)
         allowed = self._facet_allow(specs[""], docs)
-        return self._point_frame(comps.get(""), k, round_to, allowed, docs_per_part)
+        return self._point_frame(snap, comps.get(""), k, round_to, allowed, docs_per_part)
 
-    def _compile(self, tks: dict, max_expansions: int = 1024) -> dict:
+    def _compile(self, snap, tks: dict, max_expansions: int = 1024) -> dict:
         """{query_id: tokenized query (_tk)} -> {query_id: compiled query
         (_compile_spec)}, with ONE dictionary probe for the union of their
         tokens; a query that cannot match is left out."""
         terms = sorted(set().union(*(tk["all"] for tk in tks.values())))
-        tid = self._lookup(terms) if terms else {}
+        tid = self._lookup(snap, terms) if terms else {}
         expanders = (
-            lambda p: self._expand_prefix(p, max_expansions),
-            lambda w, d: self._expand_fuzzy(w, d, max_expansions),
-            lambda p: self._expand_regexp(p, max_expansions),
+            lambda p: self._expand_prefix(snap, p, max_expansions),
+            lambda w, d: self._expand_fuzzy(snap, w, d, max_expansions),
+            lambda p: self._expand_regexp(snap, p, max_expansions),
         )
         comps = {}
         for qid, tk in tks.items():
@@ -1444,11 +1449,11 @@ class Bm25CompressedIndex:
                 comps[qid] = c
         return comps
 
-    def _compile_one(self, tk: dict, max_expansions: int = 1024) -> dict | None:
+    def _compile_one(self, snap, tk: dict, max_expansions: int = 1024) -> dict | None:
         """One tokenized query compiled (_compile), or None."""
-        return self._compile({"": tk}, max_expansions).get("")
+        return self._compile(snap, {"": tk}, max_expansions).get("")
 
-    def _compile_query(self, queries: dict, mode: str, pattern: str, max_expansions: int):
+    def _compile_query(self, snap, queries: dict, mode: str, pattern: str, max_expansions: int):
         """The grammar prologue of search_query, search_query_rows and
         search_query_batch: parse every query string, tokenize, then one
         dictionary probe, the expansions and the compile (_compile).
@@ -1459,13 +1464,13 @@ class Bm25CompressedIndex:
 
         specs = {qid: parse_query(q) for qid, q in queries.items()}
         if any(s.phrases or s.nears for s in specs.values()):
-            self._require_positions("phrase/proximity clauses")
+            self._require_positions(snap, "phrase/proximity clauses")
         tks = {
             qid: _spec_tokens(s, mode, pattern)
             for qid, s in specs.items()
             if s.has_positive
         }
-        return specs, self._compile(tks, max_expansions)
+        return specs, self._compile(snap, tks, max_expansions)
 
     @staticmethod
     def _facet_allow(spec, docs: DataFrame | None) -> DataFrame | None:
@@ -1478,7 +1483,7 @@ class Bm25CompressedIndex:
         return apply_facets(docs, spec.facets)
 
     def _point_frame(
-        self, comp, k, round_to, allowed: DataFrame | None = None, docs_per_part=None
+        self, snap, comp, k, round_to, allowed: DataFrame | None = None, docs_per_part=None
     ) -> DataFrame:
         """THE lazy plan of every single-query entry point: the distributed
         plan (_scored) of one compiled query, ranked by _rank_scored_df
@@ -1490,24 +1495,24 @@ class Bm25CompressedIndex:
         (PLANS.md §6) that repeats identically for an identical compiled
         query. Plans only: every collect() re-executes the job from the
         postings table, so no result is ever cached (and callers must not
-        persist() a returned frame for the same reason). The key is the
-        compiled query + the postings snapshot identity, so
-        serving_mode()/dict_version refreshes invalidate by construction."""
+        persist() a returned frame for the same reason). The plans live in
+        the snapshot (Snapshot.plans), so serving_mode()/dict_version
+        refreshes drop them with it."""
         if comp is None:
             return self.spark.createDataFrame([], _POINT_SCHEMA)
-        key = (_comp_key(comp), k, round_to, id(self.postings))
-        df = None if allowed is not None else self._plan_cache.get(key)
+        key = (_comp_key(comp), k, round_to)
+        df = None if allowed is not None else snap.plans.get(key)
         if df is None:
             allow = None if allowed is None else {"": allowed}
-            scored = self._scored({"": comp}, k, round_to, allow, docs_per_part)
+            scored = self._scored(snap, {"": comp}, k, round_to, allow, docs_per_part)
             df = _rank_scored_df(scored, k, round_to)
             if allowed is None:
-                if len(self._plan_cache) >= self._plan_cache_max:
-                    self._plan_cache.clear()
-                self._plan_cache[key] = df
+                if len(snap.plans) >= self.PLANS_MAX:
+                    snap.plans.clear()
+                snap.plans[key] = df
         return df
 
-    def _scored(self, comps: dict, k: int, round_to, allow=None, docs_per_part=None) -> DataFrame:
+    def _scored(self, snap, comps: dict, k: int, round_to, allow=None, docs_per_part=None) -> DataFrame:
         """THE distributed plan: {query_id: compiled query} -> unranked
         (query_id, doc_id, score) rows, each query's per-part lists cut at
         ``k``. The postings are filtered on the union of the compiled term
@@ -1537,8 +1542,8 @@ class Bm25CompressedIndex:
         silently incorrect: allowed ids bucket to the wrong parts and
         legitimate docs drop out of the result."""
         tids = sorted(set().union(*(set(c["qtf"]) | c["exc"] for c in comps.values())))
-        cols = self._decode_cols(_needs_positions(comps))
-        cand = self.postings.filter(F.col("term_id").isin(tids)).select(*cols)
+        cols = _decode_cols(snap.postings, _needs_positions(comps))
+        cand = snap.postings.filter(F.col("term_id").isin(tids)).select(*cols)
 
         def score(table, allow_by_q):
             return _hits_table(
@@ -1595,30 +1600,32 @@ class Bm25CompressedIndex:
         gateway and the CLI.
 
         A small query — at most DRIVER_SCORE_MAX_POSTINGS summed df over
-        its compiled term ids, known from the driver dict cache — is scored
+        its compiled term ids, known from the driver dictionary — is scored
         on the driver by the kernel the workers run (_score_queries), once
         over all its postings. They come from the decoded driver-resident
         postings when the whole index is under the cap (no Spark job at
         all), else from one narrow filtered scan of the stored postings
         collected as Arrow and decoded (one job: no exchange, no
-        Python-worker stage). Every other query (over the cap, no dict
-        cache, facet clauses) collects search_query's distributed plan."""
-        self._check_version()
-        specs, comps = self._compile_query({"": query}, mode, pattern, max_expansions)
+        Python-worker stage). Every other query (over the cap, no driver
+        dictionary, facet clauses) collects search_query's distributed plan."""
+        snap = self._snapshot()
+        specs, comps = self._compile_query(snap, {"": query}, mode, pattern, max_expansions)
         allowed = self._facet_allow(specs[""], docs)
         comp = comps.get("")
         if comp is None:
             return []
         tids = sorted(set(comp["qtf"]) | comp["exc"])
-        n = None if allowed is not None else self._summed_df(tids)
+        # the postings a filtered scan of tids returns, from the dictionary
+        d = None if allowed is not None else self._driver_dict(snap)
+        n = None if d is None else int(d.dfs_by_id[np.searchsorted(d.ids_by_id, tids)].sum())
         if n is None or n > self.DRIVER_SCORE_MAX_POSTINGS:
-            frame = self._point_frame(comp, k, None, allowed, docs_per_part)
+            frame = self._point_frame(snap, comp, k, None, allowed, docs_per_part)
             return [(r["doc_id"], r["score"]) for r in frame.collect()]
-        index = self._resident_postings()
+        index = self._driver_postings(snap)
         if index is None:
-            cols = self._decode_cols(_needs_positions(comps))
+            cols = _decode_cols(snap.postings, _needs_positions(comps))
             index = decode_table(
-                self._scan().filter(F.col("term_id").isin(tids)).select(*cols).toArrow()
+                snap.scan.filter(F.col("term_id").isin(tids)).select(*cols).toArrow()
             )
         _q, d, s = _score_queries(index, comps, k)
         return list(zip(d, s))
@@ -1628,26 +1635,19 @@ class Bm25CompressedIndex:
         operators.suggest.suggest(term_dict, word, k).collect()]``, the
         gateway's /api/suggest shape.
 
-        With a driver dict cache this runs no Spark job: the candidates
+        With a driver dictionary this runs no Spark job: the candidates
         are ranked on the driver by
         :meth:`~searchenginer_spark.operators.suggest.CodeGroups.top_k`
-        over the dictionary grouped by length. Without a cache (or for an
+        over the dictionary grouped by length. Without one (or for an
         empty word) it collects the operator."""
-        self._check_version()
+        snap = self._snapshot()
         low = word.lower()
-        if not low or self._maybe_cache_dict() is None:
-            rows = suggest(self.term_dict, word, k=k).collect()
+        d = None if not low else self._driver_dict(snap)
+        if d is None:
+            rows = suggest(snap.term_dict, word, k=k).collect()
             return [(r["term"], r["sim"]) for r in rows]
-        pos, sim = self._groups().top_k(low, k)
-        terms = self._sorted_terms
-        return [(terms[p], s) for p, s in zip(pos.tolist(), sim.tolist())]
-
-    def _groups(self) -> CodeGroups:
-        """The dict cache's terms grouped by length, built once per
-        snapshot; callers have filled the dict cache."""
-        if self._code_groups is None:
-            self._code_groups = CodeGroups(self._sorted_terms)
-        return self._code_groups
+        pos, sim = snap.groups.top_k(low, k)
+        return [(d.terms[p], s) for p, s in zip(pos.tolist(), sim.tolist())]
 
     def search_query_batch(
         self,
@@ -1679,11 +1679,11 @@ class Bm25CompressedIndex:
         """
         if isinstance(queries, list):
             queries = {str(i): q for i, q in enumerate(queries)}
-        self._check_version()
-        specs, comps = self._compile_query(queries, mode, pattern, max_expansions)
+        snap = self._snapshot()
+        specs, comps = self._compile_query(snap, queries, mode, pattern, max_expansions)
         allowed = {qid: self._facet_allow(s, docs) for qid, s in specs.items() if s.facets}
         allow = {qid: allowed[qid] for qid in comps if qid in allowed}
-        return self._batch(comps, k, round_to, allow, docs_per_part)
+        return self._batch(snap, comps, k, round_to, allow, docs_per_part)
 
     def search_batch(
         self,
@@ -1705,18 +1705,18 @@ class Bm25CompressedIndex:
         """
         if isinstance(queries, list):
             queries = {str(i): q for i, q in enumerate(queries)}
-        self._check_version()
-        comps = self._compile({q: _plain_tokens(t, mode, pattern) for q, t in queries.items()})
-        return self._batch(comps, k, round_to)
+        snap = self._snapshot()
+        tks = {q: _plain_tokens(t, mode, pattern) for q, t in queries.items()}
+        return self._batch(snap, self._compile(snap, tks), k, round_to)
 
-    def _batch(self, comps: dict, k: int, round_to, allow=None, docs_per_part=None) -> DataFrame:
+    def _batch(self, snap, comps: dict, k: int, round_to, allow=None, docs_per_part=None) -> DataFrame:
         """THE batch executor of search_batch and search_query_batch:
         {query_id: compiled query} -> (query_id, doc_id, score), each
         query's top k.
 
-        When no query is filtered and the handle's postings are resident on
-        the driver (a dict cache, and the whole index at most
-        DRIVER_SCORE_MAX_POSTINGS; see _resident_postings), the whole
+        When no query is filtered and the snapshot's postings are resident
+        on the driver (a driver dictionary, and the whole index at most
+        DRIVER_SCORE_MAX_POSTINGS; see _driver_postings), the whole
         batch is scored NOW on the driver by the workers' scorer
         (_score_queries), each query once over the decoded resident
         postings, and returned as a local DataFrame: no Spark job,
@@ -1727,14 +1727,14 @@ class Bm25CompressedIndex:
         ranked per query by a window: ONE job."""
         if not comps:
             return self.spark.createDataFrame([], _BATCH_SCHEMA)
-        index = None if allow else self._resident_postings()
+        index = None if allow else self._driver_postings(snap)
         if index is not None:
             # from Arrow: a local relation, no job (a list of tuples would
             # run a Python-worker job)
             return self.spark.createDataFrame(
                 _hits_table(*_score_queries(index, comps, k, round_to))
             )
-        scored = self._scored(comps, k, round_to, allow, docs_per_part)
+        scored = self._scored(snap, comps, k, round_to, allow, docs_per_part)
         return _rank_scored_batch_df(scored, k, round_to)
 
     def fetch_docs(self, topk: DataFrame, docs: DataFrame, cols: list[str] | None = None) -> DataFrame:

@@ -628,7 +628,7 @@ def build_index(
         # exists): record the mode, with the hashes table folds dedup by
         paths.write_geometry(spark, geo, text_col)
     if built:
-        # open handles on this root must drop stale dict caches / snapshots
+        # open handles on this root swap in a new snapshot of the tables
         from .bm25 import bump_dict_version
 
         bump_dict_version(spark, root)

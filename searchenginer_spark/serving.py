@@ -12,11 +12,11 @@ that handle plays the in-memory services' part.
 
 Per-request cost, on an index whose summed df is at most
 ``Bm25CompressedIndex.DRIVER_SCORE_MAX_POSTINGS`` postings: after the
-first request has filled the handle's driver dict cache and loaded its
-postings decoded flat per term (``operators/postings.py::decode_table``),
-``/api/search`` (``search_query_rows``) and ``/api/suggest``
-(``suggest_rows``) run NO Spark job — a term lookup, the query's terms
-scored on the driver straight from the decoded arrays, or a numpy
+first request has filled the handle's snapshot (``plans/bm25.py::
+Snapshot``: the dictionary on the driver and the postings decoded flat
+per term, ``operators/postings.py::decode_table``), ``/api/search``
+(``search_query_rows``) and ``/api/suggest`` (``suggest_rows``) run NO
+Spark job — a term lookup, the query's terms scored on the driver straight from the decoded arrays, or a numpy
 edit-distance rank over the dictionary grouped by length
 (``operators/suggest.py::CodeGroups``, built once per snapshot); what is
 left per request is one ``dict_version`` read (a local file read for a
@@ -25,18 +25,23 @@ opens its own JVM connection; elsewhere three py4j calls, ~0.6 ms).
 Measured one HTTP request at a time on a 4-vCPU host (the benchmark's
 seed-1 index: 1000 docs with positions, 18,828 terms; local[4]): search
 1.9 ms mean (1.6 ms median) and suggest 2.1 ms mean (1.9 ms median),
-against 110 ms and 92 ms when each ran one Spark job. On a larger index a query whose own terms hold at most that
-many postings is one narrow filtered scan job, scored on the driver;
-larger or faceted queries pay the distributed plan's one-or-two jobs (~0.3-0.5 s
+against 110 ms and 92 ms when each ran one Spark job. On a larger
+index a query whose own terms hold at most that many postings is one
+narrow filtered scan job, scored on the driver; larger or faceted
+queries pay the distributed plan's one-or-two jobs (~0.3-0.5 s
 scheduling floor on local mode, see PLANS.md §6), and suggest without
-a dict cache runs the Spark operator. Bulk callers should still use
-``/api/search_batch``: one dictionary probe and one scoring pass per
+a driver dictionary runs the Spark operator. Bulk callers should still
+use ``/api/search_batch``: one dictionary probe and one scoring pass per
 query SET — on the small index above a driver pass with no Spark job,
 on a larger one (or with facets) one distributed job.
 
-Concurrent single requests are not coalesced into batches: on the
-in-memory path there is no per-request job left whose cost a batch
-could share.
+Requests run concurrently, one handler thread each, with no lock: each
+reads the handle's current snapshot, which nothing mutates, and a
+``dict_version`` bump swaps in a new one under a lock held only for the
+swap — the reference's read-write lock, shared by readers and taken
+exclusively only by a reload. Concurrent single requests are not
+coalesced into batches: on the in-memory path there is no per-request
+job left whose cost a batch could share.
 
 Request shapes (both routes take GET query strings or POST bodies in
 ``application/x-www-form-urlencoded`` or JSON):
@@ -106,15 +111,9 @@ class SearchServer:
         self.spark = spark
         self.idx = open_index(spark, root)
         self.default_k = default_k
-        # one request at a time against the shared index handle: its lazy
-        # driver dict cache, resident postings and dict_version
-        # re-snapshot are check-then-act mutations, unsafe under
-        # concurrent handler threads. On a small index a search or suggest
-        # holds it for driver-side work only, no Spark job (see the module
-        # docstring); bulk throughput comes from /api/search_batch (one
-        # scoring pass per query SET) — same trade the reference's worker
-        # pool makes per engine connection.
-        self._lock = threading.Lock()
+        # handler threads share the handle without a lock: each request
+        # reads one immutable snapshot of the index (see the module
+        # docstring)
         server = self
 
         class Handler(BaseHTTPRequestHandler):
@@ -153,14 +152,11 @@ class SearchServer:
                 try:
                     params = self._params()
                     if path == "/api/search":
-                        with server._lock:
-                            self._reply(200, server.api_search(params))
+                        self._reply(200, server.api_search(params))
                     elif path == "/api/search_batch":
-                        with server._lock:
-                            self._reply(200, server.api_search_batch(params))
+                        self._reply(200, server.api_search_batch(params))
                     elif path == "/api/suggest":
-                        with server._lock:
-                            self._reply(200, server.api_suggest(params))
+                        self._reply(200, server.api_suggest(params))
                     else:
                         self._reply(404, {"error": f"no route {path}"})
                 except _BadRequest as e:

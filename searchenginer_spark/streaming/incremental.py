@@ -289,8 +289,8 @@ def incremental_index(
             "partitionOverwriteMode", "dynamic"
         ).partitionBy("part").parquet(paths.postings)
         # signal open Bm25CompressedIndex handles (root-opened) that
-        # term_dict/postings changed: their driver dict cache and parquet
-        # file-listing snapshots are stale until they re-read
+        # term_dict/postings changed: each swaps in a new snapshot of the
+        # tables on its next query
         from ..plans.bm25 import bump_dict_version
 
         bump_dict_version(bspark, root)

@@ -15,7 +15,7 @@ from searchenginer_spark.operators.postings import (
 )
 from searchenginer_spark.plans.bm25 import Bm25CompressedIndex
 from searchenginer_spark.plans.bm25_dataframe import Bm25DataFrameIndex
-from tests.conftest import assert_released, persisted_ids
+from tests.conftest import assert_released, count_jobs, persisted_ids
 
 QUERIES = [
     ("data", "and"),
@@ -95,7 +95,7 @@ def test_search_prefix_matches_or_expansion(engines, spark):
     assert got == want
     # big-dict fallback path (no driver cache): identical result
     comp2 = Bm25CompressedIndex(spark, comp.postings, comp.term_dict)
-    comp2._dict_cache_checked = True  # simulate dict > cache cap
+    comp2.DRIVER_DICT_CACHE_MAX = 0  # simulate dict > cache cap
     got2 = [(r["doc_id"], r["score"]) for r in comp2.search_prefix("quer", k=10, round_to=4).collect()]
     assert got2 == want
     assert comp.search_prefix("zzzz_nothing", k=10).count() == 0
@@ -264,7 +264,7 @@ def test_search_regexp_matches_or_expansion(engines, spark):
     assert got == want
     # big-dict fallback (Catalyst rlike probe, no driver cache): identical
     comp2 = Bm25CompressedIndex(spark, comp.postings, comp.term_dict)
-    comp2._dict_cache_checked = True
+    comp2.DRIVER_DICT_CACHE_MAX = 0
     got2 = [
         (r["doc_id"], r["score"])
         for r in comp2.search_regexp(pat, k=10, round_to=4).collect()
@@ -365,8 +365,7 @@ def test_search_regexp_alternation_cached_matches_fallback(engines, spark):
         (r["doc_id"], r["score"])
         for r in m1.search(" ".join(terms), k=10, mode="or", round_to=4).collect()
     ]
-    comp._maybe_cache_dict()
-    assert comp._dict_cache is not None, "cached path must be active"
+    assert comp._driver_dict(comp._snapshot()) is not None, "cached path must be active"
     got = [
         (r["doc_id"], r["score"])
         for r in comp.search_regexp(pat, k=10, round_to=4).collect()
@@ -374,7 +373,7 @@ def test_search_regexp_alternation_cached_matches_fallback(engines, spark):
     assert got == want
     # uncached rlike fallback agrees
     comp2 = Bm25CompressedIndex(spark, comp.postings, comp.term_dict)
-    comp2._dict_cache_checked = True
+    comp2.DRIVER_DICT_CACHE_MAX = 0
     got2 = [
         (r["doc_id"], r["score"])
         for r in comp2.search_regexp(pat, k=10, round_to=4).collect()
@@ -424,28 +423,24 @@ def test_expand_fuzzy_cached_matches_spark_and_runs_no_job(engines, spark):
     identically to the Spark levenshtein probe — and must never touch
     term_dict (i.e. zero Spark jobs on the warm path)."""
     m1, comp = engines
-    comp._maybe_cache_dict()
-    assert comp._dict_cache is not None
+    snap = comp._snapshot()
+    assert comp._driver_dict(snap) is not None
 
     comp2 = Bm25CompressedIndex(spark, comp.postings, comp.term_dict)
-    comp2._dict_cache_checked = True  # force the Spark fallback path
+    comp2.DRIVER_DICT_CACHE_MAX = 0  # force the Spark fallback path
+    snap2 = comp2._snapshot()
     for word, dist in [("quer", 1), ("data", 1), ("dat", 2), ("zzzz", 1), ("", 1)]:
-        want = comp2._expand_fuzzy(word, dist, 1 << 20)
-        got = comp._expand_fuzzy(word, dist, 1 << 20)
+        want = comp2._expand_fuzzy(snap2, word, dist, 1 << 20)
+        got = comp._expand_fuzzy(snap, word, dist, 1 << 20)
         assert got == want, (word, dist)
     # cap respected with the same ranking prefix
-    full = comp._expand_fuzzy("dat", 2, 1 << 20)
-    assert comp._expand_fuzzy("dat", 2, 3) == full[:3]
+    full = comp._expand_fuzzy(snap, "dat", 2, 1 << 20)
+    assert comp._expand_fuzzy(snap, "dat", 2, 3) == full[:3]
 
-    # no-job assertion: the cached path must not read self.term_dict
-    saved = comp.term_dict
-    comp.term_dict = None
-    try:
-        assert comp._expand_fuzzy("quer", 1, 1 << 20) == comp2._expand_fuzzy(
-            "quer", 1, 1 << 20
-        )
-    finally:
-        comp.term_dict = saved
+    # no-job assertion: the cached path never reads the term_dict table
+    got, jobs = count_jobs(spark, lambda: comp._expand_fuzzy(snap, "quer", 1, 1 << 20))
+    assert jobs == 0
+    assert got == comp2._expand_fuzzy(snap2, "quer", 1, 1 << 20)
 
 
 def test_dict_version_two_rapid_bumps_distinct(spark, tmp_path):
@@ -483,7 +478,7 @@ def test_dict_version_two_rapid_bumps_distinct(spark, tmp_path):
         return read_dict_version(spark, idx._root, idx._version_marker)
 
     assert idx._version_marker is not None
-    assert idx._seen_version is None and read() is None
+    assert idx._snap.version is None and read() is None
     bump_dict_version(spark, idx._root)
     h1 = read()
     bump_dict_version(spark, idx._root)
@@ -492,8 +487,25 @@ def test_dict_version_two_rapid_bumps_distinct(spark, tmp_path):
     assert h2 == read_dict_version(spark, idx._root)
 
 
+def test_empty_marker_keeps_the_snapshot(spark, tmp_path):
+    """A bump overwrites the marker by truncating it first: a query that
+    reads it empty in between keeps the handle's snapshot rather than
+    building one for a version no writer stamped."""
+    from searchenginer_spark.plans.bm25 import bump_dict_version
+
+    root = str(tmp_path / "eroot")
+    bump_dict_version(spark, root)
+    td = spark.createDataFrame([("a", 0, 1)], "term string, term_id long, df long")
+    idx = Bm25CompressedIndex(spark, td, td, root=root)
+    snap = idx._snapshot()
+    assert snap.version
+    _, _, local = idx._version_marker
+    open(local, "w").close()  # the overwrite's truncate, before its write
+    assert idx._snapshot() is snap
+
+
 def test_serving_mode_repeat_does_not_stack_persisted_rdds(spark, docs_sf0001):
-    """serving_mode() called twice (and _check_version refreshes) must
+    """serving_mode() called twice (and dict_version refreshes) must
     unpersist the previous coalesced cache instead of leaking it."""
     m1 = Bm25DataFrameIndex.build(docs_sf0001, text_col="text", persist=False)
     td = build_term_dict(m1.dft)
@@ -560,7 +572,7 @@ def test_search_plan_cache_reuses_plan_never_results(engines, spark, tmp_path):
     ~50 ms py4j construction, PLANS.md §6) but re-execute the job per
     collect — no result caching — and a dict_version bump invalidates."""
     _, comp = engines
-    comp._plan_cache.clear()
+    comp._snap.plans.clear()
     df1 = comp.search("spark query", k=5, mode="and")
     r1 = [tuple(r) for r in df1.collect()]
     assert comp.search("spark query", k=5, mode="and") is df1  # plan reuse
@@ -588,3 +600,28 @@ def test_search_plan_cache_reuses_plan_never_results(engines, spark, tmp_path):
     bump_dict_version(spark, root)
     d2 = idx.search("int return", k=5)
     assert d2 is not d1  # cache cleared, plan rebuilt on fresh snapshots
+
+
+def test_snapshot_fills_lazily(spark, tmp_path):
+    """A handle submits no job at construction, open_index only its reads
+    of the root, and the first point query and the first suggest of a
+    fresh handle exactly the jobs that fill what they read: the term_dict
+    count and collect (and, for the query, the resident postings load)."""
+    from searchenginer_spark.plans.build_index import build_index, open_index, read_postings
+    from searchenginer_spark.sources.corpus import build_docs
+
+    root = str(tmp_path / "lazy")
+    build_index(build_docs(spark, 150, seed=7), root, docs_per_part=64, with_positions=True)
+    postings = read_postings(spark, root)
+    term_dict = spark.read.parquet(f"{root}/term_dict")
+    _, jobs = count_jobs(spark, lambda: Bm25CompressedIndex(spark, postings, term_dict))
+    assert jobs == 0
+    idx, jobs = count_jobs(spark, lambda: open_index(spark, root))
+    assert jobs == 4
+    rows, jobs = count_jobs(spark, lambda: idx.search_query_rows("int return", k=5))
+    assert rows and jobs == 4
+    assert count_jobs(spark, lambda: idx.search_query_rows("int return", k=5)) == (rows, 0)
+    idx = open_index(spark, root)
+    sugg, jobs = count_jobs(spark, lambda: idx.suggest_rows("retrun", k=5))
+    assert sugg and jobs == 3
+    assert count_jobs(spark, lambda: idx.suggest_rows("retrun", k=5)) == (sugg, 0)

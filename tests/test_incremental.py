@@ -14,6 +14,12 @@ from searchenginer_spark.streaming.incremental import incremental_index
 DPP = 64  # docs_per_part
 
 
+def _resident(idx):
+    """The driver-resident postings the handle's current snapshot has
+    loaded, or None when no query has loaded them yet."""
+    return vars(idx._snap).get("resident")
+
+
 def _fold(spark, input_dir, root, ckpt):
     incremental_index(spark, input_dir, root, ckpt, docs_per_part=DPP)
 
@@ -119,7 +125,7 @@ def test_open_handle_sees_folded_terms(spark, tmp_path_factory):
 
 def test_expansion_caches_refresh_after_fold(spark, tmp_path_factory):
     """r5 verdict item 8: the prefix/fuzzy/regexp expansion caches
-    (_sorted_terms/_code_groups snapshots in the driver) must be
+    (the snapshot's driver dictionary and CodeGroups) must be
     invalidated by a fold that ADDS dictionary terms — expand once
     (warm the caches), fold in new matching terms, expand again on the
     SAME handle, and the new ids' docs must appear. Covers all three
@@ -441,7 +447,7 @@ def test_search_query_rows_sees_folded_postings(spark, tmp_path_factory):
     )
     idx = open_index(spark, root)
     assert idx.search_query_rows("zzzfreshterm int", k=200)  # caches warm
-    resident = idx._resident
+    resident = _resident(idx)
     assert resident is not None
     assert "zzzfreshterm" not in dict(idx.suggest_rows("zzzfreshterm", k=50))
     idx2 = open_index(spark, root)  # suggests first after the fold
@@ -460,7 +466,7 @@ def test_search_query_rows_sees_folded_postings(spark, tmp_path_factory):
 
     got = idx.search_query_rows("zzzfreshterm int", k=200)
     assert got[0][0] == 1000
-    assert idx._resident is not None and idx._resident is not resident
+    assert _resident(idx) is not None and _resident(idx) is not resident
     assert got == [
         (r["doc_id"], r["score"])
         for r in idx.search_query("zzzfreshterm int", k=200).collect()
@@ -474,9 +480,9 @@ def test_search_query_rows_sees_folded_postings(spark, tmp_path_factory):
     sp0 = spark.conf.get("spark.sql.shuffle.partitions")
     try:
         idx.serving_mode(n_partitions=4)
-        assert idx._resident is None
+        assert _resident(idx) is None
         assert idx.search_query_rows("zzzfreshterm int", k=200) == got
-        assert idx._resident is not None
+        assert _resident(idx) is not None
         assert idx.suggest_rows("zzzfreshterm", k=5) == sugg
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", aqe0)
@@ -513,7 +519,7 @@ def test_search_query_batch_sees_folded_postings(spark, tmp_path_factory):
         }
 
     before = batch()
-    assert idx._resident is not None and before == want()
+    assert _resident(idx) is not None and before == want()
     assert 1000 not in dict(before["fresh"])
 
     new = spark.createDataFrame(
@@ -530,11 +536,110 @@ def test_search_query_batch_sees_folded_postings(spark, tmp_path_factory):
     sp0 = spark.conf.get("spark.sql.shuffle.partitions")
     try:
         idx.serving_mode(n_partitions=4)
-        assert idx._resident is None
+        assert _resident(idx) is None
         assert batch() == got
-        assert idx._resident is not None
+        assert _resident(idx) is not None
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", aqe0)
         spark.conf.set("spark.sql.shuffle.partitions", sp0)
         idx.postings.unpersist()
         idx.term_dict.unpersist()
+
+
+def test_one_handle_shared_by_threads_across_folds(spark, tmp_path_factory, monkeypatch):
+    """4 threads loop search_query_rows, suggest_rows and search_query_batch
+    on ONE open_index handle, with no lock, while two folds each add a new
+    term. No thread raises; every answer equals the serial answer of a
+    fresh handle at one version (before, between or after the folds), and
+    a thread never goes back to an older one; the swap lock makes each
+    version's snapshot be built once, however many threads saw its bump."""
+    import threading
+    import time
+
+    from searchenginer_spark.plans import bm25
+    from searchenginer_spark.plans.bm25 import read_dict_version
+    from searchenginer_spark.plans.build_index import build_index, open_index
+
+    base = str(tmp_path_factory.mktemp("incthreads"))
+    input_dir, root, ckpt = f"{base}/in", f"{base}/idx", f"{base}/ckpt"
+    build_index(
+        build_docs(spark, 100, seed=42, num_partitions=4), root,
+        docs_per_part=DPP, text_col="content",
+    )
+    batch = {"a": "zzzfresha int", "b": "zzzfreshb return"}
+
+    def answers(idx) -> tuple:
+        return (
+            tuple(idx.search_query_rows("zzzfresha zzzfreshb int", k=20)),
+            tuple(idx.suggest_rows("zzzfresh", k=5)),
+            tuple(sorted(tuple(r) for r in idx.search_query_batch(batch, k=20).collect())),
+        )
+
+    expected = [answers(open_index(spark, root))]
+    idx = open_index(spark, root)
+    assert answers(idx) == expected[0]  # warm: the snapshot's fills are done
+
+    main = threading.main_thread()
+    built = []  # versions of the snapshots the worker threads build
+
+    class Recorded(bm25.Snapshot):
+        def __init__(self, version, *tables):
+            if threading.current_thread() is not main:
+                built.append(version)
+            super().__init__(version, *tables)
+
+    monkeypatch.setattr(bm25, "Snapshot", Recorded)
+    stop = threading.Event()
+    errors: list[BaseException] = []
+    # per thread: loops done, and per call the run of distinct answers seen
+    loops = [0] * 4
+    seen = [([], [], []) for _ in range(4)]
+
+    def worker(i: int) -> None:
+        try:
+            while not stop.is_set():
+                for runs, got in zip(seen[i], answers(idx)):
+                    if not runs or runs[-1] != got:
+                        runs.append(got)
+                loops[i] += 1
+                time.sleep(0.005)  # leave the fold the GIL now and then
+        except BaseException as e:  # noqa: BLE001 - reported below
+            errors.append(e)
+
+    def settle(timeout_s: float = 120.0) -> None:
+        """Wait for every thread to finish two loops begun after now."""
+        start = list(loops)
+        deadline = time.monotonic() + timeout_s
+        while any(n < s + 2 for n, s in zip(loops, start)) and not errors:
+            assert time.monotonic() < deadline, "worker threads stalled"
+            time.sleep(0.05)
+
+    threads = [threading.Thread(target=worker, args=(i,)) for i in range(4)]
+    for t in threads:
+        t.start()
+    versions = []
+    try:
+        settle()
+        for n, text in enumerate(["zzzfresha appears here int", "zzzfreshb and return zzzfreshb"]):
+            spark.createDataFrame(
+                [(1000 + n, text)], "doc_id long, content string"
+            ).write.mode("append").parquet(input_dir)
+            incremental_index(spark, input_dir, root, ckpt, docs_per_part=DPP)
+            versions.append(read_dict_version(spark, root))
+            expected.append(answers(open_index(spark, root)))
+            settle()
+    finally:
+        stop.set()
+        for t in threads:
+            t.join(timeout=120)
+    assert not errors, errors
+    assert all(len(set(e[c] for e in expected)) == 3 for c in range(3)), "states must differ"
+    for i in range(4):
+        for c, runs in enumerate(seen[i]):
+            want = [e[c] for e in expected]
+            assert all(r in want for r in runs), (i, c)
+            states = [want.index(r) for r in runs]
+            assert states == sorted(states), (i, c, states)
+            assert states[-1] == 2, (i, c, states)
+    assert built == versions  # one snapshot per bump, none built twice
+    assert idx._snap.version == versions[-1]

@@ -655,9 +655,8 @@ def _frame_calls(monkeypatch, idx) -> list:
 
 
 def _index_df(idx) -> int:
-    """Summed df of the whole index, from its driver dict cache."""
-    idx._maybe_cache_dict()
-    return int(idx._sorted_dfs.sum())
+    """Summed df of the whole index, from its driver dictionary."""
+    return int(idx._snapshot().dictionary.dfs.sum())
 
 
 @pytest.mark.parametrize("cap", ["default", "narrow", 0])
@@ -681,7 +680,7 @@ def test_search_query_rows_equals_collect(qindex, monkeypatch, cap):
             assert not calls, (query, mode)
         elif want:
             assert calls, (query, mode)
-    assert (qindex._resident_postings() is not None) == (cap == "default")
+    assert (qindex._driver_postings(qindex._snapshot()) is not None) == (cap == "default")
 
 
 def test_search_query_rows_facets_take_distributed_plan(qindex, docs_sf0001, monkeypatch):

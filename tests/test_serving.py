@@ -227,3 +227,81 @@ def test_warm_routes_make_no_jvm_call(server, spark, monkeypatch):
     assert calls == []
     spark.sparkContext._jsc.sc().applicationId()
     assert calls
+
+
+def _call(srv, path, body=None, ctype=None):
+    """(status, JSON reply) of one request; an HTTP error is a reply too."""
+    req = urllib.request.Request(
+        f"http://127.0.0.1:{srv.port}{path}",
+        data=None if body is None else body.encode(),
+        headers={} if ctype is None else {"Content-Type": ctype},
+        method="GET" if body is None else "POST",
+    )
+    try:
+        with urllib.request.urlopen(req, timeout=120) as r:
+            return r.status, json.loads(r.read())
+    except urllib.error.HTTPError as e:
+        return e.code, json.loads(e.read())
+
+
+def test_gateway_concurrent_and_malformed_requests(server):
+    """8 clients at once mix the three routes with malformed requests (a
+    bad k, malformed JSON, an unknown route) against one handle shared with
+    no lock: every good reply is a 200 equal to the direct call, every bad
+    one its 400 or 404."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    idx = server.idx
+    queries = ["int return", "value", '"int return" -float', "ret* value"]
+    words = ["retrun", "flaot", "int"]
+    batch = {"a": "int return", "b": "value", "c": "zzzznohit"}
+    want_batch: dict[str, list] = {i: [] for i in batch}
+    for r in idx.search_query_batch(batch, k=4).collect():
+        want_batch[r["query_id"]].append({"doc_id": r["doc_id"], "score": r["score"]})
+    good = [
+        (
+            f"/api/search?query={urllib.parse.quote_plus(q)}&k=5", None, None,
+            {"query": q, "k": 5, "results": [
+                {"doc_id": d, "score": s} for d, s in idx.search_query_rows(q, k=5, mode="and")
+            ]},
+        )
+        for q in queries
+    ] + [
+        (
+            f"/api/suggest?word={w}&k=5", None, None,
+            {"word": w, "suggestions": [
+                {"term": t, "sim": s} for t, s in idx.suggest_rows(w, k=5)
+            ]},
+        )
+        for w in words
+    ] + [
+        (
+            "/api/search_batch", json.dumps({"queries": batch, "k": 4}),
+            "application/json", {"k": 4, "results": want_batch},
+        )
+    ]
+    assert all(e.get("results") or e.get("suggestions") for *_, e in good)
+    bad = [
+        ("/api/search?query=int&k=abc", None, None, 400),
+        ("/api/suggest?word=int&k=0", None, None, 400),
+        ("/api/search", "not json", "application/json", 400),
+        ("/api/search_batch", '{"queries": ', "application/json", 400),
+        ("/api/nope?query=int", None, None, 404),
+    ]
+    mix = [("good", g) for g in good] + [("bad", b) for b in bad]
+
+    def client(c: int) -> list:
+        out = []
+        for i in range(3 * len(mix)):
+            kind, (path, body, ctype, want) = mix[(c + 5 * i) % len(mix)]
+            out.append((kind, path, want, _call(server, path, body, ctype)))
+        return out
+
+    with ThreadPoolExecutor(8) as pool:
+        replies = [r for rs in pool.map(client, range(8)) for r in rs]
+    assert len(replies) == 8 * 3 * len(mix)
+    for kind, path, want, (status, got) in replies:
+        if kind == "good":
+            assert (status, got) == (200, want), path
+        else:
+            assert status == want and "error" in got, (path, status, got)

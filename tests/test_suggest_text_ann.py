@@ -207,7 +207,7 @@ def test_suggest_rows_without_dict_cache_runs_operator(spark, suggest_index):
     from searchenginer_spark.plans.bm25 import Bm25CompressedIndex
 
     idx = Bm25CompressedIndex(spark, suggest_index.postings, suggest_index.term_dict)
-    idx._dict_cache_checked = True  # simulate a dict over the cache cap
+    idx.DRIVER_DICT_CACHE_MAX = 0  # simulate a dict over the cache cap
     want = [(r["term"], r["sim"]) for r in suggest(idx.term_dict, "retrun", k=5).collect()]
     assert idx.suggest_rows("retrun", k=5) == want
 
