@@ -6,21 +6,22 @@ Layout (one row per (term_id, part)):
     part       int       doc-range partition: part = doc_id // docs_per_part
     n          long      number of postings in this row
     docs       binary    varbyte(delta(doc_id)) — delta restarts at every
-                         block boundary so blocks decode independently
+                         128-posting block boundary
     tfs        binary    varbyte(tf)
     scores     binary    float64 LE array — precomputed BM25 per-posting
                          impact: idf(df) * tf*(k1+1)/(tf + k1*(1-b+b*dl/avgdl)).
                          k1/b/df/avgdl are build-time constants of a static
                          index, so the full per-(term,doc) score is known at
                          build time (impact-ordered index technique).
-    block_last array<long>   last doc_id of each 128-posting block (skip ptr)
-    block_max  array<double> max score per block (block-max WAND pruning)
-    block_doc_off/block_tf_off array<long> byte offset of each block inside
-                         docs/tfs (a block decodes on its own)
+    positions  binary    (positions index only) varbyte(delta(position)),
+                         delta restarting at every posting (first value
+                         absolute); posting i holds tf_i values.
 
-Queries read none of the block columns: the query side decodes whole rows
-once into flat per-term arrays (:func:`decode_table`) and recomputes the
-block maxima over them.
+The query side decodes whole rows once into flat per-term arrays
+(:func:`decode_table`) and computes each term's block maxima for
+MaxScore/block-max pruning there, so no skip pointers are stored. Roots
+written before this layout also carry five per-block skip-pointer and
+block-max columns; readers project the columns above and ignore them.
 
 Reference counterpart: text postings `word \\t (docid weight)*` sorted by
 docid (/root/reference/Make_Page/MakePage.cpp:196-215, ReadPage.h:55 —
@@ -40,7 +41,6 @@ from __future__ import annotations
 from typing import NamedTuple
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import DataFrame
@@ -51,34 +51,39 @@ from ..plans.bm25_dataframe import B, K1
 
 BLOCK = 128
 
-POSTINGS_SCHEMA = (
-    "term_id long, part int, n long, docs binary, tfs binary, scores binary, "
-    "block_last array<long>, block_max array<double>, "
-    "block_doc_off array<long>, block_tf_off array<long>"
-)
+POSTINGS_SCHEMA = "term_id long, part int, n long, docs binary, tfs binary, scores binary"
+POSTINGS_POS_SCHEMA = POSTINGS_SCHEMA + ", positions binary"
 
-POSTING_COLS = [
-    "term_id", "part", "n", "docs", "tfs", "scores",
-    "block_last", "block_max", "block_doc_off", "block_tf_off",
-]
-
-#: positions variant: two extra columns — ``positions`` concats over postings
-#: varbyte(delta(token positions)) with the delta restarting at every
-#: POSTING (first value absolute), so any block boundary decodes
-#: independently; per-posting slicing derives from the tf counts (posting i
-#: holds tf_i values). ``block_pos_off`` stores each block's byte offset
-#: inside ``positions`` (same skip-pointer pattern as block_doc_off).
-#: ``positions`` is kept as the LAST column so plans that don't need
-#: positions prune it at the parquet scan (SURVEY §7.4.4).
-POSTINGS_POS_SCHEMA = POSTINGS_SCHEMA + ", block_pos_off array<long>, positions binary"
+_BINARY_MAX = np.iinfo(np.int32).max
 
 
-def _encode_part(pdf: pd.DataFrame, n_docs: float, avgdl: float) -> pd.DataFrame:
-    """Encode every term's postings for ONE doc-range part.
+def _restart_deltas(values: np.ndarray, starts: np.ndarray) -> np.ndarray:
+    """uint64 deltas of int64 ``values`` that restart (first value absolute)
+    at each index of ``starts``: the inverse of :func:`_restart_cumsum`."""
+    deltas = np.diff(values, prepend=0)
+    deltas[starts] = values[starts]
+    return deltas.astype(np.uint64)
 
-    One Python invocation per part; everything inside is numpy-vectorized
-    across the entire part (varbyte of all terms' postings in one call,
-    sliced per term by byte offsets).
+
+def _binary(name: str, data: np.ndarray, offsets: np.ndarray) -> pa.Array:
+    """A binary column whose row i is ``data[offsets[i]:offsets[i + 1]]``,
+    built over the whole-part buffer (no per-row copy). Raises when the
+    part's column would pass binary's 32-bit offsets."""
+    if offsets[-1] > _BINARY_MAX:
+        raise ValueError(
+            f"postings column {name!r} of one part holds {int(offsets[-1])} bytes, "
+            f"past the {_BINARY_MAX} a binary column addresses: lower docs_per_part"
+        )
+    return pa.Array.from_buffers(
+        pa.binary(), offsets.size - 1,
+        [None, pa.py_buffer(offsets.astype(np.int32)), pa.py_buffer(data)],
+    )
+
+
+def _encode_part(table: pa.Table, n_docs: float, avgdl: float) -> pa.Table:
+    """Encode every term's postings for ONE doc-range part, in whole-part
+    numpy passes: one lexsort, one varbyte call per column, and each binary
+    column built from the part's byte buffer and its per-term offsets.
 
     Doc length and the BM25 impact are computed HERE, part-locally:
     ``part = doc_id // docs_per_part``, so this part holds every
@@ -86,11 +91,10 @@ def _encode_part(pdf: pd.DataFrame, n_docs: float, avgdl: float) -> pd.DataFrame
     rows — no doc_id-keyed dl join (a full extra shuffle of the widest
     table in the DAG) ever happens. n_docs/avgdl arrive as two closed-over
     scalars."""
-    part = int(pdf["part"].iloc[0])
-    tid_raw = pdf["term_id"].to_numpy()
-    did_raw = pdf["doc_id"].to_numpy().astype(np.int64)
-    tf_raw = pdf["tf"].to_numpy().astype(np.int64)
-    dfv = pdf["df"].to_numpy().astype(np.float64)
+    tid_raw = table.column("term_id").to_numpy().astype(np.int64)
+    did_raw = table.column("doc_id").to_numpy().astype(np.int64)
+    tf_raw = table.column("tf").to_numpy().astype(np.int64)
+    dfv = table.column("df").to_numpy().astype(np.float64)
     # part-local doc lengths over the dict-filtered token stream
     _, inv = np.unique(did_raw, return_inverse=True)
     dlv = np.bincount(inv, weights=tf_raw)[inv]
@@ -98,91 +102,34 @@ def _encode_part(pdf: pd.DataFrame, n_docs: float, avgdl: float) -> pd.DataFrame
     sc_raw = idf * tf_raw * (K1 + 1.0) / (tf_raw + K1 * (1.0 - B + B * dlv / avgdl))
 
     order = np.lexsort((did_raw, tid_raw))
-    tid = tid_raw[order]
-    did = did_raw[order]
-    tfv = tf_raw[order].astype(np.uint64)
-    sc = sc_raw[order]
-    n_all = len(tid)
+    tid, did, tfv, sc = tid_raw[order], did_raw[order], tf_raw[order], sc_raw[order]
+    # term groups: postings goff[g]:goff[g + 1] hold term tid[goff[g]]
+    gstart = np.flatnonzero(np.diff(tid, prepend=-1) != 0)
+    goff = np.append(gstart, tid.size)
+    local = np.arange(tid.size) - np.repeat(gstart, np.diff(goff))
 
-    with_pos = "positions" in pdf.columns
-    if with_pos:
-        pos_lists = pdf["positions"].to_numpy()[order]
-        flat_pos = (
-            np.concatenate([np.asarray(p, dtype=np.uint64) for p in pos_lists])
-            if n_all
-            else np.empty(0, dtype=np.uint64)
-        )
-        # delta within each posting's position list (first value absolute)
-        counts = tfv.astype(np.int64)
-        pstarts = np.concatenate(([0], np.cumsum(counts)[:-1]))
-        pdeltas = flat_pos.copy()
-        if flat_pos.size > 1:
-            pdeltas[1:] = flat_pos[1:] - flat_pos[:-1]
-        pdeltas[pstarts] = flat_pos[pstarts] if flat_pos.size else pdeltas[pstarts]
-        pos_bytes, pos_lens = varbyte_encode_raw(pdeltas)
-        # byte offset of each POSTING's position run
-        pos_byte_off = np.concatenate(([0], np.cumsum(pos_lens)))
-        posting_pos_off = pos_byte_off[pstarts]
-        posting_pos_end = pos_byte_off[np.cumsum(counts)]
-
-    gstart = np.flatnonzero(np.concatenate(([True], tid[1:] != tid[:-1])))
-    gend = np.concatenate((gstart[1:], [n_all]))
-    glen = gend - gstart
-
-    # position of each posting within its term group
-    local = np.arange(n_all) - np.repeat(gstart, glen)
-    is_block_start = (local % BLOCK) == 0
-
-    deltas = did.astype(np.uint64).copy()
-    if n_all > 1:
-        deltas[1:] = (did[1:] - did[:-1]).astype(np.uint64)
-    deltas[is_block_start] = did[is_block_start].astype(np.uint64)
-
-    doc_bytes, doc_lens = varbyte_encode_raw(deltas)
+    block_start = np.flatnonzero(local % BLOCK == 0)
+    doc_bytes, doc_lens = varbyte_encode_raw(_restart_deltas(did, block_start))
     tf_bytes, tf_lens = varbyte_encode_raw(tfv)
-    doc_off = np.concatenate(([0], np.cumsum(doc_lens)))
-    tf_off = np.concatenate(([0], np.cumsum(tf_lens)))
-
-    # block metadata for ALL groups in single vectorized passes (one
-    # reduceat over the whole part instead of one per term — the per-term
-    # Python loop below only slices precomputed lists): block boundaries
-    # never cross term groups because every group starts a new block.
-    bstart_idx = np.flatnonzero(is_block_start)
-    blk_group = np.searchsorted(gstart, bstart_idx, "right") - 1
-    blk_end = np.minimum(bstart_idx + BLOCK, gend[blk_group])
-    abl = did[blk_end - 1].tolist()
-    abm = np.maximum.reduceat(sc, bstart_idx).tolist() if n_all else []
-    ado = (doc_off[bstart_idx] - doc_off[gstart[blk_group]]).tolist()
-    ato = (tf_off[bstart_idx] - tf_off[gstart[blk_group]]).tolist()
-    if with_pos:
-        apo = (posting_pos_off[bstart_idx] - posting_pos_off[gstart[blk_group]]).tolist()
-    bof = np.concatenate(
-        ([0], np.cumsum(np.bincount(blk_group, minlength=len(gstart))))
-    ).tolist()
-
-    rows = []
-    for gi, (s, e) in enumerate(zip(gstart.tolist(), gend.tolist())):
-        b0, b1 = bof[gi], bof[gi + 1]
-        row = (
-            int(tid[s]),
-            part,
-            e - s,
-            doc_bytes[doc_off[s] : doc_off[e]].tobytes(),
-            tf_bytes[tf_off[s] : tf_off[e]].tobytes(),
-            sc[s:e].tobytes(),
-            abl[b0:b1],
-            abm[b0:b1],
-            ado[b0:b1],
-            ato[b0:b1],
+    cols = {
+        "term_id": pa.array(tid[gstart]),
+        "part": pa.array(np.full(gstart.size, table.column("part")[0].as_py(), np.int32)),
+        "n": pa.array(np.diff(goff)),
+        "docs": _binary("docs", doc_bytes, np.append(0, np.cumsum(doc_lens))[goff]),
+        "tfs": _binary("tfs", tf_bytes, np.append(0, np.cumsum(tf_lens))[goff]),
+        "scores": _binary("scores", sc.view(np.uint8), goff * 8),
+    }
+    if "positions" in table.column_names:
+        flat = pc.list_flatten(table.column("positions").take(order)).to_numpy()
+        # posting i holds tf_i positions, starting at pstart[i]
+        pstart = np.append(0, np.cumsum(tfv))
+        pos_bytes, pos_lens = varbyte_encode_raw(
+            _restart_deltas(flat.astype(np.int64), pstart[:-1])
         )
-        if with_pos:
-            row = row + (
-                apo[b0:b1],
-                pos_bytes[posting_pos_off[s] : posting_pos_end[e - 1]].tobytes(),
-            )
-        rows.append(row)
-    cols = POSTING_COLS + (["block_pos_off", "positions"] if with_pos else [])
-    return pd.DataFrame(rows, columns=cols)
+        cols["positions"] = _binary(
+            "positions", pos_bytes, np.append(0, np.cumsum(pos_lens))[pstart[goff]]
+        )
+    return pa.table(cols)
 
 
 def build_postings(
@@ -196,12 +143,13 @@ def build_postings(
 
     ONE shuffle total: tf rows pick up (term_id, df) from the term_dict
     join (broadcast below the threshold, term-keyed shuffle join above it),
-    then hash-exchange once on ``part`` into the Arrow encoder. Doc length
-    and the per-posting BM25 impact are computed inside the encoder
-    (part-local, see :func:`_encode_part`) — the previous design's
-    doc_id-keyed dl join re-shuffled the entire tf table a second time,
-    which measured as the non-scaling stage of the build. n_docs/avgdl are
-    two scalars collected once from ``stats`` and closed over.
+    then hash-exchange once on ``part`` into the Arrow encoder
+    (groupBy('part').applyInArrow, one call per part). Doc length and the
+    per-posting BM25 impact are computed inside the encoder (part-local,
+    see :func:`_encode_part`) — the previous design's doc_id-keyed dl join
+    re-shuffled the entire tf table a second time, which measured as the
+    non-scaling stage of the build. n_docs/avgdl are two scalars collected
+    once from ``stats`` and closed over.
 
     ``dl`` is accepted for signature stability but never joined.
 
@@ -221,11 +169,9 @@ def build_postings(
         .withColumn("part", (F.col("doc_id") / F.lit(docs_per_part)).cast("int"))
     )
     schema = POSTINGS_POS_SCHEMA if extra else POSTINGS_SCHEMA
-
-    def encode(pdf: pd.DataFrame) -> pd.DataFrame:
-        return _encode_part(pdf, n_docs, avgdl)
-
-    return sp.groupBy("part").applyInPandas(encode, schema=schema)
+    return sp.groupBy("part").applyInArrow(
+        lambda table: _encode_part(table, n_docs, avgdl), schema=schema
+    )
 
 
 # ------------------------------------------------------------------- decode

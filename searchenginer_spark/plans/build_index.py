@@ -32,6 +32,7 @@ from dataclasses import dataclass, fields
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import BinaryType
 
 from ..cache import current_scope, scoped
 from ..operators import stats as S
@@ -579,10 +580,11 @@ def build_index(
             postings.groupBy("part")
             .agg(
                 F.sum("n").alias("n_postings"),
-                (
-                    F.sum(F.octet_length("docs"))
-                    + F.sum(F.octet_length("tfs"))
-                    + F.sum(F.octet_length("scores"))
+                # every stored payload column: docs, tfs, scores, positions
+                sum(
+                    F.sum(F.octet_length(f.name))
+                    for f in postings.schema.fields
+                    if f.dataType == BinaryType()
                 ).alias("bytes_written"),
             )
             .join(
@@ -716,7 +718,7 @@ def open_postings(
 
     The explicit ``repartition(n, 'part')`` is the query engine's
     exchange-elision contract (guide §2.4): every scorer is a
-    ``groupBy('part').applyInPandas``, whose ClusteredDistribution(part)
+    ``groupBy('part').applyInArrow``, whose ClusteredDistribution(part)
     is satisfied by this partitioning — so a caller that PERSISTS the
     handle (the serving pattern) pays the exchange once at cache fill and
     every subsequent query runs with ZERO per-query shuffle (measured

@@ -151,33 +151,40 @@ def test_posting_row_layout(engines):
     scores = decode_scores(row["scores"])
     assert len(tfs) == row["n"] and len(scores) == row["n"]
     assert (tfs >= 1).all() and (scores > 0).all()
-    # block metadata consistency
-    nblocks = -(-row["n"] // BLOCK)
-    assert len(row["block_last"]) == nblocks == len(row["block_max"])
-    assert row["block_last"][-1] == ids[-1]
-    for b in range(nblocks):
-        lo, hi = b * BLOCK, min((b + 1) * BLOCK, row["n"])
-        assert row["block_last"][b] == ids[hi - 1]
-        assert abs(row["block_max"][b] - scores[lo:hi].max()) < 1e-12
-    # the loader's flat form of the row: the same ids and scores, and its
-    # recomputed blocks are the stored ones
+    # the loader's flat form of the row: the same ids and scores, and one
+    # block_last/block_max entry per 128-posting block of them
     g = decode_table(
         postings.filter(postings.term_id == row["term_id"]).toArrow()
     ).term(row["term_id"])
+    nblocks = -(-row["n"] // BLOCK)
     assert np.array_equal(g.doc_ids[(nblocks - 1) * BLOCK :], ids[(nblocks - 1) * BLOCK :])
     assert np.array_equal(g.doc_ids, ids) and np.array_equal(g.scores, scores)
-    assert g.block_last.tolist() == row["block_last"]
-    assert g.block_max.tolist() == row["block_max"]
+    assert len(g.block_last) == nblocks == len(g.block_max)
+    assert g.block_last[-1] == ids[-1]
+    for b in range(nblocks):
+        lo, hi = b * BLOCK, min((b + 1) * BLOCK, row["n"])
+        assert g.block_last[b] == ids[hi - 1]
+        assert abs(g.block_max[b] - scores[lo:hi].max()) < 1e-12
+
+
+def test_binary_column_past_32bit_offsets_raises():
+    """A part whose binary column would pass 2^31-1 bytes raises instead
+    of wrapping its 32-bit offsets (checked before any buffer is read)."""
+    from searchenginer_spark.operators.postings import _binary
+
+    with pytest.raises(ValueError, match="docs_per_part"):
+        _binary("docs", np.empty(0, dtype=np.uint8), np.array([0, 1 << 31]))
+    col = _binary("tfs", np.frombuffer(b"abc", dtype=np.uint8), np.array([0, 1, 3]))
+    assert col.to_pylist() == [b"a", b"bc"]
 
 
 def test_parts_cover_disjoint_doc_ranges(engines):
     _, comp = engines
     from pyspark.sql import functions as F
 
-    rows = comp.postings.select("part", "block_last").collect()
+    rows = comp.postings.select("part", "n", "docs").collect()
     for r in rows:
-        for d in r["block_last"]:
-            assert d // 128 == r["part"]
+        assert np.all(decode_doc_ids(r["docs"], r["n"]) // 128 == r["part"])
 
 
 def test_or_blockmax_multiblock_exact(spark):

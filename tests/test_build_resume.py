@@ -119,3 +119,74 @@ def test_metrics_rate_is_run_level(spark, docs, tmp_path_factory):
     total = sum(r["n_postings"] for r in rows)
     wall_s = rows[0]["wall_ms"] / 1000.0
     assert abs(rows[0]["postings_per_sec"] - total / wall_s) < 1e-6 * total
+
+
+def test_bytes_written_counts_every_payload_column(spark, docs, tmp_path_factory):
+    """On a positions build the metrics' bytes_written sums every stored
+    payload column, positions included."""
+    root = str(tmp_path_factory.mktemp("idx_bytes"))
+    build_index(docs, root, docs_per_part=DPP, with_positions=True)
+    written = spark.read.parquet(IndexPaths(root).metrics).agg(F.sum("bytes_written")).first()[0]
+    stored = spark.read.parquet(IndexPaths(root).postings).agg(
+        *(F.sum(F.octet_length(c)) for c in ("docs", "tfs", "scores", "positions"))
+    ).first()
+    assert written == sum(stored)
+
+
+LEGACY_BLOCK_COLS = ("block_last", "block_max", "block_doc_off", "block_tf_off", "block_pos_off")
+
+
+def _rewrite_in_legacy_layout(postings_dir: str, part: int) -> None:
+    """Rewrite one part's postings files with the five block columns that
+    roots written before the current layout carry (before ``positions``)."""
+    import glob
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    files = glob.glob(os.path.join(postings_dir, f"part={part}", "*.parquet"))
+    assert files
+    for path in files:
+        table = pq.ParquetFile(path).read()
+        legacy = table.drop_columns(["positions"])
+        for name in LEGACY_BLOCK_COLS:
+            item = pa.float64() if name == "block_max" else pa.int64()
+            legacy = legacy.append_column(
+                name, pa.array([[0]] * table.num_rows, pa.list_(item))
+            )
+        legacy = legacy.append_column("positions", table.column("positions"))
+        # Spark reads a file's schema from the footer's row metadata: drop
+        # the copied current-layout one
+        pq.write_table(legacy.replace_schema_metadata(None), path)
+        # the rewritten file no longer matches the checksum written beside it
+        crc = os.path.join(os.path.dirname(path), f".{os.path.basename(path)}.crc")
+        if os.path.exists(crc):
+            os.remove(crc)
+
+
+def test_resume_onto_legacy_layout_root(spark, docs, tmp_path_factory, monkeypatch):
+    """A root whose first parts carry the legacy block columns, resumed so
+    current-layout parts land beside them, answers like a fresh build: on
+    the resident path, on the distributed path, and for a phrase query."""
+    from searchenginer_spark.plans.bm25 import Bm25CompressedIndex
+
+    dpp = 100  # -> 4 parts
+    root = str(tmp_path_factory.mktemp("idx_legacy"))
+    build_index(docs, root, docs_per_part=dpp, max_parts=2, with_positions=True)
+    for part in (0, 1):
+        _rewrite_in_legacy_layout(IndexPaths(root).postings, part)
+    assert build_index(docs, root, docs_per_part=dpp, with_positions=True)["parts_built"] == 2
+    assert set(LEGACY_BLOCK_COLS) <= set(
+        spark.read.option("mergeSchema", "true").parquet(IndexPaths(root).postings).columns
+    )
+    fresh_root = str(tmp_path_factory.mktemp("idx_legacy_fresh"))
+    build_index(docs, fresh_root, docs_per_part=dpp, with_positions=True)
+
+    queries = ["int return", "+int +return", "return -int", '"return int"', "int~1 value"]
+    legacy, fresh = open_index(spark, root), open_index(spark, fresh_root)
+    want = [fresh.search_query_rows(q, k=10) for q in queries]
+    assert want[3], "the phrase query needs hits"
+    assert [legacy.search_query_rows(q, k=10) for q in queries] == want
+    monkeypatch.setattr(Bm25CompressedIndex, "DRIVER_SCORE_MAX_POSTINGS", 0)
+    assert [legacy.search_query_rows(q, k=10) for q in queries] == want

@@ -63,6 +63,21 @@ def test_hot_term_group_sizes_bounded(built):
     assert hot.filter(F.col("n_parts") < 7).count() == 0
 
 
+def test_stored_postings_columns_are_the_decoded_ones(spark, built, tmp_path):
+    """Every stored posting column is one decode_table reads, with and
+    without positions: no column is stored that nothing reads."""
+    from searchenginer_spark.plans.bm25 import _decode_cols
+    from searchenginer_spark.plans.build_index import build_index, read_postings
+
+    postings = built[4]
+    assert postings.columns == _decode_cols(postings, positions=True)
+    root = str(tmp_path / "pos")
+    build_index(built[0], root, docs_per_part=64, with_positions=True)
+    stored = read_postings(spark, root)
+    assert "positions" in stored.columns
+    assert sorted(stored.columns) == sorted(_decode_cols(stored, positions=True))
+
+
 def test_content_sha_invariant(built):
     docs = built[0]
     assert docs.filter(F.sha2("content", 256) != F.col("content_sha256")).count() == 0

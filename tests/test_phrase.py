@@ -76,7 +76,7 @@ def test_positions_roundtrip(pindex):
 @pytest.fixture(scope="module")
 def multiblock(spark):
     """Positions index where hot terms span MANY 128-posting blocks (one
-    giant part), exercising the block_pos_off skip-decode path."""
+    giant part), so the loader decodes positions across block boundaries."""
     from pyspark.sql import functions as F
 
     from searchenginer_spark.sources.corpus import build_docs

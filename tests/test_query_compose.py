@@ -784,7 +784,7 @@ def test_resident_queries_decode_nothing(qindex, spark, monkeypatch):
     assert batch and rows
     assert (jobs, row_jobs, calls) == (0, 0, [])
     pdf = pd.DataFrame({"part": [0], "term_id": [1], "doc_id": [3], "tf": [1], "df": [1]})
-    P.decode_table(pa.Table.from_pandas(P._encode_part(pdf, 4.0, 1.0)))
+    P.decode_table(P._encode_part(pa.Table.from_pandas(pdf), 4.0, 1.0))
     assert calls
 
 

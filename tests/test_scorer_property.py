@@ -50,9 +50,9 @@ def corpora(draw):
     return docs
 
 
-def _decoded(enc: pd.DataFrame) -> list:
+def _decoded(enc: pa.Table) -> list:
     """Every term's decoded postings (TermPostings), the kernel's input."""
-    index = decode_table(pa.Table.from_pandas(enc, preserve_index=False))
+    index = decode_table(enc)
     return [index.term(t) for t in index.term_ids.tolist()]
 
 
@@ -68,7 +68,7 @@ def _encode(docs: dict) -> tuple[list, dict, float, float]:
     pdf = pd.DataFrame(rows, columns=["part", "term_id", "doc_id", "tf", "df"])
     n_docs = float(len(docs))
     avgdl = float(np.mean([sum(t.values()) for t in docs.values()]))
-    enc = _encode_part(pdf, n_docs, avgdl)
+    enc = _encode_part(pa.Table.from_pandas(pdf, preserve_index=False), n_docs, avgdl)
     return _decoded(enc), df, n_docs, avgdl
 
 
@@ -184,7 +184,7 @@ def _encode_pos(tok_docs: dict):
     )
     n_docs = float(len(tok_docs))
     avgdl = float(np.mean([len(t) for t in tok_docs.values()]))
-    enc = _encode_part(pdf, n_docs, avgdl)
+    enc = _encode_part(pa.Table.from_pandas(pdf, preserve_index=False), n_docs, avgdl)
     return _decoded(enc), df, n_docs, avgdl
 
 
@@ -316,3 +316,41 @@ def test_bool_scorer_matches_bruteforce(
     assert got_d == [d for d, _ in top], (must, should, phrases, neg_t, with_allow)
     for g, (_, w) in zip(got_s, top):
         assert abs(g - w) < 1e-9
+
+
+def test_encoder_bytes_match_per_term_reference():
+    """The whole-part encoder writes each term's bytes as a per-term loop
+    does: doc-id deltas restarting every BLOCK postings, tfs, and position
+    deltas restarting at every posting, whatever order the rows arrive in."""
+    from searchenginer_spark.functions.codec import varbyte_encode
+    from searchenginer_spark.operators.postings import BLOCK
+
+    rng = np.random.default_rng(7)
+    rows = []
+    for d in range(300):
+        for t in range(4):
+            if rng.random() < (0.95 if t == 0 else 0.3):
+                ps = np.sort(rng.choice(500, int(rng.integers(1, 5)), replace=False))
+                rows.append((0, t, d, ps.size, 1, ps.tolist()))
+    rows = [rows[i] for i in rng.permutation(len(rows))]
+    cols = ["part", "term_id", "doc_id", "tf", "df", "positions"]
+    enc = _encode_part(pa.table(dict(zip(cols, map(list, zip(*rows))))), 300.0, 10.0)
+
+    by_term = {}
+    for _, t, d, tf, _, ps in sorted(rows, key=lambda r: (r[1], r[2])):
+        by_term.setdefault(t, []).append((d, tf, ps))
+    assert max(len(p) for p in by_term.values()) > 2 * BLOCK
+    got = enc.to_pylist()
+    assert [r["term_id"] for r in got] == sorted(by_term)
+    for r in got:
+        post = by_term[r["term_id"]]
+        ids = np.array([d for d, _, _ in post])
+        assert (r["part"], r["n"]) == (0, len(post))
+        assert r["docs"] == b"".join(
+            varbyte_encode(np.diff(ids[s : s + BLOCK], prepend=0))
+            for s in range(0, ids.size, BLOCK)
+        )
+        assert r["tfs"] == varbyte_encode(np.array([tf for _, tf, _ in post]))
+        assert r["positions"] == b"".join(
+            varbyte_encode(np.diff(ps, prepend=0)) for _, _, ps in post
+        )
